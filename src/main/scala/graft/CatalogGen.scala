@@ -4,9 +4,9 @@ import java.io.File
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
-/** Generates the README operator catalog FROM the compiled registry
+/** Generates the README operator catalog FROM the query registry
   * ([[Registry.modules]]) so the docs cannot drift from the code: every
-  * registered query appears, each mapped to its implementing object and
+  * registered query appears, each mapped to its implementing module and
   * source file. CatalogSpec asserts README ⊇ SparkEntry.queries (and no
   * stale extras), so adding a query without re-running
   * `sbt "runMain graft.CatalogGen"` fails the build.
@@ -110,7 +110,7 @@ object CatalogGen {
     val srcIdx = sourceIndex
     val modules = Registry.modules
     val owner: Map[String, Registry.Module] = (for {
-      m <- modules; q <- m.queries
+      m <- modules; q <- m.queries.keys
     } yield q -> m).toMap
     val registered = SparkEntry.queries.keySet
     val sb = new StringBuilder

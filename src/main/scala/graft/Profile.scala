@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Ad-hoc profiling main for the optimization rounds: same session shape
@@ -9,12 +8,15 @@ import org.apache.spark.sql.execution.ExplainMode
   * [[observability.QueryMetrics.profile]]) and optionally dumps the
   * `explain("formatted")` plan to a file.
   *
-  * Usage: `Profile <sfDir> <q1,q2,...> [explainDir] [tag]`
+  * Usage: `Profile <sfDir> <q1,q2,...> [explainDir] [tag] [fresh]`
   *   - metrics go to stdout as one line per query:
   *     `PROFILE name wall_s scanRows scanBytes shuffleBytes shuffleRecs
   *      spillBytes expandRows outputRows`
   *   - with `explainDir`, each query's formatted plan lands at
   *     `<explainDir>/<name>_<tag>.txt` (tag defaults to "before").
+  *   - `fresh` times bench-style instead (`PROFILE name wall_s fresh`):
+  *     noop-sink runs with [[Memos.newGeneration]] before each, so
+  *     memoized builds are re-run inside the clock.
   *
   * This is a measurement tool, not a declared query: nothing here is
   * registered in [[SparkEntry.queries]] and no result is persisted.
@@ -30,14 +32,7 @@ object Profile {
     // discipline): entries whose timed work is a memoized build must
     // re-run it, not hit the memo
     val fresh = args.length > 4 && args(4) == "fresh"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
     Bench.populate(spark, sfDir)
     val qs = SparkEntry.queries
     for (name <- names) qs.get(name) match {

@@ -2,14 +2,12 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Driver contract — see SURVEY.md §7.
   *
-  * `queries` aggregates every implemented operator surface:
-  * [[graft.analytics.Queries]] (the reference's 12-query analytics surface +
-  * matviews), with ETL/dedup/similarity/text extensions registered as their
-  * modules land. `oracleSql` carries the DuckDB twin for each hash-checked
-  * entry; rows-only entries (non-SQL-expressible ops) are deliberately absent
-  * from it.
+  * `queries` maps every registered query name to its DataFrame builder and
+  * `oracleSql` maps each hash-checked query to its DuckDB twin. Both are
+  * [[Registry]]'s merge of every query module's `all` and `oracle` maps,
+  * built once per JVM: a new module is registered by compiling it.
   */
 object SparkEntry {
 
@@ -19,145 +17,8 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     analytics.Queries.q02TopDiagnosesByAgeGroup(spark, "/root/testdata/sf0.001")
 
-  // split in two: a single ~120-operand `++` chain overflows the
-  // scalac typer stack (hit at the 124th module in r10)
-  private def queriesA: Map[String, (SparkSession, String) => DataFrame] =
-    analytics.Queries.all ++ analytics.TpchQueries.all ++
-      ingest.Ingest.all ++ text.TextAnalysis.all ++
-      text.Curate.all ++
-      dedup.Dedup.all ++ dedup.DupClusters.all ++ similarity.Similarity.all ++
-      multimodal.Multimodal.all ++ sources.Sources.all ++
-      streaming.Sessionize.all ++ analytics.WindowExtras.all ++
-      warehouse.Reports.all ++ warehouse.Scd2.all ++ functions.SkewJoin.all ++
-      functions.BottomK.all ++ warehouse.SnapshotFacts.all ++
-      analytics.GraphOps.all ++ warehouse.ZOrderLayout.all ++
-      analytics.EventSeq.all ++ text.TfIdf.all ++ similarity.Standardize.all ++
-      ingest.EtlExtras.all ++ analytics.TimeSeries.all ++
-      similarity.SemDedup.all ++ warehouse.IncrementalAgg.all ++
-      streaming.IncrementalIngest.all ++ warehouse.PartitionedFact.all ++
-      privacy.Privacy.all ++ analytics.CmSketch.all ++
-      warehouse.Bucketing.all ++ text.BpePairs.all ++
-      analytics.BloomSketch.all ++ analytics.HllSketch.all ++
-      warehouse.DataVault.all ++ analytics.SpatialGrid.all ++
-      dedup.SegmentDedup.all ++ text.Entropy.all ++ analytics.Scoring.all ++
-      ingest.DriftChecks.all ++ analytics.Reshape.all ++
-      similarity.Matryoshka.all ++ privacy.DpRelease.all ++
-      analytics.ValuePositions.all ++ ingest.FkOrphans.all ++
-      analytics.MarketBasket.all ++ warehouse.JunkDim.all
-
-  private def queriesB: Map[String, (SparkSession, String) => DataFrame] =
-      similarity.CentroidDrift.all ++ analytics.BitmapRollup.all ++
-      similarity.HubnessAnn.all ++ warehouse.FileManifest.all ++
-      warehouse.BloomManifest.all ++ text.PitFeatures.all ++
-      text.LengthBuckets.all ++ dedup.CdcChunks.all ++ text.LmCoverage.all ++
-      similarity.RrfFusion.all ++ similarity.JlProjection.all ++
-      text.UniMaxMix.all ++ warehouse.TimeTravel.all ++ warehouse.IvmJoin.all ++
-      analytics.LpaCommunities.all ++ text.BpeTrain.all ++
-      warehouse.BinPack.all ++ text.FeatureHash.all ++
-      warehouse.Expectations.all ++ similarity.HadamardRotation.all ++
-      privacy.EpsilonLedger.all ++ text.BigramNovelty.all ++
-      analytics.RfmSegments.all ++ similarity.GraphSearch.all ++
-      warehouse.Bitemporal.all ++ analytics.Skyline.all ++
-      similarity.FilteredAnn.all ++ text.DsirWeights.all ++
-      text.WeakLabels.all ++ similarity.KCenterCoreset.all ++
-      text.DomainKl.all ++ text.TrainingOrder.all ++
-      text.BoilerplateStrip.all ++ text.LmPerplexity.all ++
-      sources.NeymanAllocation.all ++ text.LfShapley.all ++
-      analytics.QDigest.all ++ similarity.PcaPower.all ++
-      analytics.Modularity.all ++ similarity.AbttResidual.all ++
-      analytics.PoissonBootstrap.all ++ warehouse.KeyCollision.all ++
-      text.SourceAblation.all ++ analytics.KsDistance.all ++
-      analytics.MannWhitney.all ++ analytics.HierReconcile.all ++
-      warehouse.FdDiscovery.all ++ warehouse.IndDiscovery.all ++
-      analytics.ChiSquare.all ++ analytics.SpearmanCorr.all ++
-      analytics.ConformalInterval.all ++ analytics.DailyOhlc.all ++
-      ingest.LatenessProfile.all ++ ingest.JsonOps.all ++
-      plans.JoinEliminationQueries.all ++ warehouse.SkewAdvisor.all ++
-      streaming.StreamNearDedup.all ++
-      observability.QueryMetrics.all ++ observability.ColumnLineage.all ++
-      observability.PlanFingerprint.all ++ warehouse.JoinAdvisor.all ++
-      ingest.ForgetFlow.all ++ plans.AsOfJoinQueries.all ++
-      sources.v2.GenQueries.all ++ streaming.TransformWithState.all ++
-      text.ChunkWindows.all ++ analytics.GroupingSets.all ++
-      analytics.OlsRegression.all ++ dedup.FuzzyJoin.all ++
-      plans.RerollQueries.all ++ plans.MvRewriteQueries.all ++
-      plans.MvWarehouseQueries.all ++
-      plans.EagerAggregationQueries.all ++
-      plans.UnionMergeQueries.all ++
-      plans.IvmSetQueries.all ++ warehouse.FileSkip.all
-      // stream_outer_attribution rides streaming.IncrementalIngest.all
-      // (new Scd2/DpRelease/IvfIndex entries ride their modules' maps)
-
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    queriesA ++ queriesB
+    Registry.queries
 
-  private def oracleA: Map[String, String] =
-    analytics.OracleSql.all ++ analytics.TpchQueries.oracle ++
-      ingest.Ingest.oracle ++
-      text.TextAnalysis.oracle ++ text.Curate.oracle ++ dedup.Dedup.oracle ++
-      dedup.DupClusters.oracle ++
-      similarity.Similarity.oracle ++ multimodal.Multimodal.oracle ++
-      sources.Sources.oracle ++ streaming.Sessionize.oracle ++
-      analytics.WindowExtras.oracle ++ warehouse.Reports.oracle ++
-      warehouse.Scd2.oracle ++ functions.SkewJoin.oracle ++
-      functions.BottomK.oracle ++ warehouse.SnapshotFacts.oracle ++
-      analytics.GraphOps.oracle ++ warehouse.ZOrderLayout.oracle ++
-      analytics.EventSeq.oracle ++ text.TfIdf.oracle ++
-      similarity.Standardize.oracle ++ ingest.EtlExtras.oracle ++
-      analytics.TimeSeries.oracle ++ similarity.SemDedup.oracle ++
-      warehouse.IncrementalAgg.oracle ++ streaming.IncrementalIngest.oracle ++
-      warehouse.PartitionedFact.oracle ++ privacy.Privacy.oracle ++
-      analytics.CmSketch.oracle ++ warehouse.Bucketing.oracle ++
-      text.BpePairs.oracle ++ analytics.BloomSketch.oracle ++
-      analytics.HllSketch.oracle ++ warehouse.DataVault.oracle ++
-      analytics.SpatialGrid.oracle ++ dedup.SegmentDedup.oracle ++
-      text.Entropy.oracle ++ analytics.Scoring.oracle ++
-      ingest.DriftChecks.oracle ++ analytics.Reshape.oracle ++
-      similarity.Matryoshka.oracle ++ privacy.DpRelease.oracle ++
-      analytics.ValuePositions.oracle ++ ingest.FkOrphans.oracle ++
-      analytics.MarketBasket.oracle ++ warehouse.JunkDim.oracle
-
-  private def oracleB: Map[String, String] =
-      similarity.CentroidDrift.oracle ++ analytics.BitmapRollup.oracle ++
-      similarity.HubnessAnn.oracle ++ warehouse.FileManifest.oracle ++
-      warehouse.BloomManifest.oracle ++ text.PitFeatures.oracle ++
-      text.LengthBuckets.oracle ++ dedup.CdcChunks.oracle ++
-      text.LmCoverage.oracle ++ similarity.RrfFusion.oracle ++
-      similarity.JlProjection.oracle ++ text.UniMaxMix.oracle ++
-      warehouse.TimeTravel.oracle ++ warehouse.IvmJoin.oracle ++
-      analytics.LpaCommunities.oracle ++ text.BpeTrain.oracle ++
-      warehouse.BinPack.oracle ++ text.FeatureHash.oracle ++
-      warehouse.Expectations.oracle ++ similarity.HadamardRotation.oracle ++
-      privacy.EpsilonLedger.oracle ++ text.BigramNovelty.oracle ++
-      analytics.RfmSegments.oracle ++ similarity.GraphSearch.oracle ++
-      warehouse.Bitemporal.oracle ++ analytics.Skyline.oracle ++
-      similarity.FilteredAnn.oracle ++ text.DsirWeights.oracle ++
-      text.WeakLabels.oracle ++ similarity.KCenterCoreset.oracle ++
-      text.DomainKl.oracle ++ text.TrainingOrder.oracle ++
-      text.BoilerplateStrip.oracle ++ text.LmPerplexity.oracle ++
-      sources.NeymanAllocation.oracle ++ text.LfShapley.oracle ++
-      analytics.QDigest.oracle ++ similarity.PcaPower.oracle ++
-      analytics.Modularity.oracle ++ similarity.AbttResidual.oracle ++
-      analytics.PoissonBootstrap.oracle ++ warehouse.KeyCollision.oracle ++
-      text.SourceAblation.oracle ++ analytics.KsDistance.oracle ++
-      analytics.MannWhitney.oracle ++ analytics.HierReconcile.oracle ++
-      warehouse.FdDiscovery.oracle ++ warehouse.IndDiscovery.oracle ++
-      analytics.ChiSquare.oracle ++ analytics.SpearmanCorr.oracle ++
-      analytics.ConformalInterval.oracle ++ analytics.DailyOhlc.oracle ++
-      ingest.LatenessProfile.oracle ++ ingest.JsonOps.oracle ++
-      plans.JoinEliminationQueries.oracle ++ warehouse.SkewAdvisor.oracle ++
-      streaming.StreamNearDedup.oracle ++
-      observability.QueryMetrics.oracle ++ observability.ColumnLineage.oracle ++
-      observability.PlanFingerprint.oracle ++ warehouse.JoinAdvisor.oracle ++
-      ingest.ForgetFlow.oracle ++ plans.AsOfJoinQueries.oracle ++
-      sources.v2.GenQueries.oracle ++ streaming.TransformWithState.oracle ++
-      text.ChunkWindows.oracle ++ analytics.GroupingSets.oracle ++
-      analytics.OlsRegression.oracle ++ dedup.FuzzyJoin.oracle ++
-      plans.RerollQueries.oracle ++ plans.MvRewriteQueries.oracle ++
-      plans.MvWarehouseQueries.oracle ++
-      plans.EagerAggregationQueries.oracle ++
-      plans.UnionMergeQueries.oracle ++
-      plans.IvmSetQueries.oracle ++ warehouse.FileSkip.oracle
-
-  def oracleSql: Map[String, String] = oracleA ++ oracleB
+  def oracleSql: Map[String, String] = Registry.oracles
 }

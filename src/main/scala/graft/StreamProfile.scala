@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev profiler for `stream_near_dedup`'s wall cost (r10 verdict item 5):
@@ -14,11 +13,7 @@ import org.apache.spark.sql.functions._
 object StreamProfile {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession()
     def t[A](label: String)(f: => A): A = {
       val t0 = System.nanoTime(); val r = f
       println(f"PROFILE $label%-28s ${(System.nanoTime() - t0) / 1e9}%8.3f s")
@@ -55,29 +50,6 @@ object StreamProfile {
     runOnce("floor100", tiny)
     runOnce("full", full)
     runOnce("full2", full)
-    spark.stop()
-  }
-}
-
-/** Batch-mode twin of the stream's banding expressions — isolates the
-  * per-row signature cost from the streaming harness. Dev-only.
-  */
-object BandBatchProfile {
-  def main(args: Array[String]): Unit = {
-    val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.range(1000).groupBy(expr("id % 3")).count().collect()
-    val feed = streaming.StreamNearDedup.feed(spark, dir)
-    feed.write.mode("overwrite").format("noop").save()
-    for (i <- 1 to 3) {
-      val t0 = System.nanoTime()
-      val n = streaming.StreamNearDedup.bandedBatch(feed).count()
-      println(f"BANDBATCH run$i rows=$n ${(System.nanoTime() - t0) / 1e9}%8.3f s")
-    }
     spark.stop()
   }
 }

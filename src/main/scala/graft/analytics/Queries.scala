@@ -376,4 +376,6 @@ object Queries {
     "mv_diagnosis_by_age_group" -> (mvDiagnosisAge _),
     "mv_procedure_volume" -> (mvProcedureVol _),
     "readme_record_counts" -> (readmeRecordCounts _))
+
+  val oracle: Map[String, String] = OracleSql.all
 }

@@ -133,8 +133,6 @@ object StreamNearDedup {
     * same coefficients, same band buckets), so the DuckDB oracle text is
     * unchanged.
     */
-  private[graft] def bandedBatch(docs: DataFrame): DataFrame = banded(docs)
-
   private def banded(docs: DataFrame): DataFrame = {
     graft.GraftExtensions.registerAll(docs.sparkSession)
     docs

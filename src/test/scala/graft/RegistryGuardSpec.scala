@@ -2,24 +2,17 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Structural guard against ORPHANED MODULES — the failure class that
-  * shipped twice (round 6: JsonOps, round 7: SkewAdvisor): a finished
-  * module exposing `all`/`oracle` maps that nobody wired into
-  * [[SparkEntry]], so its queries exist with ZERO gate coverage.
+/** Guards the query registry ([[Registry]]), the class scan behind
+  * [[SparkEntry.queries]] and [[SparkEntry.oracleSql]].
   *
-  * `VerifySchemaSpec`'s orphan test only checks SparkEntry-internal
-  * consistency (queries.keySet == oracleSql.keySet) — blind to a module
-  * absent from BOTH maps. This spec closes the hole structurally via
-  * [[Registry]]: the compiled classpath is scanned for every `graft.*`
-  * singleton whose `all` method has the registry shape
-  * `Map[String, (SparkSession, String) => DataFrame]`, and each such map
-  * must be a SUBSET of `SparkEntry.queries` (same for `oracle` vs
-  * `oracleSql`). Commenting out any one `++ module.all` line in SparkEntry
-  * fails this spec with the module's name.
-  *
-  * The convention is discovered, not declared — a new module gets guarded
-  * the moment it compiles, with no registration step to forget (which is
-  * the whole point).
+  * The scan finds every `graft.*` singleton whose `all` method has the
+  * registry shape `Map[String, (SparkSession, String) => DataFrame]`, so a
+  * module cannot be left out of the registry by a forgotten edit (the
+  * failure that shipped twice while the registry was a hand-kept `++`
+  * chain: round 6's JsonOps, round 7's SkewAdvisor). What can still go
+  * wrong is a scan that finds nothing, or two modules that claim one name;
+  * this spec pins both. CatalogSpec additionally fails if a module drops out,
+  * since the README catalog lists every registered query.
   */
 class RegistryGuardSpec extends AnyFunSuite {
 
@@ -32,26 +25,13 @@ class RegistryGuardSpec extends AnyFunSuite {
       s"only ${Registry.modules.size} registry modules found — scan broke")
   }
 
-  test("every module's `all` map is registered in SparkEntry.queries") {
-    val registered = SparkEntry.queries.keySet
-    val orphans = Registry.modules.flatMap { m =>
-      val missing = m.queries -- registered
-      if (missing.nonEmpty)
-        Some(s"${m.className}: ${missing.toSeq.sorted.mkString(", ")}")
-      else None
-    }
-    assert(orphans.isEmpty,
-      s"ORPHANED MODULES — queries never wired into SparkEntry:\n  " +
-        orphans.mkString("\n  "))
-  }
-
   test("no two modules declare the same query name (++ replaces silently)") {
     // the r9 near-miss: a new module declared "text_chunk_windows", which
-    // TextAnalysis already owned — SparkEntry's `++` silently replaced the
-    // original query AND its oracle, stripping its gate coverage while the
-    // subset checks above stayed green. A name must have exactly one owner.
+    // TextAnalysis already owned — a map union would silently replace the
+    // original query AND its oracle, stripping its gate coverage. A name
+    // must have exactly one owner.
     val owners = Registry.modules
-      .flatMap(m => m.queries.map(_ -> m.simpleName))
+      .flatMap(m => m.queries.keys.map(_ -> m.simpleName))
       .groupBy(_._1).view.mapValues(_.map(_._2).sorted).toMap
     val dups = owners.filter(_._2.size > 1)
     assert(dups.isEmpty,
@@ -60,16 +40,13 @@ class RegistryGuardSpec extends AnyFunSuite {
           .mkString("\n  "))
   }
 
-  test("every module's `oracle` map is registered in SparkEntry.oracleSql") {
-    val registered = SparkEntry.oracleSql.keySet
-    val orphans = Registry.modules.flatMap { m =>
-      val missing = m.oracles -- registered
-      if (missing.nonEmpty)
-        Some(s"${m.className}: ${missing.toSeq.sorted.mkString(", ")}")
-      else None
-    }
-    assert(orphans.isEmpty,
-      s"ORPHANED ORACLES — never wired into SparkEntry.oracleSql:\n  " +
-        orphans.mkString("\n  "))
+  test("the merge rejects a name declared by two modules (negative control)") {
+    val q: Registry.Query = (spark, _) => spark.emptyDataFrame
+    val a = Registry.Module("graft.A$", Map("x_one" -> q, "x_shared" -> q), Map.empty)
+    val b = Registry.Module("graft.B$", Map("x_shared" -> q), Map.empty)
+    assert(Registry.merge(Seq(a))(_.queries).keySet == Set("x_one", "x_shared"))
+    val e = intercept[RuntimeException](Registry.merge(Seq(a, b))(_.queries))
+    for (part <- Seq("x_shared", "graft.A$", "graft.B$"))
+      assert(e.getMessage.contains(part), e.getMessage)
   }
 }
