@@ -1,5 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.node.ObjectNode
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+import observability.QueryMetrics
 
 /** Benchmark main (driver contract): one JSON line of per-query seconds.
   *
@@ -36,6 +40,8 @@ object Bench {
       java.nio.file.Paths.get("/proc/loadavg"))).split(" ")(0).toDouble
   } catch { case _: Throwable => -1.0 }
 
+  private val json = new ObjectMapper()
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val loadStart = loadAvg()
@@ -46,23 +52,55 @@ object Bench {
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     val results = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
-      .map { case (name, fn) =>
-      val t0 = System.nanoTime()
-      // noop sink = full materialization of every output column (count()
-      // lets Catalyst prune projection-only expressions, under-measuring
-      // select-heavy queries). Failures are reported as -1, never as a
-      // fake elapsed time.
-      try {
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        name -> (System.nanoTime() - t0) / 1e9
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-        name -> -1.0
-      }
-    }
-    runArtifacts(spark, sfDir, loadStart, results, only.isDefined)
+      .map { case (name, fn) => name -> timeOrFail(name)(fn(spark, sfDir)) }
+    runArtifacts(spark, sfDir, loadStart, results, only.isDefined,
+      ledgers(spark, sfDir))
     spark.stop()
   }
+
+  /** Wall seconds of one noop-sink run of `mk`. The clock starts before
+    * `mk` is built, so memoized builds that run at DataFrame construction
+    * are inside it. noop sink = full materialization of every output column
+    * (count() lets Catalyst prune projection-only expressions,
+    * under-measuring select-heavy queries).
+    */
+  def noopSeconds(mk: => DataFrame): Double = {
+    val t0 = System.nanoTime()
+    mk.write.format("noop").mode("overwrite").save()
+    (System.nanoTime() - t0) / 1e9
+  }
+
+  /** [[noopSeconds]] for the sweep and the second sample: failures are
+    * reported as -1 and named on stderr, never as a fake elapsed time.
+    */
+  private def timeOrFail(label: String)(mk: => DataFrame): Double =
+    try noopSeconds(mk) catch { case e: Throwable =>
+      System.err.println(s"[bench] $label FAILED: ${e.getMessage}")
+      -1.0
+    }
+
+  /** The one sampler, shared by the rule ledgers and [[Profile]]: one
+    * untimed warm run, then the faster of TWO samples plus the slower one's
+    * seconds. Arms are compared against EACH OTHER, so per-arm first-run
+    * costs (codegen of that plan shape, page cache) and ambient load drift
+    * across the sequential arm order must not read as a rule regression —
+    * without the warm run the first-profiled arm of an identical-plan pair
+    * ran ~2× its twin, and without min-of-2 a contended sample still skewed
+    * sub-second identical plans ~1.4×. The spread is published so a reader
+    * (and the noise flags) can tell arm-level noise from a real gap without
+    * hand-re-running.
+    */
+  def minOf2[A](run: () => A)(seconds: A => Double): (A, Double) = {
+    run()
+    val a = run(); val b = run()
+    if (seconds(a) <= seconds(b)) (a, seconds(b)) else (b, seconds(a))
+  }
+
+  /** [[minOf2]] over [[QueryMetrics.profile]]: the faster profile and the
+    * slower sample's seconds.
+    */
+  def sample(mk: => DataFrame): (QueryMetrics.Profile, Double) =
+    minOf2(() => QueryMetrics.profile(mk)._2)(_.wallMs / 1e3)
 
   /** The bench's populate phase (untimed setup, like the reference's
     * warehouse build): every memoized build artifact is pre-warmed so
@@ -140,15 +178,255 @@ object Bench {
     }
   }
 
+  /** A priced plan rule: each arm is one plan of the same question, measured
+    * by [[sample]]. `claim` names the axis the rule is published on where
+    * wall is not it; `facts` adds the ledger's non-timing reads, given the
+    * arms' profiles.
+    */
+  case class Ledger(name: String, claim: Option[String],
+      arms: Seq[(String, () => DataFrame)],
+      facts: (Map[String, QueryMetrics.Profile], ObjectNode) => Unit = (_, _) => ())
+
+  /** Self-flag arm-level noise: two arms whose PLANS are identical by the
+    * ledger's structural axes (equal shuffle bytes, scan rows/files/bytes
+    * AND expand rows) cannot differ in wall for a plan reason — a >1.3×
+    * min-wall gap between such a pair is the box, and the artifact says so
+    * instead of leaving the adjudication to hand re-runs. The scan axes
+    * count because the file-skip arms differ ONLY in what they read.
+    */
+  private def noiseFlags(arms: Seq[(String, QueryMetrics.Profile)]): Seq[String] = {
+    def shape(p: QueryMetrics.Profile) =
+      (p.shuffleWriteBytes, p.scanRows, p.scanFiles, p.scanBytes, p.expandRows)
+    for {
+      Seq((n1, p1), (n2, p2)) <- arms.combinations(2).toSeq
+      if shape(p1) == shape(p2) &&
+        math.max(p1.wallMs, p2.wallMs) >
+          1.3 * math.max(1.0, math.min(p1.wallMs, p2.wallMs).toDouble)
+    } yield s"$n1~$n2"
+  }
+
+  /** Measure every ledger into `out`, one object per ledger holding each
+    * arm's `<arm>_{sec,sec_hi,shuffle_bytes,scan_rows,scan_files,
+    * scan_bytes,expand_rows}` (plus `noise_flags` when it has two arms or
+    * more). A ledger that throws lands in `failed_ledgers` as
+    * `{name, error}`: a failure is named, never a missing key.
+    */
+  private def runLedgers(ledgers: Seq[Ledger], out: ObjectNode): Unit = {
+    val failed = json.createArrayNode()
+    for (l <- ledgers) try {
+      val o = json.createObjectNode()
+      l.claim.foreach(c => o.put("claim", c))
+      val measured = l.arms.map { case (arm, mk) => arm -> sample(mk()) }
+      for ((arm, (p, hi)) <- measured)
+        o.put(s"${arm}_sec", p.wallMs / 1e3).put(s"${arm}_sec_hi", hi)
+          .put(s"${arm}_shuffle_bytes", p.shuffleWriteBytes)
+          .put(s"${arm}_scan_rows", p.scanRows)
+          .put(s"${arm}_scan_files", p.scanFiles)
+          .put(s"${arm}_scan_bytes", p.scanBytes)
+          .put(s"${arm}_expand_rows", p.expandRows)
+      val profiles = measured.map { case (arm, (p, _)) => arm -> p }
+      if (profiles.size > 1) {
+        val flags = o.putArray("noise_flags")
+        noiseFlags(profiles).foreach(f => flags.add(f))
+      }
+      l.facts(profiles.toMap, o)
+      out.set[JsonNode](l.name, o)
+    } catch { case e: Throwable =>
+      System.err.println(s"[bench] ${l.name} ledger FAILED: ${e.getMessage}")
+      failed.addObject().put("name", l.name).put("error", e.toString)
+    }
+    out.set[JsonNode]("failed_ledgers", failed)
+  }
+
+  /** The rule ledgers, priced after the timing sweep. */
+  private def ledgers(spark: SparkSession, sfDir: String): Seq[Ledger] = {
+    import org.apache.spark.sql.functions.col
+    def probe(mod: Int) = plans.CollapseGate.probeAgg(
+      Tables.lineitem(spark, sfDir).select(col("l_suppkey")),
+      Seq(col("l_suppkey")), mod)
+    def ratio(mod: Int): Double = {
+      val r = probe(mod).head()
+      if (r.getLong(1) == 0) 0.0 else r.getLong(2).toDouble / r.getLong(1)
+    }
+    def factProbe(frac: Double) = plans.CollapseGate.boundedProbe(
+      warehouse.PartitionedFact.factByMonth(spark, sfDir)
+        .select(col("patient_key")), Seq("patient_key"), frac, 16)
+    Seq(
+      // Price the join-elimination rule: same consumer with the rule on vs a
+      // child session without it, wall + shuffle bytes from the metrics
+      // ledger — the measured value of not paying unread enrichment joins.
+      Ledger("join_rule", None, Seq(
+        "on" -> (() => plans.JoinEliminationQueries.reportBase(spark, sfDir)),
+        "off" -> (() => plans.JoinEliminationQueries.reportBaseNoRule(spark, sfDir)))),
+      // Price the native as-of exec against the union-window composition —
+      // same semantics, two plans; wall + shuffle bytes says which to reach
+      // for at scale (the exec shuffles each side separately; the composition
+      // shuffles the union once but window-sorts BOTH sides interleaved).
+      // Published claim (r12 rescope): the exec's measured edge on the
+      // UNIFORM feed is shuffle bytes (per-side schemas vs the union's
+      // padded superset); uniform WALL is parity by measurement — the
+      // "claim" field keeps the artifact from being read as a wall ledger.
+      Ledger("asof",
+        Some("shuffle_bytes (uniform wall is parity — see AsOfJoin scaladoc)"), Seq(
+          "native" -> (() => plans.AsOfJoinQueries.asofExec(spark, sfDir)),
+          "composed" -> (() => analytics.WindowExtras.asofClickAttribution(spark, sfDir)))),
+      // The same pair over a planted ~95%-one-key feed, ×50-amplified
+      // (ledger-only — AsOfJoinSpec pins the two forms row-identical, so no
+      // oracle pays for the volume). Expected reading: PARITY — both plans'
+      // wall is the hot partition's sort of the purchase side, measured
+      // intrinsic up to ×200 (AsOfJoinQueries.AmpFactor has the full
+      // finding); the spread fields keep sub-second noise from being read
+      // as a plan property again.
+      Ledger("asof_skew",
+        Some("skew_wall+shuffle_bytes (sort dominates both arms; edge is modest — see AsOfJoinQueries.AmpFactor)"), Seq(
+          "native" -> (() => plans.AsOfJoinQueries.asofSkewExecAmp(spark, sfDir)),
+          "composed" -> (() => plans.AsOfJoinQueries.asofSkewWindowAmp(spark, sfDir)))),
+      // Three-arm ledgers for the cost-gated rewrites: GATED (rule decides —
+      // what a user gets by enabling), FORCED (gate off — prices the rewrite
+      // itself), OFF (stock). The gated arm's contract: never slower than
+      // off (the gate declines where the rewrite loses at this scale), and
+      // on the high-collapse fixture it fires and wins wall.
+      //
+      // Re-roll, LOW-collapse fixture (G=3 rollup over 150k orders: 300k
+      // saved Expand rows — under the gate's 2M floor, so gated == off;
+      // forced prices the loss the floor exists to avoid).
+      Ledger("reroll", None, Seq(
+        "gated" -> (() => plans.RerollQueries.rollupRerollGated(spark, sfDir)),
+        "forced" -> (() => plans.RerollQueries.rollupReroll(spark, sfDir)),
+        "off" -> (() => plans.RerollQueries.rollupStock(spark, sfDir)))),
+      // Re-roll, HIGH-collapse fixture (G=16 cube over 600k line items: the
+      // stock Expand feeds 9.6M rows into the partial aggregate, the
+      // re-rolled one ~4.7k — the gate fires and wins wall even on one box).
+      Ledger("reroll_hc", None, Seq(
+        "gated" -> (() => plans.RerollQueries.cubeLineitemReroll(spark, sfDir)),
+        "forced" -> (() => plans.RerollQueries.cubeLineitemRerollForced(spark, sfDir)),
+        "off" -> (() => plans.RerollQueries.cubeLineitemStock(spark, sfDir)))),
+      // Price the matview rewrite: the same yearly rollup answered from the
+      // registered view vs from raw orders — the scan-rows column is the
+      // whole story (view rows vs fact rows).
+      Ledger("mv_rewrite", None, Seq(
+        "on" -> (() => plans.MvRewriteQueries.mvRollup(spark, sfDir)),
+        "miss" -> (() => plans.MvRewriteQueries.mvMiss(spark, sfDir)))),
+      // Eager aggregation, LOW fixture (4:1 collapse — gate declines on
+      // ratio, gated == off; forced halves shuffle bytes but loses wall).
+      Ledger("eager_agg", None, Seq(
+        "gated" -> (() => plans.EagerAggregationQueries.eagerGated(spark, sfDir)),
+        "forced" -> (() => plans.EagerAggregationQueries.eager(spark, sfDir)),
+        "off" -> (() => plans.EagerAggregationQueries.baseline(spark, sfDir)))),
+      // Eager aggregation, HIGH-collapse fixture (600:1 — the rewrite cuts
+      // shuffle bytes 126× AND measured wall-positive on an idle box, so the
+      // gate's 4 MiB saved-bytes floor FIRES here: gated must track forced,
+      // and beat off on both wall and bytes).
+      Ledger("eager_agg_hc", None, Seq(
+        "gated" -> (() => plans.EagerAggregationQueries.eagerHc(spark, sfDir)),
+        "forced" -> (() => plans.EagerAggregationQueries.eagerHcForced(spark, sfDir)),
+        "off" -> (() => plans.EagerAggregationQueries.baselineHc(spark, sfDir)))),
+      // Price the cost gate's own probe, both bounding axes:
+      //  - SKETCH bound (key-hash sampling) on the single-file lineitem —
+      //    ratio agreement is the unbiasedness evidence;
+      //  - SCAN bound (deterministic file subset) on the month-partitioned
+      //    fact (the only multi-file relation at this sf; lineitem is ONE
+      //    file, where there is nothing to bound) — scan rows and wall fall
+      //    with the byte fraction while the scaled row estimate holds. At
+      //    100 TB the scan bound is the axis that matters: the planning-time
+      //    probe reads a few files, not the lake.
+      // Each arm builds a fresh probe: re-executing one DataFrame reuses its
+      // finished AQE shuffle stages, so the samples after the first would
+      // time the post-shuffle tail without the scan being priced.
+      Ledger("gate_probe", None, Seq(
+          "sampled" -> (() => probe(16)), "full" -> (() => probe(1)),
+          "bounded" -> (() => factProbe(0.1)._1),
+          "unbounded" -> (() => factProbe(1.0)._1)),
+        (arms, o) => {
+          val (bProbe, bFrac) = factProbe(0.1)
+          o.put("sampled_ratio", ratio(16)).put("full_ratio", ratio(1))
+            .put("scan_rows", arms("sampled").scanRows)
+            .put("bounded_byte_frac", bFrac)
+            .put("bounded_rows_est", (bProbe.head().getLong(0) / bFrac).toLong)
+            .put("true_rows", factProbe(1.0)._1.head().getLong(0))
+        }),
+      // Price the storage-partitioned join: identical rollup+join with and
+      // without the connector's reported KeyGroupedPartitioning (broadcast
+      // denied on both) — the measured value of shipping partition keys.
+      Ledger("spj", None, Seq(
+        "on" -> (() => sources.v2.GenQueries.spjJoin(spark, sfDir)),
+        "off" -> (() => sources.v2.GenQueries.spjJoinOff(spark, sfDir)))),
+      // Price the generated-column pruning rule: the same date-ranged report
+      // with the derived month_key predicate vs without — FILES READ (4 of
+      // ~84 month directories) is the structural story; scan output rows
+      // are identical by construction (the pushed data filter trims both
+      // arms to the same rows — pruning saves the READ, not the output),
+      // bytes and wall ride along. The DATE-lattice twin rides the same
+      // ledger: same layout, filter on the DateType column, pruning via the
+      // sidecar's yyyymm derivation.
+      Ledger("derived_dpp", None, Seq(
+        "on" -> (() => warehouse.PartitionedFact.derivedPruneScan(spark, sfDir)),
+        "off" -> (() => warehouse.PartitionedFact.derivedPruneScanOff(spark, sfDir)),
+        "date_on" -> (() => warehouse.PartitionedFact.datePruneScan(spark, sfDir)))),
+      // Price file-level skipping: the same reports over the z-ordered
+      // layout with the stats-sidecar rule on vs off — FILES/BYTES READ are
+      // the structural story (envelope cut on a z-order dimension for the
+      // range probe; per-file Bloom cut on the unclustered point key, where
+      // envelopes are useless). Scan output rows are identical by
+      // construction; wall rides along.
+      Ledger("file_skip", None, Seq(
+        "x_on" -> (() => warehouse.FileSkip.xRange(spark, sfDir)),
+        "x_off" -> (() => warehouse.FileSkip.xRangeOff(spark, sfDir)),
+        "point_on" -> (() => warehouse.FileSkip.pointLookup(spark, sfDir)),
+        "point_off" -> (() => warehouse.FileSkip.pointLookupOff(spark, sfDir)),
+        // TIMESTAMP envelopes over the two-batch append layout: the probe
+        // sits inside the APPENDED batch, so the cut proves the incremental
+        // indexAppend path end to end
+        "ship_on" -> (() => warehouse.FileSkip.shipRange(spark, sfDir)),
+        "ship_off" -> (() => warehouse.FileSkip.shipRangeOff(spark, sfDir)),
+        // the drill-down semi-join: ~10 collected keys folded into an IN,
+        // Bloom-cut at file granularity (file-level dynamic pruning)
+        "drill_on" -> (() => warehouse.FileSkip.custDrill(spark, sfDir)),
+        "drill_off" -> (() => warehouse.FileSkip.custDrillOff(spark, sfDir)),
+        // layered pruning, three arms: no metadata / directory cut only /
+        // directory + file cut — each rung of the ladder priced separately
+        "layer_both" -> (() => warehouse.FileSkip.layeredScan(spark, sfDir)),
+        "layer_dpf" -> (() => warehouse.FileSkip.layeredScanDpfOnly(spark, sfDir)),
+        "layer_off" -> (() => warehouse.FileSkip.layeredScanOff(spark, sfDir)))),
+      // Price the union-of-aggregates merge: the same three-grain hand-written
+      // UNION ALL report as one grouping-sets scan vs three scans — scan rows
+      // is the structural story (1×|orders| vs 3×), wall and shuffle ride along.
+      Ledger("union_merge", None, Seq(
+        "on" -> (() => plans.UnionMergeQueries.merged(spark, sfDir)),
+        "off" -> (() => plans.UnionMergeQueries.stock(spark, sfDir)))))
+  }
+
+  /** The `queries` seconds of the bench artifact `f`, with its tree for the
+    * other fields; None when the file is absent or was measured at another
+    * sf. An unreadable file is None too — the caller's "no baseline"
+    * fallback — but named on stderr: silently, a corrupt bench_out.json
+    * would switch off the suspicious-entry re-timing and the load guard.
+    */
+  private def readQueries(f: java.io.File, sfDir: String)
+      : Option[(JsonNode, Map[String, Double])] =
+    if (!f.isFile) None
+    else try {
+      val node = json.readTree(f)
+      if (node.path("sf").asText() != sfDir) None
+      else Some(node -> node.path("queries").properties().asScala
+        .map(e => e.getKey -> e.getValue.asDouble(-1.0)).toMap)
+    } catch { case e: Exception =>
+      System.err.println(s"[bench] cannot read $f, treating it as no baseline: $e")
+      None
+    }
+
+  private def putSeconds(o: ObjectNode, xs: Seq[(String, Double)]): ObjectNode = {
+    xs.foreach { case (k, v) => o.put(k, v) }
+    o
+  }
+
   /** Everything after the timing sweep: second samples, rule ledgers, the
     * JSON line, and the committed-baseline policy. Factored from main so
     * the sweep itself stays the tool-agnostic core.
     */
-  private def runArtifacts(spark: SparkSession, sfDir: String,
+  private[graft] def runArtifacts(spark: SparkSession, sfDir: String,
       loadStart: Double, results: Seq[(String, Double)],
-      partial: Boolean): Unit = {
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
+      partial: Boolean, ledgers: Seq[Ledger]): Unit = {
     val total = results.map(_._2).filter(_ >= 0).sum
     val failed = results.count(_._2 < 0)
     // Prior committed run (bench_out.json at repo root): any entry whose
@@ -156,20 +434,9 @@ object Bench {
     // that is the adjudication evidence a phantom regression needs (r8:
     // wh_accumulating_snapshot read 5.4s in the official round, 1.1s on
     // every quiet re-run, and was not in the top-5 re-timed tail).
-    val prior: Map[String, Double] = try {
-      val f = new java.io.File(repoRoot, "bench_out.json")
-      if (!f.isFile) Map.empty
-      else {
-        val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(f)
-        if (node.path("sf").asText() != sfDir) Map.empty
-        else {
-          val it = node.path("queries").fields()
-          val b = Map.newBuilder[String, Double]
-          while (it.hasNext) { val e = it.next(); b += e.getKey -> e.getValue.asDouble(-1.0) }
-          b.result()
-        }
-      }
-    } catch { case _: Throwable => Map.empty }
+    val prior: Map[String, Double] =
+      readQueries(new java.io.File(repoRoot, "bench_out.json"), sfDir)
+        .fold(Map.empty[String, Double])(_._2)
     // Second sample of the suspicious entries: this box's run-to-run
     // variance (documented at PartitionedFact.scala — contention swings
     // 3-6× on file-IO entries) makes a single sample unadjudicable;
@@ -190,284 +457,13 @@ object Bench {
       System.err.println(s"[bench] second_sample capped at 12; dropped: " +
         candidates.drop(12).map(_._1).mkString(", "))
     val second = retime.map { case (name, _) =>
-        val t0 = System.nanoTime()
-        try {
-          SparkEntry.queries(name)(spark, sfDir)
-            .write.format("noop").mode("overwrite").save()
-          name -> (System.nanoTime() - t0) / 1e9
-        } catch { case _: Throwable => name -> -1.0 }
-    }
-    val secondJson = second.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    // Price the join-elimination rule: same consumer with the rule on vs a
-    // child session without it, wall + shuffle bytes from the metrics
-    // ledger — the measured value of not paying unread enrichment joins.
-    val ruleJson = try {
-      val (_, on) = observability.QueryMetrics.profile(
-        plans.JoinEliminationQueries.reportBase(spark, sfDir))
-      val (_, off) = observability.QueryMetrics.profile(
-        plans.JoinEliminationQueries.reportBaseNoRule(spark, sfDir))
-      s""","join_rule":{"on_sec":${on.wallMs / 1e3},"off_sec":${off.wallMs / 1e3},""" +
-        s""""on_shuffle_bytes":${on.shuffleWriteBytes},"off_shuffle_bytes":${off.shuffleWriteBytes},""" +
-        s""""on_scan_rows":${on.scanRows},"off_scan_rows":${off.scanRows}}"""
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] join_rule ledger FAILED: ${e.getMessage}"); ""
-    }
-    // Price the native as-of exec against the union-window composition —
-    // same semantics, two plans; wall + shuffle bytes says which to reach
-    // for at scale (the exec shuffles each side separately; the composition
-    // shuffles the union once but window-sorts BOTH sides interleaved).
-    val asofJson = try {
-      val (_, native) = observability.QueryMetrics.profile(
-        plans.AsOfJoinQueries.asofExec(spark, sfDir))
-      val (_, composed) = observability.QueryMetrics.profile(
-        analytics.WindowExtras.asofClickAttribution(spark, sfDir))
-      // published claim (r12 rescope): the exec's measured edge on the
-      // UNIFORM feed is shuffle bytes (per-side schemas vs the union's
-      // padded superset); uniform WALL is parity by measurement — the
-      // "claim" field keeps the artifact from being read as a wall ledger
-      s""","asof":{"claim":"shuffle_bytes (uniform wall is parity — see AsOfJoin scaladoc)",""" +
-        s""""native_sec":${native.wallMs / 1e3},"composed_sec":${composed.wallMs / 1e3},""" +
-        s""""native_shuffle_bytes":${native.shuffleWriteBytes},"composed_shuffle_bytes":${composed.shuffleWriteBytes}}"""
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] asof ledger FAILED: ${e.getMessage}"); ""
-    }
-    // Shared two-sample profiler for the rule ledgers: one untimed warm
-    // run, then the faster of two profiled samples PLUS the slower one —
-    // the spread is published so a reader (and the self-flagging below)
-    // can tell arm-level noise from a real gap without hand-re-running.
-    def prof2(mk: => org.apache.spark.sql.DataFrame)
-        : (observability.QueryMetrics.Profile, Double) = {
-      mk.write.format("noop").mode("overwrite").save()
-      val a = observability.QueryMetrics.profile(mk)._2
-      val b = observability.QueryMetrics.profile(mk)._2
-      if (a.wallMs <= b.wallMs) (a, b.wallMs / 1e3) else (b, a.wallMs / 1e3)
-    }
-    // The same pair over a planted ~95%-one-key feed, ×50-amplified
-    // (ledger-only — AsOfJoinSpec pins the two forms row-identical, so no
-    // oracle pays for the volume). Expected reading: PARITY — both plans'
-    // wall is the hot partition's sort of the purchase side, measured
-    // intrinsic up to ×200 (AsOfJoinQueries.AmpFactor has the full
-    // finding); the spread fields keep sub-second noise from being read
-    // as a plan property again.
-    val asofSkewJson = try {
-      val (native, nHi) = prof2(plans.AsOfJoinQueries.asofSkewExecAmp(spark, sfDir))
-      val (composed, cHi) = prof2(plans.AsOfJoinQueries.asofSkewWindowAmp(spark, sfDir))
-      s""","asof_skew":{"claim":"skew_wall+shuffle_bytes (sort dominates both arms; edge is modest — see AsOfJoinQueries.AmpFactor)",""" +
-        s""""native_sec":${native.wallMs / 1e3},"composed_sec":${composed.wallMs / 1e3},""" +
-        s""""native_sec_hi":$nHi,"composed_sec_hi":$cHi,""" +
-        s""""native_shuffle_bytes":${native.shuffleWriteBytes},"composed_shuffle_bytes":${composed.shuffleWriteBytes}}"""
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] asof_skew ledger FAILED: ${e.getMessage}"); ""
-    }
-    // Three-arm ledger for the cost-gated rewrites: GATED (rule decides —
-    // what a user gets by enabling), FORCED (gate off — prices the rewrite
-    // itself), OFF (stock). The gated arm's contract: never slower than
-    // off (the gate declines where the rewrite loses at this scale), and
-    // on the high-collapse fixture it fires and wins wall.
-    def arm3(tag: String, gated: => org.apache.spark.sql.DataFrame,
-        forced: => org.apache.spark.sql.DataFrame,
-        off: => org.apache.spark.sql.DataFrame): String = try {
-      // one untimed warm run per arm, then the faster of TWO profiled
-      // samples (both published — `_sec` is the min, `_sec_hi` the other
-      // sample): the arms are compared against EACH OTHER, so per-arm
-      // first-run costs (codegen of that plan shape, page cache) and
-      // ambient load drift across the sequential arm order must not read
-      // as a rule regression — without the warm run the first-profiled arm
-      // of an identical-plan pair ran ~2× its twin, and without min-of-2 a
-      // contended sample still skewed sub-second identical plans ~1.4×
-      val (g, gHi) = prof2(gated)
-      val (f, fHi) = prof2(forced)
-      val (o, oHi) = prof2(off)
-      // self-flag arm-level noise: two arms whose PLANS are identical by
-      // the ledger's own structural axes (equal shuffle bytes AND expand
-      // rows) cannot differ in wall for a plan reason — a >1.3× min-wall
-      // gap between such a pair is the box, and the artifact says so
-      // instead of leaving the adjudication to hand re-runs
-      val arms = Seq(("gated", g), ("forced", f), ("off", o))
-      val noisePairs = for {
-        (Seq((n1, p1), (n2, p2))) <- arms.combinations(2).toSeq
-        if p1.shuffleWriteBytes == p2.shuffleWriteBytes &&
-          p1.expandRows == p2.expandRows &&
-          math.max(p1.wallMs, p2.wallMs) >
-            1.3 * math.max(1.0, math.min(p1.wallMs, p2.wallMs))
-      } yield s""""$n1~$n2""""
-      s""","$tag":{"gated_sec":${g.wallMs / 1e3},"forced_sec":${f.wallMs / 1e3},"off_sec":${o.wallMs / 1e3},""" +
-        s""""gated_sec_hi":$gHi,"forced_sec_hi":$fHi,"off_sec_hi":$oHi,""" +
-        s""""noise_flags":${noisePairs.mkString("[", ",", "]")},""" +
-        s""""gated_shuffle_bytes":${g.shuffleWriteBytes},"forced_shuffle_bytes":${f.shuffleWriteBytes},"off_shuffle_bytes":${o.shuffleWriteBytes},""" +
-        s""""gated_expand_rows":${g.expandRows},"forced_expand_rows":${f.expandRows},"off_expand_rows":${o.expandRows}}"""
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] $tag ledger FAILED: ${e.getMessage}"); ""
-    }
-    // Re-roll, LOW-collapse fixture (G=3 rollup over 150k orders: 300k
-    // saved Expand rows — under the gate's 2M floor, so gated == off;
-    // forced prices the loss the floor exists to avoid).
-    val rerollJson = arm3("reroll",
-      plans.RerollQueries.rollupRerollGated(spark, sfDir),
-      plans.RerollQueries.rollupReroll(spark, sfDir),
-      plans.RerollQueries.rollupStock(spark, sfDir))
-    // Re-roll, HIGH-collapse fixture (G=16 cube over 600k line items: the
-    // stock Expand feeds 9.6M rows into the partial aggregate, the
-    // re-rolled one ~4.7k — the gate fires and wins wall even on one box).
-    val rerollHcJson = arm3("reroll_hc",
-      plans.RerollQueries.cubeLineitemReroll(spark, sfDir),
-      plans.RerollQueries.cubeLineitemRerollForced(spark, sfDir),
-      plans.RerollQueries.cubeLineitemStock(spark, sfDir))
-    // Price the matview rewrite: the same yearly rollup answered from the
-    // registered view vs from raw orders — the scan-rows column is the
-    // whole story (view rows vs fact rows).
-    val mvJson = try {
-      val (_, on) = observability.QueryMetrics.profile(
-        plans.MvRewriteQueries.mvRollup(spark, sfDir))
-      val (_, off) = observability.QueryMetrics.profile(
-        plans.MvRewriteQueries.mvMiss(spark, sfDir))
-      s""","mv_rewrite":{"on_sec":${on.wallMs / 1e3},"miss_sec":${off.wallMs / 1e3},""" +
-        s""""on_scan_rows":${on.scanRows},"miss_scan_rows":${off.scanRows}}"""
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] mv_rewrite ledger FAILED: ${e.getMessage}"); ""
-    }
-    // Eager aggregation, LOW fixture (4:1 collapse — gate declines on
-    // ratio, gated == off; forced halves shuffle bytes but loses wall).
-    val eagerJson = arm3("eager_agg",
-      plans.EagerAggregationQueries.eagerGated(spark, sfDir),
-      plans.EagerAggregationQueries.eager(spark, sfDir),
-      plans.EagerAggregationQueries.baseline(spark, sfDir))
-    // Eager aggregation, HIGH-collapse fixture (600:1 — the rewrite cuts
-    // shuffle bytes 126× AND measured wall-positive on an idle box, so the
-    // gate's 4 MiB saved-bytes floor FIRES here: gated must track forced,
-    // and beat off on both wall and bytes).
-    val eagerHcJson = arm3("eager_agg_hc",
-      plans.EagerAggregationQueries.eagerHc(spark, sfDir),
-      plans.EagerAggregationQueries.eagerHcForced(spark, sfDir),
-      plans.EagerAggregationQueries.baselineHc(spark, sfDir))
-    // Price the cost gate's own probe, both bounding axes:
-    //  - SKETCH bound (key-hash sampling) on the single-file lineitem —
-    //    ratio agreement is the unbiasedness evidence;
-    //  - SCAN bound (deterministic file subset) on the month-partitioned
-    //    fact (the only multi-file relation at this sf; lineitem is ONE
-    //    file, where there is nothing to bound) — scan rows and wall fall
-    //    with the byte fraction while the scaled row estimate holds. At
-    //    100 TB the scan bound is the axis that matters: the planning-time
-    //    probe reads a few files, not the lake.
-    val gateProbeJson = try {
-      import org.apache.spark.sql.functions.col
-      def probe(mod: Int) = plans.CollapseGate.probeAgg(
-        Tables.lineitem(spark, sfDir).select(col("l_suppkey")),
-        Seq(col("l_suppkey")), mod)
-      val (_, sp) = observability.QueryMetrics.profile(probe(16))
-      val (_, fp) = observability.QueryMetrics.profile(probe(1))
-      def ratio(mod: Int): Double = {
-        val r = probe(mod).head()
-        if (r.getLong(1) == 0) 0.0 else r.getLong(2).toDouble / r.getLong(1)
-      }
-      val fact = warehouse.PartitionedFact.factByMonth(spark, sfDir)
-        .select(col("patient_key"))
-      def facts(frac: Double) = plans.CollapseGate.boundedProbe(
-        fact, Seq("patient_key"), frac, 16)
-      val (bProbe, bFrac) = facts(0.1)
-      val (uProbe, _) = facts(1.0)
-      val (bm, _) = prof2(bProbe)
-      val (um, _) = prof2(uProbe)
-      val bRow = bProbe.head(); val uRow = uProbe.head()
-      val bRowsEst = (bRow.getLong(0) / bFrac).toLong
-      s""","gate_probe":{"sampled_sec":${sp.wallMs / 1e3},"full_sec":${fp.wallMs / 1e3},""" +
-        s""""sampled_ratio":${ratio(16)},"full_ratio":${ratio(1)},"scan_rows":${sp.scanRows},""" +
-        s""""bounded_sec":${bm.wallMs / 1e3},"unbounded_sec":${um.wallMs / 1e3},""" +
-        s""""bounded_byte_frac":$bFrac,"bounded_scan_rows":${bm.scanRows},""" +
-        s""""unbounded_scan_rows":${um.scanRows},"bounded_rows_est":$bRowsEst,""" +
-        s""""true_rows":${uRow.getLong(0)}}"""
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] gate_probe ledger FAILED: ${e.getMessage}"); ""
-    }
-    // Price the storage-partitioned join: identical rollup+join with and
-    // without the connector's reported KeyGroupedPartitioning (broadcast
-    // denied on both) — the measured value of shipping partition keys.
-    val spjJson = try {
-      val (_, on) = observability.QueryMetrics.profile(
-        sources.v2.GenQueries.spjJoin(spark, sfDir))
-      val (_, off) = observability.QueryMetrics.profile(
-        sources.v2.GenQueries.spjJoinOff(spark, sfDir))
-      s""","spj":{"on_sec":${on.wallMs / 1e3},"off_sec":${off.wallMs / 1e3},""" +
-        s""""on_shuffle_bytes":${on.shuffleWriteBytes},"off_shuffle_bytes":${off.shuffleWriteBytes}}"""
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] spj ledger FAILED: ${e.getMessage}"); ""
-    }
-    // Price the generated-column pruning rule: the same date-ranged report
-    // with the derived month_key predicate vs without — FILES READ (4 of
-    // ~84 month directories) is the structural story; scan output rows
-    // are identical by construction (the pushed data filter trims both
-    // arms to the same rows — pruning saves the READ, not the output),
-    // bytes and wall ride along.
-    val derivedDppJson = try {
-      val (on, onHi) = prof2(warehouse.PartitionedFact.derivedPruneScan(spark, sfDir))
-      val (off, offHi) = prof2(warehouse.PartitionedFact.derivedPruneScanOff(spark, sfDir))
-      // the DATE-lattice twin rides the same ledger: same layout, filter on
-      // the DateType column, pruning via the sidecar's yyyymm derivation
-      val (dOn, _) = prof2(warehouse.PartitionedFact.datePruneScan(spark, sfDir))
-      s""","derived_dpp":{"on_sec":${on.wallMs / 1e3},"off_sec":${off.wallMs / 1e3},""" +
-        s""""on_sec_hi":$onHi,"off_sec_hi":$offHi,""" +
-        s""""on_scan_files":${on.scanFiles},"off_scan_files":${off.scanFiles},""" +
-        s""""on_scan_bytes":${on.scanBytes},"off_scan_bytes":${off.scanBytes},""" +
-        s""""date_on_scan_files":${dOn.scanFiles},"date_on_scan_bytes":${dOn.scanBytes}}"""
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] derived_dpp ledger FAILED: ${e.getMessage}"); ""
-    }
-    // Price file-level skipping: the same reports over the z-ordered
-    // layout with the stats-sidecar rule on vs off — FILES/BYTES READ are
-    // the structural story (envelope cut on a z-order dimension for the
-    // range probe; per-file Bloom cut on the unclustered point key, where
-    // envelopes are useless). Scan output rows are identical by
-    // construction; wall rides along.
-    val fileSkipJson = try {
-      val (xOn, xOnHi) = prof2(warehouse.FileSkip.xRange(spark, sfDir))
-      val (xOff, xOffHi) = prof2(warehouse.FileSkip.xRangeOff(spark, sfDir))
-      val (pOn, _) = prof2(warehouse.FileSkip.pointLookup(spark, sfDir))
-      val (pOff, _) = prof2(warehouse.FileSkip.pointLookupOff(spark, sfDir))
-      // TIMESTAMP envelopes over the two-batch append layout: the probe
-      // sits inside the APPENDED batch, so the cut proves the incremental
-      // indexAppend path end to end
-      val (sOn, _) = prof2(warehouse.FileSkip.shipRange(spark, sfDir))
-      val (sOff, _) = prof2(warehouse.FileSkip.shipRangeOff(spark, sfDir))
-      // the drill-down semi-join: ~10 collected keys folded into an IN,
-      // Bloom-cut at file granularity (file-level dynamic pruning)
-      val (dOn, _) = prof2(warehouse.FileSkip.custDrill(spark, sfDir))
-      val (dOff, _) = prof2(warehouse.FileSkip.custDrillOff(spark, sfDir))
-      // layered pruning, three arms: no metadata / directory cut only /
-      // directory + file cut — each rung of the ladder priced separately
-      val (lBoth, _) = prof2(warehouse.FileSkip.layeredScan(spark, sfDir))
-      val (lDpf, _) = prof2(warehouse.FileSkip.layeredScanDpfOnly(spark, sfDir))
-      val (lOff, _) = prof2(warehouse.FileSkip.layeredScanOff(spark, sfDir))
-      s""","file_skip":{"x_on_sec":${xOn.wallMs / 1e3},"x_off_sec":${xOff.wallMs / 1e3},""" +
-        s""""x_on_sec_hi":$xOnHi,"x_off_sec_hi":$xOffHi,""" +
-        s""""x_on_scan_files":${xOn.scanFiles},"x_off_scan_files":${xOff.scanFiles},""" +
-        s""""x_on_scan_bytes":${xOn.scanBytes},"x_off_scan_bytes":${xOff.scanBytes},""" +
-        s""""point_on_scan_files":${pOn.scanFiles},"point_off_scan_files":${pOff.scanFiles},""" +
-        s""""point_on_scan_bytes":${pOn.scanBytes},"point_off_scan_bytes":${pOff.scanBytes},""" +
-        s""""ship_on_scan_files":${sOn.scanFiles},"ship_off_scan_files":${sOff.scanFiles},""" +
-        s""""ship_on_scan_bytes":${sOn.scanBytes},"ship_off_scan_bytes":${sOff.scanBytes},""" +
-        s""""drill_on_scan_files":${dOn.scanFiles},"drill_off_scan_files":${dOff.scanFiles},""" +
-        s""""drill_on_scan_bytes":${dOn.scanBytes},"drill_off_scan_bytes":${dOff.scanBytes},""" +
-        s""""layer_off_scan_files":${lOff.scanFiles},"layer_dpf_scan_files":${lDpf.scanFiles},""" +
-        s""""layer_both_scan_files":${lBoth.scanFiles},""" +
-        s""""layer_off_scan_bytes":${lOff.scanBytes},"layer_both_scan_bytes":${lBoth.scanBytes}}"""
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] file_skip ledger FAILED: ${e.getMessage}"); ""
-    }
-    // Price the union-of-aggregates merge: the same three-grain hand-written
-    // UNION ALL report as one grouping-sets scan vs three scans — scan rows
-    // is the structural story (1×|orders| vs 3×), wall and shuffle ride along.
-    val unionMergeJson = try {
-      val (_, on) = observability.QueryMetrics.profile(
-        plans.UnionMergeQueries.merged(spark, sfDir))
-      val (_, off) = observability.QueryMetrics.profile(
-        plans.UnionMergeQueries.stock(spark, sfDir))
-      s""","union_merge":{"on_sec":${on.wallMs / 1e3},"off_sec":${off.wallMs / 1e3},""" +
-        s""""on_scan_rows":${on.scanRows},"off_scan_rows":${off.scanRows},""" +
-        s""""on_shuffle_bytes":${on.shuffleWriteBytes},"off_shuffle_bytes":${off.shuffleWriteBytes}}"""
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] union_merge ledger FAILED: ${e.getMessage}"); ""
-    }
+      name -> timeOrFail(s"$name second sample")(
+        SparkEntry.queries(name)(spark, sfDir)) }
+    // every field after the head (metric/value/unit/refreshed/queries),
+    // shared by the stdout line and a refreshed record
+    val rest = json.createObjectNode().put("failed", failed)
+    putSeconds(rest.putObject("second_sample"), second)
+    runLedgers(ledgers, rest)
     // Load guard (r9 finding 2): a hot box makes identical code read >1.3×
     // slower across the board, and committing such a run as "the baseline"
     // re-creates the phantom-regression adjudication problem the artifact
@@ -488,14 +484,20 @@ object Bench {
     // slowdown after a code change), or new coverage lands.
     val slower = priorShared > 0 && totalShared > 1.05 * priorShared
     val loadEnd = loadAvg()
-    val loadJson = s""","loadavg_start":$loadStart,"loadavg_end":$loadEnd,""" +
-      s""""prior_total_shared":$priorShared,"total_shared":$totalShared,"noisy":$noisy"""
+    rest.put("loadavg_start", loadStart).put("loadavg_end", loadEnd)
+      .put("prior_total_shared", priorShared).put("total_shared", totalShared)
+      .put("noisy", noisy).put("sf", sfDir)
     // artifact assembler: the stdout line is always the HONEST current run
     // (refreshed=false); only a baseline refresh writes a min-merged record
-    def artifact(v: Double, q: String, refreshed: Boolean): String =
-      s"""{"metric":"total","value":$v,"unit":"sec","refreshed":$refreshed,"queries":$q,"failed":$failed,"second_sample":$secondJson$ruleJson$asofJson$asofSkewJson$rerollJson$rerollHcJson$mvJson$eagerJson$eagerHcJson$gateProbeJson$spjJson$derivedDppJson$fileSkipJson$unionMergeJson$loadJson,"sf":"$sfDir"}"""
-    val json = artifact(total, qs, refreshed = false)
-    println(json)
+    def artifact(v: Double, q: Seq[(String, Double)], refreshed: Boolean): ObjectNode = {
+      val o = json.createObjectNode().put("metric", "total").put("value", v)
+        .put("unit", "sec").put("refreshed", refreshed)
+      putSeconds(o.putObject("queries"), q)
+      o.setAll[JsonNode](rest)
+      o
+    }
+    val line = artifact(total, results, refreshed = false)
+    println(json.writeValueAsString(line))
     // The committed artifact: sbt wraps stdout in "[info] " prefixes, which
     // is exactly what broke the driver's JSON parse through r8 ("parsed":
     // null, 2000-char tail) — the file at the repo root is the full,
@@ -532,11 +534,8 @@ object Bench {
       val committedFile = new java.io.File(repoRoot, "bench_out.json")
       // the agreeing candidate's per-query times, or None if any gate fails
       val agreed: Option[Map[String, Double]] =
-        if (!((noisy || slower) && !force && idleStart && calmEnd &&
-            candFile.isFile)) None
-        else try {
-          val node = new com.fasterxml.jackson.databind.ObjectMapper()
-            .readTree(candFile)
+        if (!((noisy || slower) && !force && idleStart && calmEnd)) None
+        else readQueries(candFile, sfDir).flatMap { case (node, cand) =>
           val candIdle = {
             val l = node.path("loadavg_start").asDouble(-1.0)
             l >= 0 && l < 2.5
@@ -545,25 +544,17 @@ object Bench {
             val l = node.path("loadavg_end").asDouble(-1.0)
             l >= 0 && l < 10.0
           }
-          val candSf = node.path("sf").asText() == sfDir
           val candFresh = candFile.lastModified() > committedFile.lastModified() &&
             System.currentTimeMillis() - candFile.lastModified() < 48L * 3600 * 1000
-          val cand = {
-            val it = node.path("queries").fields()
-            val b = Map.newBuilder[String, Double]
-            while (it.hasNext) {
-              val e = it.next(); b += e.getKey -> e.getValue.asDouble(-1.0) }
-            b.result()
-          }
           val names = results.collect {
             case (n, t) if t >= 0 && cand.get(n).exists(_ > 0) => n }
           val mine = names.map(results.toMap).sum
           val theirs = names.map(cand).sum
-          if (candIdle && candCalmEnd && candSf && candFresh &&
+          if (candIdle && candCalmEnd && candFresh &&
               names.nonEmpty && mine <= 1.10 * theirs && theirs <= 1.10 * mine)
             Some(cand)
           else None
-        } catch { case _: Throwable => None }
+        }
       val agreedRefresh = agreed.isDefined
       val reject = (noisy || slower) && !force && !agreedRefresh
       val target = if (reject) "bench_out.noisy.json" else "bench_out.json"
@@ -579,19 +570,16 @@ object Bench {
             val c = cand.getOrElse(n, -1.0)
             n -> (if (t >= 0 && c > 0) math.min(t, c) else t)
           }
-          val mergedQs = merged.map { case (k, v) => "\"" + k + "\":" + v }
-            .mkString("{", ",", "}")
           val mergedTotal = merged.map(_._2).filter(_ >= 0).sum
-          artifact(mergedTotal, mergedQs, refreshed = true)
-        case None => json
+          artifact(mergedTotal, merged, refreshed = true)
+        case None => line
       }
       if (reject) System.err.println(
         s"[bench] ${if (noisy) "NOISY" else "SLOWER"} RUN (shared total " +
           s"$totalShared vs prior $priorShared, loadavg $loadStart→$loadEnd): " +
           s"keeping committed baseline, wrote $target")
       java.nio.file.Files.write(
-        new java.io.File(repoRoot, target).toPath,
-        committed.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        new java.io.File(repoRoot, target).toPath, json.writeValueAsBytes(committed))
     }
   }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.execution.ExplainMode
 
 /** Ad-hoc profiling main for the optimization rounds: same session shape
   * and populate phase as [[Bench]], then for each named query prints a
-  * metrics line (min-of-2 warm samples through
+  * metrics line ([[Bench.sample]]: the bench ledgers' warm min-of-2
   * [[observability.QueryMetrics.profile]]) and optionally dumps the
   * `explain("formatted")` plan to a file.
   *
@@ -15,8 +15,10 @@ import org.apache.spark.sql.execution.ExplainMode
   *   - with `explainDir`, each query's formatted plan lands at
   *     `<explainDir>/<name>_<tag>.txt` (tag defaults to "before").
   *   - `fresh` times bench-style instead (`PROFILE name wall_s fresh`):
-  *     noop-sink runs with [[Memos.newGeneration]] before each, so
-  *     memoized builds are re-run inside the clock.
+  *     [[Bench.noopSeconds]] runs with [[Memos.newGeneration]] before each,
+  *     so memoized builds are re-run inside the clock.
+  *   - exits with status 1, after the other names, when a name is unknown
+  *     or its run fails.
   *
   * This is a measurement tool, not a declared query: nothing here is
   * registered in [[SparkEntry.queries]] and no result is persisted.
@@ -35,36 +37,28 @@ object Profile {
     val spark = LocalSession()
     Bench.populate(spark, sfDir)
     val qs = SparkEntry.queries
-    for (name <- names) qs.get(name) match {
-      case None => System.err.println(s"[profile] no such query: $name")
+    val ok = names.map { name => qs.get(name) match {
+      case None =>
+        System.err.println(s"[profile] no such query: $name")
+        false
       case Some(fn) =>
         spark.sparkContext.setJobDescription(s"profile:$name")
         try {
           if (fresh) {
-            // bench-style timing (t0 before fn, so memoized builds that run
-            // at DataFrame construction are INSIDE the clock), with
-            // Memos.newGeneration before each run so the build repeats —
-            // the bench second-sample discipline
-            def run(): Double = {
+            // Memos.newGeneration before each run so the memoized build
+            // repeats inside the noop timer's clock — the bench
+            // second-sample discipline
+            val (t, hi) = Bench.minOf2 { () =>
               Memos.newGeneration()
-              val t0 = System.nanoTime()
-              fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-              (System.nanoTime() - t0) / 1e9
-            }
-            run() // warm
-            val a = run(); val b = run()
-            println(f"PROFILE $name ${math.min(a, b)}%.3f fresh " +
-              f"hi=${math.max(a, b)}%.3f")
+              Bench.noopSeconds(fn(spark, sfDir))
+            }(identity)
+            println(f"PROFILE $name $t%.3f fresh hi=$hi%.3f")
           } else {
-          // warm run via the bench's own sink, then min-of-2 profiled runs
-          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          val a = observability.QueryMetrics.profile(fn(spark, sfDir))._2
-          val b = observability.QueryMetrics.profile(fn(spark, sfDir))._2
-          val p = if (a.wallMs <= b.wallMs) a else b
-          println(f"PROFILE $name ${p.wallMs / 1e3}%.3f ${p.scanRows} " +
-            s"${p.scanBytes} ${p.shuffleWriteBytes} ${p.shuffleRecordsWritten} " +
-            s"${p.spillBytes} ${p.expandRows} ${p.outputRows} " +
-            f"hi=${math.max(a.wallMs, b.wallMs) / 1e3}%.3f")
+            val (p, hi) = Bench.sample(fn(spark, sfDir))
+            println(f"PROFILE $name ${p.wallMs / 1e3}%.3f ${p.scanRows} " +
+              s"${p.scanBytes} ${p.shuffleWriteBytes} ${p.shuffleRecordsWritten} " +
+              s"${p.spillBytes} ${p.expandRows} ${p.outputRows} " +
+              f"hi=$hi%.3f")
           }
           explainDir.foreach { d =>
             val f = new java.io.File(d, s"${name}_$tag.txt")
@@ -74,10 +68,14 @@ object Profile {
             java.nio.file.Files.write(f.toPath,
               plan.getBytes(java.nio.charset.StandardCharsets.UTF_8))
           }
+          true
         } catch { case e: Throwable =>
           System.err.println(s"[profile] $name FAILED: ${e.getMessage}")
+          false
         } finally spark.sparkContext.setJobDescription(null)
-    }
+    }}
     spark.stop()
+    // a typo or a failed run must reach the calling script
+    if (ok.contains(false)) sys.exit(1)
   }
 }

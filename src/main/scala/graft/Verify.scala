@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.types._
+import com.fasterxml.jackson.databind.ObjectMapper
 import java.nio.file.{Files, Paths}
 
 /** Output-boundary type contract for every [[SparkEntry.queries]] result.
@@ -54,25 +55,23 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    // The driver keys its oracle lookup by the output directory basename —
-    // "<name>.parquet" (CORRECTNESS_r05 resolved all 269 entries this way;
-    // the bare-name dual keys the earlier rounds hedged with are dropped).
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(s"$k.parquet")}: ${q(v)}" }
-      .mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      oracleJson(SparkEntry.oracleSql))
     spark.stop()
+  }
+
+  /** oracle_sql.json, keyed by the output directory basename —
+    * "<name>.parquet", which is how the oracle compare looks entries up
+    * (CORRECTNESS_r05 resolved all 269 entries this way; the bare-name dual
+    * keys the earlier rounds hedged with are dropped). Written by Jackson,
+    * which escapes every control character: a tab or CR in hand-written
+    * oracle SQL must not make the compare's `json.load` fail and silently
+    * zero the round's correctness.
+    */
+  def oracleJson(oracle: Map[String, String]): String = {
+    val json = new ObjectMapper()
+    val o = json.createObjectNode()
+    oracle.foreach { case (k, v) => o.put(s"$k.parquet", v) }
+    json.writeValueAsString(o)
   }
 }

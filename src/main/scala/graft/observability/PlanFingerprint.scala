@@ -2,7 +2,6 @@ package graft.observability
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 
 /** Physical-plan fingerprints as DATA — plan-regression detection for the
   * queries whose shape IS their scale contract.
@@ -32,15 +31,8 @@ import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStag
 object PlanFingerprint {
 
   def fingerprint(df: DataFrame): Map[String, Long] = {
-    def walk(p: SparkPlan): Seq[SparkPlan] = {
-      val here = p.collect { case n => n }
-      val inner = p.collect {
-        case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
-        case q: QueryStageExec => walk(q.plan)
-      }.flatten
-      here ++ inner
-    }
-    val nodes: Seq[SparkPlan] = walk(df.queryExecution.executedPlan)
+    val nodes: Seq[SparkPlan] =
+      PlanWalk.collect(df.queryExecution.executedPlan) { case n => n }
     def n(pred: String => Boolean): Long =
       nodes.count(x => pred(x.nodeName)).toLong
     Map(

@@ -1,8 +1,6 @@
 package graft.observability
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 
 /** Runtime query profile — the per-operator metrics ledger behind the bench
   * loop's "measure, don't guess" rule.
@@ -18,9 +16,9 @@ import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStag
   *
   * Metric accumulators are merged on the driver as part of task completion,
   * so reading them AFTER the action returns is race-free (no listener-bus
-  * asynchrony). AQE wraps finished stages in [[QueryStageExec]] whose
-  * subplans `collect` won't descend into — the walk below follows them
-  * explicitly, same as the PlanSpec gates.
+  * asynchrony). AQE wraps finished stages in `QueryStageExec`, whose
+  * subplans a plain `collect` won't descend into — [[PlanWalk]] follows
+  * them, the same walk the PlanSpec gates use.
   *
   * Most of the ledger is SPEC-ONLY: operator names, shuffle bytes, spill
   * counters are values that exist only in this engine's runtime — DuckDB
@@ -48,15 +46,6 @@ object QueryMetrics {
       scanFiles: Long, shuffleWriteBytes: Long, shuffleRecordsWritten: Long,
       spillBytes: Long, wallMs: Long, expandRows: Long)
 
-  private def walk(p: SparkPlan): Seq[SparkPlan] = {
-    val here = p.collect { case n => n }
-    val inner = p.collect {
-      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
-      case q: QueryStageExec => walk(q.plan)
-    }.flatten
-    here ++ inner
-  }
-
   /** Execute `df` (count action) and return the full (operator, metric,
     * value) ledger as a local DataFrame plus the headline totals.
     */
@@ -68,7 +57,7 @@ object QueryMetrics {
     // metrics belong to that query, not this one) and read its accumulators
     val outputRows = df.queryExecution.executedPlan.execute().count()
     val wallMs = (System.nanoTime() - t0) / 1000000L
-    val nodes = walk(df.queryExecution.executedPlan)
+    val nodes = PlanWalk.collect(df.queryExecution.executedPlan) { case n => n }
     val ledger = nodes.zipWithIndex.flatMap { case (n, i) =>
       n.metrics.toSeq.map { case (key, m) =>
         (i, n.nodeName, key, m.name.getOrElse(key), m.value)

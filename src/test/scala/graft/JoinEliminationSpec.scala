@@ -105,16 +105,8 @@ class JoinEliminationSpec extends SparkSpec {
 
   test("rule removes physical Exchanges, not just logical joins (on vs off)") {
     import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.exchange.Exchange
-    def exchanges(p: SparkPlan): Int = {
-      val here = p.collect { case e: Exchange => e }.size
-      val nested = p.collect {
-        case a: AdaptiveSparkPlanExec => exchanges(a.executedPlan)
-        case q: QueryStageExec => exchanges(q.plan)
-      }.sum
-      here + nested
-    }
+    def exchanges(p: SparkPlan): Int = collectAll(p) { case e: Exchange => e }.size
     val on = JoinEliminationQueries.all("opt_join_elimination")(spark, sf)
     val off = JoinEliminationQueries.all("opt_join_baseline")(spark, sf)
     // force execution so AQE finalizes both physical plans before counting

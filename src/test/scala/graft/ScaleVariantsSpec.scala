@@ -211,7 +211,6 @@ class ScaleVariantsSpec extends SparkSpec {
 
   test("bucketed ingest: the order-key join runs with zero shuffles") {
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     val prevBroadcast = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     // force the non-broadcast path: the point is big-big shuffle elimination
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -224,14 +223,10 @@ class ScaleVariantsSpec extends SparkSpec {
       val joined = warehouse.Bucketing.coLocatedOrderJoin(
         spark, "orders_bkt", "lineitem_bkt")
       val rows = joined.collect()
-      def shuffles(p: org.apache.spark.sql.execution.SparkPlan): Int = {
-        val here = p.collect { case s: ShuffleExchangeExec => s }.size
-        val inner = p.collect {
-          case a: AdaptiveSparkPlanExec => shuffles(a.executedPlan)
-        }.sum
-        here + inner
-      }
-      assert(shuffles(joined.queryExecution.executedPlan) == 0,
+      // through collectAll: after collect() every exchange sits inside a
+      // query stage, which a walk that stops at stages never sees
+      assert(collectAll(joined.queryExecution.executedPlan) {
+          case s: ShuffleExchangeExec => s }.isEmpty,
         s"bucketed join must not exchange:\n${joined.queryExecution.executedPlan}")
       // identical result to the plain (shuffling) join
       val plain = Tables.orders(spark, sf).join(

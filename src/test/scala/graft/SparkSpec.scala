@@ -30,18 +30,11 @@ abstract class SparkSpec extends AnyFunSuite {
 
   /** AQE-aware physical-plan collector: AdaptiveSparkPlanExec and
     * QueryStageExec wrap their real subplans as non-child fields, so a
-    * plain collect() stops at them — descend manually. Shared here so the
-    * traversal logic can't drift between plan-shape specs.
+    * plain collect() stops at them. Delegates to the engine's one walk
+    * ([[observability.PlanWalk]], Spark's AdaptiveSparkPlanHelper) so the
+    * specs count exactly what the profile ledger and fingerprints count.
     */
   def collectAll[T](p: org.apache.spark.sql.execution.SparkPlan)(
-      pf: PartialFunction[org.apache.spark.sql.execution.SparkPlan, T]): Seq[T] = {
-    val here = p.collect(pf)
-    val inner = p.collect {
-      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-        collectAll(a.executedPlan)(pf)
-      case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-        collectAll(q.plan)(pf)
-    }.flatten
-    here ++ inner
-  }
+      pf: PartialFunction[org.apache.spark.sql.execution.SparkPlan, T]): Seq[T] =
+    observability.PlanWalk.collect(p)(pf)
 }
