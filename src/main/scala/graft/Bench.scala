@@ -1,4 +1,5 @@
 package graft
+import com.fasterxml.jackson.core.json.JsonWriteFeature
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -41,6 +42,13 @@ object Bench {
   } catch { case _: Throwable => -1.0 }
 
   private val json = new ObjectMapper()
+
+  /** The stdout artifact line, `\uXXXX`-escaped down to ASCII: `println`
+    * encodes with the JVM default charset, which is ASCII under a POSIX
+    * locale and would turn the claims' em dashes into `?`.
+    */
+  private[graft] def stdoutLine(node: JsonNode): String =
+    json.writer().`with`(JsonWriteFeature.ESCAPE_NON_ASCII).writeValueAsString(node)
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -497,7 +505,7 @@ object Bench {
       o
     }
     val line = artifact(total, results, refreshed = false)
-    println(json.writeValueAsString(line))
+    println(stdoutLine(line))
     // The committed artifact: sbt wraps stdout in "[info] " prefixes, which
     // is exactly what broke the driver's JSON parse through r8 ("parsed":
     // null, 2000-char tail) — the file at the repo root is the full,

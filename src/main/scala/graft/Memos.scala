@@ -7,10 +7,11 @@ package graft
   * per-(application, corpus) memo, so a SECOND timed run of the same entry
   * would measure the memo hit instead of the operator (r8:
   * `stream_near_dedup` re-timed at 0.38 s vs an 11.2 s first sample).
-  * Those modules key their memo — and their scratch directories — by
-  * [[runTag]]; [[Bench]] bumps the generation before its re-timing pass so
-  * a second sample repeats the FULL work in a fresh scratch area (fresh
-  * source landing, fresh checkpoint, fresh sink), not a cache read.
+  * Those modules keep that memo as a `perRun` [[Scratch]] entry, whose
+  * key and directory carry [[runTag]]; [[Bench]] bumps the generation
+  * before its re-timing pass so a second sample repeats the FULL work in a
+  * fresh scratch area (fresh source landing, fresh checkpoint, fresh
+  * sink), not a cache read.
   *
   * Everything pre-warmed in Bench's untimed setup phase (warehouse build,
   * dedup pair tables, ANN indexes, bucketed layouts) deliberately does NOT

@@ -20,7 +20,7 @@ object StreamProfile {
       r
     }
     def runOnce(tag: String, feedDf: org.apache.spark.sql.DataFrame): Unit = {
-      val base = s"${sys.props("java.io.tmpdir")}/graft-streamprof/$tag-${System.nanoTime()}"
+      val base = Scratch.path(spark, "graft-streamprof", s"$tag-${System.nanoTime()}")
       t(s"$tag/land") { feedDf.write.mode("overwrite").parquet(s"$base/src") }
       t(s"$tag/stream") {
         streaming.IncrementalIngest.withStreamPartitions(spark) { ss =>

@@ -95,9 +95,6 @@ object GraphOps {
     */
   val CoThreshold = 20
 
-  private val coMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
   /** Undirected supplier co-occurrence edges: (u < v, shared-order count ≥
     * [[CoThreshold]]). The (order, supplier) projection dedups BEFORE the
     * self-join so multi-lineitem orders don't inflate pair weights, and the
@@ -108,11 +105,8 @@ object GraphOps {
     * the same write-once edge-table shape a 100 TB graph pass uses.
     */
   private[graft] def coEdges(spark: SparkSession, dir: String): DataFrame =
-    coMemo.computeIfAbsent(s"${spark.sparkContext.applicationId}:$dir", { _ =>
+    graft.Scratch.parquet(spark, "graft-co-edges", dir) {
       import spark.implicits._
-      val safe = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-      val p = s"${sys.props("java.io.tmpdir")}/graft-co-edges/" +
-        s"${spark.sparkContext.applicationId}/$safe"
       val os = Tables.lineitem(spark, dir)
         .select($"l_orderkey", $"l_suppkey").distinct()
       os.as("a").join(os.as("b"),
@@ -122,9 +116,7 @@ object GraphOps {
         .agg(count(lit(1)).as("w"))
         .filter($"w" >= CoThreshold)
         .select($"u", $"v")
-        .write.mode("overwrite").parquet(p)
-      spark.read.parquet(p)
-    })
+    }
 
   /** Per-supplier triangle participation counts over the co-occurrence
     * graph, by DEGREE-ORDERED wedge counting (the scalable formulation):

@@ -43,9 +43,6 @@ object QDigest {
   /** (numerator, denominator) of the audited quantiles. */
   val Quantiles: Seq[(Int, Int)] = Seq((1, 2), (9, 10), (99, 100))
 
-  private val memo = new java.util.concurrent.ConcurrentHashMap[
-    String, (Seq[(Long, Long)], Seq[(Int, Long, Long, Long)])]()
-
   /** Leaf histogram (ONE distributed keyed aggregate, collected — bounded
     * by the 2^[[Levels]] universe, never by row count: the IvfIndex
     * bounded-collect pattern) and the compressed digest, built by the
@@ -58,7 +55,7 @@ object QDigest {
     */
   private[graft] def build(spark: SparkSession, dir: String)
       : (Seq[(Long, Long)], Seq[(Int, Long, Long, Long)]) =
-    memo.computeIfAbsent(s"${spark.sparkContext.applicationId}:$dir", { _ =>
+    graft.Scratch.memo(spark, "graft-qdigest", dir) { _ =>
       import spark.implicits._
       val leaves = Tables.orders(spark, dir)
         .select(expr(s"floor(o_totalprice) div $CellDollars").as("id"))
@@ -67,7 +64,7 @@ object QDigest {
         .sortBy(_._1).toSeq
       (leaves, compress(leaves.map { case (id, c) => (Levels, id) -> c }.toMap,
         leaves.map(_._2).sum))
-    })
+    }
 
   /** General q-digest compression over counts at ANY levels — the form
     * MERGE needs (two digests' node counts union at mixed levels, then

@@ -266,37 +266,12 @@ object Dedup {
       .orderBy($"doc_a", $"doc_b")
   }
 
-  /** The write-once parquet memoization every pair-table family shares:
-    * build once per (application, key), land under the app-scoped tmp
-    * cache, hand every consumer the re-read. One definition so the key
-    * format, path sanitizing, and write-then-reread sequence can't drift
-    * between the three caches.
-    */
-  private[dedup] def memoizedParquet(
-      memo: java.util.concurrent.ConcurrentHashMap[String, DataFrame],
-      spark: SparkSession, cacheName: String, key: String)(
-      build: => DataFrame): DataFrame =
-    memo.computeIfAbsent(s"${spark.sparkContext.applicationId}:$key", { _ =>
-      val safe = key.replaceAll("[^A-Za-z0-9._-]", "_")
-      val p = s"${sys.props("java.io.tmpdir")}/$cacheName/" +
-        s"${spark.sparkContext.applicationId}/$safe"
-      build.write.mode("overwrite").parquet(p)
-      spark.read.parquet(p)
-    })
-
-  private val containMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
   /** [[containment]] materialized once per (app, corpus) — same write-once
     * shape as [[pairsForDir]]; the directed pair table is the artifact a
     * curation pass queries repeatedly.
     */
   def containmentForDir(spark: SparkSession, dir: String): DataFrame =
-    memoizedParquet(containMemo, spark, "graft-contain-pairs", dir)(
-      containment(spark, dir))
-
-  private val prefixMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+    graft.Scratch.parquet(spark, "graft-contain-pairs", dir)(containment(spark, dir))
 
   /** [[ngramJaccardPrefix]] materialized once per (app, corpus, τ) — the
     * same write-once pair-table shape as [[pairsForDir]]: the index build
@@ -304,8 +279,8 @@ object Dedup {
     */
   def prefixPairsForDir(spark: SparkSession, dir: String,
       threshold: Double = PrefixTau): DataFrame =
-    memoizedParquet(prefixMemo, spark, "graft-prefix-pairs",
-      s"$dir:$threshold")(ngramJaccardPrefix(spark, dir, threshold))
+    graft.Scratch.parquet(spark, "graft-prefix-pairs", s"$dir:$threshold")(
+      ngramJaccardPrefix(spark, dir, threshold))
 
   /** Candidate pairs from the prefix index — exposed for the spec's
     * fan-out comparison against the full inverted-index join.
@@ -373,9 +348,6 @@ object Dedup {
       .drop("sh_a", "sh_b")
   }
 
-  private val pairMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
   /** The exact-Jaccard pair table (doc_a, doc_b, jaccard), τ ≥ [[BaseTau]],
     * materialized ONCE per (app, corpus) and shared by every consumer —
     * the registered `dedup_ngram_jaccard` query, [[DupClusters]]' edge list,
@@ -385,11 +357,7 @@ object Dedup {
     * once per dedup pass and query repeatedly.
     */
   def pairsForDir(spark: SparkSession, dir: String): DataFrame =
-    memoizedParquet(pairMemo, spark, "graft-pairs", dir)(
-      ngramJaccard(spark, dir, BaseTau))
-
-  private val cappedPairMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+    graft.Scratch.parquet(spark, "graft-pairs", dir)(ngramJaccard(spark, dir, BaseTau))
 
   /** [[ngramJaccardCapped]] at its defaults, materialized once per
     * (app, corpus) — the capped pass is the one a boilerplate-bearing
@@ -398,7 +366,7 @@ object Dedup {
     * ScaleVariantsSpec sweeps, still run the live plan).
     */
   def cappedPairsForDir(spark: SparkSession, dir: String): DataFrame =
-    memoizedParquet(cappedPairMemo, spark, "graft-pairs-capped", dir)(
+    graft.Scratch.parquet(spark, "graft-pairs-capped", dir)(
       ngramJaccardCapped(spark, dir, BaseTau, JaccardDfCap))
 
   /** Cross-source duplication matrix — near-dup pair counts per unordered

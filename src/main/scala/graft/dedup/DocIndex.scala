@@ -4,8 +4,6 @@ import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import java.util.concurrent.ConcurrentHashMap
-
 /** Materialized per-corpus document index shared by the dedup families:
   * the shingle set per document, written once as parquet and read back.
   *
@@ -25,14 +23,6 @@ object DocIndex {
     Dedup.withShingles(Tables.documents(spark, dir))
       .select(col("doc_id"), col("sh"))
 
-  private val memo = new ConcurrentHashMap[String, DataFrame]()
-
   def forDir(spark: SparkSession, dir: String): DataFrame =
-    memo.computeIfAbsent(s"${spark.sparkContext.applicationId}:$dir", { _ =>
-      val safe = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-      val p = s"${sys.props("java.io.tmpdir")}/graft-docidx/" +
-        s"${spark.sparkContext.applicationId}/$safe"
-      build(spark, dir).write.mode("overwrite").parquet(p)
-      spark.read.parquet(p)
-    })
+    graft.Scratch.parquet(spark, "graft-docidx", dir)(build(spark, dir))
 }

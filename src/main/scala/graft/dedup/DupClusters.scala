@@ -20,16 +20,8 @@ object DupClusters {
 
   // label table materialized once per (application, corpus): the fixpoint
   // loop is an index build, reused by every downstream consumer
-  private val memo = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
   def clusters(spark: SparkSession, dir: String): DataFrame =
-    memo.computeIfAbsent(s"${spark.sparkContext.applicationId}:$dir", { _ =>
-      val safe = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-      val p = s"${sys.props("java.io.tmpdir")}/graft-clusters/" +
-        s"${spark.sparkContext.applicationId}/$safe"
-      computeClusters(spark, dir).write.mode("overwrite").parquet(p)
-      spark.read.parquet(p)
-    })
+    graft.Scratch.parquet(spark, "graft-clusters", dir)(computeClusters(spark, dir))
 
   private def computeClusters(spark: SparkSession, dir: String,
       threshold: Double = 0.2, maxIter: Int = 20): DataFrame = {

@@ -4,8 +4,6 @@ import graft.functions.Md5Hash
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import java.util.concurrent.ConcurrentHashMap
-
 /** MinHash + LSH near-duplicate detection — the corpus-scale path.
   *
   * Pipeline: word-3-gram shingles → k=32 permutation-min-hash signature
@@ -104,21 +102,14 @@ object MinHashLsh {
         array((0 until NumHashes).map(i => col(s"s$i")): _*).as("sig"))
   }
 
-  private val memo = new ConcurrentHashMap[String, DataFrame]()
-
   /** Signature table materialized once per (app, corpus) — same
     * memo-to-parquet pattern as [[DocIndex.forDir]]. At cluster scale this is
     * the signature table a 100 TB dedup pass writes once (partitioned by
     * doc_id hash) and reuses across the banding join and any re-run.
     */
   def sigsForDir(spark: SparkSession, dir: String): DataFrame =
-    memo.computeIfAbsent(s"${spark.sparkContext.applicationId}:$dir", { _ =>
-      val safe = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-      val p = s"${sys.props("java.io.tmpdir")}/graft-minhash/" +
-        s"${spark.sparkContext.applicationId}/$safe"
-      signatures(DocIndex.forDir(spark, dir)).write.mode("overwrite").parquet(p)
-      spark.read.parquet(p)
-    })
+    graft.Scratch.parquet(spark, "graft-minhash", dir)(
+      signatures(DocIndex.forDir(spark, dir)))
 
   /** (doc_id, band, bucket) rows of a signature table. Band bucket = md5 of
     * the comma-joined 4 signature values (md5 rather than xxhash64 so the

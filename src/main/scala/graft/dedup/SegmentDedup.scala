@@ -122,16 +122,12 @@ object SegmentDedup {
       .orderBy($"doc_a", $"doc_b")
   }
 
-  private val editMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
   /** [[editVerify]] materialized once per (app, corpus) — the verified pair
     * table is a write-once artifact exactly like [[Dedup.pairsForDir]] and
     * siblings; downstream consumers (and the registered query) read it.
     */
   def editPairsForDir(spark: SparkSession, dir: String): DataFrame =
-    Dedup.memoizedParquet(editMemo, spark, "graft-edit-pairs", dir)(
-      editVerify(spark, dir))
+    graft.Scratch.parquet(spark, "graft-edit-pairs", dir)(editVerify(spark, dir))
 
   val all: Map[String, (SparkSession, String) => DataFrame] = Map(
     "dedup_segment_exact" -> (segmentExact _),

@@ -4,8 +4,6 @@ import graft.functions.Md5Hash
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import java.util.concurrent.ConcurrentHashMap
-
 /** SimHash near-duplicate detection: 64-bit sign-hash fingerprints compared
   * by Hamming distance, with chunk-bucketed candidate generation.
   *
@@ -74,17 +72,10 @@ object SimHash {
     agg.select(col("doc_id"), simhash.as("simhash"))
   }
 
-  private val memo = new ConcurrentHashMap[String, DataFrame]()
-
   /** Fingerprint table materialized once per (app, corpus). */
   def fpForDir(spark: SparkSession, dir: String): DataFrame =
-    memo.computeIfAbsent(s"${spark.sparkContext.applicationId}:$dir", { _ =>
-      val safe = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-      val p = s"${sys.props("java.io.tmpdir")}/graft-simhash/" +
-        s"${spark.sparkContext.applicationId}/$safe"
-      fingerprints(DocIndex.forDir(spark, dir)).write.mode("overwrite").parquet(p)
-      spark.read.parquet(p)
-    })
+    graft.Scratch.parquet(spark, "graft-simhash", dir)(
+      fingerprints(DocIndex.forDir(spark, dir)))
 
   def nearDuplicates(spark: SparkSession, dir: String,
       maxHamming: Int = MaxHamming, chunkBits: Int = ChunkBits): DataFrame = {

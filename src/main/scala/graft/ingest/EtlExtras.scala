@@ -26,26 +26,19 @@ object EtlExtras {
   val GapRun = 10
   val GapEvery = 50
 
-  private val evolveMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
-
   /** Land the two feed generations as genuinely differently-schemaed parquet
     * (gen0 lacks `value`/`props`), once per (app, corpus).
     */
   private def landGenerations(spark: SparkSession, dir: String): (String, String) =
-    evolveMemo.computeIfAbsent(
-      s"${spark.sparkContext.applicationId}:${graft.Memos.runTag}:$dir", { _ =>
-        val safe = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-        val base = s"${sys.props("java.io.tmpdir")}/graft-evolve/" +
-          s"${spark.sparkContext.applicationId}/${graft.Memos.runTag}/$safe"
-        val e = Tables.events(spark, dir)
-        e.filter(isGen0)
-          .select(col("event_id"), col("ts"), col("user_id"), col("event_type"))
-          .write.mode("overwrite").parquet(s"$base/gen0")
-        e.filter(!isGen0)
-          .write.mode("overwrite").parquet(s"$base/gen1")
-        (s"$base/gen0", s"$base/gen1")
-      })
+    graft.Scratch.memo(spark, "graft-evolve", dir, perRun = true) { base =>
+      val e = Tables.events(spark, dir)
+      e.filter(isGen0)
+        .select(col("event_id"), col("ts"), col("user_id"), col("event_type"))
+        .write.mode("overwrite").parquet(s"$base/gen0")
+      e.filter(!isGen0)
+        .write.mode("overwrite").parquet(s"$base/gen1")
+      (s"$base/gen0", s"$base/gen1")
+    }
 
   /** Schema-evolution ingest: two feed generations land with drifted
     * schemas; `Sources.unionEvolved` aligns them by NAME with declared

@@ -49,9 +49,6 @@ object Multimodal {
         (pmod($"doc_id", lit(3)) + 1).cast("int")).as("media_type"))
   }
 
-  private val mediaFilesMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Land every document's payload as an individual `<doc_id>.bin` FILE —
     * the on-disk shape a real media corpus arrives in — and return the
     * directory. The landing is distributed (foreachPartition, one writer
@@ -60,28 +57,24 @@ object Multimodal {
     * landed-source operators.
     */
   private def mediaFilesDir(spark: SparkSession, dir: String): String =
-    mediaFilesMemo.computeIfAbsent(
-      s"${spark.sparkContext.applicationId}:${graft.Memos.runTag}:$dir", { _ =>
-        val safe = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-        val base = s"${sys.props("java.io.tmpdir")}/graft-mediafiles/" +
-          s"${spark.sparkContext.applicationId}/${graft.Memos.runTag}/$safe"
-        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(base))
-        // "distributed landing" was aspirational: documents is one parquet
-        // row group, so without the spread every file write ran in ONE
-        // task (Tables.spreadNarrowScan — exchange only for inputs too
-        // small to split)
-        Tables.spreadNarrowScan(Tables.documents(spark, dir)
-          .select(org.apache.spark.sql.functions.col("doc_id"),
-            org.apache.spark.sql.functions.col("text")))
-          .foreachPartition { it: Iterator[org.apache.spark.sql.Row] =>
-            it.foreach { r =>
-              java.nio.file.Files.write(
-                java.nio.file.Paths.get(base, s"${r.getLong(0)}.bin"),
-                r.getString(1).getBytes(java.nio.charset.StandardCharsets.UTF_8))
-            }
+    graft.Scratch.memo(spark, "graft-mediafiles", dir, perRun = true) { base =>
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(base))
+      // "distributed landing" was aspirational: documents is one parquet
+      // row group, so without the spread every file write ran in ONE
+      // task (Tables.spreadNarrowScan — exchange only for inputs too
+      // small to split)
+      Tables.spreadNarrowScan(Tables.documents(spark, dir)
+        .select(org.apache.spark.sql.functions.col("doc_id"),
+          org.apache.spark.sql.functions.col("text")))
+        .foreachPartition { it: Iterator[org.apache.spark.sql.Row] =>
+          it.foreach { r =>
+            java.nio.file.Files.write(
+              java.nio.file.Paths.get(base, s"${r.getLong(0)}.bin"),
+              r.getString(1).getBytes(java.nio.charset.StandardCharsets.UTF_8))
           }
-        base
-      })
+        }
+      base
+    }
 
   /** [[mediaTable]] sourced from REAL binary files through Spark's
     * `binaryFile` reader instead of a synthesized column: (path, length,
@@ -378,9 +371,6 @@ object Multimodal {
   val ImgW = 16
   val ImgSeeds = 64L
 
-  private val imageFilesMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Land one REAL PNG per document: a TYPE_BYTE_GRAY image whose pixels
     * follow the seed formula, ENCODED BY javax.imageio on the executors
     * (the JDK ships PNG/BMP/GIF codecs even though the container has no
@@ -389,40 +379,36 @@ object Multimodal {
     * run-generation, corpus) like [[mediaFilesDir]].
     */
   private def imageFilesDir(spark: SparkSession, dir: String): String =
-    imageFilesMemo.computeIfAbsent(
-      s"${spark.sparkContext.applicationId}:${graft.Memos.runTag}:$dir", { _ =>
-        val safe = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-        val base = s"${sys.props("java.io.tmpdir")}/graft-imagefiles/" +
-          s"${spark.sparkContext.applicationId}/${graft.Memos.runTag}/$safe"
-        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(base))
-        val w = ImgW
-        val seeds = ImgSeeds
-        // same single-row-group fix as [[mediaFilesDir]]: spread so the
-        // per-doc ImageIO.write encodes run on every core
-        Tables.spreadNarrowScan(
-            Tables.documents(spark, dir).select(col("doc_id")))
-          .foreachPartition { it: Iterator[org.apache.spark.sql.Row] =>
-            it.foreach { r =>
-              val d = r.getLong(0)
-              val s = d % seeds
-              val img = new java.awt.image.BufferedImage(
-                w, w, java.awt.image.BufferedImage.TYPE_BYTE_GRAY)
-              val raster = img.getRaster
-              var y = 0
-              while (y < w) {
-                var x = 0
-                while (x < w) {
-                  raster.setSample(x, y, 0, ((s * 131 + y * 17 + x * 7) % 256).toInt)
-                  x += 1
-                }
-                y += 1
+    graft.Scratch.memo(spark, "graft-imagefiles", dir, perRun = true) { base =>
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(base))
+      val w = ImgW
+      val seeds = ImgSeeds
+      // same single-row-group fix as [[mediaFilesDir]]: spread so the
+      // per-doc ImageIO.write encodes run on every core
+      Tables.spreadNarrowScan(
+          Tables.documents(spark, dir).select(col("doc_id")))
+        .foreachPartition { it: Iterator[org.apache.spark.sql.Row] =>
+          it.foreach { r =>
+            val d = r.getLong(0)
+            val s = d % seeds
+            val img = new java.awt.image.BufferedImage(
+              w, w, java.awt.image.BufferedImage.TYPE_BYTE_GRAY)
+            val raster = img.getRaster
+            var y = 0
+            while (y < w) {
+              var x = 0
+              while (x < w) {
+                raster.setSample(x, y, 0, ((s * 131 + y * 17 + x * 7) % 256).toInt)
+                x += 1
               }
-              javax.imageio.ImageIO.write(img, "png",
-                new java.io.File(base, s"$d.png"))
+              y += 1
             }
+            javax.imageio.ImageIO.write(img, "png",
+              new java.io.File(base, s"$d.png"))
           }
-        base
-      })
+        }
+      base
+    }
 
   /** Decoded-image perceptual hash, split into two 32-bit halves (both
     * always non-negative, so neither engine trips over the BIGINT sign

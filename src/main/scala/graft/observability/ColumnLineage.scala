@@ -215,17 +215,17 @@ object ColumnLineage {
     * replay. Hand-derived oracle: doubled/event_id trace to the stream's
     * columns, the filter contributes the predicate edge, ts is unread.
     */
-  // one shared source dir: the entry runs many times per harness pass
-  // (Verify, PropertySpec twice, CatalogSpec) and must not litter /tmp
-  private lazy val streamLineageDir: String =
-    java.nio.file.Files.createTempDirectory("lineage-stream").toString
-
   def streamLineage(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
+    // one empty source dir per application: the entry runs many times per
+    // harness pass (Verify, PropertySpec twice, CatalogSpec)
+    val src = graft.Scratch.memo(spark, "graft-lineage-stream", "src") { p =>
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(p)).toString
+    }
     val stream = spark.readStream
       .schema(org.apache.spark.sql.types.StructType.fromDDL(
         "event_id BIGINT, ts TIMESTAMP, value DOUBLE"))
-      .parquet(streamLineageDir)
+      .parquet(src)
       .filter($"value" > 0)
       .select($"event_id", ($"value" * 2).as("doubled"))
     lineage(stream).toDF("scope", "src_table", "src_column", "dep_kind")

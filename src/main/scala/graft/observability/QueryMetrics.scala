@@ -33,7 +33,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object QueryMetrics {
 
-  /** Totals a scale assertion usually wants. `scanRows`/`scanBytes` cover
+  /** Totals a scale assertion usually wants. `scanRows` covers every file
+    * source and DataSource V2 (`BatchScan`) leaf, `scanBytes`/`scanFiles`
     * every file source leaf; shuffle totals cover every exchange in the
     * final adaptive plan. `expandRows` is the rows PRODUCED by every Expand
     * operator — the axis multi-grain rewrites move: a stock G-set rollup's
@@ -69,7 +70,8 @@ object QueryMetrics {
     val prof = Profile(
       outputRows = outputRows,
       scanRows = ledger.collect { case (_, node, key, _, v)
-        if node.startsWith("Scan") && key == "numOutputRows" => v }.sum,
+        if (node.startsWith("Scan") || node.startsWith("BatchScan")) &&
+          key == "numOutputRows" => v }.sum,
       scanBytes = total((_, name) => name.contains("size of files read")),
       scanFiles = total((_, name) => name.contains("number of files read")),
       shuffleWriteBytes = total((_, name) => name.contains("shuffle bytes written")),

@@ -1,6 +1,6 @@
 package graft.plans
 
-import graft.{Memos, Tables}
+import graft.{Scratch, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -62,29 +62,22 @@ object IvmSetQueries {
   private def definingAll(spark: SparkSession, dir: String): DataFrame =
     setsOf(keyed(spark, dir).drop("late"))
 
-  private val refreshed =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
-
   /** v0 from the on-time slice, delta sets from the late slice, v1 =
     * grain-level full-outer `array_union` merge of v0's PARQUET with the
-    * delta — then re-register at v1. Keyed by [[Memos.runTag]] so a bench
-    * second sample repeats the refresh, not a memo hit.
+    * delta — then re-register at v1. A perRun [[Scratch]] entry, so
+    * a bench second sample repeats the refresh, not a memo hit.
     *
-    * The tag is recorded only AFTER register succeeds (`computeIfAbsent`
-    * drops the mapping if the body throws), and concurrent callers block
-    * on the in-flight computation instead of racing past an unregistered
-    * view — a failed refresh is retried by the next caller, never
-    * silently skipped.
+    * The refresh counts as done only AFTER register succeeds (a build that
+    * throws is not memoized), and concurrent callers block on the
+    * in-flight refresh instead of racing past an unregistered view — a
+    * failed refresh is retried by the next caller, never silently skipped.
     */
-  private def refresh(spark: SparkSession, dir: String): Unit = {
-    val tag = s"${spark.sparkContext.applicationId}:$dir:${Memos.runTag}"
-    refreshed.computeIfAbsent(tag, _ => { doRefresh(spark, dir, tag); true })
-  }
+  private def refresh(spark: SparkSession, dir: String): Unit =
+    Scratch.memo(spark, "graft-ivm-set", dir, perRun = true)(
+      doRefresh(spark, dir, _))
 
-  private def doRefresh(spark: SparkSession, dir: String, tag: String): Unit = {
+  private def doRefresh(spark: SparkSession, dir: String, scratch: String): Unit = {
     import spark.implicits._
-    val scratch = s"${sys.props("java.io.tmpdir")}/graft-ivm-set/" +
-      tag.replaceAll("[^A-Za-z0-9._-]", "_")
     // ONE lineitem scan lands both slices: aggregating at (yr, mo, late)
     // grain partitions the rows exactly as the two filtered setsOf calls
     // did (late is a grouping key, so each set/count sees only its slice),
@@ -175,13 +168,11 @@ object IvmSetQueries {
         .cast("long"))
       .otherwise(cnt)
 
-  private def refreshRetract(spark: SparkSession, dir: String): String = {
-    val tag = s"retract:${spark.sparkContext.applicationId}:$dir:${Memos.runTag}"
-    val scratch = s"${sys.props("java.io.tmpdir")}/graft-ivm-set/" +
-      tag.replaceAll("[^A-Za-z0-9._-]", "_")
-    refreshed.computeIfAbsent(tag, _ => { doRefreshRetract(spark, dir, scratch); true })
-    scratch
-  }
+  private def refreshRetract(spark: SparkSession, dir: String): String =
+    Scratch.memo(spark, "graft-ivm-set", s"retract:$dir", perRun = true) { scratch =>
+      doRefreshRetract(spark, dir, scratch)
+      scratch
+    }
 
   private def doRefreshRetract(spark: SparkSession, dir: String,
       scratch: String): Unit = {

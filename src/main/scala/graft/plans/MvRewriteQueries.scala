@@ -81,11 +81,6 @@ object MvRewriteQueries {
         collect_set($"price").as("price_set"))
   }
 
-  private val mvMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val registered =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
   /** Bench's untimed populate hook: materialize + register both views so
     * no timed query is charged the one-off parquet writes.
     */
@@ -98,32 +93,17 @@ object MvRewriteQueries {
     * ([[RerollQueries]]' rollup-from-view) can reuse the same view.
     */
   private[plans] def withView(spark0: SparkSession, dir: String): SparkSession = {
-    val path = mvMemo.computeIfAbsent(
-      s"${spark0.sparkContext.applicationId}:$dir", { _ =>
-        val p = s"${sys.props("java.io.tmpdir")}/graft-mv/" +
-          s"${spark0.sparkContext.applicationId}/" +
-          dir.replaceAll("[^A-Za-z0-9._-]", "_")
-        defining(spark0, dir).write.mode("overwrite").parquet(p)
-        p
-      })
-    val path2 = mvMemo.computeIfAbsent(
-      s"${spark0.sparkContext.applicationId}:$dir:distinct", { _ =>
-        val p = s"${sys.props("java.io.tmpdir")}/graft-mv/" +
-          s"${spark0.sparkContext.applicationId}/" +
-          dir.replaceAll("[^A-Za-z0-9._-]", "_") + "_distinct"
-        definingDistinct(spark0, dir).write.mode("overwrite").parquet(p)
-        p
-      })
-    // register once per (application, corpus) — each registration pays a
-    // full optimization of the defining plan, invariant per corpus
-    if (registered.add(s"${spark0.sparkContext.applicationId}:$dir")) {
-      val ok = MvRewrite.register(s"mv_order_summary:$dir",
-        defining(spark0, dir), spark0.read.parquet(path))
-      require(ok, "mv_order_summary must be inside MvRewrite's matchable scope")
-      val ok2 = MvRewrite.register(s"mv_order_distinct:$dir",
-        definingDistinct(spark0, dir), spark0.read.parquet(path2))
-      require(ok2, "mv_order_distinct must be inside MvRewrite's matchable scope")
-    }
+    // once per (application, corpus): each registration pays a full
+    // optimization of the defining plan, invariant per corpus
+    def view(name: String, key: String, mk: => DataFrame): Unit =
+      graft.Scratch.memo(spark0, "graft-mv", key) { p =>
+        val d = mk
+        d.write.mode("overwrite").parquet(p)
+        require(MvRewrite.register(s"$name:$dir", d, spark0.read.parquet(p)),
+          s"$name must be inside MvRewrite's matchable scope")
+      }
+    view("mv_order_summary", dir, defining(spark0, dir))
+    view("mv_order_distinct", s"$dir:distinct", definingDistinct(spark0, dir))
     val spark = ChildSession(spark0)
     MvRewrite.install(spark)
     spark.conf.set(MvRewrite.EnabledKey, "true")

@@ -48,11 +48,8 @@ object GraphSearch {
     */
   val EntryNode = 0L
 
-  private val memo =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
   def graphGreedySearch(spark: SparkSession, dir: String): DataFrame =
-    memo.computeIfAbsent(s"${spark.sparkContext.applicationId}:${graft.Memos.runTag}:$dir",
+    graft.Scratch.memo(spark, "graft-graph-search", dir, perRun = true)(
       _ => searchImpl(spark, dir))
 
   private def searchImpl(spark: SparkSession, dir: String): DataFrame = {

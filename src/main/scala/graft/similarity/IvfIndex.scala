@@ -61,14 +61,8 @@ object IvfIndex {
 
   // index built once per (application, corpus) and persisted as parquet —
   // training is a build step, probes only read
-  private val memo =
-    new java.util.concurrent.ConcurrentHashMap[String, (DataFrame, DataFrame)]()
-
   def build(spark: SparkSession, dir: String): (DataFrame, DataFrame) =
-    memo.computeIfAbsent(s"${spark.sparkContext.applicationId}:$dir", { _ =>
-      val safe = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-      val base = s"${sys.props("java.io.tmpdir")}/graft-ivf/" +
-        s"${spark.sparkContext.applicationId}/$safe"
+    graft.Scratch.memo(spark, "graft-ivf", dir) { base =>
       val (assigned, centroids) = train(spark, dir)
       // physically partitioned by cell id: a probe's candidate scan prunes to
       // its nprobe cells' partitions (PlanSpec asserts the PartitionFilters)
@@ -78,7 +72,7 @@ object IvfIndex {
       centroids.write.mode("overwrite").parquet(s"$base/centroids")
       (spark.read.parquet(s"$base/assigned"),
         spark.read.parquet(s"$base/centroids"))
-    })
+    }
 
   private val centroidSchema = StructType(Seq(
     StructField("cell", IntegerType, nullable = false),

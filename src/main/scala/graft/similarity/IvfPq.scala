@@ -40,26 +40,20 @@ object IvfPq {
   // postings (assignment ⋈ codes) built once per (application, corpus) and
   // persisted partitioned by cell — the IVF-PQ index layout: a probe's
   // candidate scan reads its nprobe cells' partitions of 4-byte codes
-  private val memo =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
   /** The cell-partitioned postings table: vec_id, embedding, c0..c{M−1},
     * partitioned by cell. (The embedding column rides along for the exact
     * re-rank; a disaggregated deployment would keep it in a separate
     * vec_id-keyed store and fetch only shortlist rows.)
     */
   def postings(spark: SparkSession, dir: String): DataFrame =
-    memo.computeIfAbsent(s"${spark.sparkContext.applicationId}:$dir", { _ =>
-      val safe = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-      val base = s"${sys.props("java.io.tmpdir")}/graft-ivfpq/" +
-        s"${spark.sparkContext.applicationId}/$safe"
+    graft.Scratch.memo(spark, "graft-ivfpq", dir) { base =>
       val (assigned, _) = IvfIndex.build(spark, dir)
       val codes = ProductQuantizer.codes(spark, dir)
         .select(Seq(col("vec_id")) ++ (0 until M).map(s => col(s"c$s")): _*)
       assigned.join(codes, "vec_id")
         .write.mode("overwrite").partitionBy("cell").parquet(base)
       spark.read.parquet(base)
-    })
+    }
 
   def topK(spark: SparkSession, dir: String, k: Int = Similarity.TopK): DataFrame = {
     import spark.implicits._

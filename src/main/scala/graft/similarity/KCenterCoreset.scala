@@ -41,14 +41,11 @@ object KCenterCoreset {
   /** Seed center: the minimum vec_id (deterministic, data-independent). */
   val SeedId = 0L
 
-  private val memo =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(Int, Long, Double)]]()
-
   /** The greedy trajectory: (round, center_id, pick radius), seed first
     * with radius 0.0 (it has no predecessor set — documented placeholder).
     */
   def centersForDir(spark: SparkSession, dir: String): Seq[(Int, Long, Double)] =
-    memo.computeIfAbsent(s"${spark.sparkContext.applicationId}:$dir", { _ =>
+    graft.Scratch.memo(spark, "graft-kcenter", dir) { _ =>
       import spark.implicits._
       Similarity.register(spark)
       val e = Tables.embeddings(spark, dir)
@@ -68,7 +65,7 @@ object KCenterCoreset {
         chosen = chosen :+ row.getAs[Long]("nid")
       }
       picks.result()
-    })
+    }
 
   def kcenterCoreset(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._

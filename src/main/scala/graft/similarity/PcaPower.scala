@@ -71,9 +71,6 @@ object PcaPower {
     s"CAST(v$e AS DOUBLE) * CAST(s$e AS DOUBLE)").mkString(" + ")
   private def rayleighDen = dims.map(e => s"v$e * v$e").mkString(" + ")
 
-  private val rowMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.sql.DataFrame]()
-
   /** Collapse a one-row model DataFrame to a memoized LITERAL one-row
     * frame (collect of exactly ONE row — bounded by construction). The
     * model plans chain 4 sequential corpus aggregates; without this,
@@ -82,23 +79,12 @@ object PcaPower {
     * doubles of state.
     */
   private def memoRow(spark: SparkSession, key: String,
-      mk: => DataFrame): DataFrame = {
-    // get/putIfAbsent, NOT computeIfAbsent: buildLoadings re-enters this
-    // memo for the mean row, and a re-entrant computeIfAbsent on one map
-    // throws "Recursive update" whenever the two keys share a bin. The
-    // benign race (two threads both computing, first put wins) costs at
-    // most one duplicate bounded collect.
-    val k = s"${spark.sparkContext.applicationId}:$key"
-    val hit = rowMemo.get(k)
-    if (hit != null) hit
-    else {
+      mk: => DataFrame): DataFrame =
+    // buildLoadings re-enters this memo for the mean row: Scratch builds nest
+    graft.Scratch.memo(spark, "graft-pca-row", key) { _ =>
       val df = mk
-      val lit = spark.createDataFrame(
-        java.util.Arrays.asList(df.collect()(0)), df.schema)
-      val prev = rowMemo.putIfAbsent(k, lit)
-      if (prev != null) prev else lit
+      spark.createDataFrame(java.util.Arrays.asList(df.collect()(0)), df.schema)
     }
-  }
 
   /** Integer mean row (m0..m63 in shifted 1024-scale, plus n) — shared
     * with the [[AbttResidual]] audit.

@@ -79,15 +79,9 @@ object RandomHyperplaneLsh {
   // parquet PARTITIONED BY bucket — signatures are a build step, probes only
   // read, and a probe's candidate scan prunes to its probe buckets'
   // partitions instead of the full corpus (same layout as IvfIndex's cells)
-  private val memo =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
   def index(spark: SparkSession, dir: String): DataFrame =
-    memo.computeIfAbsent(s"${spark.sparkContext.applicationId}:$dir", { _ =>
+    graft.Scratch.memo(spark, "graft-rhlsh", dir) { base =>
       Similarity.register(spark)
-      val safe = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-      val base = s"${sys.props("java.io.tmpdir")}/graft-rhlsh/" +
-        s"${spark.sparkContext.applicationId}/$safe"
       val e = Tables.embeddings(spark, dir)
       // index-build metadata: one-row scan for the corpus dimensionality
       val dim = e.select(size(col("embedding"))).head.getInt(0)
@@ -95,7 +89,7 @@ object RandomHyperplaneLsh {
           signature("embedding", dim).as("bucket"))
         .write.mode("overwrite").partitionBy("bucket").parquet(base)
       spark.read.parquet(base)
-    })
+    }
 
   def topK(spark: SparkSession, dir: String, k: Int = Similarity.TopK): DataFrame = {
     import spark.implicits._

@@ -220,9 +220,6 @@ object Sources {
       .orderBy($"encounter_id", $"proc_seq")
   }
 
-  private val jsonlMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** JSONL corpus ingest — the de-facto LLM training-corpus interchange
     * format. The testdata ships parquet, so the operator first LANDS the
     * documents table as JSONL once per (app, corpus) (the sink half of the
@@ -233,23 +230,16 @@ object Sources {
     * for field (JSON string escaping, 64-bit ids, column order all exercised).
     */
   def jsonlIngest(spark: SparkSession, dir: String): DataFrame = {
-    val path = jsonlMemo.computeIfAbsent(
-      s"${spark.sparkContext.applicationId}:${graft.Memos.runTag}:$dir", { _ =>
-        val safe = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-        val p = s"${sys.props("java.io.tmpdir")}/graft-jsonl/" +
-          s"${spark.sparkContext.applicationId}/${graft.Memos.runTag}/$safe"
-        Tables.documents(spark, dir).write.mode("overwrite").json(p)
-        p
-      })
+    val path = graft.Scratch.memo(spark, "graft-jsonl", dir, perRun = true) { p =>
+      Tables.documents(spark, dir).write.mode("overwrite").json(p)
+      p
+    }
     spark.read
       .schema(org.apache.spark.sql.types.StructType.fromDDL(
         "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT"))
       .json(path)
       .orderBy(col("doc_id"))
   }
-
-  private val orcMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** ORC corpus round trip — the OTHER columnar interchange format a lake
     * ingests beside parquet (Hive-era feeds still arrive as ORC). Lands
@@ -262,23 +252,16 @@ object Sources {
     * operators are layout-agnostic.
     */
   def orcIngest(spark: SparkSession, dir: String): DataFrame = {
-    val path = orcMemo.computeIfAbsent(
-      s"${spark.sparkContext.applicationId}:${graft.Memos.runTag}:$dir", { _ =>
-        val safe = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-        val p = s"${sys.props("java.io.tmpdir")}/graft-orc/" +
-          s"${spark.sparkContext.applicationId}/${graft.Memos.runTag}/$safe"
-        Tables.documents(spark, dir).write.mode("overwrite").orc(p)
-        p
-      })
+    val path = graft.Scratch.memo(spark, "graft-orc", dir, perRun = true) { p =>
+      Tables.documents(spark, dir).write.mode("overwrite").orc(p)
+      p
+    }
     spark.read
       .schema(org.apache.spark.sql.types.StructType.fromDDL(
         "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT"))
       .orc(path)
       .orderBy(col("doc_id"))
   }
-
-  private val fwMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** Fixed-width (mainframe/COBOL-style) feed ingest — the third legacy
     * interchange format beside CSV and JSONL: no delimiters, columns live
@@ -295,20 +278,16 @@ object Sources {
     */
   def fixedWidthIngest(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val path = fwMemo.computeIfAbsent(
-      s"${spark.sparkContext.applicationId}:${graft.Memos.runTag}:$dir", { _ =>
-        val p = s"${sys.props("java.io.tmpdir")}/graft-fixedwidth/" +
-          s"${spark.sparkContext.applicationId}/" +
-          dir.replaceAll("[^A-Za-z0-9._-]", "_")
-        Tables.events(spark, dir)
-          .filter($"event_id".isNotNull && $"user_id".isNotNull &&
-            $"event_type".isNotNull && $"value".isNotNull)
-          .select(format_string("%012d%012d%-12s%012d",
-            $"event_id", $"user_id", $"event_type",
-            ($"value".cast("decimal(12,2)") * 100).cast("long")).as("value"))
-          .write.mode("overwrite").text(p)
-        p
-      })
+    val path = graft.Scratch.memo(spark, "graft-fixedwidth", dir, perRun = true) { p =>
+      Tables.events(spark, dir)
+        .filter($"event_id".isNotNull && $"user_id".isNotNull &&
+          $"event_type".isNotNull && $"value".isNotNull)
+        .select(format_string("%012d%012d%-12s%012d",
+          $"event_id", $"user_id", $"event_type",
+          ($"value".cast("decimal(12,2)") * 100).cast("long")).as("value"))
+        .write.mode("overwrite").text(p)
+      p
+    }
     spark.read.text(path)
       .select(
         substring($"value", 1, 12).cast("bigint").as("event_id"),
@@ -323,9 +302,6 @@ object Sources {
     */
   val CsvCorruptEvery = 101
   val CsvCorruptAt = 13
-
-  private val csvMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** CSV feed ingest with malformed-row quarantine — the other interchange
     * format next to [[jsonlIngest]], plus the failure mode JSONL doesn't
@@ -348,22 +324,18 @@ object Sources {
   }
 
   private[graft] def csvRead(spark: SparkSession, dir: String): DataFrame = {
-    val path = csvMemo.computeIfAbsent(
-      s"${spark.sparkContext.applicationId}:${graft.Memos.runTag}:$dir", { _ =>
-        val safe = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-        val p = s"${sys.props("java.io.tmpdir")}/graft-csv/" +
-          s"${spark.sparkContext.applicationId}/${graft.Memos.runTag}/$safe"
-        Tables.events(spark, dir)
-          .select(when(
-            pmod(col("event_id"), lit(CsvCorruptEvery)) === CsvCorruptAt,
-            concat(lit("GARBAGE|"), col("event_id").cast("string")))
-            .otherwise(concat_ws(",",
-              col("event_id"), col("user_id"), col("event_type"),
-              col("value").cast("string")))
-            .as("line"))
-          .write.mode("overwrite").text(p)
-        p
-      })
+    val path = graft.Scratch.memo(spark, "graft-csv", dir, perRun = true) { p =>
+      Tables.events(spark, dir)
+        .select(when(
+          pmod(col("event_id"), lit(CsvCorruptEvery)) === CsvCorruptAt,
+          concat(lit("GARBAGE|"), col("event_id").cast("string")))
+          .otherwise(concat_ws(",",
+            col("event_id"), col("user_id"), col("event_type"),
+            col("value").cast("string")))
+          .as("line"))
+        .write.mode("overwrite").text(p)
+      p
+    }
     spark.read
       .schema("event_id BIGINT, user_id BIGINT, event_type STRING, " +
         "value DOUBLE, _corrupt STRING")

@@ -49,9 +49,6 @@ object GenQueries {
   val StreamRows = 100000L
   val StreamBatch = 30000L
 
-  private val streamMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
   /** The connector's MICRO_BATCH_READ path driven end-to-end: readStream
     * over the generator (rate-limited by rowsPerBatch), AvailableNow drain
     * into a parquet sink, then a batch rollup of the landed rows — the
@@ -60,34 +57,28 @@ object GenQueries {
     * the hash actually checks.
     */
   def genStreamIngest(spark: SparkSession, dir: String): DataFrame =
-    streamMemo.computeIfAbsent(
-      s"${spark.sparkContext.applicationId}:${graft.Memos.runTag}:$dir", { _ =>
-        import org.apache.spark.sql.streaming.Trigger
-        val base = s"${sys.props("java.io.tmpdir")}/graft-stream-gen/" +
-          s"${spark.sparkContext.applicationId}/${graft.Memos.runTag}"
-        graft.streaming.IncrementalIngest.withStreamPartitions(spark) { ss =>
-          ss.readStream.format("graft-gen")
-            .option("rows", StreamRows)
-            .option("slices", 8)
-            .option("rowsPerBatch", StreamBatch)
-            .load()
-            .writeStream
-            .format("parquet")
-            .option("path", s"$base/out")
-            .option("checkpointLocation", s"$base/ckpt")
-            .trigger(Trigger.AvailableNow())
-            .start()
-            .awaitTermination()
-        }
-        import spark.implicits._
-        spark.read.parquet(s"$base/out")
-          .groupBy($"k")
-          .agg(count(lit(1)).as("n"), sum($"v").as("sum_v"))
-          .orderBy($"k")
-      })
-
-  private val auditMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+    graft.Scratch.memo(spark, "graft-stream-gen", dir, perRun = true) { base =>
+      import org.apache.spark.sql.streaming.Trigger
+      graft.streaming.IncrementalIngest.withStreamPartitions(spark) { ss =>
+        ss.readStream.format("graft-gen")
+          .option("rows", StreamRows)
+          .option("slices", 8)
+          .option("rowsPerBatch", StreamBatch)
+          .load()
+          .writeStream
+          .format("parquet")
+          .option("path", s"$base/out")
+          .option("checkpointLocation", s"$base/ckpt")
+          .trigger(Trigger.AvailableNow())
+          .start()
+          .awaitTermination()
+      }
+      import spark.implicits._
+      spark.read.parquet(s"$base/out")
+        .groupBy($"k")
+        .agg(count(lit(1)).as("n"), sum($"v").as("sum_v"))
+        .orderBy($"k")
+    }
 
   /** The DSv2 WRITE path driven end-to-end: events flow through the
     * graft-audit sink (task tallies → commit messages → one atomically
@@ -97,19 +88,15 @@ object GenQueries {
     * once across partitions — not row content.
     */
   def auditSink(spark: SparkSession, dir: String): DataFrame =
-    auditMemo.computeIfAbsent(
-      s"${spark.sparkContext.applicationId}:${graft.Memos.runTag}:$dir", { _ =>
-        val safe = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-        val out = s"${sys.props("java.io.tmpdir")}/graft-audit-sink/" +
-          s"${spark.sparkContext.applicationId}/${graft.Memos.runTag}/$safe"
-        graft.Tables.events(spark, dir)
-          .write.format("graft-audit")
-          .option("path", out).option("keyCol", "event_id")
-          .mode("append").save()
-        import spark.implicits._
-        spark.read.json(s"$out/manifest.json")
-          .select($"rows".as("n_rows"), $"checksum")
-      })
+    graft.Scratch.memo(spark, "graft-audit-sink", dir, perRun = true) { out =>
+      graft.Tables.events(spark, dir)
+        .write.format("graft-audit")
+        .option("path", out).option("keyCol", "event_id")
+        .mode("append").save()
+      import spark.implicits._
+      spark.read.json(s"$out/manifest.json")
+        .select($"rows".as("n_rows"), $"checksum")
+    }
 
   /** Second table size for the storage-partitioned join — a DIFFERENT row
     * count on purpose: partition compatibility comes from the reported key

@@ -292,9 +292,6 @@ object IncrementalIngest {
       .start()
   }
 
-  private val eventsSrcMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** The event-stream entries' landed source feed, shared: five entries
     * (both attributions, windowed counts, both enriches) stream the SAME
     * unfiltered events projection, and each landing is a full corpus
@@ -308,19 +305,12 @@ object IncrementalIngest {
     * to one consumer.
     */
   private[graft] def landedEvents(spark: SparkSession, dir: String): String =
-    eventsSrcMemo.computeIfAbsent(
-      s"${spark.sparkContext.applicationId}:${graft.Memos.runTag}:$dir", { _ =>
-        val safe = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-        val p = s"${sys.props("java.io.tmpdir")}/graft-stream-events-src/" +
-          s"${spark.sparkContext.applicationId}/${graft.Memos.runTag}/$safe"
-        graft.Tables.events(spark, dir)
-          .select("event_id", "ts", "user_id", "event_type", "value", "props")
-          .write.mode("overwrite").parquet(p)
-        p
-      })
-
-  private val outerMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+    graft.Scratch.memo(spark, "graft-stream-events-src", dir, perRun = true) { p =>
+      graft.Tables.events(spark, dir)
+        .select("event_id", "ts", "user_id", "event_type", "value", "props")
+        .write.mode("overwrite").parquet(p)
+      p
+    }
 
   /** End-to-end run of [[streamOuterAttribution]] — null-extended columns
     * land as sentinels (click_id −1, click_t 0): nullable INT output decays
@@ -328,28 +318,21 @@ object IncrementalIngest {
     * anyway.
     */
   def outerAttributionEntry(spark: SparkSession, dir: String): DataFrame =
-    outerMemo.computeIfAbsent(
-      s"${spark.sparkContext.applicationId}:${graft.Memos.runTag}:$dir", { _ =>
-        val safe = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-        val base = s"${sys.props("java.io.tmpdir")}/graft-stream-oattr/" +
-          s"${spark.sparkContext.applicationId}/${graft.Memos.runTag}/$safe"
-        val src = landedEvents(spark, dir)
-        // no skipNoDataBatches: the null-extended rows EMIT in the
-        // watermark-advance batch — skipping it would drop them
-        withStreamPartitions(spark) { ss =>
-          streamOuterAttribution(ss, src, s"$base/out", s"$base/ckpt")
-            .awaitTermination()
-        }
-        spark.read.parquet(s"$base/out")
-          .select(col("purchase_id"), col("user_id"),
-            unix_micros(col("purchase_ts")).as("purchase_t"),
-            coalesce(col("click_id"), lit(-1L)).as("click_id"),
-            coalesce(unix_micros(col("click_ts")), lit(0L)).as("click_t"))
-          .orderBy(col("purchase_id"), col("click_id"))
-      })
-
-  private val attrMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+    graft.Scratch.memo(spark, "graft-stream-oattr", dir, perRun = true) { base =>
+      val src = landedEvents(spark, dir)
+      // no skipNoDataBatches: the null-extended rows EMIT in the
+      // watermark-advance batch — skipping it would drop them
+      withStreamPartitions(spark) { ss =>
+        streamOuterAttribution(ss, src, s"$base/out", s"$base/ckpt")
+          .awaitTermination()
+      }
+      spark.read.parquet(s"$base/out")
+        .select(col("purchase_id"), col("user_id"),
+          unix_micros(col("purchase_ts")).as("purchase_t"),
+          coalesce(col("click_id"), lit(-1L)).as("click_id"),
+          coalesce(unix_micros(col("click_ts")), lit(0L)).as("click_t"))
+        .orderBy(col("purchase_id"), col("click_id"))
+    }
 
   /** End-to-end batch-comparable run of [[streamAttribution]] — the
     * CORRECTNESS-gate entry that drives the stream-stream join itself, not
@@ -365,27 +348,20 @@ object IncrementalIngest {
     * re-append the same matches under new file names.
     */
   def attributionEntry(spark: SparkSession, dir: String): DataFrame =
-    attrMemo.computeIfAbsent(
-      s"${spark.sparkContext.applicationId}:${graft.Memos.runTag}:$dir", { _ =>
-        val safe = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-        val base = s"${sys.props("java.io.tmpdir")}/graft-stream-attr/" +
-          s"${spark.sparkContext.applicationId}/${graft.Memos.runTag}/$safe"
-        val src = landedEvents(spark, dir)
-        // inner interval join: every match emits in the data batch that
-        // completes it — the trailing no-data batch only evicts state
-        withStreamPartitions(spark, skipNoDataBatches = true) { ss =>
-          streamAttribution(ss, src, s"$base/out", s"$base/ckpt")
-            .awaitTermination()
-        }
-        spark.read.parquet(s"$base/out")
-          .select(col("purchase_id"), col("user_id"),
-            unix_micros(col("purchase_ts")).as("purchase_t"),
-            col("click_id"), unix_micros(col("click_ts")).as("click_t"))
-          .orderBy(col("purchase_id"), col("click_id"))
-      })
-
-  private val wcMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+    graft.Scratch.memo(spark, "graft-stream-attr", dir, perRun = true) { base =>
+      val src = landedEvents(spark, dir)
+      // inner interval join: every match emits in the data batch that
+      // completes it — the trailing no-data batch only evicts state
+      withStreamPartitions(spark, skipNoDataBatches = true) { ss =>
+        streamAttribution(ss, src, s"$base/out", s"$base/ckpt")
+          .awaitTermination()
+      }
+      spark.read.parquet(s"$base/out")
+        .select(col("purchase_id"), col("user_id"),
+          unix_micros(col("purchase_ts")).as("purchase_t"),
+          col("click_id"), unix_micros(col("click_ts")).as("click_t"))
+        .orderBy(col("purchase_id"), col("click_id"))
+    }
 
   /** End-to-end batch-comparable run of [[windowedCounts]] — and, more to
     * the point, an ORACLE-CHECKED statement of append-mode watermark
@@ -401,27 +377,20 @@ object IncrementalIngest {
     * parallel-landed source is one AvailableNow micro-batch.
     */
   def windowedCountsEntry(spark: SparkSession, dir: String): DataFrame =
-    wcMemo.computeIfAbsent(
-      s"${spark.sparkContext.applicationId}:${graft.Memos.runTag}:$dir", { _ =>
-        val safe = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-        val base = s"${sys.props("java.io.tmpdir")}/graft-stream-wc/" +
-          s"${spark.sparkContext.applicationId}/${graft.Memos.runTag}/$safe"
-        val src = landedEvents(spark, dir)
-        // no skipNoDataBatches: append-mode windows EMIT in the
-        // watermark-advance batch — skipping it would empty the sink
-        withStreamPartitions(spark) { ss =>
-          windowedCounts(ss, src, s"$base/out", s"$base/ckpt")
-            .awaitTermination()
-        }
-        spark.read.parquet(s"$base/out")
-          .select(unix_micros(col("window_start")).as("window_start_t"),
-            unix_micros(col("window_end")).as("window_end_t"),
-            col("event_type"), col("n"), col("total_value"))
-          .orderBy(col("window_start_t"), col("event_type"))
-      })
-
-  private val ddMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+    graft.Scratch.memo(spark, "graft-stream-wc", dir, perRun = true) { base =>
+      val src = landedEvents(spark, dir)
+      // no skipNoDataBatches: append-mode windows EMIT in the
+      // watermark-advance batch — skipping it would empty the sink
+      withStreamPartitions(spark) { ss =>
+        windowedCounts(ss, src, s"$base/out", s"$base/ckpt")
+          .awaitTermination()
+      }
+      spark.read.parquet(s"$base/out")
+        .select(unix_micros(col("window_start")).as("window_start_t"),
+          unix_micros(col("window_end")).as("window_end_t"),
+          col("event_type"), col("n"), col("total_value"))
+        .orderBy(col("window_start_t"), col("event_type"))
+    }
 
   /** End-to-end batch-comparable run of [[dedupDocs]] — the watermarked
     * CONTENT-dedup path driven to an oracle-checked output. The feed is the
@@ -436,33 +405,29 @@ object IncrementalIngest {
     * re-admit a duplicate.
     */
   def dedupDocsEntry(spark: SparkSession, dir: String): DataFrame =
-    ddMemo.computeIfAbsent(
-      s"${spark.sparkContext.applicationId}:${graft.Memos.runTag}:$dir", { _ =>
-        val safe = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-        val base = s"${sys.props("java.io.tmpdir")}/graft-stream-dedup/" +
-          s"${spark.sparkContext.applicationId}/${graft.Memos.runTag}/$safe"
-        val docs = graft.Tables.documents(spark, dir)
-          .select(col("doc_id"), col("text"), col("lang"), col("source"),
-            col("n_chars"),
-            expr("timestamp_micros(doc_id * 1000000)").as("ingest_ts"))
-        val recrawl = docs
-          .withColumn("doc_id", col("doc_id") + 1000000L)
-          .withColumn("ingest_ts",
-            expr("ingest_ts + INTERVAL 10 MINUTES"))
-        docs.unionByName(recrawl)
-          .write.mode("overwrite").parquet(s"$base/src")
-        // dropDuplicatesWithinWatermark emits survivors in their data
-        // batch; the no-data batch only evicts state
-        withStreamPartitions(spark, skipNoDataBatches = true) { ss =>
-          dedupDocs(ss, s"$base/src", s"$base/out", s"$base/ckpt")
-            .awaitTermination()
-        }
-        spark.read.parquet(s"$base/out")
-          .groupBy(col("lang"))
-          .agg(org.apache.spark.sql.functions.count(
-            org.apache.spark.sql.functions.lit(1)).as("n_docs"))
-          .orderBy(col("lang"))
-      })
+    graft.Scratch.memo(spark, "graft-stream-dedup", dir, perRun = true) { base =>
+      val docs = graft.Tables.documents(spark, dir)
+        .select(col("doc_id"), col("text"), col("lang"), col("source"),
+          col("n_chars"),
+          expr("timestamp_micros(doc_id * 1000000)").as("ingest_ts"))
+      val recrawl = docs
+        .withColumn("doc_id", col("doc_id") + 1000000L)
+        .withColumn("ingest_ts",
+          expr("ingest_ts + INTERVAL 10 MINUTES"))
+      docs.unionByName(recrawl)
+        .write.mode("overwrite").parquet(s"$base/src")
+      // dropDuplicatesWithinWatermark emits survivors in their data
+      // batch; the no-data batch only evicts state
+      withStreamPartitions(spark, skipNoDataBatches = true) { ss =>
+        dedupDocs(ss, s"$base/src", s"$base/out", s"$base/ckpt")
+          .awaitTermination()
+      }
+      spark.read.parquet(s"$base/out")
+        .groupBy(col("lang"))
+        .agg(org.apache.spark.sql.functions.count(
+          org.apache.spark.sql.functions.lit(1)).as("n_docs"))
+        .orderBy(col("lang"))
+    }
 
   /** The static enrichment dim for [[enrichEntry]]: event-type engagement
     * weights, DELIBERATELY missing one live type ("error") so the entry
@@ -519,9 +484,6 @@ object IncrementalIngest {
       .start()
   }
 
-  private val asofEnrichMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
   /** End-to-end batch-comparable run of [[asofEnrich]]: events land, the
     * stream replays them through the temporal lookup, and the rollup per
     * (event_type, weight) hash-compares against DuckDB running the same
@@ -529,29 +491,22 @@ object IncrementalIngest {
     * split exactly at the cutover.
     */
   def asofEnrichEntry(spark: SparkSession, dir: String): DataFrame =
-    asofEnrichMemo.computeIfAbsent(
-      s"${spark.sparkContext.applicationId}:${graft.Memos.runTag}:$dir", { _ =>
-        val safe = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-        val base = s"${sys.props("java.io.tmpdir")}/graft-stream-asof/" +
-          s"${spark.sparkContext.applicationId}/${graft.Memos.runTag}/$safe"
-        val src = landedEvents(spark, dir)
-        import spark.implicits._
-        val dim = Scd2Weights
-          .toDF("event_type", "weight", "valid_from_ms", "valid_to_ms")
-        withStreamPartitions(spark) { ss =>
-          asofEnrich(ss, src, dim, s"$base/out", s"$base/ckpt")
-            .awaitTermination()
-        }
-        spark.read.parquet(s"$base/out")
-          .groupBy(
-            coalesce(col("event_type"), lit("(unknown)")).as("event_type"),
-            coalesce(col("weight"), lit(-1)).as("weight"))
-          .agg(count(lit(1)).as("n_events"))
-          .orderBy(col("event_type"), col("weight"))
-      })
-
-  private val enrichMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+    graft.Scratch.memo(spark, "graft-stream-asof", dir, perRun = true) { base =>
+      val src = landedEvents(spark, dir)
+      import spark.implicits._
+      val dim = Scd2Weights
+        .toDF("event_type", "weight", "valid_from_ms", "valid_to_ms")
+      withStreamPartitions(spark) { ss =>
+        asofEnrich(ss, src, dim, s"$base/out", s"$base/ckpt")
+          .awaitTermination()
+      }
+      spark.read.parquet(s"$base/out")
+        .groupBy(
+          coalesce(col("event_type"), lit("(unknown)")).as("event_type"),
+          coalesce(col("weight"), lit(-1)).as("weight"))
+        .agg(count(lit(1)).as("n_events"))
+        .orderBy(col("event_type"), col("weight"))
+    }
 
   /** End-to-end batch-comparable run of [[enrich]] — the stream-static
     * broadcast join driven to an oracle-checked output (the join itself was
@@ -563,25 +518,21 @@ object IncrementalIngest {
     * folded to '(unknown)' so the group key is never null on either engine.
     */
   def enrichEntry(spark: SparkSession, dir: String): DataFrame =
-    enrichMemo.computeIfAbsent(
-      s"${spark.sparkContext.applicationId}:${graft.Memos.runTag}:$dir", { _ =>
-        val safe = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-        val base = s"${sys.props("java.io.tmpdir")}/graft-stream-enrich/" +
-          s"${spark.sparkContext.applicationId}/${graft.Memos.runTag}/$safe"
-        val src = landedEvents(spark, dir)
-        import spark.implicits._
-        val dim = EnrichWeights.toDF("event_type", "weight")
-        withStreamPartitions(spark) { ss =>
-          enrich(ss, src, dim, s"$base/out", s"$base/ckpt")
-            .awaitTermination()
-        }
-        spark.read.parquet(s"$base/out")
-          .groupBy(
-            coalesce(col("event_type"), lit("(unknown)")).as("event_type"),
-            coalesce(col("weight"), lit(-1)).as("weight"))
-          .agg(count(lit(1)).as("n_events"))
-          .orderBy(col("event_type"), col("weight"))
-      })
+    graft.Scratch.memo(spark, "graft-stream-enrich", dir, perRun = true) { base =>
+      val src = landedEvents(spark, dir)
+      import spark.implicits._
+      val dim = EnrichWeights.toDF("event_type", "weight")
+      withStreamPartitions(spark) { ss =>
+        enrich(ss, src, dim, s"$base/out", s"$base/ckpt")
+          .awaitTermination()
+      }
+      spark.read.parquet(s"$base/out")
+        .groupBy(
+          coalesce(col("event_type"), lit("(unknown)")).as("event_type"),
+          coalesce(col("weight"), lit(-1)).as("weight"))
+        .agg(count(lit(1)).as("n_events"))
+        .orderBy(col("event_type"), col("weight"))
+    }
 
   val all: Map[String, (SparkSession, String) => DataFrame] = Map(
     "stream_attribution" -> (attributionEntry _),

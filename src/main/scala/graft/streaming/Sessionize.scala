@@ -155,9 +155,6 @@ ORDER BY user_id, session_start_t""")
     }
   }
 
-  private val ssMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
   /** End-to-end oracle-checked run of [[streamSessions]] — the
     * `flatMapGroupsWithState` custom-state path driven to a hash-compared
     * output (it was spec-only before this entry; the sibling entries in
@@ -177,32 +174,28 @@ ORDER BY user_id, session_start_t""")
     * Timestamps go to the wire as epoch micros (repo parity convention).
     */
   def sessionsEntry(spark: SparkSession, dir: String): DataFrame =
-    ssMemo.computeIfAbsent(
-      s"${spark.sparkContext.applicationId}:${graft.Memos.runTag}:$dir", { _ =>
-        import spark.implicits._
-        val safe = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-        val base = s"${sys.props("java.io.tmpdir")}/graft-stream-sess/" +
-          s"${spark.sparkContext.applicationId}/${graft.Memos.runTag}/$safe"
-        val src = IncrementalIngest.landedEvents(spark, dir)
-        // no skipNoDataBatches: a user's final session emits only via
-        // the event-time timeout in the watermark-advance batch
-        IncrementalIngest.withStreamPartitions(spark) { ss =>
-          streamSessions(ss, src, s"$base/out", s"$base/ckpt",
-            prep = df => df
-              .filter($"user_id".isNotNull && $"ts".isNotNull)
-              .select($"event_id", $"ts", $"user_id", $"event_type",
-                ($"value".cast("decimal(12,2)") * 100).cast("double")
-                  .as("value"),
-                $"props"))
-            .awaitTermination()
-        }
-        spark.read.parquet(s"$base/out")
-          .select($"user_id",
-            $"session_start_us".as("session_start_t"),
-            $"session_end_us".as("session_end_t"),
-            $"n_events", $"total_value".cast("long").as("total_cents"))
-          .orderBy($"user_id", $"session_start_t")
-      })
+    graft.Scratch.memo(spark, "graft-stream-sess", dir, perRun = true) { base =>
+      import spark.implicits._
+      val src = IncrementalIngest.landedEvents(spark, dir)
+      // no skipNoDataBatches: a user's final session emits only via
+      // the event-time timeout in the watermark-advance batch
+      IncrementalIngest.withStreamPartitions(spark) { ss =>
+        streamSessions(ss, src, s"$base/out", s"$base/ckpt",
+          prep = df => df
+            .filter($"user_id".isNotNull && $"ts".isNotNull)
+            .select($"event_id", $"ts", $"user_id", $"event_type",
+              ($"value".cast("decimal(12,2)") * 100).cast("double")
+                .as("value"),
+              $"props"))
+          .awaitTermination()
+      }
+      spark.read.parquet(s"$base/out")
+        .select($"user_id",
+          $"session_start_us".as("session_start_t"),
+          $"session_end_us".as("session_end_t"),
+          $"n_events", $"total_value".cast("long").as("total_cents"))
+        .orderBy($"user_id", $"session_start_t")
+    }
 
   /** Streaming sessionizer over a watched directory of event files. */
   def streamSessions(spark: SparkSession, srcDir: String, outDir: String,

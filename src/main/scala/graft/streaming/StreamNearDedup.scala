@@ -6,8 +6,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 
-import java.util.concurrent.ConcurrentHashMap
-
 /** Streaming NEAR-duplicate dedup — MinHash-LSH bucket claims held in
   * `flatMapGroupsWithState` (the custom-state operator SURVEY §2.9 calls
   * for beyond the built-in `dropDuplicates*`).
@@ -213,8 +211,6 @@ object StreamNearDedup {
       .withColumn("text", concat(col("text"), lit(MirrorSuffix))))
   }
 
-  private val memo = new ConcurrentHashMap[String, DataFrame]()
-
   /** End-to-end oracle-checked entry: land the mirror-bearing feed, run
     * the stateful stream to termination (one AvailableNow micro-batch —
     * in-batch claim order is min-doc_id, matching the oracle's
@@ -222,15 +218,11 @@ object StreamNearDedup {
     * StreamNearDedupSpec drives the same pipeline across TWO micro-batches
     * to prove checkpointed claims kill later-batch mirrors.
     */
-  private def basePath(spark: SparkSession, dir: String): String = {
-    val safe = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-    s"${sys.props("java.io.tmpdir")}/graft-stream-neardedup/" +
-      s"${spark.sparkContext.applicationId}/${graft.Memos.runTag}/$safe"
-  }
+  def entry(spark: SparkSession, dir: String): DataFrame = run(spark, dir)._2
 
-  def entry(spark: SparkSession, dir: String): DataFrame =
-    memo.computeIfAbsent(s"${spark.sparkContext.applicationId}:${graft.Memos.runTag}:$dir", { _ =>
-      val base = basePath(spark, dir)
+  /** The memoized run of [[entry]]: its scratch directory and its ledger. */
+  private def run(spark: SparkSession, dir: String): (String, DataFrame) =
+    graft.Scratch.memo(spark, "graft-stream-neardedup", dir, perRun = true) { base =>
       feed(spark, dir).write.mode("overwrite").parquet(s"$base/src")
       // NOT skipNoDataBatches: the ledger sink would be unchanged (the
       // timeout path emits nothing), but stream_state_metadata reads this
@@ -240,8 +232,8 @@ object StreamNearDedup {
         nearDedup(ss, s"$base/src", s"$base/out", s"$base/ckpt")
           .awaitTermination()
       }
-      ledger(spark.read.parquet(s"$base/out"))
-    })
+      (base, ledger(spark.read.parquet(s"$base/out")))
+    }
 
   /** The claim state read BACK through Spark's state-store data source
     * (`spark.read.format("statestore")`) — the operational window every
@@ -254,9 +246,8 @@ object StreamNearDedup {
     * pins the store's row count = the bound the eviction scaladoc claims.
     */
   def stateInspect(spark: SparkSession, dir: String): DataFrame = {
-    entry(spark, dir) // the memoized run guarantees the checkpoint exists
     spark.read.format("statestore")
-      .option("path", s"${basePath(spark, dir)}/ckpt")
+      .option("path", s"${run(spark, dir)._1}/ckpt")
       .load()
       .select(col("key._1").as("band"))
       .groupBy(col("band"))
@@ -275,9 +266,8 @@ object StreamNearDedup {
     * checkpoint layout itself is pinned cross-engine.
     */
   def stateMetadata(spark: SparkSession, dir: String): DataFrame = {
-    entry(spark, dir)
     spark.read.format("state-metadata")
-      .load(s"${basePath(spark, dir)}/ckpt")
+      .load(s"${run(spark, dir)._1}/ckpt")
       .select(col("operatorId").cast("bigint").as("operator_id"),
         col("operatorName").as("operator_name"),
         col("stateStoreName").as("store_name"),

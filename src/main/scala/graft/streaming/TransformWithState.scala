@@ -4,8 +4,6 @@ import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, StreamingQuery, TTLConfig, TimeMode, TimerValues, Trigger}
 
-import java.util.concurrent.ConcurrentHashMap
-
 /** Spark 4's `transformWithState` — the arbitrary-state API that supersedes
   * `mapGroupsWithState` — driven end-to-end and oracle-checked: a per-user
   * running ledger holding TWO typed state variables, a `ValueState` (the
@@ -124,38 +122,32 @@ object TransformWithState {
         floor($"value").cast("long").as("v"))
   }
 
-  private val memo = new ConcurrentHashMap[String, DataFrame]()
-
   /** End-to-end oracle-checked entry: land the feed, run the ledger stream
     * to termination, read the sink back in total order.
     */
   def entry(spark: SparkSession, dir: String): DataFrame =
-    memo.computeIfAbsent(
-      s"${spark.sparkContext.applicationId}:${graft.Memos.runTag}:$dir", { _ =>
-        val safe = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-        val base = s"${sys.props("java.io.tmpdir")}/graft-stream-tws/" +
-          s"${spark.sparkContext.applicationId}/${graft.Memos.runTag}/$safe"
-        val src = IncrementalIngest.landedEvents(spark, dir)
-        import org.apache.spark.sql.functions.{coalesce, col, floor, lit}
-        // TimeMode.None, no timers: every ledger row emits in its data
-        // batch — the trailing no-data batch has nothing to release
-        IncrementalIngest.withStreamPartitions(spark,
-            skipNoDataBatches = true) { ss =>
-          runningLedger(ss, src, s"$base/out", s"$base/ckpt",
-            schema = "event_id BIGINT, ts TIMESTAMP, user_id BIGINT, " +
-              "event_type STRING, value DOUBLE, props STRING",
-            prep = df => df
-              .filter(col("user_id").isNotNull)
-              .select(col("event_id"), col("user_id"),
-                coalesce(col("event_type"), lit("(null)")).as("event_type"),
-                floor(col("value")).cast("long").as("v")))
-            .awaitTermination()
-        }
-        import spark.implicits._
-        spark.read.parquet(s"$base/out")
-          .select($"event_id", $"user_id", $"seq_no", $"cum_v", $"type_seen")
-          .orderBy($"event_id")
-      })
+    graft.Scratch.memo(spark, "graft-stream-tws", dir, perRun = true) { base =>
+      val src = IncrementalIngest.landedEvents(spark, dir)
+      import org.apache.spark.sql.functions.{coalesce, col, floor, lit}
+      // TimeMode.None, no timers: every ledger row emits in its data
+      // batch — the trailing no-data batch has nothing to release
+      IncrementalIngest.withStreamPartitions(spark,
+          skipNoDataBatches = true) { ss =>
+        runningLedger(ss, src, s"$base/out", s"$base/ckpt",
+          schema = "event_id BIGINT, ts TIMESTAMP, user_id BIGINT, " +
+            "event_type STRING, value DOUBLE, props STRING",
+          prep = df => df
+            .filter(col("user_id").isNotNull)
+            .select(col("event_id"), col("user_id"),
+              coalesce(col("event_type"), lit("(null)")).as("event_type"),
+              floor(col("value")).cast("long").as("v")))
+          .awaitTermination()
+      }
+      import spark.implicits._
+      spark.read.parquet(s"$base/out")
+        .select($"event_id", $"user_id", $"seq_no", $"cum_v", $"type_seen")
+        .orderBy($"event_id")
+    }
 
   // ───────────────────────── session timeout via TIMERS ────────────────
 
@@ -248,32 +240,26 @@ object TransformWithState {
       .start()
   }
 
-  private val sessMemo = new ConcurrentHashMap[String, DataFrame]()
-
   def sessionEntry(spark: SparkSession, dir: String): DataFrame =
-    sessMemo.computeIfAbsent(
-      s"${spark.sparkContext.applicationId}:${graft.Memos.runTag}:$dir", { _ =>
-        val safe = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-        val base = s"${sys.props("java.io.tmpdir")}/graft-stream-tws-sess/" +
-          s"${spark.sparkContext.applicationId}/${graft.Memos.runTag}/$safe"
-        import spark.implicits._
-        val src = IncrementalIngest.landedEvents(spark, dir)
-        // no skipNoDataBatches: sessions close via TIMERS firing in the
-        // watermark-advance batch — skipping it would empty the sink
-        IncrementalIngest.withStreamPartitions(spark) { ss =>
-          sessionTimeout(ss, src, s"$base/out", s"$base/ckpt",
-            schema = "event_id BIGINT, ts TIMESTAMP, user_id BIGINT, " +
-              "event_type STRING, value DOUBLE, props STRING",
-            prep = df => df
-              .filter(col("user_id").isNotNull && col("ts").isNotNull)
-              .select(col("event_id"), col("user_id"), col("ts")))
-            .awaitTermination()
-        }
-        spark.read.parquet(s"$base/out")
-          .select($"user_id", $"start_ms", $"end_ms", $"n_events",
-            $"closed_by")
-          .orderBy($"user_id", $"start_ms")
-      })
+    graft.Scratch.memo(spark, "graft-stream-tws-sess", dir, perRun = true) { base =>
+      import spark.implicits._
+      val src = IncrementalIngest.landedEvents(spark, dir)
+      // no skipNoDataBatches: sessions close via TIMERS firing in the
+      // watermark-advance batch — skipping it would empty the sink
+      IncrementalIngest.withStreamPartitions(spark) { ss =>
+        sessionTimeout(ss, src, s"$base/out", s"$base/ckpt",
+          schema = "event_id BIGINT, ts TIMESTAMP, user_id BIGINT, " +
+            "event_type STRING, value DOUBLE, props STRING",
+          prep = df => df
+            .filter(col("user_id").isNotNull && col("ts").isNotNull)
+            .select(col("event_id"), col("user_id"), col("ts")))
+          .awaitTermination()
+      }
+      spark.read.parquet(s"$base/out")
+        .select($"user_id", $"start_ms", $"end_ms", $"n_events",
+          $"closed_by")
+        .orderBy($"user_id", $"start_ms")
+    }
 
   val all: Map[String, (SparkSession, String) => DataFrame] = Map(
     "stream_tws_ledger" -> (entry _),

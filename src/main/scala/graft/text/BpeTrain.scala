@@ -36,11 +36,8 @@ object BpeTrain {
   /** Merge rounds learned; unrolled identically in the DuckDB twin. */
   val Rounds = 5
 
-  private val memo =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
   def bpeTrain(spark: SparkSession, dir: String): DataFrame =
-    memo.computeIfAbsent(s"${spark.sparkContext.applicationId}:${graft.Memos.runTag}:$dir", _ => {
+    graft.Scratch.memo(spark, "graft-bpe", dir, perRun = true) { _ =>
       import spark.implicits._
       // localCheckpoint makes the "corpus collapses ONCE" scale shape
       // REAL: the merge loop below runs 2 driver actions per round (argmax
@@ -84,7 +81,7 @@ object BpeTrain {
         .toDF("round", "left_sym", "right_sym", "merged", "n_occurrences",
           "corpus_tokens_after")
         .orderBy($"round")
-    })
+    }
 
   val all: Map[String, (SparkSession, String) => DataFrame] = Map(
     "text_bpe_train" -> (bpeTrain _))

@@ -452,9 +452,6 @@ object Curate {
       .orderBy($"df".desc, $"gram")
   }
 
-  private val gramMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
   /** Distinct (doc_id, gram) inverted index of [[OverlapGram]]-grams —
     * shared by [[ngramOverlap]]'s candidate/verify stages (which reference
     * it four times) and the [[overlapDroppedGrams]] ledger. Materialized
@@ -466,30 +463,24 @@ object Curate {
     * table a decontamination pass builds once and queries per test set.
     */
   private[graft] def overlapGrams(spark: SparkSession, dir: String): DataFrame =
-    gramMemo.computeIfAbsent(
-      s"${spark.sparkContext.applicationId}:$dir", { _ =>
-        import spark.implicits._
-        val safe = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-        val p = s"${sys.props("java.io.tmpdir")}/graft-overlap-grams/" +
-          s"${spark.sparkContext.applicationId}/$safe"
-        // Gram assembly is TOP-LEVEL expressions (explode positions, then
-        // concat_ws over element_at) so whole-stage codegen covers it — the
-        // equivalent transform(.., i -> concat_ws(slice(..)))-lambda runs
-        // interpreted and measured 7× slower; per-doc distinct becomes one
-        // (doc_id, gram) distinct on the already-exploded rows.
-        Tables.documents(spark, dir)
-          .withColumn("toks", split(trim(lower($"text")), "\\s+"))
-          .filter(size($"toks") >= OverlapGram)
-          .select($"doc_id", $"toks",
-            explode(sequence(lit(0), size($"toks") - OverlapGram)).as("i"))
-          .select($"doc_id",
-            concat_ws(" ",
-              (1 to OverlapGram).map(k => element_at($"toks", $"i" + k)): _*)
-              .as("gram"))
-          .distinct()
-          .write.mode("overwrite").parquet(p)
-        spark.read.parquet(p)
-      })
+    graft.Scratch.parquet(spark, "graft-overlap-grams", dir) {
+      import spark.implicits._
+      // Gram assembly is TOP-LEVEL expressions (explode positions, then
+      // concat_ws over element_at) so whole-stage codegen covers it — the
+      // equivalent transform(.., i -> concat_ws(slice(..)))-lambda runs
+      // interpreted and measured 7× slower; per-doc distinct becomes one
+      // (doc_id, gram) distinct on the already-exploded rows.
+      Tables.documents(spark, dir)
+        .withColumn("toks", split(trim(lower($"text")), "\\s+"))
+        .filter(size($"toks") >= OverlapGram)
+        .select($"doc_id", $"toks",
+          explode(sequence(lit(0), size($"toks") - OverlapGram)).as("i"))
+        .select($"doc_id",
+          concat_ws(" ",
+            (1 to OverlapGram).map(k => element_at($"toks", $"i" + k)): _*)
+            .as("gram"))
+        .distinct()
+    }
 
   val all: Map[String, (SparkSession, String) => DataFrame] = Map(
     "curate_ngram_overlap" -> ((s, d) => ngramOverlap(s, d)),

@@ -26,10 +26,10 @@ import org.apache.spark.sql.functions._
   */
 object Bucketing {
 
-  /** Land `df` as a bucketed + in-bucket-sorted catalog table. Idempotent
-    * across JVMs: the in-memory catalog forgets tables between sessions
-    * while their managed locations survive, so any stale location is cleared
-    * first (CREATE refuses to reuse one).
+  /** Land `df` as a bucketed + in-bucket-sorted catalog table. The table
+    * is external, its files in this application's [[graft.Scratch]]
+    * directory: processes sharing a working directory never share a table
+    * location, and the files go when the application ends.
     */
   def writeBucketed(df: DataFrame, table: String, key: String,
       buckets: Int): Unit =
@@ -42,14 +42,9 @@ object Bucketing {
     */
   def writeBucketedSorted(df: DataFrame, table: String, key: String,
       buckets: Int, sortCols: Seq[String]): Unit = {
-    val spark = df.sparkSession
-    spark.sql(s"DROP TABLE IF EXISTS `$table`")
-    val loc = new org.apache.hadoop.fs.Path(
-      spark.sessionState.conf.warehousePath, table.toLowerCase)
-    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(loc)) fs.delete(loc, true)
     df.write.mode("overwrite")
       .bucketBy(buckets, key).sortBy(sortCols.head, sortCols.tail: _*)
+      .option("path", graft.Scratch.path(df.sparkSession, "graft-bucketed", table))
       .format("parquet").saveAsTable(table)
   }
 
@@ -182,9 +177,6 @@ object Bucketing {
         $"num_procedures", $"total_quantity")
   }
 
-  private val bucketMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
-
   /** Land orders + lineitem as bucketed catalog tables once per
     * (application, corpus) and return the table names. The bucketed layout
     * is write-once state exactly like the dedup signature / IVF index
@@ -192,20 +184,19 @@ object Bucketing {
     * recurring order-key join after it runs exchange-free.
     */
   def bucketedOrderTables(spark: SparkSession, dir: String): (String, String) =
-    bucketMemo.computeIfAbsent(
-      s"${spark.sparkContext.applicationId}:$dir", { _ =>
-        val tag = graft.functions.Md5Hash.md5Int(dir).toHexString
-        val (ot, lt) = (s"graft_orders_bkt_$tag", s"graft_lineitem_bkt_$tag")
-        writeBucketed(graft.Tables.orders(spark, dir), ot, "o_orderkey", 8)
-        // carry the columns EVERY recurring order-key consumer needs (the
-        // fact-build rollup reads quantity, the accumulating snapshot reads
-        // ship dates) — the bucketed layout is the shared ingest artifact,
-        // not a per-query extract
-        writeBucketed(graft.Tables.lineitem(spark, dir)
-          .select(col("l_orderkey"), col("l_quantity"), col("l_shipdate")),
-          lt, "l_orderkey", 8)
-        (ot, lt)
-      })
+    graft.Scratch.memo(spark, "graft-bucketed", dir) { _ =>
+      val tag = graft.functions.Md5Hash.md5Int(dir).toHexString
+      val (ot, lt) = (s"graft_orders_bkt_$tag", s"graft_lineitem_bkt_$tag")
+      writeBucketed(graft.Tables.orders(spark, dir), ot, "o_orderkey", 8)
+      // carry the columns EVERY recurring order-key consumer needs (the
+      // fact-build rollup reads quantity, the accumulating snapshot reads
+      // ship dates) — the bucketed layout is the shared ingest artifact,
+      // not a per-query extract
+      writeBucketed(graft.Tables.lineitem(spark, dir)
+        .select(col("l_orderkey"), col("l_quantity"), col("l_shipdate")),
+        lt, "l_orderkey", 8)
+      (ot, lt)
+    }
 
   /** Query entry over the bucketed layout: the fact-build join shape
     * reading the pre-bucketed tables (ScaleVariantsSpec asserts the plan

@@ -132,9 +132,6 @@ object FileManifest {
   /** Columns manifested in [[manifestEntry]]. */
   val ManifestCols: Seq[String] = Seq("o_date_int", "o_orderkey")
 
-  private val memo =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
   /** Oracle-checked end-to-end manifest demo (`wh_file_manifest`): land
     * `orders` as one flat parquet file PER CALENDAR YEAR under
     * deterministic names (`y1994.parquet` …), [[build]] the manifest from
@@ -155,11 +152,8 @@ object FileManifest {
     * footer scan is the distributed part and the only part that grows.
     */
   def manifestEntry(spark: SparkSession, dir: String): DataFrame =
-    memo.computeIfAbsent(s"${spark.sparkContext.applicationId}:${graft.Memos.runTag}:$dir", { _ =>
+    graft.Scratch.memo(spark, "graft-manifest", dir, perRun = true) { base =>
       import spark.implicits._
-      val safe = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-      val base = s"${sys.props("java.io.tmpdir")}/graft-manifest/" +
-        s"${spark.sparkContext.applicationId}/${graft.Memos.runTag}/$safe"
       val o = graft.Tables.orders(spark, dir)
         .withColumn("o_date_int",
           (year($"o_orderdate") * 10000 + month($"o_orderdate") * 100 +
@@ -199,7 +193,7 @@ object FileManifest {
       m.withColumnRenamed("column", "col_name")
         .withColumn("selected", $"file".isin(selected: _*))
         .orderBy($"file", $"col_name")
-    })
+    }
 
   val all: Map[String, (SparkSession, String) => DataFrame] = Map(
     "wh_file_manifest" -> (manifestEntry _))

@@ -1,7 +1,5 @@
 package graft.warehouse
 
-import java.util.concurrent.ConcurrentHashMap
-
 import graft.Tables
 import graft.plans.{ChildSession, FileSkipIndex}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -58,23 +56,18 @@ object FileSkip {
     */
   val PointKey = 7L
 
-  private val pathMemo = new ConcurrentHashMap[String, String]()
-
   /** Land the z-ordered layout once per (application, corpus), build +
     * persist its stats index, and return the layout root.
     */
   private[graft] def layoutPath(spark: SparkSession, dir: String): String =
-    pathMemo.computeIfAbsent(s"${spark.sparkContext.applicationId}:$dir", { _ =>
-      val safe = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-      val p = s"${sys.props("java.io.tmpdir")}/graft-fileskip/" +
-        s"${spark.sparkContext.applicationId}/$safe"
+    graft.Scratch.memo(spark, "graft-fileskip", dir) { p =>
       ZOrderLayout.layout(Tables.lineitem(spark, dir),
         xCol = "l_partkey", yCol = "l_suppkey", files = NFiles, outPath = p)
       FileSkipIndex.index(spark, p,
         rangeCols = Seq("l_partkey", "l_suppkey", "l_orderkey"),
         bloomCol = Some("l_orderkey"), words = BloomWords)
       p
-    })
+    }
 
   /** The layout read through the rule in a child session. */
   private def pruned(spark0: SparkSession, dir: String): DataFrame = {
@@ -128,8 +121,6 @@ object FileSkip {
   val ShipLo = "1996-03-01 00:00:00"
   val ShipHi = "1996-07-01 00:00:00" // exclusive
 
-  private val shipMemo = new ConcurrentHashMap[String, String]()
-
   /** Land the time-clustered layout in TWO batches once per (application,
     * corpus): batch 1 (pre-split) is range-partitioned by `l_shipdate`
     * and indexed; batch 2 (post-split) is APPENDED the same way and the
@@ -137,10 +128,7 @@ object FileSkip {
     * shape, where each day's landing manifests only its own files.
     */
   private[graft] def shipLayoutPath(spark: SparkSession, dir: String): String =
-    shipMemo.computeIfAbsent(s"${spark.sparkContext.applicationId}:$dir", { _ =>
-      val safe = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-      val p = s"${sys.props("java.io.tmpdir")}/graft-fileskip-ship/" +
-        s"${spark.sparkContext.applicationId}/$safe"
+    graft.Scratch.memo(spark, "graft-fileskip-ship", dir) { p =>
       val li = Tables.lineitem(spark, dir)
       def land(batch: org.apache.spark.sql.DataFrame, mode: String): Unit =
         batch.repartitionByRange(ShipBatchFiles, col("l_shipdate"))
@@ -153,7 +141,7 @@ object FileSkip {
       FileSkipIndex.indexAppend(spark, p, rangeCols = Seq("l_shipdate"),
         bloomCol = None, words = 0)
       p
-    })
+    }
 
   /** Ship-date range inside batch 2 — TIMESTAMP-envelope-pruned through
     * files the INCREMENTAL index pass manifested.
@@ -193,8 +181,6 @@ object FileSkip {
   val LayerLo = 19960215
   val LayerHi = 19960410
 
-  private val yearMemo = new ConcurrentHashMap[String, String]()
-
   /** Land the year-partitioned, date-clustered layout once per
     * (application, corpus): `year_key=yyyy/` directories whose files each
     * cover a contiguous `date_key` slice, with BOTH write-time metadata
@@ -202,10 +188,7 @@ object FileSkip {
     * div 10000`) and the per-file stats sidecar.
     */
   private[graft] def yearLayoutPath(spark: SparkSession, dir: String): String =
-    yearMemo.computeIfAbsent(s"${spark.sparkContext.applicationId}:$dir", { _ =>
-      val safe = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-      val p = s"${sys.props("java.io.tmpdir")}/graft-fileskip-year/" +
-        s"${spark.sparkContext.applicationId}/$safe"
+    graft.Scratch.memo(spark, "graft-fileskip-year", dir) { p =>
       Tables.lineitem(spark, dir)
         .select(
           (year(col("l_shipdate")) * 10000 + month(col("l_shipdate")) * 100 +
@@ -221,7 +204,7 @@ object FileSkip {
       FileSkipIndex.index(spark, p, rangeCols = Seq("date_key"),
         bloomCol = None, words = 0)
       p
-    })
+    }
 
   /** Date-ranged report over the layered layout with BOTH pruning rules:
     * the derived invariant cuts to the one `year_key=1996/` DIRECTORY

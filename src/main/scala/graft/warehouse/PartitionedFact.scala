@@ -3,8 +3,6 @@ package graft.warehouse
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import java.util.concurrent.ConcurrentHashMap
-
 /** Month-partitioned fact materialization as a QUERYABLE surface — the
   * cluster-scale fact layout [[Warehouse.materialize]] promises
   * (`partitionFact = true`), promoted from a spec-only construct to an
@@ -24,19 +22,18 @@ object PartitionedFact {
   val MonthLo = 199601
   val MonthHi = 199606
 
-  private val memo = new ConcurrentHashMap[String, DataFrame]()
-  private val pathMemo = new ConcurrentHashMap[String, String]()
-
-  /** Land the month layout once per (application, corpus) and return its
-    * path — split out from [[factByMonth]] so consumers that must read it
-    * in a CHILD session (the derived-pruning query installs a rule there)
-    * can re-open the path instead of borrowing a parent-bound DataFrame.
+  /** The month layout's path — consumers that must read it in a CHILD
+    * session (the derived-pruning query installs a rule there) re-open the
+    * path instead of borrowing [[factByMonth]]'s parent-bound DataFrame.
     */
   private[graft] def monthLayoutPath(spark: SparkSession, dir: String): String =
-    pathMemo.computeIfAbsent(s"${spark.sparkContext.applicationId}:$dir", { _ =>
-      val safe = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-      val p = s"${sys.props("java.io.tmpdir")}/graft-fact-month/" +
-        s"${spark.sparkContext.applicationId}/$safe"
+    monthLayout(spark, dir)._1
+
+  /** Land the month layout once per (application, corpus): its path and a
+    * read of it.
+    */
+  private def monthLayout(spark: SparkSession, dir: String): (String, DataFrame) =
+    graft.Scratch.memo(spark, "graft-fact-month", dir) { p =>
       Warehouse.forDir(spark, dir).factEncounters
         .withColumn("month_key", (col("date_key") / 100).cast("int"))
         .write.mode("overwrite").partitionBy("month_key").parquet(p)
@@ -52,8 +49,8 @@ object PartitionedFact {
       // fresh session — every real reader at 100 TB — prunes without this
       // JVM's registry (DerivedPartitionSpec's cleared-registry gate)
       graft.plans.DerivedPartitionFilter.persist(spark, p)
-      p
-    })
+      (p, spark.read.parquet(p))
+    }
 
   /** The fact table re-landed partitioned by `month_key` (yyyyMM of the
     * encounter date), written once per (application, corpus) from the
@@ -61,9 +58,7 @@ object PartitionedFact {
     * downstream month-ranged query amortizes it.
     */
   def factByMonth(spark: SparkSession, dir: String): DataFrame =
-    memo.computeIfAbsent(s"${spark.sparkContext.applicationId}:$dir", { _ =>
-      spark.read.parquet(monthLayoutPath(spark, dir))
-    })
+    monthLayout(spark, dir)._2
 
   /** Month-ranged activity report off the partitioned layout: the filter is
     * on the PARTITION column, so the scan prunes to the
@@ -261,8 +256,6 @@ object PartitionedFact {
     */
   val CompactTarget = 1000L
 
-  private val compactMemo = new ConcurrentHashMap[String, DataFrame]()
-
   /** The small-files maintenance job over the month layout, as a queryable
     * ledger: [[Bucketing.compactPartitioned]] rewrites each `month_key=`
     * directory into ceil(rows/[[CompactTarget]]) files (one distributed
@@ -279,22 +272,15 @@ object PartitionedFact {
     * memoized.
     */
   def compactionLedger(spark: SparkSession, dir: String): DataFrame =
-    compactMemo.computeIfAbsent(
-      // runTag-keyed (graft.Memos): the rewrite IS the timed operator, so a
-      // Bench second sample must re-compact into a fresh out dir, not read
-      // the memo; the month-layout INPUT stays generation-independent — it
-      // is pre-warmed setup
-      s"${spark.sparkContext.applicationId}:${graft.Memos.runTag}:$dir", { _ =>
-        factByMonth(spark, dir) // ensure the month layout is landed
-        val safe = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-        val base = s"${sys.props("java.io.tmpdir")}/graft-fact-month/" +
-          s"${spark.sparkContext.applicationId}/$safe"
-        val out = s"${sys.props("java.io.tmpdir")}/graft-fact-compact/" +
-          s"${spark.sparkContext.applicationId}/${graft.Memos.runTag}/$safe"
-        Bucketing.compactPartitioned(spark, base, out,
-            "month_key", "encounter_key", CompactTarget)
-          .orderBy(col("month_key"))
-      })
+    // perRun: the rewrite IS the timed operator, so a Bench second sample
+    // must re-compact into a fresh out dir, not read the memo; the
+    // month-layout INPUT stays generation-independent — it is pre-warmed
+    // setup
+    graft.Scratch.memo(spark, "graft-fact-compact", dir, perRun = true) { out =>
+      Bucketing.compactPartitioned(spark, monthLayoutPath(spark, dir), out,
+          "month_key", "encounter_key", CompactTarget)
+        .orderBy(col("month_key"))
+    }
 
   val all: Map[String, (SparkSession, String) => DataFrame] = Map(
     "wh_month_pruned_scan" -> (monthPrunedScan _),

@@ -4,8 +4,6 @@ import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import java.util.concurrent.ConcurrentHashMap
-
 /** Star-schema warehouse — the Spark-native re-expression of the reference's
   * `sql/03_warehouse.sql` + `src/populate_warehouse.py`.
   *
@@ -292,18 +290,8 @@ object Warehouse {
   // One materialized warehouse per (application, data dir): queries called
   // repeatedly by Verify/Bench share the parquet tables instead of
   // re-deriving them.
-  private val memo = new ConcurrentHashMap[String, Warehouse]()
-
-  /** The deterministic materialization directory for (application, corpus). */
-  def workDirFor(spark: SparkSession, dir: String): String = {
-    val safe = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-    s"${sys.props("java.io.tmpdir")}/graft-wh/${spark.sparkContext.applicationId}/$safe"
-  }
-
   def forDir(spark: SparkSession, dir: String): Warehouse =
-    memo.computeIfAbsent(s"${spark.sparkContext.applicationId}:$dir", { _ =>
-      materialize(spark, dir, workDirFor(spark, dir))
-    })
+    graft.Scratch.memo(spark, "graft-wh", dir)(materialize(spark, dir, _))
 
   /** Re-read the materialized warehouse with THIS session. [[forDir]]'s
     * memoized DataFrames are bound to whichever session materialized first;
@@ -313,7 +301,7 @@ object Warehouse {
     */
   def reread(spark: SparkSession, dir: String): Warehouse = {
     forDir(spark, dir)
-    val work = workDirFor(spark, dir)
+    val work = graft.Scratch.path(spark, "graft-wh", dir)
     def rd(n: String) = spark.read.parquet(s"$work/$n")
     Warehouse(
       dimPatient = rd("dim_patient"),

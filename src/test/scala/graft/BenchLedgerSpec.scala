@@ -54,6 +54,16 @@ class BenchLedgerSpec extends SparkSpec {
     assert(node.path("sf").asText == oddSf)
   }
 
+  test("the stdout line is pure ASCII and reads back equal, em dash included") {
+    val node = json.createObjectNode()
+      .put("claim", "exec — window parity — see asof_skew")
+    val line = Bench.stdoutLine(node)
+    val bytes = line.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    assert(bytes.forall(b => b >= 0x20 && b < 0x7f), line)
+    assert(line.contains("\\u2014"), line)
+    assert(json.readTree(line) == node)
+  }
+
   test("Verify's oracle JSON parses back to the same SQL, control characters included") {
     val sql = Map(
       "q_tab" -> "SELECT\t1",

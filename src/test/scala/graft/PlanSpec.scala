@@ -699,4 +699,17 @@ class PlanSpec extends SparkSpec {
         "expected broadcast lookups in a ScaledLn/sketch plan")
     }
   }
+
+  test("profile counts DataSource V2 scan rows (BatchScan), not only file scans") {
+    val df = spark.read.format("graft-gen")
+      .option("rows", 1000L).option("slices", 4).load()
+    val (_, prof) = observability.QueryMetrics.profile(df)
+    assert(collectAll(plan(df)) {
+      case s: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => s
+    }.nonEmpty, "graft-gen must plan a BatchScan")
+    assert(prof.scanRows > 0 && prof.scanRows == prof.outputRows,
+      s"scanRows ${prof.scanRows} vs outputRows ${prof.outputRows}")
+    // the generator reads no files
+    assert(prof.scanFiles == 0 && prof.scanBytes == 0)
+  }
 }

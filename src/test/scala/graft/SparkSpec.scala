@@ -14,9 +14,6 @@ object TestSpark {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      // session-catalog tables (bucketed-join specs) land in /tmp, not cwd
-      .config("spark.sql.warehouse.dir",
-        s"${sys.props("java.io.tmpdir")}/graft-test-warehouse")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
