@@ -58,13 +58,17 @@ object GraftExtensions {
 
   /** Lazy self-registration path for the DataFrame API (no session config
     * needed): installs every native function as a temp function with the
-    * SAME arity-guarded builders the extension path uses. Idempotent.
+    * SAME arity-guarded builders the extension path uses. A name the
+    * session's registry already holds (an earlier call, or the extension
+    * path) is left as it is, so repeated calls cost one lookup per name.
     */
-  def registerAll(spark: org.apache.spark.sql.SparkSession): Unit =
+  def registerAll(spark: org.apache.spark.sql.SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
     functions.foreach { case (id, _, builder) =>
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        id.funcName, builder, "built-in")
+      if (!registry.functionExists(id))
+        registry.createOrReplaceTempFunction(id.funcName, builder, "built-in")
     }
+  }
 
   /** Arity gate: a named, actionable error at analysis time instead of a
     * raw IndexOutOfBounds from a blind `args(i)`.
@@ -139,21 +143,6 @@ object GraftExtensions {
       arity("graft_edit_within", 3,
         "graft_edit_within(string, string, int k) → min(levenshtein, k+1)") {
         args => graft.functions.EditWithin(args(0), args(1), args(2)) }),
-    (FunctionIdentifier("graft_topk_ids"),
-      new ExpressionInfo(classOf[graft.functions.TopKIdsAgg].getName,
-        "graft_topk_ids"),
-      arity("graft_topk_ids", 3,
-        "graft_topk_ids(double score, bigint id, int literal k) aggregate " +
-          "→ array<bigint> ids of the k best by (score desc, id asc)") {
-        args =>
-          val k = args(2) match {
-            case org.apache.spark.sql.catalyst.expressions.Literal(v, _)
-                if v != null => v.toString.toInt
-            case other => throw new IllegalArgumentException(
-              s"graft_topk_ids k must be an int literal, got $other")
-          }
-          graft.functions.TopKIdsAgg(args(0), args(1), k)
-      }),
     (FunctionIdentifier("graft_topk_pairs"),
       new ExpressionInfo(classOf[graft.functions.TopKPairsAgg].getName,
         "graft_topk_pairs"),

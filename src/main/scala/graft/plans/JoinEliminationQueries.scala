@@ -22,10 +22,11 @@ import org.apache.spark.sql.functions._
   *    `n_items` → that join must survive while the untouched customer-
   *    frequency join still disappears (partial elimination, also gated).
   *
-  * Every consumer calls [[EliminateRedundantLeftJoin.install]] so the rule
-  * is active in driver-owned sessions too (the extensions route needs
-  * session configuration; `install` needs none — same dual path as the
-  * native functions).
+  * Each demo runs on a [[ChildSession]] of the caller's session and calls
+  * [[EliminateRedundantLeftJoin.install]] there, so the rule is active
+  * without session configuration (the extensions route needs it; `install`
+  * needs none — same dual path as the native functions) and the caller's
+  * session plans every later query exactly as before.
   */
 object JoinEliminationQueries {
 
@@ -50,13 +51,25 @@ object JoinEliminationQueries {
       .join(custFreq, orders("o_custkey") === custFreq("cf_custkey"), "left")
   }
 
+  /** A child of `spark0` with the rule installed; the caller's kill
+    * switch ([[EliminateRedundantLeftJoin.EnabledKey]]), when set, is
+    * carried over, since [[ChildSession]] drops the graft rule keys.
+    */
+  private def withRule(spark0: SparkSession): SparkSession = {
+    val spark = ChildSession(spark0)
+    spark0.conf.getOption(EliminateRedundantLeftJoin.EnabledKey)
+      .foreach(spark.conf.set(EliminateRedundantLeftJoin.EnabledKey, _))
+    EliminateRedundantLeftJoin.install(spark)
+    spark
+  }
+
   /** Reads ONLY base order columns from the enriched view: both enrichment
     * joins are provably no-ops and the optimized plan is a single pass over
     * `orders` — no lineitem scan, no self-aggregate, no shuffle joins.
     */
-  def reportBase(spark: SparkSession, dir: String): DataFrame = {
+  def reportBase(spark0: SparkSession, dir: String): DataFrame = {
+    val spark = withRule(spark0)
     import spark.implicits._
-    EliminateRedundantLeftJoin.install(spark)
     enrichedOrders(spark, dir)
       .groupBy($"o_orderpriority")
       .agg(count(lit(1)).as("n_orders"),
@@ -68,9 +81,9 @@ object JoinEliminationQueries {
     * flow into the output, so the oracle verifies the JOIN's results), while
     * the customer-frequency join — still unread — is eliminated.
     */
-  def reportWithItems(spark: SparkSession, dir: String): DataFrame = {
+  def reportWithItems(spark0: SparkSession, dir: String): DataFrame = {
+    val spark = withRule(spark0)
     import spark.implicits._
-    EliminateRedundantLeftJoin.install(spark)
     enrichedOrders(spark, dir)
       .groupBy($"o_orderpriority")
       .agg(count(lit(1)).as("n_orders"),

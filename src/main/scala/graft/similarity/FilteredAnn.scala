@@ -1,8 +1,8 @@
 package graft.similarity
 
 import graft.Tables
+import graft.functions.TopK
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Filtered vector search — the metadata-constrained ANN problem every
@@ -47,12 +47,11 @@ object FilteredAnn {
     val probeBuckets = probes.select($"query_id", $"q_emb", $"q_label",
       explode(RandomHyperplaneLsh.probeSignatures($"q_bucket")).as("bucket"))
 
-    def rank(cands: DataFrame) = cands
-      .withColumn("cos", expr("graft_cosine(q_emb, ne)"))
-      .select($"query_id", $"nid", $"cos").distinct()
-      .withColumn("rk", row_number().over(
-        Window.partitionBy($"query_id").orderBy($"cos".desc, $"nid")))
-      .filter($"rk" <= k)
+    // multi-probe duplicates of a (query_id, nid) pair carry one score;
+    // the kernel keeps one copy
+    def rank(cands: DataFrame) = TopK.rank(
+        cands.withColumn("cos", expr("graft_cosine(q_emb, ne)")),
+        Seq("query_id"), "cos", "nid", k)
       .select($"query_id", $"nid")
 
     // exact filtered baseline: same-label corpus, full scan per probe

@@ -1,8 +1,9 @@
 package graft.similarity
 
 import graft.Tables
+import graft.functions.GraftFunctions.round2
+import graft.functions.TopK
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Beam search over a navigable neighbor graph — the NSW/HNSW family's
@@ -22,7 +23,7 @@ import org.apache.spark.sql.functions._
   * frontier nodes (bucket-pruned scans), never for the whole corpus —
   * the property that makes graph-ANN viable at 10⁹ vectors, mirrored
   * here in the plan shape: per round, one frontier×bucket equi-join +
-  * two rank windows, nothing corpus-quadratic.
+  * two top-k kernel passes, nothing corpus-quadratic.
   *
   * Determinism: the walk is a pure function of the graph and the
   * tie-breaks ((cos desc, id) at every argmax); the DuckDB twin unrolls
@@ -75,7 +76,7 @@ object GraphSearch {
       // embedding arrays just to rank; the aggregate shuffles ≤ Degree
       // (score, id) entries per (cur, mapper), and the adjacency's
       // embeddings are re-fetched by the ONE candidate join below.
-      val adj = curIdx
+      val cands = curIdx
         .select($"cur", $"cur_emb",
           explode(RandomHyperplaneLsh.probeSignatures($"bucket"))
             .as("bucket"))
@@ -83,13 +84,12 @@ object GraphSearch {
           $"bucket"), "bucket")
         .filter($"u" =!= $"cur")
         .withColumn("ncos", expr("graft_cosine(cur_emb, u_emb)"))
-        .groupBy($"cur")
-        .agg(expr(s"graft_topk_pairs(ncos, u, $GraphDegree)").as("top"))
-        .select($"cur", explode($"top.id").as("u"))
+      val adj = TopK.rank(cands, Seq("cur"), "ncos", "u", GraphDegree)
+        .select($"cur", $"u")
       val stay = state.select($"query_id", $"q_emb", $"cur".as("cand"))
       val steps = state.join(adj, "cur")
         .select($"query_id", $"q_emb", $"u".as("cand"))
-      stay.unionByName(steps)
+      val proposals = stay.unionByName(steps)
         .filter($"cand" =!= $"query_id")
         // ONE embedding fetch for every proposal (stay's node and the
         // adjacency's neighbors alike) instead of riding embeddings
@@ -103,12 +103,9 @@ object GraphSearch {
         // into ONE partial-aggregated exchange of ≤ Beam entries per
         // (query, mapper) — at 4 hops that is 8 fewer stages per search
         .withColumn("qcos", expr("graft_cosine(q_emb, cand_emb)"))
-        .groupBy($"query_id")
-        .agg(first($"q_emb").as("q_emb"),
-          expr(s"graft_topk_pairs(qcos, cand, $Beam)").as("top"))
-        .select($"query_id", $"q_emb", posexplode($"top"))
-        .select($"query_id", $"q_emb", $"col.id".as("cur"),
-          $"col.score".as("qcos"), ($"pos" + 1).cast("int").as("rk"))
+      TopK.rank(proposals, Seq("query_id", "q_emb"), "qcos", "cand", Beam)
+        .select($"query_id", $"q_emb", $"cand".as("cur"), $"qcos",
+          $"rank".as("rk"))
     }
 
     var state = probes.select($"query_id", $"q_emb",
@@ -128,14 +125,12 @@ object GraphSearch {
     // the corpus side is one parquet row group — unsplittable, so without
     // an explicit exchange the whole probes×n kernel loop runs in one task
     // (Similarity.spread has the measurement)
-    val exact1 = broadcast(probes)
-      .crossJoin(Similarity.spread(Tables.embeddings(spark, dir)
-        .select($"vec_id".as("nid"), $"embedding".as("n_emb"))))
-      .filter($"nid" =!= $"query_id")
-      .withColumn("cos", expr("graft_cosine(q_emb, n_emb)"))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy($"query_id").orderBy($"cos".desc, $"nid")))
-      .filter($"rk" === 1)
+    val exact1 = TopK.rank(broadcast(probes)
+        .crossJoin(Similarity.spread(Tables.embeddings(spark, dir)
+          .select($"vec_id".as("nid"), $"embedding".as("n_emb"))))
+        .filter($"nid" =!= $"query_id")
+        .withColumn("cos", expr("graft_cosine(q_emb, n_emb)")),
+        Seq("query_id"), "cos", "nid", 1)
       .select($"query_id", $"nid".as("exact_nn"))
 
     state.filter($"rk" === 1).select($"query_id", $"qcos")
@@ -143,7 +138,7 @@ object GraphSearch {
       .join(exact1, "query_id")
       .select(Seq($"query_id") ++
         (1 to Rounds).map(r => col(s"hop$r")) ++ Seq(
-          (floor($"qcos" * 100 + lit(0.5)) / lit(100.0)).as("final_cos_r2"),
+          round2($"qcos").as("final_cos_r2"),
           $"exact_nn",
           (col(s"hop$Rounds") === $"exact_nn").cast("int")
             .as("found_exact")): _*)

@@ -1,8 +1,8 @@
 package graft.similarity
 
 import graft.Tables
+import graft.functions.TopK
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** ANN-sourced hubness — the scale form of [[Similarity.hubness]], side by
@@ -45,21 +45,20 @@ object HubnessAnn {
       $"bucket")
     val queries = idx.select($"vec_id".as("qid"), $"embedding".as("qe"),
       explode(RandomHyperplaneLsh.probeSignatures($"bucket")).as("bucket"))
-    // same native top-k aggregate swap as [[Similarity.hubness]] (see its
-    // comment), with the multi-probe duplicates folded INTO the aggregate:
-    // the old shape shuffled every candidate row once for `distinct()`
-    // (22 MB / 1.29M rows at sf0.1 — the same (qid, nid) pair re-found
-    // through each shared bucket) and again for the top-k; the
-    // distinct-by-id buffer (graft_topk_pairs) drops duplicate ids on
-    // insert — duplicates carry the identical kernel score, so dedup-then-
-    // rank and rank-with-dedup select the same rows (TopKPairsSpec pins
-    // it) — and only ≤ k entries per (qid, mapper) ever shuffle
-    val annTopk = queries.join(corpus, "bucket")
-      .filter($"qid" =!= $"nid")
-      .withColumn("cos", expr("graft_cosine(qe, ne)"))
-      .groupBy($"qid")
-      .agg(expr(s"graft_topk_pairs(cos, nid, $k)").as("top"))
-      .select(explode($"top.id").as("nid"))
+    // same top-k kernel as [[Similarity.hubness]] (see its comment), with
+    // the multi-probe duplicates folded INTO the aggregate: the old shape
+    // shuffled every candidate row once for `distinct()` (22 MB / 1.29M
+    // rows at sf0.1 — the same (qid, nid) pair re-found through each
+    // shared bucket) and again for the top-k; the kernel drops duplicate
+    // ids on insert — duplicates carry the identical kernel score, so
+    // dedup-then-rank and rank-with-dedup select the same rows
+    // (TopKPairsSpec pins it) — and only ≤ k entries per (qid, mapper)
+    // ever shuffle
+    val annTopk = TopK.rank(queries.join(corpus, "bucket")
+        .filter($"qid" =!= $"nid")
+        .withColumn("cos", expr("graft_cosine(qe, ne)")),
+        Seq("qid"), "cos", "nid", k)
+      .select($"nid")
     val annHist = e.select($"vec_id".as("nid"))
       .join(annTopk.groupBy($"nid").agg(count(lit(1)).as("ko")),
         Seq("nid"), "left")

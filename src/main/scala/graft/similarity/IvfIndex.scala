@@ -1,8 +1,9 @@
 package graft.similarity
 
 import graft.Tables
+import graft.functions.GraftFunctions.round2
+import graft.functions.TopK
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, FloatType, IntegerType, StructField, StructType}
 
@@ -80,15 +81,14 @@ object IvfIndex {
       nullable = false)))
 
   /** Nearest-cell assignment under `centroids` (argmax cosine; cell-id
-    * tiebreak for determinism). One broadcast join, no corpus shuffle.
+    * tiebreak for determinism): one broadcast join, then the top-k kernel
+    * with the embedding as a group key (it depends only on `vec_id`), so
+    * it rides to the output without a re-join.
     */
   private def assign(e: DataFrame, centroids: DataFrame): DataFrame =
-    e.crossJoin(broadcast(centroids))
-      .withColumn("c_sim", expr("graft_cosine(embedding, centroid)"))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy(col("vec_id"))
-          .orderBy(col("c_sim").desc, col("cell"))))
-      .filter(col("rk") === 1)
+    TopK.rank(e.crossJoin(broadcast(centroids))
+        .withColumn("c_sim", expr("graft_cosine(embedding, centroid)")),
+        Seq("vec_id", "embedding"), "c_sim", "cell", 1)
       .select(col("vec_id"), col("embedding"), col("cell"))
 
   /** One Lloyd update: per-cell component means via exact fixed-point sums
@@ -149,26 +149,43 @@ object IvfIndex {
     val (assigned, centroids) = build(spark, dir)
     val probes = assigned.filter($"vec_id" < Similarity.NumProbes)
       .select($"vec_id".as("query_id"), $"embedding".as("q_emb"))
-    // rank cells per probe by centroid similarity, keep nprobe nearest
-    val probeCells = broadcast(probes).crossJoin(broadcast(centroids))
-      .withColumn("c_sim", expr("graft_cosine(q_emb, centroid)"))
-      .withColumn("c_rank", row_number().over(
-        Window.partitionBy($"query_id").orderBy($"c_sim".desc, $"cell")))
-      .filter($"c_rank" <= NProbe)
-      .select($"query_id", $"q_emb", $"cell")
-    probeCells
-      .join(assigned.select($"vec_id".as("neighbor_id"),
-        $"embedding".as("n_emb"), $"cell"), "cell")
-      .filter($"query_id" =!= $"neighbor_id")
-      .withColumn("cos", expr("graft_cosine(q_emb, n_emb)"))
-      .select($"query_id", $"neighbor_id", $"cos").distinct()
-      .withColumn("rank", row_number().over(
-        Window.partitionBy($"query_id").orderBy($"cos".desc, $"neighbor_id")))
-      .filter($"rank" <= k)
-      .select($"query_id", $"neighbor_id", $"rank",
-        (floor($"cos" * 100 + lit(0.5)) / lit(100.0)).as("cosine_r2"))
+    TopK.rank(scoreCells(route(probes, centroids, NProbe), assigned),
+        Seq("query_id"), "cos", "neighbor_id", k)
+      .select($"query_id", $"neighbor_id", $"rank", round2($"cos").as("cosine_r2"))
       .orderBy($"query_id", $"rank")
   }
+
+  /** nprobe routing: each probe's `nprobe` nearest cells by centroid
+    * cosine (cell-id tiebreak) as (query_id, q_emb, cell, c_rank) — the one
+    * definition behind [[topK]], [[nprobeSweep]] and [[IvfPq.topK]]; its
+    * oracle twin is the `pc` CTE of [[searchCtes]]. `probes` is
+    * (query_id, q_emb), probe-set-sized; `q_emb` rides through the kernel
+    * as a group key. The probes are hash-partitioned by `query_id` up
+    * front, so the kernel's (query_id, q_emb) grouping adds no exchange
+    * and its output stays co-partitioned with the per-probe ranks
+    * downstream (grouped by `query_id` alone, the kernel would re-shuffle
+    * every scored candidate there).
+    */
+  private[similarity] def route(probes: DataFrame, centroids: DataFrame,
+      nprobe: Int): DataFrame =
+    TopK.rank(probes.repartition(col("query_id"))
+        .crossJoin(broadcast(centroids))
+        .withColumn("c_sim", expr("graft_cosine(q_emb, centroid)")),
+        Seq("query_id", "q_emb"), "c_sim", "cell", nprobe)
+      .select(col("query_id"), col("q_emb"), col("cell"),
+        col("rank").as("c_rank"))
+
+  /** Every routed probe scored against its cells' members: (query_id,
+    * neighbor_id, cos), the probe itself excluded. A vector lives in one
+    * cell, so (query_id, neighbor_id) is unique.
+    */
+  private def scoreCells(routed: DataFrame, assigned: DataFrame): DataFrame =
+    routed
+      .join(assigned.select(col("vec_id").as("neighbor_id"),
+        col("embedding").as("n_emb"), col("cell")), "cell")
+      .filter(col("query_id") =!= col("neighbor_id"))
+      .select(col("query_id"), col("neighbor_id"),
+        expr("graft_cosine(q_emb, n_emb)").as("cos"))
 
   /** Cell-balance report over the trained index — the health check an ANN
     * deployment watches: IVF probe cost is proportional to the PROBED
@@ -343,7 +360,7 @@ ORDER BY cell"""
     * hits summed over the probe set, recall as a single division of
     * integer sums, and the scanned-candidate row count (Σ probed cells'
     * sizes — the cost IVF actually pays). The sweep shares ONE cell
-    * routing (ranked once to max nprobe, filtered per point) and the
+    * routing ([[route]] once to max nprobe, filtered per point) and the
     * memoized index; at corpus scale this query reads the assignment
     * table, never re-trains.
     */
@@ -354,26 +371,13 @@ ORDER BY cell"""
     val (assigned, centroids) = build(spark, dir)
     val probes = assigned.filter($"vec_id" < Similarity.NumProbes)
       .select($"vec_id".as("query_id"), $"embedding".as("q_emb"))
-    val maxNp = SweepNProbes.max
-    val routed = broadcast(probes).crossJoin(broadcast(centroids))
-      .withColumn("c_sim", expr("graft_cosine(q_emb, centroid)"))
-      .withColumn("c_rank", row_number().over(
-        Window.partitionBy($"query_id").orderBy($"c_sim".desc, $"cell")))
-      .filter($"c_rank" <= maxNp)
-      .select($"query_id", $"q_emb", $"cell", $"c_rank")
+    val routed = route(probes, centroids, SweepNProbes.max)
     val cellSizes = assigned.groupBy($"cell").agg(count(lit(1)).as("sz"))
     val exact = Similarity.bruteForceTopK(spark, dir, k)
       .select($"query_id", $"neighbor_id")
     val points = SweepNProbes.map { np =>
-      val ivf = routed.filter($"c_rank" <= np)
-        .join(assigned.select($"vec_id".as("neighbor_id"),
-          $"embedding".as("n_emb"), $"cell"), "cell")
-        .filter($"query_id" =!= $"neighbor_id")
-        .withColumn("cos", expr("graft_cosine(q_emb, n_emb)"))
-        .select($"query_id", $"neighbor_id", $"cos").distinct()
-        .withColumn("rank", row_number().over(
-          Window.partitionBy($"query_id").orderBy($"cos".desc, $"neighbor_id")))
-        .filter($"rank" <= k)
+      val ivf = TopK.rank(scoreCells(routed.filter($"c_rank" <= np), assigned),
+        Seq("query_id"), "cos", "neighbor_id", k)
       val hits = ivf.join(exact, Seq("query_id", "neighbor_id"))
         .agg(count(lit(1)).as("n_hits"))
       val scanned = routed.filter($"c_rank" <= np)

@@ -1,6 +1,8 @@
 package graft.similarity
 
 import graft.Tables
+import graft.functions.GraftFunctions.round2
+import graft.functions.TopK
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -66,13 +68,9 @@ object IvfPq {
     val cb = ProductQuantizer.codebook(spark, dir, dim)
     val probes = e.filter($"vec_id" < Similarity.NumProbes)
       .select($"vec_id".as("query_id"), $"embedding".as("q_emb"))
-    // nprobe routing — identical to IvfIndex.topK (same oracle CTE `pc`)
-    val probeCells = broadcast(probes).crossJoin(broadcast(centroids))
-      .withColumn("c_sim", expr("graft_cosine(q_emb, centroid)"))
-      .withColumn("c_rank", row_number().over(
-        Window.partitionBy($"query_id").orderBy($"c_sim".desc, $"cell")))
-      .filter($"c_rank" <= IvfIndex.NProbe)
-      .select($"query_id", $"q_emb", $"cell")
+    // nprobe routing — IvfIndex.topK's (same oracle CTE `pc`)
+    val probeCells = IvfIndex.route(probes, centroids, IvfIndex.NProbe)
+      .drop("c_rank")
     // ADC lookup table: |probes| × M × K rows (tiny — broadcast), entry
     // (query, s, code) = in-order squared L2 between the probe's s-th
     // subvector and that codebook entry
@@ -98,16 +96,14 @@ object IvfPq {
     }
     val short = withD
       .withColumn("adc_d", (0 until M).map(s => col(s"d$s")).reduce(_ + _))
+      // window: ascending distance; a negated key would move NaNs
       .withColumn("srk", row_number().over(
         Window.partitionBy($"query_id").orderBy($"adc_d", $"neighbor_id")))
       .filter($"srk" <= ShortList)
     // exact re-rank of the shortlist only
-    short.withColumn("cos", expr("graft_cosine(q_emb, n_emb)"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy($"query_id").orderBy($"cos".desc, $"neighbor_id")))
-      .filter($"rank" <= k)
-      .select($"query_id", $"neighbor_id", $"rank",
-        (floor($"cos" * 100 + lit(0.5)) / lit(100.0)).as("cosine_r2"))
+    val fine = short.withColumn("cos", expr("graft_cosine(q_emb, n_emb)"))
+    TopK.rank(fine, Seq("query_id"), "cos", "neighbor_id", k)
+      .select($"query_id", $"neighbor_id", $"rank", round2($"cos").as("cosine_r2"))
       .orderBy($"query_id", $"rank")
   }
 

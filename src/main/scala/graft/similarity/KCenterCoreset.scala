@@ -78,6 +78,7 @@ object KCenterCoreset {
     val assigned = e.select($"vec_id".as("nid"), $"embedding".as("ne"))
       .crossJoin(broadcast(centers.select($"center_id", $"ce")))
       .withColumn("d", lit(1.0) - expr("graft_cosine(ce, ne)"))
+      // window: ascending distance; a negated key would move NaNs
       .withColumn("rk", row_number().over(
         Window.partitionBy($"nid").orderBy($"d", $"center_id")))
       .filter($"rk" === 1)

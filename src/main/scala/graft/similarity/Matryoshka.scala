@@ -1,8 +1,8 @@
 package graft.similarity
 
 import graft.Tables
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import graft.functions.TopK
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Matryoshka-style prefix-dimension evaluation — "how much of the
@@ -24,7 +24,8 @@ import org.apache.spark.sql.functions._
   * Scale: probes broadcast against the corpus exactly as
   * [[Similarity.bruteForceTopK]] (the exact baseline this report grades
   * prefixes against); all three prefix scores ride the SAME pass — one
-  * scan, one window sort per metric on the probe-bounded pair set.
+  * scan, each pair stacked once per width into ONE top-k kernel grouped by
+  * (query, width).
   */
 object Matryoshka {
 
@@ -38,26 +39,26 @@ object Matryoshka {
     val e = Tables.embeddings(spark, dir)
     val probes = e.filter($"vec_id" < Similarity.NumProbes)
       .select($"vec_id".as("query_id"), $"embedding".as("q_emb"))
-    val pairs = broadcast(probes)
+    // width 0 stands for the full vector
+    val widths = 0 +: PrefixDims
+    val scores = widths.map { d =>
+      struct(lit(d).as("dim"), expr(
+        if (d == 0) "graft_cosine(q_emb, n_emb)"
+        else s"graft_cosine(slice(q_emb, 1, $d), slice(n_emb, 1, $d))").as("cos"))
+    }
+    val stacked = broadcast(probes)
       .crossJoin(e.select($"vec_id".as("neighbor_id"), $"embedding".as("n_emb")))
       .filter($"query_id" =!= $"neighbor_id")
-      .withColumn("cos_full", expr("graft_cosine(q_emb, n_emb)"))
-    val scored = PrefixDims.foldLeft(pairs) { (df, d) =>
-      df.withColumn(s"cos_$d",
-        expr(s"graft_cosine(slice(q_emb, 1, $d), slice(n_emb, 1, $d))"))
-    }.drop("q_emb", "n_emb")
-    def rk(c: String) = row_number().over(
-      Window.partitionBy($"query_id").orderBy(col(c).desc, $"neighbor_id"))
-    val ranked = PrefixDims.foldLeft(
-      scored.withColumn("rank_full", rk("cos_full"))) { (df, d) =>
-      df.withColumn(s"rank_$d", rk(s"cos_$d"))
-    }
-    val perQuery = ranked.groupBy($"query_id").agg(
-      max(when($"rank_full" === 1, $"neighbor_id")).as("top1_full"),
+      .select($"query_id", $"neighbor_id", explode(array(scores: _*)).as("s"))
+      .select($"query_id", $"neighbor_id", $"s.dim".as("dim"), $"s.cos".as("cos"))
+    val top = TopK.rank(stacked, Seq("query_id", "dim"), "cos", "neighbor_id", k)
+    def top1(d: Int) = max(when($"dim" === d && $"rank" === 1, $"neighbor_id"))
+    def ids(d: Int) = collect_list(when($"dim" === d, $"neighbor_id"))
+    val perQuery = top.groupBy($"query_id").agg(
+      top1(0).as("top1_full"),
       PrefixDims.flatMap { d => Seq(
-        max(when(col(s"rank_$d") === 1, $"neighbor_id")).as(s"top1_$d"),
-        sum(when(col(s"rank_$d") <= k && $"rank_full" <= k, 1L)
-          .otherwise(0L)).as(s"overlap_$d"))
+        top1(d).as(s"top1_$d"),
+        size(array_intersect(ids(d), ids(0))).cast("long").as(s"overlap_$d"))
       }: _*)
     // ONE wide aggregate row carries every prefix's counters; the 3-row
     // reshape is an in-plan `stack` over that bounded row (a

@@ -87,6 +87,7 @@ object ProductQuantizer {
     val w = Window.partitionBy($"vec_id", $"s").orderBy($"dist", $"code")
     val assigned = subs.join(broadcast(cb), "s")
       .withColumn("dist", d2("sub", "codevec"))
+      // window: ascending distance; a negated key would move NaNs
       .withColumn("rk", row_number().over(w))
       .filter($"rk" === 1)
     val codeCols = (0 until M).map(s =>
@@ -132,6 +133,7 @@ object ProductQuantizer {
     val w = Window.partitionBy($"vec_id", $"s").orderBy($"dist", $"code")
     subs.join(broadcast(cb), "s")
       .withColumn("dist", d2("sub", "codevec"))
+      // window: ascending distance; a negated key would move NaNs
       .withColumn("rk", row_number().over(w))
       .filter($"rk" === 1)
       .groupBy($"s", $"code")

@@ -1,9 +1,9 @@
 package graft.similarity
 
 import graft.Tables
-import graft.functions.Md5Hash
+import graft.functions.GraftFunctions.round2
+import graft.functions.{Md5Hash, TopK}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Sign-random-projection (random hyperplane) LSH for approximate nearest
@@ -100,16 +100,14 @@ object RandomHyperplaneLsh {
     val probes = idx.filter($"vec_id" < Similarity.NumProbes)
       .select($"vec_id".as("query_id"), $"embedding".as("q_emb"),
         explode(probeSignatures($"bucket")).as("bucket"))
-    broadcast(probes)
+    // a neighbour found through several probe buckets repeats with the
+    // same score; the kernel keeps one copy
+    val scored = broadcast(probes)
       .join(corpus, "bucket")
       .filter($"query_id" =!= $"neighbor_id")
       .withColumn("cos", expr("graft_cosine(q_emb, n_emb)"))
-      .select($"query_id", $"neighbor_id", $"cos").distinct()
-      .withColumn("rank", row_number().over(
-        Window.partitionBy($"query_id").orderBy($"cos".desc, $"neighbor_id")))
-      .filter($"rank" <= k)
-      .select($"query_id", $"neighbor_id", $"rank",
-        (floor($"cos" * 100 + lit(0.5)) / lit(100.0)).as("cosine_r2"))
+    TopK.rank(scored, Seq("query_id"), "cos", "neighbor_id", k)
+      .select($"query_id", $"neighbor_id", $"rank", round2($"cos").as("cosine_r2"))
       .orderBy($"query_id", $"rank")
   }
 
@@ -136,8 +134,7 @@ object RandomHyperplaneLsh {
       .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"),
         expr("graft_cosine(a.embedding, b.embedding)").as("cos"))
       .filter($"cos" >= threshold)
-      .select($"vec_a", $"vec_b",
-        (floor($"cos" * 100 + lit(0.5)) / lit(100.0)).as("cosine_r2"))
+      .select($"vec_a", $"vec_b", round2($"cos").as("cosine_r2"))
       .orderBy($"vec_a", $"vec_b")
   }
 

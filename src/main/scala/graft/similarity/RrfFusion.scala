@@ -49,6 +49,7 @@ object RrfFusion {
     val topK = graft.text.TextAnalysis.SearchTopK
     val lex = graft.text.TextAnalysis.keywordSearch(spark, dir)
       .withColumn("lex_rank",
+        // window: unpartitioned rank of a SearchTopK-row result
         row_number().over(Window.orderBy($"score".desc, $"doc_id"))
           .cast("bigint"))
       .select($"doc_id", $"lex_rank")
@@ -69,6 +70,7 @@ object RrfFusion {
       .orderBy($"cos".desc, $"doc_id")
       .limit(topK)
       .withColumn("sem_rank",
+        // window: unpartitioned rank of a SearchTopK-row result
         row_number().over(Window.orderBy($"cos".desc, $"doc_id"))
           .cast("bigint"))
       .select($"doc_id", $"sem_rank")
@@ -81,6 +83,7 @@ object RrfFusion {
           + coalesce(lit(1.0) / (lit(RrfK) + $"sem_rank"), lit(0.0)))
           .as("rrf_score"))
       .withColumn("fused_rank",
+        // window: unpartitioned rank of at most 2 x SearchTopK rows
         row_number().over(Window.orderBy($"rrf_score".desc, $"doc_id"))
           .cast("bigint"))
       .select($"fused_rank", $"doc_id", $"lex_rank", $"sem_rank",

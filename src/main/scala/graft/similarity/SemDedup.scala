@@ -1,5 +1,6 @@
 package graft.similarity
 
+import graft.functions.GraftFunctions.round2
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -38,9 +39,6 @@ object SemDedup {
     * (every SemDeDup drop pair is one of the exact baseline's pairs).
     */
   val SemTau = 0.4
-
-  private def round2(c: org.apache.spark.sql.Column) =
-    floor(c * 100 + lit(0.5)) / lit(100.0)
 
   /** The drop ledger: one row per pruned vector — its cell, the kept
     * (lowest-id) partner that condemned it, and their cosine.

@@ -2,6 +2,9 @@ package graft.similarity
 
 import graft.Tables
 import graft.functions.CosineSimilarity
+import graft.functions.GraftFunctions.round2
+// renamed: `TopK` in this object is the neighbour count
+import graft.functions.{TopK => TopKernel}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.expressions.Window
@@ -29,9 +32,9 @@ import org.apache.spark.sql.functions._
   */
 object Similarity {
 
-  /** graft_cosine / graft_plane_dot registered once per session so
-    * `expr("graft_cosine(a,b)")` is usable anywhere (the native-Expression
-    * registration path; idempotent).
+  /** The graft native functions (graft_cosine, graft_dot, ...) registered
+    * once per session so `expr("graft_cosine(a,b)")` is usable anywhere;
+    * a later call finds them registered and changes nothing.
     */
   def register(spark: SparkSession): Unit =
     // the SAME arity-guarded builders the session-extension path installs —
@@ -39,9 +42,6 @@ object Similarity {
     // IndexOutOfBounds with no function name (ExtensionsSpec pins the named
     // error whichever registration path won)
     graft.GraftExtensions.registerAll(spark)
-
-  private def round2(c: org.apache.spark.sql.Column) =
-    floor(c * 100 + lit(0.5)) / lit(100.0)
 
   /** All embedding pairs with cosine ≥ threshold — the embedding-space
     * near-duplicate detector (dedup family member; τ=0.4 sits above this
@@ -130,7 +130,8 @@ object Similarity {
     * kNN labels. All-pairs scoring is the same labeled O(n²) baseline
     * shape as [[cosinePairs]] (at corpus scale the k-occurrence counts
     * come from the ANN index's own result stream instead); ranks come from
-    * one window per query vector, and the histogram is integer-exact.
+    * the top-k kernel ([[graft.functions.TopK.rank]]), and the histogram
+    * is integer-exact.
     */
   def hubness(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
@@ -146,12 +147,10 @@ object Similarity {
     // O(k) compare-insert per pair and shuffles ≤ k ids per (query,
     // mapper). Selection is the identical (cos desc, nid) total order —
     // the unchanged ranked-subquery oracle is the equivalence proof.
-    val topkIds = q.crossJoin(n)
+    val scored = q.crossJoin(n)
       .filter($"qid" =!= $"nid")
       .select($"qid", expr("graft_cosine(qe, ne)").as("cos"), $"nid")
-      .groupBy($"qid")
-      .agg(expr(s"graft_topk_ids(cos, nid, $HubK)").as("ids"))
-    val kOcc = topkIds.select(explode($"ids").as("nid"))
+    val kOcc = TopKernel.rank(scored, Seq("qid"), "cos", "nid", HubK)
       .groupBy($"nid").agg(count(lit(1)).as("k_occurrence"))
     // vectors never chosen have k-occurrence 0 — keep them in the histogram
     val withZeros = e.select($"vec_id".as("nid"))
@@ -210,10 +209,7 @@ object Similarity {
         e.select($"vec_id".as("neighbor_id"), $"embedding".as("n_emb")))
       .filter($"query_id" =!= $"neighbor_id")
       .withColumn("cos", expr("graft_cosine(q_emb, n_emb)"))
-    scored
-      .withColumn("rank", row_number().over(
-        Window.partitionBy($"query_id").orderBy($"cos".desc, $"neighbor_id")))
-      .filter($"rank" <= k)
+    TopKernel.rank(scored, Seq("query_id"), "cos", "neighbor_id", k)
       .select($"query_id", $"neighbor_id", $"rank", round2($"cos").as("cosine_r2"))
       .orderBy($"query_id", $"rank")
   }
@@ -243,13 +239,11 @@ object Similarity {
       .select($"vec_id".as("query_id"), $"embedding".as("q_emb"))
     // not spread, same finding as [[bruteForceTopK]]: O(probes·n) kernel,
     // cold runs read the exchange as a net loss
-    broadcast(probes).crossJoin(
+    val scored = broadcast(probes).crossJoin(
         e.select($"vec_id".as("neighbor_id"), $"embedding".as("n_emb")))
       .filter($"query_id" =!= $"neighbor_id")
       .withColumn("dot", expr("graft_dot(q_emb, n_emb)"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy($"query_id").orderBy($"dot".desc, $"neighbor_id")))
-      .filter($"rank" <= k)
+    TopKernel.rank(scored, Seq("query_id"), "dot", "neighbor_id", k)
       .select($"query_id", $"neighbor_id", $"rank", round2($"dot").as("dot_r2"))
       .orderBy($"query_id", $"rank")
   }
@@ -262,7 +256,7 @@ object Similarity {
     *
     * Scale shape: reuses [[bruteForceTopK]]'s probe-broadcast scan; the
     * label join keys on `neighbor_id` (corpus-partition-friendly), votes
-    * and the argmax window both shuffle on `query_id` — probe-set-sized.
+    * and the argmax both shuffle on `query_id` — probe-set-sized.
     */
   def knnClassify(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
@@ -272,11 +266,8 @@ object Similarity {
       .join(labels.withColumnRenamed("vec_id", "neighbor_id"), "neighbor_id")
       .groupBy($"query_id", $"label")
       .agg(count(lit(1)).as("votes"))
-    val wVote = Window.partitionBy($"query_id")
-      .orderBy($"votes".desc, $"label")
-    votes
-      .withColumn("vr", row_number().over(wVote))
-      .filter($"vr" === 1)
+    // the vote counts rank as doubles: exact below 2^53
+    TopKernel.rank(votes, Seq("query_id"), "votes", "label", 1)
       .withColumnRenamed("label", "predicted_label")
       .join(labels.withColumnRenamed("vec_id", "query_id")
         .withColumnRenamed("label", "true_label"), "query_id")
@@ -297,8 +288,8 @@ object Similarity {
     * across engines and runs (a `rand()` sample would be neither).
     *
     * Scale shape: same probe-broadcast × corpus single pass as
-    * [[bruteForceTopK]] — the two rankings are windows over the one scored
-    * frame, sharing its shuffle on `query_id`.
+    * [[bruteForceTopK]] — both rankings read the one scored frame, and
+    * both shuffle on `query_id`.
     */
   def contrastivePairs(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
@@ -313,14 +304,14 @@ object Similarity {
       .withColumn("h", graft.functions.Md5Hash.h32(concat(
         lit("neg:"), $"query_id".cast("string"),
         lit(":"), $"cand_id".cast("string"))))
-    val wPos = Window.partitionBy($"query_id").orderBy($"cos".desc, $"cand_id")
-    val wNeg = Window.partitionBy($"query_id").orderBy($"h", $"cand_id")
-    val pos = scored
-      .withColumn("rk", row_number().over(wPos)).filter($"rk" === 1)
-      .select($"query_id", $"cand_id", lit("pos").as("kind"), $"rk",
+    val pos = TopKernel.rank(scored, Seq("query_id"), "cos", "cand_id", 1)
+      .select($"query_id", $"cand_id", lit("pos").as("kind"), $"rank".as("rk"),
         round2($"cos").as("cosine_r2"))
     val neg = scored
-      .withColumn("rk", row_number().over(wNeg)).filter($"rk" <= NumNeg)
+      // window: ascending hash order, not the kernel's (score desc, id asc)
+      .withColumn("rk", row_number().over(
+        Window.partitionBy($"query_id").orderBy($"h", $"cand_id")))
+      .filter($"rk" <= NumNeg)
       .select($"query_id", $"cand_id", lit("neg").as("kind"), $"rk",
         round2($"cos").as("cosine_r2"))
     pos.unionByName(neg).orderBy($"query_id", $"kind", $"rk")
@@ -423,29 +414,26 @@ object Similarity {
     * shape so the two stages are the only variable); compose with the IVF
     * cell pruning for the sublinear form. Both stages rank with the shared
     * deterministic tiebreak, and both kernels are the cross-engine-exact
-    * cosine, so the full pipeline hash-checks.
+    * cosine, so the full pipeline hash-checks. The coarse top-k carries
+    * the probe's embedding as a group key; the shortlist (probes ×
+    * [[Shortlist]] rows) fetches its neighbors' embeddings back by id.
     */
   def twoStageTopK(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.expressions.Window
     register(spark)
     val e = Tables.embeddings(spark, dir)
     val probes = e.filter($"vec_id" < NumProbes)
       .select($"vec_id".as("query_id"), $"embedding".as("q_emb"))
-    val cand = broadcast(probes)
-      .crossJoin(e.select($"vec_id".as("neighbor_id"), $"embedding".as("n_emb")))
+    val corpus = e.select($"vec_id".as("neighbor_id"), $"embedding".as("n_emb"))
+    val cand = broadcast(probes).crossJoin(corpus)
       .filter($"query_id" =!= $"neighbor_id")
       .withColumn("coarse", expr(
         s"graft_cosine(slice(q_emb, 1, $CoarseDims), slice(n_emb, 1, $CoarseDims))"))
-    val wCoarse = Window.partitionBy($"query_id")
-      .orderBy($"coarse".desc, $"neighbor_id")
-    val short = cand.withColumn("crn", row_number().over(wCoarse))
-      .filter($"crn" <= Shortlist)
-    val wFine = Window.partitionBy($"query_id")
-      .orderBy($"cos".desc, $"neighbor_id")
-    short.withColumn("cos", expr("graft_cosine(q_emb, n_emb)"))
-      .withColumn("rank", row_number().over(wFine))
-      .filter($"rank" <= TopK)
+    val short = TopKernel.rank(cand, Seq("query_id", "q_emb"), "coarse",
+        "neighbor_id", Shortlist).select($"query_id", $"q_emb", $"neighbor_id")
+    val fine = corpus.join(broadcast(short), "neighbor_id")
+      .withColumn("cos", expr("graft_cosine(q_emb, n_emb)"))
+    TopKernel.rank(fine, Seq("query_id"), "cos", "neighbor_id", TopK)
       .select($"query_id", $"neighbor_id", $"rank",
         round2($"cos").as("cosine_r2"))
       .orderBy($"query_id", $"rank")
@@ -459,7 +447,8 @@ object Similarity {
     * parallelism, so the mean is bit-reproducible and DuckDB can recompute
     * it); assignment broadcasts the |labels|×dim centroid table against the
     * corpus — one linear pass, candidates never pair with each other.
-    * Ranking tiebreaks on centroid label, so the argmax is total-ordered.
+    * Ranking tiebreaks on centroid label, so the argmax is total-ordered;
+    * it runs on the top-k kernel, a partial/final aggregate per vector.
     *
     * Scale: the centroid aggregate map-side combines on (label, pos); the
     * confusion rollup is |labels|² rows. The one caveat is |labels|·dim
@@ -468,7 +457,6 @@ object Similarity {
     */
   def labelCentroidConfusion(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import org.apache.spark.sql.expressions.Window
     register(spark)
     val e = Tables.embeddings(spark, dir)
     val cents = e
@@ -484,11 +472,9 @@ object Similarity {
       .agg(transform(array_sort(collect_list(struct($"pos", $"m"))),
         x => x.getField("m")).as("centroid"))
       .select($"label".as("c_label"), $"centroid")
-    val w = Window.partitionBy($"vec_id").orderBy($"c_sim".desc, $"c_label")
-    e.crossJoin(broadcast(cents))
+    val scored = e.crossJoin(broadcast(cents))
       .withColumn("c_sim", expr("graft_cosine(embedding, centroid)"))
-      .withColumn("rk", row_number().over(w))
-      .filter($"rk" === 1)
+    TopKernel.rank(scored, Seq("vec_id", "label"), "c_sim", "c_label", 1)
       .groupBy($"label", $"c_label".as("pred_label"))
       .agg(count(lit(1)).as("n_vecs"))
       .orderBy($"label", $"pred_label")

@@ -68,4 +68,20 @@ class ExtensionsSpec extends SparkSpec {
     assert(unfoldablePlane.getMessage.contains("graft_plane_dot"),
       unfoldablePlane.getMessage)
   }
+
+  test("registerAll registers each function once per session") {
+    val s = plans.ChildSession(spark)
+    val reg = s.sessionState.functionRegistry
+    val ids = GraftExtensions.functions.map(_._1)
+    // a name missing from the registry is (re)installed
+    reg.dropFunction(ids.head)
+    GraftExtensions.registerAll(s)
+    val first = ids.map(reg.lookupFunction)
+    assert(first.forall(_.isDefined), s"unregistered: ${ids.zip(first)}")
+    // a second call replaces nothing: the very same registry entries
+    GraftExtensions.registerAll(s)
+    val second = ids.map(reg.lookupFunction)
+    for ((id, (a, b)) <- ids.zip(first.zip(second)))
+      assert(a.get eq b.get, s"$id was registered again")
+  }
 }

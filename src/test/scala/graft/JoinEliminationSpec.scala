@@ -71,6 +71,30 @@ class JoinEliminationSpec extends SparkSpec {
     assert(logicalJoins(JoinEliminationQueries.all("opt_join_retained")(spark, sf)) == 1)
   }
 
+  test("the registered demos leave the caller's session without the rule") {
+    // a fresh session stands in for Bench's/Verify's shared one: whatever
+    // ran before, a later query there must not plan with the rule
+    val caller = plans.ChildSession(spark)
+    JoinEliminationQueries.reportBase(caller, sf).collect()
+    JoinEliminationQueries.reportWithItems(caller, sf).collect()
+    assert(!caller.experimental.extraOptimizations
+      .contains(EliminateRedundantLeftJoin))
+  }
+
+  test("the registered demos honour the caller's kill switch") {
+    // the demos plan on a child session; the caller's switch must reach it.
+    // Spark's built-in elimination is blinded as in opt_join_baseline
+    val caller = plans.ChildSession(spark)
+    caller.conf.set("spark.sql.optimizer.excludedRules",
+      "org.apache.spark.sql.catalyst.optimizer.EliminateOuterJoin")
+    caller.conf.set("spark.sql.optimizer.propagateDistinctKeys.enabled", "false")
+    caller.conf.set(EliminateRedundantLeftJoin.EnabledKey, "false")
+    assert(logicalJoins(JoinEliminationQueries.reportBase(caller, sf)) == 2)
+    // control: with the switch unset the rule fires on the same caller
+    caller.conf.unset(EliminateRedundantLeftJoin.EnabledKey)
+    assert(logicalJoins(JoinEliminationQueries.reportBase(caller, sf)) < 2)
+  }
+
   test("aliased grouping keys still prove uniqueness") {
     EliminateRedundantLeftJoin.install(spark)
     val freq = orders.groupBy($"o_custkey".as("k")).agg(count(lit(1)).as("f"))

@@ -169,7 +169,6 @@ class PlanSpec extends SparkSpec {
       analytics.WindowExtras.kmvDistinct(spark, sf),
       analytics.WindowExtras.maxConcurrency(spark, sf),
       text.Curate.shardAssign(spark, sf),
-      similarity.Similarity.labelCentroidConfusion(spark, sf),
       analytics.TimeSeries.trailingRange(spark, sf),
       analytics.TimeSeries.ewma(spark, sf))
     for (df <- dfs) {
@@ -493,6 +492,28 @@ class PlanSpec extends SparkSpec {
       case a: SortAggregateExec => a
     }
     assert(aggs.size >= 2, s"expected partial+final aggregate, saw ${aggs.size}")
+  }
+
+  test("per-group top-ks plan on the top-k kernel, not a window") {
+    import org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    // the kernel must plan as a partial+final object-hash aggregate: the
+    // shuffle carries <= k (score, id) pairs per group and mapper, where
+    // the ranked window it replaced sorted every candidate row
+    for (name <- Seq("sim_label_centroids", "sim_bruteforce_topk",
+        "sim_mips_topk", "sim_knn_classify", "sim_two_stage_topk",
+        "sim_ivf_topk", "sim_ann_lsh_topk", "sim_hubness",
+        "sim_matryoshka_prefix")) {
+      val p = plan(SparkEntry.queries(name)(spark, sf))
+      assert(collectAll(p) { case w: WindowExec => w }.isEmpty,
+        s"$name must not plan a window")
+      val topk = collectAll(p) {
+        case a: ObjectHashAggregateExec if a.aggregateExpressions.exists(
+          _.aggregateFunction.isInstanceOf[functions.TopKPairsAgg]) => a
+      }
+      assert(topk.size >= 2,
+        s"$name: expected partial+final top-k aggregate, saw ${topk.size}")
+    }
   }
 
   test("bottom-k aggregator runs partial/final, no window sort") {

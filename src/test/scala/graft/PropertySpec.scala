@@ -137,7 +137,11 @@ class PropertySpec extends SparkSpec {
       // the mixed global+grouped union merge (decimal sums, one DOUBLE
       // edge cast) and the retractable IVM state (integer counts; the
       // derived set view is order-insensitive by the r10 float gate)
-      "opt_union_merge_total", "opt_mv_ivm_retract")
+      "opt_union_merge_total", "opt_mv_ivm_retract",
+      // the top-k kernel's consumers: merge order of the partial buffers
+      // must not change the selection
+      "sim_bruteforce_topk", "sim_ann_lsh_topk", "sim_ivf_topk",
+      "sim_two_stage_topk", "sim_hubness")
     val prev = spark.conf.get("spark.sql.shuffle.partitions")
     try {
       for (name <- names) {
