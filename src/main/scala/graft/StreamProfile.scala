@@ -23,18 +23,17 @@ object StreamProfile {
       val base = Scratch.path(spark, "graft-streamprof", s"$tag-${System.nanoTime()}")
       t(s"$tag/land") { feedDf.write.mode("overwrite").parquet(s"$base/src") }
       t(s"$tag/stream") {
-        streaming.IncrementalIngest.withStreamPartitions(spark) { ss =>
-          val q = streaming.StreamNearDedup.nearDedup(
-            ss, s"$base/src", s"$base/out", s"$base/ckpt")
-          q.awaitTermination()
-          q.recentProgress.foreach { p =>
-            println(f"PROFILE $tag/batch${p.batchId}%-20s ${p.durationMs.get("triggerExecution").toDouble / 1e3}%8.3f s " +
-              s"rows=${p.numInputRows} addBatch=${p.durationMs.getOrDefault("addBatch", -1L)}ms " +
-              s"getBatch=${p.durationMs.getOrDefault("getBatch", -1L)}ms " +
-              s"queryPlanning=${p.durationMs.getOrDefault("queryPlanning", -1L)}ms " +
-              s"walCommit=${p.durationMs.getOrDefault("walCommit", -1L)}ms " +
-              s"stateComm=${p.stateOperators.headOption.map(_.commitTimeMs).getOrElse(-1L)}ms")
-          }
+        val q = streaming.StreamNearDedup.nearDedup(
+          streaming.StreamRun.session(spark), s"$base/src", s"$base/out",
+          s"$base/ckpt")
+        q.awaitTermination()
+        q.recentProgress.foreach { p =>
+          println(f"PROFILE $tag/batch${p.batchId}%-20s ${p.durationMs.get("triggerExecution").toDouble / 1e3}%8.3f s " +
+            s"rows=${p.numInputRows} addBatch=${p.durationMs.getOrDefault("addBatch", -1L)}ms " +
+            s"getBatch=${p.durationMs.getOrDefault("getBatch", -1L)}ms " +
+            s"queryPlanning=${p.durationMs.getOrDefault("queryPlanning", -1L)}ms " +
+            s"walCommit=${p.durationMs.getOrDefault("walCommit", -1L)}ms " +
+            s"stateComm=${p.stateOperators.headOption.map(_.commitTimeMs).getOrElse(-1L)}ms")
         }
       }
       t(s"$tag/ledger-read") {

@@ -74,8 +74,7 @@ object SkewJoin {
     * the fact-side plan.
     */
   def bloomPrunedJoin(spark0: SparkSession, dir: String): DataFrame = {
-    val spark = spark0.newSession()
-    Seq(
+    val spark = graft.plans.ChildSession(spark0,
       "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
       // the at-scale premise: orders doesn't fit a broadcast
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
@@ -83,7 +82,6 @@ object SkewJoin {
       // arm injection at test scale (defaults gate on 10 GB scans)
       "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
       "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" -> "100MB")
-      .foreach { case (k, v) => spark.conf.set(k, v) }
     import spark.implicits._
     val highValue = graft.Tables.orders(spark, dir)
       .filter($"o_totalprice" > PriceCut)

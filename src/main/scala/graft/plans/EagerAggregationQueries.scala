@@ -101,11 +101,12 @@ object EagerAggregationQueries {
     */
   private def session(spark0: SparkSession, enabled: Boolean,
       gated: Boolean = false): SparkSession = {
-    val spark = ChildSession(spark0)
+    val spark = ChildSession(spark0,
+      Seq("spark.sql.autoBroadcastJoinThreshold" -> "-1",
+        EagerAggregation.EnabledKey -> enabled.toString) ++
+        (if (enabled && !gated) Seq(EagerAggregation.ProbeRowsKey -> "0")
+        else Nil): _*)
     EagerAggregation.install(spark)
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set(EagerAggregation.EnabledKey, enabled.toString)
-    if (enabled && !gated) spark.conf.set(EagerAggregation.ProbeRowsKey, "0")
     spark
   }
 

@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeSet, EqualTo, PredicateHelper}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeSet, EqualTo, Expression, PredicateHelper}
 import org.apache.spark.sql.catalyst.plans.LeftOuter
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Deduplicate, Filter, Join, LogicalPlan, Project, SubqueryAlias}
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -44,8 +44,8 @@ import org.apache.spark.sql.catalyst.rules.Rule
   *  3. the right side is provably unique on its join keys.
   *
   * Uniqueness is proven structurally, never assumed: the right side is an
-  * [[Aggregate]] grouping (exactly) by attributes the join keys cover, a
-  * [[Deduplicate]] on covered keys, or such a plan behind
+  * [[Aggregate]] whose every grouping expression a join key carries (bare
+  * or aliased), a [[Deduplicate]] on covered keys, or such a plan behind
   * Filter/Project/SubqueryAlias wrappers (filters and projections preserve
   * key uniqueness). A bare table read is NOT accepted — parquet carries no
   * uniqueness constraint, and a duplicate-keyed right side would fan out
@@ -123,15 +123,19 @@ object EliminateRedundantLeftJoin extends Rule[LogicalPlan] with PredicateHelper
   private[plans] def uniqueOn(plan: LogicalPlan, keys: AttributeSet): Boolean =
     plan match {
       case a: Aggregate =>
-        // an Aggregate's output is unique on its grouping OUTPUT columns no
-        // matter what expressions computed them — so the keys just need to
-        // cover every grouping column's output attribute (bare attrs keep
-        // their exprId; aliased grouping exprs emit the Alias's exprId)
-        a.groupingExpressions.nonEmpty && a.groupingExpressions.forall {
-          case attr: Attribute => keys.contains(attr)
-          case al: Alias       => keys.exists(_.exprId == al.exprId)
-          case _               => false // unnamed computed grouping: no output column to cover
+        // an Aggregate's output is unique on the output columns that carry
+        // its grouping expressions — so every grouping expression needs a
+        // key column emitting it, bare or under an alias. Alias removal
+        // leaves `groupBy(x.as("k"))` grouping on `x` with `x AS k` in the
+        // output, so the alias's child is what a key column carries.
+        def bare(e: Expression) = e match {
+          case Alias(child, _) => child
+          case other           => other
         }
+        val carried = a.aggregateExpressions
+          .filter(o => keys.exists(_.exprId == o.exprId)).map(bare)
+        a.groupingExpressions.nonEmpty && a.groupingExpressions.forall(g =>
+          carried.exists(_.semanticEquals(bare(g))))
       case d: Deduplicate    => d.keys.forall(keys.contains)
       case f: Filter         => uniqueOn(f.child, keys) // filtering preserves uniqueness
       case s: SubqueryAlias  => uniqueOn(s.child, keys) // attrs keep exprIds through aliases

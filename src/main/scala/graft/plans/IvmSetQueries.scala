@@ -110,9 +110,8 @@ object IvmSetQueries {
     * lineitem, served from the incrementally-maintained set view.
     */
   def served(spark0: SparkSession, dir: String): DataFrame = {
-    val spark = ChildSession(spark0)
+    val spark = ChildSession(spark0, MvRewrite.EnabledKey -> "true")
     MvRewrite.install(spark)
-    spark.conf.set(MvRewrite.EnabledKey, "true")
     refresh(spark, dir)
     import spark.implicits._
     keyed(spark, dir).drop("late")
@@ -283,9 +282,8 @@ object IvmSetQueries {
     * served from the retractable state's derived set view.
     */
   def servedRetract(spark0: SparkSession, dir: String): DataFrame = {
-    val spark = ChildSession(spark0)
+    val spark = ChildSession(spark0, MvRewrite.EnabledKey -> "true")
     MvRewrite.install(spark)
-    spark.conf.set(MvRewrite.EnabledKey, "true")
     val scratch = refreshRetract(spark, dir)
     import spark.implicits._
     currentRows(spark, scratch)

@@ -56,9 +56,9 @@ object JoinEliminationQueries {
     * carried over, since [[ChildSession]] drops the graft rule keys.
     */
   private def withRule(spark0: SparkSession): SparkSession = {
-    val spark = ChildSession(spark0)
-    spark0.conf.getOption(EliminateRedundantLeftJoin.EnabledKey)
-      .foreach(spark.conf.set(EliminateRedundantLeftJoin.EnabledKey, _))
+    val spark = ChildSession(spark0,
+      spark0.conf.getOption(EliminateRedundantLeftJoin.EnabledKey).toSeq
+        .map(EliminateRedundantLeftJoin.EnabledKey -> _): _*)
     EliminateRedundantLeftJoin.install(spark)
     spark
   }
@@ -102,17 +102,17 @@ object JoinEliminationQueries {
     * entry — identical results, different plan — which is the point.
     */
   def reportBaseNoRule(spark0: SparkSession, dir: String): DataFrame = {
-    val spark = ChildSession(spark0)
     // The control must pay the enrichment joins, so BOTH elimination paths
     // go dark: the graft rule via its kill-switch (extensions carry over to
     // child sessions, so a fresh session alone doesn't shed it), and Spark
     // 4's built-in equivalent (EliminateOuterJoin + distinct-key
     // propagation, which independently removes unread unique-keyed left
     // joins) via excludedRules + the propagation flag.
-    spark.conf.set(EliminateRedundantLeftJoin.EnabledKey, "false")
-    spark.conf.set("spark.sql.optimizer.excludedRules",
-      "org.apache.spark.sql.catalyst.optimizer.EliminateOuterJoin")
-    spark.conf.set("spark.sql.optimizer.propagateDistinctKeys.enabled", "false")
+    val spark = ChildSession(spark0,
+      EliminateRedundantLeftJoin.EnabledKey -> "false",
+      "spark.sql.optimizer.excludedRules" ->
+        "org.apache.spark.sql.catalyst.optimizer.EliminateOuterJoin",
+      "spark.sql.optimizer.propagateDistinctKeys.enabled" -> "false")
     import spark.implicits._
     enrichedOrders(spark, dir)
       .groupBy($"o_orderpriority")

@@ -104,9 +104,8 @@ object MvRewriteQueries {
       }
     view("mv_order_summary", dir, defining(spark0, dir))
     view("mv_order_distinct", s"$dir:distinct", definingDistinct(spark0, dir))
-    val spark = ChildSession(spark0)
+    val spark = ChildSession(spark0, MvRewrite.EnabledKey -> "true")
     MvRewrite.install(spark)
-    spark.conf.set(MvRewrite.EnabledKey, "true")
     spark
   }
 

@@ -56,11 +56,9 @@ object MvWarehouseQueries {
     * library would run (`--conf spark.sql.extensions=graft.GraftExtensions`).
     */
   private def withViews(spark0: SparkSession, dir: String): SparkSession = {
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.GraftExtensions()).create()
-    for (k <- Seq("spark.sql.shuffle.partitions", "spark.sql.session.timeZone"))
-      spark.conf.set(k, spark0.conf.get(k))
-    spark.conf.set(MvRewrite.EnabledKey, "true")
+    val spark = ChildSession.carry(spark0, SparkSession.builder()
+      .withExtensions(new graft.GraftExtensions()).create(),
+      MvRewrite.EnabledKey -> "true")
     Scratch.memo(spark, "graft-mv-warehouse", dir) { _ =>
       val wh = Warehouse.reread(spark, dir)
       require(MvRewrite.register(s"mv_monthly_encounters:$dir",

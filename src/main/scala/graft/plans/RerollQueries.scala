@@ -32,10 +32,10 @@ object RerollQueries {
     * where the gate would decline it.
     */
   private def withRule(spark0: SparkSession): SparkSession = {
-    val spark = ChildSession(spark0)
+    val spark = ChildSession(spark0,
+      RerollExpandAggregate.EnabledKey -> "true",
+      RerollExpandAggregate.gate.ProbeRowsKey -> "0")
     RerollExpandAggregate.install(spark)
-    spark.conf.set(RerollExpandAggregate.EnabledKey, "true")
-    spark.conf.set(RerollExpandAggregate.gate.ProbeRowsKey, "0")
     spark
   }
 
@@ -46,9 +46,8 @@ object RerollQueries {
     * there); the G=16 lineitem cube saves 9M and fires.
     */
   private def withGatedRule(spark0: SparkSession): SparkSession = {
-    val spark = ChildSession(spark0)
+    val spark = ChildSession(spark0, RerollExpandAggregate.EnabledKey -> "true")
     RerollExpandAggregate.install(spark)
-    spark.conf.set(RerollExpandAggregate.EnabledKey, "true")
     spark
   }
 

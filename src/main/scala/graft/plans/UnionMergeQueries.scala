@@ -63,9 +63,8 @@ object UnionMergeQueries {
 
   /** The merged plan: same pipeline in a child session with the rule on. */
   def merged(spark0: SparkSession, dir: String): DataFrame = {
-    val spark = ChildSession(spark0)
+    val spark = ChildSession(spark0, MergeUnionAggregates.EnabledKey -> "true")
     MergeUnionAggregates.install(spark)
-    spark.conf.set(MergeUnionAggregates.EnabledKey, "true")
     unionRollup(spark, dir)
   }
 
@@ -77,8 +76,7 @@ object UnionMergeQueries {
     * this the genuine K-scan control.
     */
   def stock(spark0: SparkSession, dir: String): DataFrame = {
-    val spark = ChildSession(spark0)
-    spark.conf.set(MergeUnionAggregates.EnabledKey, "false")
+    val spark = ChildSession(spark0, MergeUnionAggregates.EnabledKey -> "false")
     unionRollup(spark, dir)
   }
 
@@ -106,9 +104,8 @@ object UnionMergeQueries {
   }
 
   def mergedTotal(spark0: SparkSession, dir: String): DataFrame = {
-    val spark = ChildSession(spark0)
+    val spark = ChildSession(spark0, MergeUnionAggregates.EnabledKey -> "true")
     MergeUnionAggregates.install(spark)
-    spark.conf.set(MergeUnionAggregates.EnabledKey, "true")
     unionTotal(spark, dir)
   }
 

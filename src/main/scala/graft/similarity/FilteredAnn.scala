@@ -71,8 +71,7 @@ object FilteredAnn {
 
     val base = exact.agg(count(lit(1)).as("baseline_results"))
     def score(name: String, df: DataFrame) = df
-      .join(exact.withColumnRenamed("nid", "e_nid"),
-        df("query_id") === exact("query_id") && df("nid") === $"e_nid")
+      .join(exact, Seq("query_id", "nid"))
       .agg(count(lit(1)).as("n_hits"))
       .crossJoin(df.agg(count(lit(1)).as("n_results")))
       .crossJoin(base)

@@ -1,5 +1,7 @@
 package graft.sources.v2
 
+import graft.plans.ChildSession
+import graft.streaming.StreamRun
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -56,29 +58,20 @@ object GenQueries {
     * bookkeeping (no id lost, none doubled across batch boundaries) is what
     * the hash actually checks.
     */
-  def genStreamIngest(spark: SparkSession, dir: String): DataFrame =
-    graft.Scratch.memo(spark, "graft-stream-gen", dir, perRun = true) { base =>
-      import org.apache.spark.sql.streaming.Trigger
-      graft.streaming.IncrementalIngest.withStreamPartitions(spark) { ss =>
-        ss.readStream.format("graft-gen")
-          .option("rows", StreamRows)
-          .option("slices", 8)
-          .option("rowsPerBatch", StreamBatch)
-          .load()
-          .writeStream
-          .format("parquet")
-          .option("path", s"$base/out")
-          .option("checkpointLocation", s"$base/ckpt")
-          .trigger(Trigger.AvailableNow())
-          .start()
-          .awaitTermination()
-      }
-      import spark.implicits._
-      spark.read.parquet(s"$base/out")
-        .groupBy($"k")
-        .agg(count(lit(1)).as("n"), sum($"v").as("sum_v"))
-        .orderBy($"k")
+  def genStreamIngest(spark: SparkSession, dir: String): DataFrame = {
+    val run = StreamRun(spark, "graft-stream-gen", dir) { (ss, r) =>
+      StreamRun.parquet(ss.readStream.format("graft-gen")
+        .option("rows", StreamRows)
+        .option("slices", 8)
+        .option("rowsPerBatch", StreamBatch)
+        .load(), r.out, r.ckpt)
     }
+    import spark.implicits._
+    spark.read.parquet(run.out)
+      .groupBy($"k")
+      .agg(count(lit(1)).as("n"), sum($"v").as("sum_v"))
+      .orderBy($"k")
+  }
 
   /** The DSv2 WRITE path driven end-to-end: events flow through the
     * graft-audit sink (task tallies → commit messages → one atomically
@@ -115,12 +108,10 @@ object GenQueries {
     * cannot leak). GenSourceSpec pins the zero-exchange plan.
     */
   def spjJoin(spark0: SparkSession, dir: String): DataFrame = {
-    val spark = spark0.newSession()
-    Seq(
+    val spark = ChildSession(spark0,
       "spark.sql.sources.v2.bucketing.enabled" -> "true",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1")
-      .foreach { case (k, v) => spark.conf.set(k, v) }
     import spark.implicits._
     def keyed(n: Long) = spark.read.format("graft-gen")
       .option("rows", n).option("keyGrouped", "true").load()
@@ -138,11 +129,9 @@ object GenQueries {
     * exchanges the reported partitioning removes.
     */
   def spjJoinOff(spark0: SparkSession, dir: String): DataFrame = {
-    val spark = spark0.newSession()
-    Seq(
+    val spark = ChildSession(spark0,
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1")
-      .foreach { case (k, v) => spark.conf.set(k, v) }
     import spark.implicits._
     def plain(n: Long) = spark.read.format("graft-gen")
       .option("rows", n).load()

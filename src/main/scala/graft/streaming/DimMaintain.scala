@@ -4,7 +4,7 @@ import graft.warehouse.Scd2
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 
 /** Streaming dimension maintenance: SCD2 merges applied from a CHANGE
@@ -191,13 +191,9 @@ object DimMaintain {
     */
   def maintain(spark: SparkSession, srcDir: String, dimDir: String,
       checkpointDir: String): StreamingQuery =
-    spark.readStream
+    StreamRun.start(spark.readStream
       .schema(StructType.fromDDL(changeDdl))
-      .parquet(srcDir)
-      .writeStream
+      .parquet(srcDir), checkpointDir)(_
       .foreachBatch((b: DataFrame, id: Long) =>
-        mergeBatch(b.sparkSession, b, dimDir, id))
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+        mergeBatch(b.sparkSession, b, dimDir, id)))
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Structured-Streaming re-expression of the reference's incremental loop
   * (`/root/reference/src/etl_pipeline.py:125-132,184-195`): each re-run picks
@@ -22,6 +22,13 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * Exactly-once: sink + checkpoint commit atomically per micro-batch, so
   * re-running after any failure never double-lands a batch — the property
   * the reference approximates with per-record rollback.
+  *
+  * Every stream here starts through [[StreamRun]] (checkpoint, AvailableNow
+  * trigger, default append mode), and every *Entry runs through its
+  * runner: a per-run scratch directory, a child session at
+  * [[StreamShufflePartitions]] state partitions, the drain, then the
+  * entry's own read-back of the sink. [[stage]] alone runs on the caller's
+  * session, whose shuffle partitions fix its checkpoint's state partitions.
   */
 object IncrementalIngest {
 
@@ -31,62 +38,21 @@ object IncrementalIngest {
   private def eventSchema = org.apache.spark.sql.types.StructType.fromDDL(
     "event_id BIGINT, ts TIMESTAMP, user_id BIGINT, event_type STRING, value DOUBLE, props STRING")
 
-  /** Shuffle/state partition count for the self-contained *Entry runs —
-    * overridable per deployment via [[StreamPartitionsKey]]. A streaming
+  /** Shuffle/state partition count of the [[StreamRun]] session. A streaming
     * query's state-store instance count is pinned to
     * `spark.sql.shuffle.partitions` at FIRST start (the checkpoint fixes it
     * thereafter), and every instance pays per-batch delta+commit file I/O —
-    * so it must be sized to the STATE volume (bounded by the watermark
-    * horizon), not to the batch corpus: the standard streaming deployment
-    * knob. 32 instances on this box spent more time in state-file fsyncs
-    * than in the join; r13 re-measured the ladder on the horizon-bounded
-    * state these entries actually carry: 8 → 4 cut the per-batch commit
-    * wall ~35% across the family (stream_attribution 3.90 → 2.36 s fresh)
-    * and 2 gave it back (one data partition serializes the batch work), so
-    * 4 is the measured knee LOCALLY. A production stream sizes this to its
-    * own state volume through the conf; scaling up later means a new
-    * checkpoint — which is why this is set per-query here, never globally.
+    * so it is sized to the STATE volume (bounded by the watermark
+    * horizon), not to the batch corpus. 32 instances on this box spent
+    * more time in state-file fsyncs than in the join; r13 re-measured the
+    * ladder on the horizon-bounded state these entries carry: 8 → 4 cut
+    * the per-batch commit wall ~35% across the family (stream_attribution
+    * 3.90 → 2.36 s fresh) and 2 gave it back (one data partition
+    * serializes the batch work), so 4 is the measured knee. Scaling up
+    * later means a new checkpoint — which is why this is set on the stream
+    * session, never globally.
     */
   val StreamShufflePartitions = 4
-
-  /** Conf key overriding [[StreamShufflePartitions]] for real deployments
-    * (state volume scales with the watermark horizon, not this box).
-    */
-  val StreamPartitionsKey = "spark.sql.graft.stream.statePartitions"
-
-  /** Run `body` (which starts + awaits a streaming query) in a CLONED
-    * session (`spark.newSession()` — same SparkContext, shared state,
-    * independent conf) with [[StreamShufflePartitions]] set there. The
-    * entry runs share the application with 200+ batch queries whose
-    * parallelism must not be disturbed: a set/restore on the SHARED
-    * session would leak 8 partitions into any batch query planned
-    * concurrently, and two interleaved entries could restore in the wrong
-    * order and pin the session at 8 permanently. The clone makes the
-    * override invisible outside the stream by construction.
-    */
-  private[graft] def withStreamPartitions[T](spark: SparkSession,
-      skipNoDataBatches: Boolean = false)(body: SparkSession => T): T = {
-    val ss = spark.newSession()
-    val n = spark.conf.getOption(StreamPartitionsKey)
-      .getOrElse(StreamShufflePartitions.toString)
-    ss.conf.set("spark.sql.shuffle.partitions", n)
-    // A no-data micro-batch exists to EMIT what only a watermark advance
-    // can release (closed windows, expired outer-join rows, fired timers)
-    // and to evict state. For a query whose every output row is produced
-    // in the data batch that receives it — inner stream-stream joins,
-    // dropDuplicates*, timer-less transformWithState — the trailing
-    // no-data batch does nothing the sink can see, yet costs a full
-    // plan+state-commit cycle per run (~0.3-0.5 s at 4 state partitions).
-    // Callers opt in per entry; the sf0.01 oracle compare re-verifies
-    // every opted-in entry's sink. Entries whose output DEPENDS on
-    // watermark emission (outer attribution, windowed counts, session
-    // windows, timer timeouts) must never set this — and neither may an
-    // entry whose CHECKPOINT is itself read by a checked query
-    // (stream_state_metadata pins the no-data batch's batch id).
-    if (skipNoDataBatches)
-      ss.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    body(ss)
-  }
 
   /** Stage: watch `srcDir` for event files, dedup on event_id within the
     * watermark horizon, append to `stagingDir`. One AvailableNow catch-up
@@ -101,16 +67,10 @@ object IncrementalIngest {
     // AvailableNow catch-up splits into one micro-batch per N files, each
     // committing sink+state atomically — the unit of restart safety
     maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    reader
+    StreamRun.parquet(reader
       .parquet(srcDir)
       .withWatermark("ts", "1 day")
-      .dropDuplicates("event_id")
-      .writeStream
-      .format("parquet")
-      .option("path", stagingDir)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+      .dropDuplicates("event_id"), stagingDir, checkpointDir)
   }
 
   /** Windowed rollup: tumbling 1-hour counts per event type with a 1-day
@@ -122,8 +82,8 @@ object IncrementalIngest {
     * across engines and re-runs), cast back to double on the wire.
     */
   def windowedCounts(spark: SparkSession, srcDir: String, outDir: String,
-      checkpointDir: String): StreamingQuery = {
-    spark.readStream
+      checkpointDir: String): StreamingQuery =
+    StreamRun.parquet(spark.readStream
       .schema(eventSchema)
       .parquet(srcDir)
       // event-time-less rows can never join a window or pass a watermark;
@@ -136,15 +96,7 @@ object IncrementalIngest {
           .as("total_value"))
       .select(col("window.start").as("window_start"),
         col("window.end").as("window_end"), col("event_type"), col("n"),
-        col("total_value"))
-      .writeStream
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+        col("total_value")), outDir, checkpointDir)
 
   /** Batch view of a staged directory (what downstream transforms consume). */
   def staged(spark: SparkSession, stagingDir: String): DataFrame =
@@ -167,20 +119,13 @@ object IncrementalIngest {
     * families' job ([[graft.dedup.MinHashLsh.incrementalNearDuplicates]]).
     */
   def dedupDocs(spark: SparkSession, srcDir: String, outDir: String,
-      checkpointDir: String): StreamingQuery = {
-    spark.readStream
+      checkpointDir: String): StreamingQuery =
+    StreamRun.parquet(spark.readStream
       .schema(docSchema)
       .parquet(srcDir)
       .withColumn("fingerprint", md5(lower(trim(col("text")))))
       .withWatermark("ingest_ts", "1 hour")
-      .dropDuplicatesWithinWatermark("fingerprint")
-      .writeStream
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+      .dropDuplicatesWithinWatermark("fingerprint"), outDir, checkpointDir)
 
   /** Stream-static enrichment: each micro-batch of the event stream joins
     * a STATIC dimension (here the event-type weights; in the warehouse, any
@@ -193,18 +138,11 @@ object IncrementalIngest {
     * lose fact rows.
     */
   def enrich(spark: SparkSession, srcDir: String, dim: DataFrame,
-      outDir: String, checkpointDir: String): StreamingQuery = {
-    spark.readStream
+      outDir: String, checkpointDir: String): StreamingQuery =
+    StreamRun.parquet(spark.readStream
       .schema(eventSchema)
       .parquet(srcDir)
-      .join(broadcast(dim), Seq("event_type"), "left")
-      .writeStream
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+      .join(broadcast(dim), Seq("event_type"), "left"), outDir, checkpointDir)
 
   /** Stream-stream join: purchases matched to the same user's clicks within
     * the preceding hour — the streaming sibling of the batch as-of join
@@ -231,19 +169,13 @@ object IncrementalIngest {
       .select(col("user_id").as("p_user"), col("ts").as("purchase_ts"),
         col("event_id").as("purchase_id"))
       .withWatermark("purchase_ts", "1 hour")
-    purchases.join(clicks,
+    StreamRun.parquet(purchases.join(clicks,
       expr("""c_user = p_user AND
              |click_ts <= purchase_ts AND
              |click_ts >= purchase_ts - INTERVAL 1 HOUR""".stripMargin))
       .select(col("purchase_id"), col("p_user").as("user_id"),
-        col("purchase_ts"), col("click_id"), col("click_ts"))
-      .writeStream
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
+        col("purchase_ts"), col("click_id"), col("click_ts")),
+      outDir, checkpointDir)
   }
 
   /** LEFT-OUTER stream-stream interval join — the missing half of
@@ -276,20 +208,14 @@ object IncrementalIngest {
       .select(col("user_id").as("p_user"), col("ts").as("purchase_ts"),
         col("event_id").as("purchase_id"))
       .withWatermark("purchase_ts", "1 hour")
-    purchases.join(clicks,
+    StreamRun.parquet(purchases.join(clicks,
       expr("""c_user = p_user AND
              |click_ts <= purchase_ts AND
              |click_ts >= purchase_ts - INTERVAL 1 HOUR""".stripMargin),
       "leftOuter")
       .select(col("purchase_id"), col("p_user").as("user_id"),
-        col("purchase_ts"), col("click_id"), col("click_ts"))
-      .writeStream
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
+        col("purchase_ts"), col("click_id"), col("click_ts")),
+      outDir, checkpointDir)
   }
 
   /** The event-stream entries' landed source feed, shared: five entries
@@ -317,22 +243,19 @@ object IncrementalIngest {
     * to float64 in the compare, and a dashboard keys on the sentinel
     * anyway.
     */
-  def outerAttributionEntry(spark: SparkSession, dir: String): DataFrame =
-    graft.Scratch.memo(spark, "graft-stream-oattr", dir, perRun = true) { base =>
-      val src = landedEvents(spark, dir)
-      // no skipNoDataBatches: the null-extended rows EMIT in the
-      // watermark-advance batch — skipping it would drop them
-      withStreamPartitions(spark) { ss =>
-        streamOuterAttribution(ss, src, s"$base/out", s"$base/ckpt")
-          .awaitTermination()
-      }
-      spark.read.parquet(s"$base/out")
-        .select(col("purchase_id"), col("user_id"),
-          unix_micros(col("purchase_ts")).as("purchase_t"),
-          coalesce(col("click_id"), lit(-1L)).as("click_id"),
-          coalesce(unix_micros(col("click_ts")), lit(0L)).as("click_t"))
-        .orderBy(col("purchase_id"), col("click_id"))
+  def outerAttributionEntry(spark: SparkSession, dir: String): DataFrame = {
+    // no skipNoDataBatches: the null-extended rows EMIT in the
+    // watermark-advance batch — skipping it would drop them
+    val run = StreamRun(spark, "graft-stream-oattr", dir) { (ss, r) =>
+      streamOuterAttribution(ss, landedEvents(spark, dir), r.out, r.ckpt)
     }
+    spark.read.parquet(run.out)
+      .select(col("purchase_id"), col("user_id"),
+        unix_micros(col("purchase_ts")).as("purchase_t"),
+        coalesce(col("click_id"), lit(-1L)).as("click_id"),
+        coalesce(unix_micros(col("click_ts")), lit(0L)).as("click_t"))
+      .orderBy(col("purchase_id"), col("click_id"))
+  }
 
   /** End-to-end batch-comparable run of [[streamAttribution]] — the
     * CORRECTNESS-gate entry that drives the stream-stream join itself, not
@@ -347,21 +270,19 @@ object IncrementalIngest {
     * append-mode, so a naive re-run against a fresh source write would
     * re-append the same matches under new file names.
     */
-  def attributionEntry(spark: SparkSession, dir: String): DataFrame =
-    graft.Scratch.memo(spark, "graft-stream-attr", dir, perRun = true) { base =>
-      val src = landedEvents(spark, dir)
-      // inner interval join: every match emits in the data batch that
-      // completes it — the trailing no-data batch only evicts state
-      withStreamPartitions(spark, skipNoDataBatches = true) { ss =>
-        streamAttribution(ss, src, s"$base/out", s"$base/ckpt")
-          .awaitTermination()
-      }
-      spark.read.parquet(s"$base/out")
-        .select(col("purchase_id"), col("user_id"),
-          unix_micros(col("purchase_ts")).as("purchase_t"),
-          col("click_id"), unix_micros(col("click_ts")).as("click_t"))
-        .orderBy(col("purchase_id"), col("click_id"))
+  def attributionEntry(spark: SparkSession, dir: String): DataFrame = {
+    // inner interval join: every match emits in the data batch that
+    // completes it — the trailing no-data batch only evicts state
+    val run = StreamRun(spark, "graft-stream-attr", dir,
+        skipNoDataBatches = true) { (ss, r) =>
+      streamAttribution(ss, landedEvents(spark, dir), r.out, r.ckpt)
     }
+    spark.read.parquet(run.out)
+      .select(col("purchase_id"), col("user_id"),
+        unix_micros(col("purchase_ts")).as("purchase_t"),
+        col("click_id"), unix_micros(col("click_ts")).as("click_t"))
+      .orderBy(col("purchase_id"), col("click_id"))
+  }
 
   /** End-to-end batch-comparable run of [[windowedCounts]] — and, more to
     * the point, an ORACLE-CHECKED statement of append-mode watermark
@@ -376,21 +297,18 @@ object IncrementalIngest {
     * shuffle never hash-compare); `maxFilesPerTrigger` stays unset, so the
     * parallel-landed source is one AvailableNow micro-batch.
     */
-  def windowedCountsEntry(spark: SparkSession, dir: String): DataFrame =
-    graft.Scratch.memo(spark, "graft-stream-wc", dir, perRun = true) { base =>
-      val src = landedEvents(spark, dir)
-      // no skipNoDataBatches: append-mode windows EMIT in the
-      // watermark-advance batch — skipping it would empty the sink
-      withStreamPartitions(spark) { ss =>
-        windowedCounts(ss, src, s"$base/out", s"$base/ckpt")
-          .awaitTermination()
-      }
-      spark.read.parquet(s"$base/out")
-        .select(unix_micros(col("window_start")).as("window_start_t"),
-          unix_micros(col("window_end")).as("window_end_t"),
-          col("event_type"), col("n"), col("total_value"))
-        .orderBy(col("window_start_t"), col("event_type"))
+  def windowedCountsEntry(spark: SparkSession, dir: String): DataFrame = {
+    // no skipNoDataBatches: append-mode windows EMIT in the
+    // watermark-advance batch — skipping it would empty the sink
+    val run = StreamRun(spark, "graft-stream-wc", dir) { (ss, r) =>
+      windowedCounts(ss, landedEvents(spark, dir), r.out, r.ckpt)
     }
+    spark.read.parquet(run.out)
+      .select(unix_micros(col("window_start")).as("window_start_t"),
+        unix_micros(col("window_end")).as("window_end_t"),
+        col("event_type"), col("n"), col("total_value"))
+      .orderBy(col("window_start_t"), col("event_type"))
+  }
 
   /** End-to-end batch-comparable run of [[dedupDocs]] — the watermarked
     * CONTENT-dedup path driven to an oracle-checked output. The feed is the
@@ -404,8 +322,11 @@ object IncrementalIngest {
     * one AvailableNow micro-batch and no cross-batch eviction can
     * re-admit a duplicate.
     */
-  def dedupDocsEntry(spark: SparkSession, dir: String): DataFrame =
-    graft.Scratch.memo(spark, "graft-stream-dedup", dir, perRun = true) { base =>
+  def dedupDocsEntry(spark: SparkSession, dir: String): DataFrame = {
+    // dropDuplicatesWithinWatermark emits survivors in their data
+    // batch; the no-data batch only evicts state
+    val run = StreamRun(spark, "graft-stream-dedup", dir,
+        skipNoDataBatches = true) { (ss, r) =>
       val docs = graft.Tables.documents(spark, dir)
         .select(col("doc_id"), col("text"), col("lang"), col("source"),
           col("n_chars"),
@@ -415,19 +336,14 @@ object IncrementalIngest {
         .withColumn("ingest_ts",
           expr("ingest_ts + INTERVAL 10 MINUTES"))
       docs.unionByName(recrawl)
-        .write.mode("overwrite").parquet(s"$base/src")
-      // dropDuplicatesWithinWatermark emits survivors in their data
-      // batch; the no-data batch only evicts state
-      withStreamPartitions(spark, skipNoDataBatches = true) { ss =>
-        dedupDocs(ss, s"$base/src", s"$base/out", s"$base/ckpt")
-          .awaitTermination()
-      }
-      spark.read.parquet(s"$base/out")
-        .groupBy(col("lang"))
-        .agg(org.apache.spark.sql.functions.count(
-          org.apache.spark.sql.functions.lit(1)).as("n_docs"))
-        .orderBy(col("lang"))
+        .write.mode("overwrite").parquet(r.src)
+      dedupDocs(ss, r.src, r.out, r.ckpt)
     }
+    spark.read.parquet(run.out)
+      .groupBy(col("lang"))
+      .agg(count(lit(1)).as("n_docs"))
+      .orderBy(col("lang"))
+  }
 
   /** The static enrichment dim for [[enrichEntry]]: event-type engagement
     * weights, DELIBERATELY missing one live type ("error") so the entry
@@ -462,11 +378,10 @@ object IncrementalIngest {
     * state is zero (stateless per batch).
     */
   def asofEnrich(spark: SparkSession, srcDir: String, dim: DataFrame,
-      outDir: String, checkpointDir: String): StreamingQuery = {
-    spark.readStream
+      outDir: String, checkpointDir: String): StreamingQuery =
+    StreamRun.start(spark.readStream
       .schema(eventSchema)
-      .parquet(srcDir)
-      .writeStream
+      .parquet(srcDir), checkpointDir)(_
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
         batch
           .join(broadcast(dim),
@@ -478,11 +393,7 @@ object IncrementalIngest {
             dim("weight"))
           .write.mode("append").parquet(outDir)
         ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+      })
 
   /** End-to-end batch-comparable run of [[asofEnrich]]: events land, the
     * stream replays them through the temporal lookup, and the rollup per
@@ -490,23 +401,25 @@ object IncrementalIngest {
     * as-of predicate — both weight VERSIONS of each type must appear,
     * split exactly at the cutover.
     */
-  def asofEnrichEntry(spark: SparkSession, dir: String): DataFrame =
-    graft.Scratch.memo(spark, "graft-stream-asof", dir, perRun = true) { base =>
-      val src = landedEvents(spark, dir)
-      import spark.implicits._
-      val dim = Scd2Weights
-        .toDF("event_type", "weight", "valid_from_ms", "valid_to_ms")
-      withStreamPartitions(spark) { ss =>
-        asofEnrich(ss, src, dim, s"$base/out", s"$base/ckpt")
-          .awaitTermination()
-      }
-      spark.read.parquet(s"$base/out")
-        .groupBy(
-          coalesce(col("event_type"), lit("(unknown)")).as("event_type"),
-          coalesce(col("weight"), lit(-1)).as("weight"))
-        .agg(count(lit(1)).as("n_events"))
-        .orderBy(col("event_type"), col("weight"))
+  def asofEnrichEntry(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
+    val run = StreamRun(spark, "graft-stream-asof", dir) { (ss, r) =>
+      asofEnrich(ss, landedEvents(spark, dir), Scd2Weights
+        .toDF("event_type", "weight", "valid_from_ms", "valid_to_ms"),
+        r.out, r.ckpt)
     }
+    enrichedRollup(spark.read.parquet(run.out))
+  }
+
+  /** The enrich entries' read-back: events per (type, weight), a null
+    * type folded to '(unknown)' and a missing weight to −1.
+    */
+  private def enrichedRollup(out: DataFrame): DataFrame =
+    out.groupBy(
+        coalesce(col("event_type"), lit("(unknown)")).as("event_type"),
+        coalesce(col("weight"), lit(-1)).as("weight"))
+      .agg(count(lit(1)).as("n_events"))
+      .orderBy(col("event_type"), col("weight"))
 
   /** End-to-end batch-comparable run of [[enrich]] — the stream-static
     * broadcast join driven to an oracle-checked output (the join itself was
@@ -517,22 +430,14 @@ object IncrementalIngest {
     * compare — the same reason Scd2 uses a sentinel date). Type nulls are
     * folded to '(unknown)' so the group key is never null on either engine.
     */
-  def enrichEntry(spark: SparkSession, dir: String): DataFrame =
-    graft.Scratch.memo(spark, "graft-stream-enrich", dir, perRun = true) { base =>
-      val src = landedEvents(spark, dir)
-      import spark.implicits._
-      val dim = EnrichWeights.toDF("event_type", "weight")
-      withStreamPartitions(spark) { ss =>
-        enrich(ss, src, dim, s"$base/out", s"$base/ckpt")
-          .awaitTermination()
-      }
-      spark.read.parquet(s"$base/out")
-        .groupBy(
-          coalesce(col("event_type"), lit("(unknown)")).as("event_type"),
-          coalesce(col("weight"), lit(-1)).as("weight"))
-        .agg(count(lit(1)).as("n_events"))
-        .orderBy(col("event_type"), col("weight"))
+  def enrichEntry(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
+    val run = StreamRun(spark, "graft-stream-enrich", dir) { (ss, r) =>
+      enrich(ss, landedEvents(spark, dir),
+        EnrichWeights.toDF("event_type", "weight"), r.out, r.ckpt)
     }
+    enrichedRollup(spark.read.parquet(run.out))
+  }
 
   val all: Map[String, (SparkSession, String) => DataFrame] = Map(
     "stream_attribution" -> (attributionEntry _),

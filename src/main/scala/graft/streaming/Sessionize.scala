@@ -3,7 +3,7 @@ package graft.streaming
 import graft.Tables
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
 /** User-session assembly over the events stream — the stateful-operator
   * extension (the reference has no session concept; a usage pipeline at
@@ -173,29 +173,27 @@ ORDER BY user_id, session_start_t""")
     *
     * Timestamps go to the wire as epoch micros (repo parity convention).
     */
-  def sessionsEntry(spark: SparkSession, dir: String): DataFrame =
-    graft.Scratch.memo(spark, "graft-stream-sess", dir, perRun = true) { base =>
-      import spark.implicits._
-      val src = IncrementalIngest.landedEvents(spark, dir)
-      // no skipNoDataBatches: a user's final session emits only via
-      // the event-time timeout in the watermark-advance batch
-      IncrementalIngest.withStreamPartitions(spark) { ss =>
-        streamSessions(ss, src, s"$base/out", s"$base/ckpt",
-          prep = df => df
-            .filter($"user_id".isNotNull && $"ts".isNotNull)
-            .select($"event_id", $"ts", $"user_id", $"event_type",
-              ($"value".cast("decimal(12,2)") * 100).cast("double")
-                .as("value"),
-              $"props"))
-          .awaitTermination()
-      }
-      spark.read.parquet(s"$base/out")
-        .select($"user_id",
-          $"session_start_us".as("session_start_t"),
-          $"session_end_us".as("session_end_t"),
-          $"n_events", $"total_value".cast("long").as("total_cents"))
-        .orderBy($"user_id", $"session_start_t")
+  def sessionsEntry(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
+    // no skipNoDataBatches: a user's final session emits only via
+    // the event-time timeout in the watermark-advance batch
+    val run = StreamRun(spark, "graft-stream-sess", dir) { (ss, r) =>
+      streamSessions(ss, IncrementalIngest.landedEvents(spark, dir), r.out,
+        r.ckpt,
+        prep = df => df
+          .filter($"user_id".isNotNull && $"ts".isNotNull)
+          .select($"event_id", $"ts", $"user_id", $"event_type",
+            ($"value".cast("decimal(12,2)") * 100).cast("double")
+              .as("value"),
+            $"props"))
     }
+    spark.read.parquet(run.out)
+      .select($"user_id",
+        $"session_start_us".as("session_start_t"),
+        $"session_end_us".as("session_end_t"),
+        $"n_events", $"total_value".cast("long").as("total_cents"))
+      .orderBy($"user_id", $"session_start_t")
+  }
 
   /** Streaming sessionizer over a watched directory of event files. */
   def streamSessions(spark: SparkSession, srcDir: String, outDir: String,
@@ -207,7 +205,7 @@ ORDER BY user_id, session_start_t""")
     // `prep` is the entry's feed projection applied IN-STREAM (null
     // filter, cents scaling) so the entry can read the shared landed
     // events feed instead of landing its own copy; specs pass identity
-    prep(spark.readStream.schema(schema).parquet(srcDir))
+    StreamRun.parquet(prep(spark.readStream.schema(schema).parquet(srcDir))
       .withWatermark("ts", "1 hour")
       // the watermarked TIMESTAMP column must survive into the
       // flatMapGroupsWithState input (the event-time-timeout checker
@@ -216,13 +214,6 @@ ORDER BY user_id, session_start_t""")
       .as[Ev]
       .groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout)(assemble)
-      .writeStream
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
+        GroupStateTimeout.EventTimeTimeout)(assemble), outDir, checkpointDir)
   }
 }

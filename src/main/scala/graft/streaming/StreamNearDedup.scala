@@ -4,7 +4,7 @@ import graft.dedup.MinHashLsh
 import graft.functions.Md5Hash
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
 /** Streaming NEAR-duplicate dedup — MinHash-LSH bucket claims held in
   * `flatMapGroupsWithState` (the custom-state operator SURVEY §2.9 calls
@@ -168,18 +168,12 @@ object StreamNearDedup {
       // lateness tolerance here (which is also what makes the max-seen
       // timeout discipline in [[claim]] observable — see the rewind spec)
       .withWatermark("ts", watermarkDelay)
-    banded(docs)
+    StreamRun.parquet(banded(docs)
       .as[BandRow]
       .groupByKey(r => (r.band, r.bucket))
       .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout)(claim(horizonMs))
-      .writeStream
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
+        GroupStateTimeout.EventTimeTimeout)(claim(horizonMs)),
+      outDir, checkpointDir)
   }
 
   /** Doc-level survivor ledger of a verdict sink: greedy LSH dedup drops
@@ -218,21 +212,18 @@ object StreamNearDedup {
     * StreamNearDedupSpec drives the same pipeline across TWO micro-batches
     * to prove checkpointed claims kill later-batch mirrors.
     */
-  def entry(spark: SparkSession, dir: String): DataFrame = run(spark, dir)._2
+  def entry(spark: SparkSession, dir: String): DataFrame =
+    ledger(spark.read.parquet(run(spark, dir).out))
 
-  /** The memoized run of [[entry]]: its scratch directory and its ledger. */
-  private def run(spark: SparkSession, dir: String): (String, DataFrame) =
-    graft.Scratch.memo(spark, "graft-stream-neardedup", dir, perRun = true) { base =>
-      feed(spark, dir).write.mode("overwrite").parquet(s"$base/src")
-      // NOT skipNoDataBatches: the ledger sink would be unchanged (the
-      // timeout path emits nothing), but stream_state_metadata reads this
-      // run's checkpoint and its oracle PINS the no-data batch's existence
-      // (max_batch = 1) — the trailing batch is part of the checked output
-      IncrementalIngest.withStreamPartitions(spark) { ss =>
-        nearDedup(ss, s"$base/src", s"$base/out", s"$base/ckpt")
-          .awaitTermination()
-      }
-      (base, ledger(spark.read.parquet(s"$base/out")))
+  /** The run of [[entry]], whose checkpoint the state readers inspect. */
+  private def run(spark: SparkSession, dir: String): StreamRun.Dirs =
+    // NOT skipNoDataBatches: the ledger sink would be unchanged (the
+    // timeout path emits nothing), but stream_state_metadata reads this
+    // run's checkpoint and its oracle PINS the no-data batch's existence
+    // (max_batch = 1) — the trailing batch is part of the checked output
+    StreamRun(spark, "graft-stream-neardedup", dir) { (ss, r) =>
+      feed(spark, dir).write.mode("overwrite").parquet(r.src)
+      nearDedup(ss, r.src, r.out, r.ckpt)
     }
 
   /** The claim state read BACK through Spark's state-store data source
@@ -247,7 +238,7 @@ object StreamNearDedup {
     */
   def stateInspect(spark: SparkSession, dir: String): DataFrame = {
     spark.read.format("statestore")
-      .option("path", s"${run(spark, dir)._1}/ckpt")
+      .option("path", run(spark, dir).ckpt)
       .load()
       .select(col("key._1").as("band"))
       .groupBy(col("band"))
@@ -267,7 +258,7 @@ object StreamNearDedup {
     */
   def stateMetadata(spark: SparkSession, dir: String): DataFrame = {
     spark.read.format("state-metadata")
-      .load(s"${run(spark, dir)._1}/ckpt")
+      .load(run(spark, dir).ckpt)
       .select(col("operatorId").cast("bigint").as("operator_id"),
         col("operatorName").as("operator_name"),
         col("stateStoreName").as("store_name"),

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, StreamingQuery, TTLConfig, TimeMode, TimerValues, Trigger}
+import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, StreamingQuery, TTLConfig, TimeMode, TimerValues}
 
 /** Spark 4's `transformWithState` — the arbitrary-state API that supersedes
   * `mapGroupsWithState` — driven end-to-end and oracle-checked: a per-user
@@ -93,20 +93,13 @@ object TransformWithState {
     // (schema, prep) let the entry stream the SHARED landed events feed
     // and project the ledger's 4 columns in-stream (column pruning keeps
     // the scan identical); specs land the 4-column shape directly
-    prep(spark.readStream
+    StreamRun.parquet(prep(spark.readStream
       .schema(org.apache.spark.sql.types.StructType.fromDDL(schema))
       .parquet(srcDir))
       .as[EventIn]
       .groupByKey(_.user_id)
       .transformWithState(new RunningLedger, TimeMode.None(),
-        OutputMode.Append())
-      .writeStream
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
+        OutputMode.Append()), outDir, checkpointDir)
   }
 
   /** The ledger feed: events with a non-null user, value floored to a
@@ -125,29 +118,26 @@ object TransformWithState {
   /** End-to-end oracle-checked entry: land the feed, run the ledger stream
     * to termination, read the sink back in total order.
     */
-  def entry(spark: SparkSession, dir: String): DataFrame =
-    graft.Scratch.memo(spark, "graft-stream-tws", dir, perRun = true) { base =>
-      val src = IncrementalIngest.landedEvents(spark, dir)
-      import org.apache.spark.sql.functions.{coalesce, col, floor, lit}
-      // TimeMode.None, no timers: every ledger row emits in its data
-      // batch — the trailing no-data batch has nothing to release
-      IncrementalIngest.withStreamPartitions(spark,
-          skipNoDataBatches = true) { ss =>
-        runningLedger(ss, src, s"$base/out", s"$base/ckpt",
-          schema = "event_id BIGINT, ts TIMESTAMP, user_id BIGINT, " +
-            "event_type STRING, value DOUBLE, props STRING",
-          prep = df => df
-            .filter(col("user_id").isNotNull)
-            .select(col("event_id"), col("user_id"),
-              coalesce(col("event_type"), lit("(null)")).as("event_type"),
-              floor(col("value")).cast("long").as("v")))
-          .awaitTermination()
-      }
-      import spark.implicits._
-      spark.read.parquet(s"$base/out")
-        .select($"event_id", $"user_id", $"seq_no", $"cum_v", $"type_seen")
-        .orderBy($"event_id")
+  def entry(spark: SparkSession, dir: String): DataFrame = {
+    // TimeMode.None, no timers: every ledger row emits in its data
+    // batch — the trailing no-data batch has nothing to release
+    val run = StreamRun(spark, "graft-stream-tws", dir,
+        skipNoDataBatches = true) { (ss, r) =>
+      runningLedger(ss, IncrementalIngest.landedEvents(spark, dir), r.out,
+        r.ckpt,
+        schema = "event_id BIGINT, ts TIMESTAMP, user_id BIGINT, " +
+          "event_type STRING, value DOUBLE, props STRING",
+        prep = df => df
+          .filter(col("user_id").isNotNull)
+          .select(col("event_id"), col("user_id"),
+            coalesce(col("event_type"), lit("(null)")).as("event_type"),
+            floor(col("value")).cast("long").as("v")))
     }
+    import spark.implicits._
+    spark.read.parquet(run.out)
+      .select($"event_id", $"user_id", $"seq_no", $"cum_v", $"type_seen")
+      .orderBy($"event_id")
+  }
 
   // ───────────────────────── session timeout via TIMERS ────────────────
 
@@ -221,7 +211,7 @@ object TransformWithState {
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     import spark.implicits._
     // (schema, prep): same shared-feed seam as [[runningLedger]]
-    prep(spark.readStream
+    StreamRun.parquet(prep(spark.readStream
       .schema(org.apache.spark.sql.types.StructType.fromDDL(schema))
       .parquet(srcDir))
       .withWatermark("ts", "0 seconds")
@@ -230,36 +220,27 @@ object TransformWithState {
       .map { case (id, uid, ms, _) => SessEvent(id, uid, ms) }
       .groupByKey(_.user_id)
       .transformWithState(new SessionTimeout, TimeMode.EventTime(),
-        OutputMode.Append())
-      .writeStream
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
+        OutputMode.Append()), outDir, checkpointDir)
   }
 
-  def sessionEntry(spark: SparkSession, dir: String): DataFrame =
-    graft.Scratch.memo(spark, "graft-stream-tws-sess", dir, perRun = true) { base =>
-      import spark.implicits._
-      val src = IncrementalIngest.landedEvents(spark, dir)
-      // no skipNoDataBatches: sessions close via TIMERS firing in the
-      // watermark-advance batch — skipping it would empty the sink
-      IncrementalIngest.withStreamPartitions(spark) { ss =>
-        sessionTimeout(ss, src, s"$base/out", s"$base/ckpt",
-          schema = "event_id BIGINT, ts TIMESTAMP, user_id BIGINT, " +
-            "event_type STRING, value DOUBLE, props STRING",
-          prep = df => df
-            .filter(col("user_id").isNotNull && col("ts").isNotNull)
-            .select(col("event_id"), col("user_id"), col("ts")))
-          .awaitTermination()
-      }
-      spark.read.parquet(s"$base/out")
-        .select($"user_id", $"start_ms", $"end_ms", $"n_events",
-          $"closed_by")
-        .orderBy($"user_id", $"start_ms")
+  def sessionEntry(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
+    // no skipNoDataBatches: sessions close via TIMERS firing in the
+    // watermark-advance batch — skipping it would empty the sink
+    val run = StreamRun(spark, "graft-stream-tws-sess", dir) { (ss, r) =>
+      sessionTimeout(ss, IncrementalIngest.landedEvents(spark, dir), r.out,
+        r.ckpt,
+        schema = "event_id BIGINT, ts TIMESTAMP, user_id BIGINT, " +
+          "event_type STRING, value DOUBLE, props STRING",
+        prep = df => df
+          .filter(col("user_id").isNotNull && col("ts").isNotNull)
+          .select(col("event_id"), col("user_id"), col("ts")))
     }
+    spark.read.parquet(run.out)
+      .select($"user_id", $"start_ms", $"end_ms", $"n_events",
+        $"closed_by")
+      .orderBy($"user_id", $"start_ms")
+  }
 
   val all: Map[String, (SparkSession, String) => DataFrame] = Map(
     "stream_tws_ledger" -> (entry _),

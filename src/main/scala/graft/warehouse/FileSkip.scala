@@ -72,9 +72,8 @@ object FileSkip {
   /** The layout read through the rule in a child session. */
   private def pruned(spark0: SparkSession, dir: String): DataFrame = {
     val path = layoutPath(spark0, dir)
-    val spark = ChildSession(spark0)
+    val spark = ChildSession(spark0, FileSkipIndex.EnabledKey -> "true")
     FileSkipIndex.install(spark)
-    spark.conf.set(FileSkipIndex.EnabledKey, "true")
     spark.read.parquet(path)
   }
 
@@ -148,9 +147,8 @@ object FileSkip {
     */
   def shipRange(spark0: SparkSession, dir: String): DataFrame = {
     val path = shipLayoutPath(spark0, dir)
-    val spark = ChildSession(spark0)
+    val spark = ChildSession(spark0, FileSkipIndex.EnabledKey -> "true")
     FileSkipIndex.install(spark)
-    spark.conf.set(FileSkipIndex.EnabledKey, "true")
     rangeReport(spark.read.parquet(path)
       .filter(expr(s"l_shipdate >= TIMESTAMP '$ShipLo'") &&
         expr(s"l_shipdate < TIMESTAMP '$ShipHi'")))
@@ -218,11 +216,11 @@ object FileSkip {
     */
   def layeredScan(spark0: SparkSession, dir: String): DataFrame = {
     val path = yearLayoutPath(spark0, dir)
-    val spark = ChildSession(spark0)
+    val spark = ChildSession(spark0,
+      graft.plans.DerivedPartitionFilter.EnabledKey -> "true",
+      FileSkipIndex.EnabledKey -> "true")
     graft.plans.DerivedPartitionFilter.install(spark)
     FileSkipIndex.install(spark)
-    spark.conf.set(graft.plans.DerivedPartitionFilter.EnabledKey, "true")
-    spark.conf.set(FileSkipIndex.EnabledKey, "true")
     rangeReport(spark.read.parquet(path)
       .filter(col("date_key") >= LayerLo && col("date_key") <= LayerHi))
   }
@@ -230,9 +228,9 @@ object FileSkip {
   /** Directory cut only (ledger mid arm). */
   private[graft] def layeredScanDpfOnly(spark0: SparkSession, dir: String): DataFrame = {
     val path = yearLayoutPath(spark0, dir)
-    val spark = ChildSession(spark0)
+    val spark = ChildSession(spark0,
+      graft.plans.DerivedPartitionFilter.EnabledKey -> "true")
     graft.plans.DerivedPartitionFilter.install(spark)
-    spark.conf.set(graft.plans.DerivedPartitionFilter.EnabledKey, "true")
     rangeReport(spark.read.parquet(path)
       .filter(col("date_key") >= LayerLo && col("date_key") <= LayerHi))
   }
@@ -268,9 +266,8 @@ object FileSkip {
     */
   def custDrill(spark0: SparkSession, dir: String): DataFrame = {
     val path = layoutPath(spark0, dir)
-    val spark = ChildSession(spark0)
+    val spark = ChildSession(spark0, FileSkipIndex.EnabledKey -> "true")
     FileSkipIndex.install(spark)
-    spark.conf.set(FileSkipIndex.EnabledKey, "true")
     import spark.implicits._
     val keys = Tables.orders(spark, dir)
       .filter(col("o_custkey") === DrillCustKey)

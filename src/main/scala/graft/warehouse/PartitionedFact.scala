@@ -96,9 +96,9 @@ object PartitionedFact {
     */
   def derivedPruneScan(spark0: SparkSession, dir: String): DataFrame = {
     val path = monthLayoutPath(spark0, dir)
-    val spark = graft.plans.ChildSession(spark0)
+    val spark = graft.plans.ChildSession(spark0,
+      graft.plans.DerivedPartitionFilter.EnabledKey -> "true")
     graft.plans.DerivedPartitionFilter.install(spark)
-    spark.conf.set(graft.plans.DerivedPartitionFilter.EnabledKey, "true")
     spark.read.parquet(path)
       .filter(col("date_key") >= DateLo && col("date_key") <= DateHi)
       .groupBy(col("month_key"))
@@ -131,9 +131,9 @@ object PartitionedFact {
     */
   def datePruneScan(spark0: SparkSession, dir: String): DataFrame = {
     val path = monthLayoutPath(spark0, dir)
-    val spark = graft.plans.ChildSession(spark0)
+    val spark = graft.plans.ChildSession(spark0,
+      graft.plans.DerivedPartitionFilter.EnabledKey -> "true")
     graft.plans.DerivedPartitionFilter.install(spark)
-    spark.conf.set(graft.plans.DerivedPartitionFilter.EnabledKey, "true")
     spark.read.parquet(path)
       .filter(col("encounter_date") >= lit(java.sql.Date.valueOf(DateLitLo)) &&
         col("encounter_date") <= lit(java.sql.Date.valueOf(DateLitHi)))

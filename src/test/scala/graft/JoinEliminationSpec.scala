@@ -92,11 +92,16 @@ class JoinEliminationSpec extends SparkSpec {
     assert(logicalJoins(JoinEliminationQueries.reportBase(caller, sf)) == 2)
     // control: with the switch unset the rule fires on the same caller
     caller.conf.unset(EliminateRedundantLeftJoin.EnabledKey)
-    assert(logicalJoins(JoinEliminationQueries.reportBase(caller, sf)) < 2)
+    assert(logicalJoins(JoinEliminationQueries.reportBase(caller, sf)) == 0)
   }
 
   test("aliased grouping keys still prove uniqueness") {
-    EliminateRedundantLeftJoin.install(spark)
+    // Spark's own elimination blinded, so only the graft rule can peel it
+    val s = plans.ChildSession(spark,
+      "spark.sql.optimizer.excludedRules" ->
+        "org.apache.spark.sql.catalyst.optimizer.EliminateOuterJoin",
+      "spark.sql.optimizer.propagateDistinctKeys.enabled" -> "false")
+    val orders = Tables.orders(s, sf)
     val freq = orders.groupBy($"o_custkey".as("k")).agg(count(lit(1)).as("f"))
     val joined = orders.join(freq, orders("o_custkey") === freq("k"), "left")
     val report = joined.groupBy($"o_orderstatus").agg(count(lit(1)).as("n"))

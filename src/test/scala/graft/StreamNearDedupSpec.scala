@@ -57,9 +57,7 @@ class StreamNearDedupSpec extends SparkSpec {
     // heaps. Same pipeline, same claims, same ledger, byte for byte.
     val base = tmp("snd-rocksdb")
     StreamNearDedup.feed(spark, sf).write.mode("overwrite").parquet(s"$base/src")
-    val ss = spark.newSession()
-    ss.conf.set("spark.sql.shuffle.partitions",
-      streaming.IncrementalIngest.StreamShufflePartitions.toString)
+    val ss = streaming.StreamRun.session(spark)
     ss.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     StreamNearDedup.nearDedup(ss, s"$base/src", s"$base/out", s"$base/ckpt")
@@ -86,10 +84,8 @@ class StreamNearDedupSpec extends SparkSpec {
       timestamp_seconds(lit(StreamNearDedup.FeedEpochSec)).as("ts"))
     // run 1: originals only
     docs.write.mode("overwrite").parquet(src.resolve("originals").toString)
-    streaming.IncrementalIngest.withStreamPartitions(spark) { ss =>
-      StreamNearDedup.nearDedup(ss, src.toString + "/*", out, ckpt)
-        .awaitTermination()
-    }
+    StreamNearDedup.nearDedup(streaming.StreamRun.session(spark),
+      src.toString + "/*", out, ckpt).awaitTermination()
     // run 2: the mirrors arrive later (one hour of event time — inside the
     // claim horizon, and safely past run 1's watermark so none is late), as
     // a separate catch-up run
@@ -99,10 +95,8 @@ class StreamNearDedupSpec extends SparkSpec {
       .withColumn("ts",
         timestamp_seconds(lit(StreamNearDedup.FeedEpochSec + 3600L)))
       .write.mode("overwrite").parquet(src.resolve("mirrors").toString)
-    streaming.IncrementalIngest.withStreamPartitions(spark) { ss =>
-      StreamNearDedup.nearDedup(ss, src.toString + "/*", out, ckpt)
-        .awaitTermination()
-    }
+    StreamNearDedup.nearDedup(streaming.StreamRun.session(spark),
+      src.toString + "/*", out, ckpt).awaitTermination()
     val twoRun = spark.read.parquet(out)
       .groupBy($"doc_id", $"lang")
       .agg(min(when($"fresh", 1).otherwise(0)).as("keep"))
@@ -133,10 +127,9 @@ class StreamNearDedupSpec extends SparkSpec {
       rows.toDF("doc_id", "text", "lang", "ts")
         .write.mode("overwrite").parquet(src.resolve(name).toString)
     def run(): Unit =
-      streaming.IncrementalIngest.withStreamPartitions(spark) { ss =>
-        StreamNearDedup.nearDedup(ss, src.toString + "/*", out, ckpt,
-          horizonMs, watermarkDelay = "30 minutes").awaitTermination()
-      }
+      StreamNearDedup.nearDedup(streaming.StreamRun.session(spark),
+        src.toString + "/*", out, ckpt, horizonMs,
+        watermarkDelay = "30 minutes").awaitTermination()
     // b1: A claims at t0+50m → stored max 50m, expiry t0+110m; wm → t0+20m
     land("b1", Seq((1L, textA, "en", new Timestamp(t0 + 50 * m))))
     run()
@@ -185,16 +178,13 @@ class StreamNearDedupSpec extends SparkSpec {
       rows.toDF("doc_id", "text", "lang", "ts")
         .write.mode("overwrite").parquet(src.resolve(name).toString)
     def run(): Long = {
-      var stateRows = -1L
-      streaming.IncrementalIngest.withStreamPartitions(spark) { ss =>
-        val q = StreamNearDedup.nearDedup(ss, src.toString + "/*", out, ckpt,
-          horizonMs)
-        q.awaitTermination()
-        val progress = q.lastProgress
-        if (progress != null && progress.stateOperators.nonEmpty)
-          stateRows = progress.stateOperators.head.numRowsTotal
-      }
-      stateRows
+      val q = StreamNearDedup.nearDedup(streaming.StreamRun.session(spark),
+        src.toString + "/*", out, ckpt, horizonMs)
+      q.awaitTermination()
+      val progress = q.lastProgress
+      if (progress != null && progress.stateOperators.nonEmpty)
+        progress.stateOperators.head.numRowsTotal
+      else -1L
     }
     // batch 1: doc A claims its buckets at t0
     land("b1", Seq((1L, textA, "en", new Timestamp(t0))))

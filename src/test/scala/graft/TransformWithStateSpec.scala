@@ -26,18 +26,14 @@ class TransformWithStateSpec extends SparkSpec {
     // run 1: first half of the event history
     feed.filter($"event_id" <= cut)
       .write.mode("overwrite").parquet(src.resolve("h1").toString)
-    streaming.IncrementalIngest.withStreamPartitions(spark) { ss =>
-      TransformWithState.runningLedger(ss, src.toString + "/*", out, ckpt)
-        .awaitTermination()
-    }
+    TransformWithState.runningLedger(streaming.StreamRun.session(spark),
+      src.toString + "/*", out, ckpt).awaitTermination()
     // run 2: the rest arrives later (all ids above run 1's — within-batch
     // event_id ordering therefore equals global ordering)
     feed.filter($"event_id" > cut)
       .write.mode("overwrite").parquet(src.resolve("h2").toString)
-    streaming.IncrementalIngest.withStreamPartitions(spark) { ss =>
-      TransformWithState.runningLedger(ss, src.toString + "/*", out, ckpt)
-        .awaitTermination()
-    }
+    TransformWithState.runningLedger(streaming.StreamRun.session(spark),
+      src.toString + "/*", out, ckpt).awaitTermination()
     val twoRun = spark.read.parquet(out)
       .select($"event_id", $"user_id", $"seq_no", $"cum_v", $"type_seen")
     // the batch window twin over the whole feed
@@ -67,10 +63,8 @@ class TransformWithStateSpec extends SparkSpec {
       rows.toDF("event_id", "user_id", "ts")
         .write.mode("overwrite").parquet(src.resolve(name).toString)
     def run(): Unit =
-      streaming.IncrementalIngest.withStreamPartitions(spark) { ss =>
-        TransformWithState.sessionTimeout(ss, src.toString + "/*", out, ckpt)
-          .awaitTermination()
-      }
+      TransformWithState.sessionTimeout(streaming.StreamRun.session(spark),
+        src.toString + "/*", out, ckpt).awaitTermination()
     // run 1: user 1 has a 2-event session; nothing can emit yet (the
     // watermark sits at the session's own end)
     land("b1", Seq((1L, 1L, new Timestamp(t0)),
