@@ -5,6 +5,7 @@ import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.storage.StorageLevel
 
 /** The one home of per-(application, corpus) derived state.
   *
@@ -30,6 +31,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * deletes `<root>/<appId>` and drops that application's entries. Nothing
   * is released at [[Memos.newGeneration]]: superseded run directories stay
   * until the application ends, so a new generation adds no timed work.
+  *
+  * In-memory reuse of an intermediate within one query goes through
+  * [[reuse]], the one materialization policy.
   */
 object Scratch {
   private val Root = new File(sys.props("java.io.tmpdir"), "graft-scratch")
@@ -54,8 +58,13 @@ object Scratch {
 
   private val cells = new ConcurrentHashMap[Key, Cell]()
 
+  /** The key's leaf carries a fixed prefix: a sanitized absolute path
+    * starts with `_`, which Spark's file listing treats as hidden (and a
+    * key like `..` would climb out of its family). The prefix keeps the
+    * mapping exactly as injective as the sanitization itself.
+    */
   private def dir(app: String, family: String, run: String, key: String): String =
-    Seq(app, family, run, key.replaceAll("[^A-Za-z0-9._-]", "_"))
+    Seq(app, family, run, "k-" + key.replaceAll("[^A-Za-z0-9._-]", "_"))
       .filter(_.nonEmpty).foldLeft(Root)(new File(_, _)).getPath
 
   /** The directory of (this application, family, [run tag,] key). Nothing
@@ -93,6 +102,26 @@ object Scratch {
     cells.computeIfAbsent(Key(app, family, run, key), _ => new Cell)
       .get(build(dir(app, family, run, key)))
   }
+
+  /** Keep `df` for its several consumers: the first action computes it
+    * once into Spark's block store and every later reader starts from the
+    * blocks, with the lineage truncated so each consumer plans one short
+    * tree instead of re-deriving the whole upstream. It is a local
+    * checkpoint — serialized row blocks, not the columnar `.cache()`,
+    * whose encoding build was measured at 30 s of CPU for 150 k rows —
+    * and needs no checkpoint directory. `eager` computes it now, for a
+    * caller that fans the result out to concurrent jobs (two lazy readers
+    * racing would both compute the one RDD).
+    *
+    * On a local master the blocks live in the one application JVM, so a
+    * single replica is as safe as any. Elsewhere they live on executors,
+    * and a lost executor would lose the only copy of a lineage-truncated
+    * block, which cannot be recomputed: there the blocks are written
+    * twice, spilling to disk under memory pressure.
+    */
+  def reuse(df: DataFrame, eager: Boolean = false): DataFrame =
+    if (df.sparkSession.sparkContext.isLocal) df.localCheckpoint(eager)
+    else df.localCheckpoint(eager, StorageLevel.MEMORY_AND_DISK_2)
 
   /** Drop the application's entries and delete its directory. */
   private[graft] def release(app: String): Unit = {

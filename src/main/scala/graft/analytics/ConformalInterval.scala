@@ -1,6 +1,6 @@
 package graft.analytics
 
-import graft.Tables
+import graft.{Scratch, Tables}
 import graft.functions.Md5Hash
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -37,29 +37,26 @@ object ConformalInterval {
     // r14 (§5): every single-row statistic below (model, n_calib, q̂,
     // test, n_train) re-embedded its whole upstream into its broadcast
     // subtree — the stock plan scanned orders and recomputed the per-row
-    // md5 fold 26 times. One lazy localCheckpoint of the fold-tagged
-    // projection (3 narrow columns) plus two derived-frame checkpoints
-    // collapses that to ONE orders scan; n_calib and n_train are read
-    // algebraically off the residual histogram (Σc) and the model's group
-    // counts (Σn_g) instead of re-counting the corpus slices.
-    val rows = Tables.orders(spark, dir)
+    // md5 fold 26 times. Reusing the fold-tagged projection (3 narrow
+    // columns) and the two frames derived from it collapses that to ONE
+    // orders scan; n_calib and n_train are read algebraically off the
+    // residual histogram (Σc) and the model's group counts (Σn_g) instead
+    // of re-counting the corpus slices.
+    val rows = Scratch.reuse(Tables.orders(spark, dir)
       .select($"o_orderpriority".as("g"),
         floor($"o_totalprice").cast("long").as("x"),
         (Md5Hash.h32(concat(lit("cp:"), $"o_orderkey".cast("string")))
-          % 4).as("fold"))
-      .localCheckpoint(eager = false)
-    val model = rows.filter($"fold" <= 1)
+          % 4).as("fold")))
+    val model = Scratch.reuse(rows.filter($"fold" <= 1)
       .groupBy($"g").agg(expr("sum(x) div count(1)").as("pred"),
-        count(lit(1)).as("n_g"))
-      .localCheckpoint(eager = false)
+        count(lit(1)).as("n_g")))
     val preds = model.select($"g", $"pred")
     // q̂ = k-th smallest residual, k = ceil((n+1)·(1−α)) — exact order
     // statistic by counting over the residual histogram
-    val hist = rows.filter($"fold" === 2)
+    val hist = Scratch.reuse(rows.filter($"fold" === 2)
       .join(broadcast(preds), "g")
       .select(abs($"x" - $"pred").as("r"))
-      .groupBy($"r").agg(count(lit(1)).as("c"))
-      .localCheckpoint(eager = false)
+      .groupBy($"r").agg(count(lit(1)).as("c")))
     val nCalib = hist.agg(sum($"c").as("n_calib"))
     val qhat = hist
       .withColumn("cum", sum($"c").over(Window.orderBy($"r")

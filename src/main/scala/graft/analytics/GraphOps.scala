@@ -1,6 +1,6 @@
 package graft.analytics
 
-import graft.Tables
+import graft.{Scratch, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -234,27 +234,21 @@ object GraphOps {
     // Each round references the previous round THREE times (degree count +
     // two endpoint filters); left as lazy lineage Catalyst re-derives the
     // whole chain per reference — 3^rounds recomputations of the base
-    // self-join (measured 9.5 s at sf0.1 for an EMPTY graph). Materialize
-    // every round via localCheckpoint (serialized row blocks — NOT the
-    // columnar .persist cache that is pathological on this box): same
-    // recompute cut as the earlier per-round parquet round-trip without
-    // its 2·rounds write/read jobs (r13: 1.5 s → 0.9 s warm), and still
-    // the 100 TB-correct shape for iterative edge sets. PageRank/BFS
-    // reference their state once per round and don't need this.
-    def mat(df: DataFrame, round: Int): DataFrame = {
-      val _ = round
-      df.localCheckpoint(eager = false)
-    }
+    // self-join (measured 9.5 s at sf0.1 for an EMPTY graph). Every round
+    // is reused: the same recompute cut as the earlier per-round parquet
+    // round-trip without its 2·rounds write/read jobs (r13: 1.5 s → 0.9 s
+    // warm). PageRank/BFS reference their state once per round and don't
+    // need this.
     val e0 = coEdges(spark, dir)
-    var edges = mat(e0.select($"u".as("a"), $"v".as("b"))
-      .unionByName(e0.select($"v".as("a"), $"u".as("b"))), 0)
-    for (r <- 1 to rounds) {
+    var edges = Scratch.reuse(e0.select($"u".as("a"), $"v".as("b"))
+      .unionByName(e0.select($"v".as("a"), $"u".as("b"))))
+    for (_ <- 1 to rounds) {
       val keep = edges.groupBy($"a").agg(count(lit(1)).as("deg"))
         .filter($"deg" >= KcoreK).select($"a")
-      edges = mat(edges
+      edges = Scratch.reuse(edges
         .join(keep, "a")
         .join(keep.select($"a".as("b")), "b")
-        .select($"a", $"b"), r)
+        .select($"a", $"b"))
     }
     edges.groupBy($"a".as("s_suppkey"))
       .agg(count(lit(1)).as("core_degree"))

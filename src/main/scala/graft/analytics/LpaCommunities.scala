@@ -1,5 +1,6 @@
 package graft.analytics
 
+import graft.Scratch
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -62,32 +63,29 @@ object LpaCommunities {
     // [[TopEdges]] heaviest incident edges (the standard mutual-kNN prep
     // before community detection), deterministic tie-break on (w, u)
     val byNode = Window.partitionBy($"v").orderBy($"w".desc, $"u")
-    // per-round lazy checkpoints: the unrolled chain's dominant cost at
-    // this graph size is CATALYST PLANNING of the deep composed tree
-    // (r13: ~2.5 s of the entry's ~3.5 s wall was plan-time), and every
-    // consumer that referenced `labels` k times re-planned and re-ran the
-    // whole chain k times. Checkpointing the nation-sized edge and label
-    // tables keeps each round's planned tree one join deep and computes
-    // each round exactly once — the iterative-plan discipline the graph
-    // family documents, now actually enforced.
-    val edges = denseEdges(spark, dir)
+    // per-round reuse: the unrolled chain's dominant cost at this graph
+    // size is CATALYST PLANNING of the deep composed tree (r13: ~2.5 s of
+    // the entry's ~3.5 s wall was plan-time), and every consumer that
+    // referenced `labels` k times re-planned and re-ran the whole chain k
+    // times. Reusing the nation-sized edge and label tables keeps each
+    // round's planned tree one join deep and computes each round exactly
+    // once — the iterative-plan discipline the graph family documents.
+    val edges = Scratch.reuse(denseEdges(spark, dir)
       .withColumn("erk", row_number().over(byNode))
       .filter($"erk" <= TopEdges)
-      .select($"v", $"u", $"w")
-      .localCheckpoint(eager = false)
+      .select($"v", $"u", $"w"))
     val nodes = edges.select($"v").distinct()
     var labels = nodes.select($"v", $"v".as("label"))
     val byPull = Window.partitionBy($"v")
       .orderBy($"pull".desc, $"nbr_label")
     for (_ <- 1 to Rounds) {
-      labels = edges
+      labels = Scratch.reuse(edges
         .join(labels.select($"v".as("u"), $"label".as("nbr_label")), "u")
         .groupBy($"v", $"nbr_label")
         .agg(sum($"w").as("pull"))
         .withColumn("rk", row_number().over(byPull))
         .filter($"rk" === 1)
-        .select($"v", $"nbr_label".as("label"))
-        .localCheckpoint(eager = false)
+        .select($"v", $"nbr_label".as("label")))
     }
     labels
   }

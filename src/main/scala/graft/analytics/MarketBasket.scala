@@ -1,6 +1,6 @@
 package graft.analytics
 
-import graft.Tables
+import graft.{Scratch, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -36,25 +36,22 @@ object MarketBasket {
 
   def rules(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    // materialized once (localCheckpoint): items feeds FOUR consumers
-    // (n_baskets, item totals, both sides of the pair self-join) and each
-    // re-derivation re-ran the lineitem⋈part join + distinct — 3 corpus
-    // scans where one suffices (r13 profile: 1.84M scan rows → 620k). The
-    // checkpoint truncates lineage so the basket→item projection is
-    // computed exactly once per run; at scale this is the "decide on small
-    // rows" intermediate you would land anyway.
+    // reused: items feeds FOUR consumers (n_baskets, item totals, both
+    // sides of the pair self-join) and each re-derivation re-ran the
+    // lineitem⋈part join + distinct — 3 corpus scans where one suffices
+    // (r13 profile: 1.84M scan rows → 620k); at scale this is the "decide
+    // on small rows" intermediate you would land anyway.
     // basket-key partitioning established ONCE before the distinct (§2.4):
     // hash(basket) satisfies the (basket, item) dedup's clustering, both
-    // sides of the pair self-join (the checkpoint preserves the
-    // partitioning), and the n_baskets distinct — one exchange where the
-    // planner otherwise inserted three over the same 620k-row table
-    val items = Tables.lineitem(spark, dir)
+    // sides of the pair self-join (the reused rows keep the partitioning),
+    // and the n_baskets distinct — one exchange where the planner
+    // otherwise inserted three over the same 620k-row table
+    val items = Scratch.reuse(Tables.lineitem(spark, dir)
       .join(broadcast(Tables.part(spark, dir)
         .select($"p_partkey", $"p_brand")), $"l_partkey" === $"p_partkey")
       .select($"l_orderkey".as("basket"), $"p_brand".as("item"))
       .repartition($"basket")
-      .distinct()
-      .localCheckpoint(eager = false)
+      .distinct())
     val nBaskets = items.select($"basket").distinct()
       .agg(count(lit(1)).as("n_baskets"))
     val itemCounts = items.groupBy($"item").agg(count(lit(1)).as("n_item"))

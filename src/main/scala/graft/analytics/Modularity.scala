@@ -1,5 +1,6 @@
 package graft.analytics
 
+import graft.Scratch
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -33,13 +34,11 @@ object Modularity {
     import spark.implicits._
     // both inputs are nation-graph-sized (≤ |nations|² edges, |nations|
     // labels) but each re-derivation replays the corpus-scale trade-edge
-    // aggregate / the full unrolled LPA chain; the lazy checkpoints pin
-    // them so the three consumers below (degree mass, intra mass, total)
-    // compute each exactly once
-    val dense = LpaCommunities.denseEdges(spark, dir)
-      .localCheckpoint(eager = false)
-    val lbl = LpaCommunities.labelsDf(spark, dir)
-      .localCheckpoint(eager = false)
+    // aggregate / the full unrolled LPA chain; reusing them lets the
+    // three consumers below (degree mass, intra mass, total) compute each
+    // exactly once
+    val dense = Scratch.reuse(LpaCommunities.denseEdges(spark, dir))
+    val lbl = Scratch.reuse(LpaCommunities.labelsDf(spark, dir))
     val tot = dense.agg(sum($"w").as("two_w"))
     val degC = dense.groupBy($"v").agg(sum($"w").as("dv"))
       .join(lbl, "v")

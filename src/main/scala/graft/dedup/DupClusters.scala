@@ -1,5 +1,6 @@
 package graft.dedup
 
+import graft.Scratch
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -12,16 +13,17 @@ import org.apache.spark.sql.functions._
   * node takes the min of its own label and its neighbors' labels; fixpoint
   * when no label changes (bounded by component diameter — near-dup families
   * are shallow). The driver loop carries only a changed-count; all data
-  * stays distributed, and each round is one shuffle on node id. At larger
-  * diameters the same loop runs with checkpointing every ~10 rounds to cut
-  * lineage (or large-star/small-star for power-law graphs).
+  * stays distributed, and each round is one shuffle on node id. Each
+  * round's labels are reused, which also cuts the lineage, so a deeper
+  * family only adds rounds (power-law graphs would want
+  * large-star/small-star instead).
   */
 object DupClusters {
 
   // label table materialized once per (application, corpus): the fixpoint
   // loop is an index build, reused by every downstream consumer
   def clusters(spark: SparkSession, dir: String): DataFrame =
-    graft.Scratch.parquet(spark, "graft-clusters", dir)(computeClusters(spark, dir))
+    Scratch.parquet(spark, "graft-clusters", dir)(computeClusters(spark, dir))
 
   private def computeClusters(spark: SparkSession, dir: String,
       threshold: Double = 0.2, maxIter: Int = 20): DataFrame = {
@@ -30,16 +32,14 @@ object DupClusters {
     val pairs = Dedup.pairsForDir(spark, dir)
       .filter($"jaccard" >= threshold)
       .select($"doc_a", $"doc_b")
-    // undirected edge list, both directions — persisted: every round joins
-    // against it, and without pinning each round would re-run the whole
+    // undirected edge list, both directions — reused: every round joins
+    // against it, and without it each round would re-run the whole
     // Jaccard join to re-derive it
-    val edges = pairs.select($"doc_a".as("u"), $"doc_b".as("v"))
+    val edges = Scratch.reuse(pairs.select($"doc_a".as("u"), $"doc_b".as("v"))
       .unionByName(pairs.select($"doc_b".as("u"), $"doc_a".as("v")))
-      .distinct()
-      .persist()
+      .distinct())
     var labels = edges.select($"u".as("node")).distinct()
       .withColumn("label", $"node")
-    var prev: Option[DataFrame] = None
     var converged = false
     var i = 0
     while (!converged && i < maxIter) {
@@ -53,16 +53,13 @@ object DupClusters {
           least($"label", coalesce($"nbr_label", $"label")).as("label"),
           ($"label" =!= least($"label", coalesce($"nbr_label", $"label")))
             .as("changed"))
-      // one pass materializes both the new labels and the changed count
-      val mat = updated.persist()
+      // one pass computes both the new labels and the changed count
+      val mat = Scratch.reuse(updated)
       val changed = mat.filter($"changed").count()
-      prev.foreach(_.unpersist())
-      prev = Some(mat)
       labels = mat.select($"node", $"label")
       converged = changed == 0
       i += 1
     }
-    edges.unpersist()
     labels
       .select($"node".as("doc_id"), $"label".as("cluster_id"))
       .orderBy($"doc_id")

@@ -1,6 +1,6 @@
 package graft.ingest
 
-import graft.Tables
+import graft.{Scratch, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -79,23 +79,20 @@ object Ingest {
     */
   private[graft] def cleanseDf(spark: SparkSession, events: DataFrame): DataFrame = {
     import spark.implicits._
-    cleansePipeline(spark, events)
-      // checkpoint before the global sort: with no exchange below it, the
-      // range partitioner's SAMPLING pass re-runs the whole
-      // scan+parse+filter pipeline a second time (r13 profile: 200k scan
-      // rows for a 100k-row table); the checkpoint materializes the
-      // cleansed rows once and both passes read blocks. Same seam in
-      // [[quarantine]]/[[deadLetterReplay]]. PlanSpec asserts the P2/P7
-      // scan pushdown on [[cleansePipeline]], which is the plan the
-      // checkpointed RDD executes.
-      .localCheckpoint(eager = false)
+    // reused before the global sort: with no exchange below it, the range
+    // partitioner's SAMPLING pass re-runs the whole scan+parse+filter
+    // pipeline a second time (r13 profile: 200k scan rows for a 100k-row
+    // table); reused, the sample pass and the sort both read the cleansed
+    // rows once computed. Same seam in [[quarantine]]/[[deadLetterReplay]].
+    // PlanSpec asserts the P2/P7 scan pushdown on [[cleansePipeline]],
+    // which is the plan the reused RDD executes.
+    Scratch.reuse(cleansePipeline(spark, events))
       .orderBy($"event_id")
   }
 
   /** The cleanse pipeline proper (everything but the presentation sort) —
-    * the subtree the pre-sort checkpoint materializes, exposed so plan
-    * assertions can read the scan the final query hides behind its
-    * checkpointed-RDD leaf.
+    * the subtree [[cleanseDf]] reuses, exposed so plan assertions can read
+    * the scan the final query hides behind its reused-RDD leaf.
     */
   private[graft] def cleansePipeline(spark: SparkSession, events: DataFrame): DataFrame = {
     import spark.implicits._
@@ -119,9 +116,9 @@ object Ingest {
     */
   def quarantine(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    dirtyDlq(spark, dir)
-      .select($"event_id", $"event_type", $"value", $"reason")
-      .localCheckpoint(eager = false) // see cleanseDf: halves the sort's sample pass
+    // see cleanseDf: halves the sort's sample pass
+    Scratch.reuse(dirtyDlq(spark, dir)
+      .select($"event_id", $"event_type", $"value", $"reason"))
       .orderBy($"event_id")
   }
 
@@ -165,7 +162,8 @@ object Ingest {
     import spark.implicits._
     val k = get_json_object($"props", "$.k").cast("int")
     val kOk = k.isNotNull && k.between(0, 100)
-    dirtyDlq(spark, dir)
+    // see cleanseDf: halves the sort's sample pass
+    Scratch.reuse(dirtyDlq(spark, dir)
       .withColumn("action", when(!kOk, lit("dead")).otherwise(lit("repaired")))
       .withColumn("event_type",
         when(!$"event_type".isin(EventTypes: _*), lit(RepairDefaultType))
@@ -174,8 +172,7 @@ object Ingest {
       .withColumn("passes_revalidation",
         $"event_type".isin(EventTypes: _*) && $"value" >= 0 && kOk)
       .select($"event_id", $"reason", $"action", $"event_type", $"value",
-        $"passes_revalidation")
-      .localCheckpoint(eager = false) // see cleanseDf: halves the sort's sample pass
+        $"passes_revalidation"))
       .orderBy($"event_id")
   }
 

@@ -1,6 +1,6 @@
 package graft.multimodal
 
-import graft.Tables
+import graft.{Scratch, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -57,7 +57,7 @@ object Multimodal {
     * landed-source operators.
     */
   private def mediaFilesDir(spark: SparkSession, dir: String): String =
-    graft.Scratch.memo(spark, "graft-mediafiles", dir, perRun = true) { base =>
+    Scratch.memo(spark, "graft-mediafiles", dir, perRun = true) { base =>
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(base))
       // "distributed landing" was aspirational: documents is one parquet
       // row group, so without the spread every file write ran in ONE
@@ -340,16 +340,15 @@ object Multimodal {
       .mapPartitions(resizeKernel _)
       .toDF()
     val cell = (i: Int) => element_at($"cells", i + 1).cast("double")
-    val ph = resized
+    // reuse the (doc, hash) rows: ph feeds the bucket aggregate AND the
+    // keeper join, and the opaque per-partition decode kernel would
+    // otherwise re-read + re-decode every media payload per consumer —
+    // decode once, fan out from the small rows (guide §8)
+    val ph = Scratch.reuse(resized
       .withColumn("m", (0 until 16).map(cell).reduce(_ + _) / lit(16.0))
       .withColumn("phash", (0 until 16).map(i =>
         when(cell(i) > $"m", lit(1 << i)).otherwise(lit(0))).reduce(_ + _))
-      .select($"doc_id", $"media_type", $"phash")
-      // checkpoint the (doc, hash) rows: ph feeds the bucket aggregate AND
-      // the keeper join, and the opaque per-partition decode kernel would
-      // otherwise re-read + re-decode every media payload per consumer —
-      // decode once, fan out from the small rows (guide §8)
-      .localCheckpoint(eager = false)
+      .select($"doc_id", $"media_type", $"phash"))
     val buckets = ph.groupBy($"phash")
       .agg(count(lit(1)).as("n_group"), min($"doc_id").as("keeper"))
     ph.join(buckets, "phash")
@@ -379,7 +378,7 @@ object Multimodal {
     * run-generation, corpus) like [[mediaFilesDir]].
     */
   private def imageFilesDir(spark: SparkSession, dir: String): String =
-    graft.Scratch.memo(spark, "graft-imagefiles", dir, perRun = true) { base =>
+    Scratch.memo(spark, "graft-imagefiles", dir, perRun = true) { base =>
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(base))
       val w = ImgW
       val seeds = ImgSeeds
@@ -472,17 +471,16 @@ object Multimodal {
   def imageioPhash(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val base = imageFilesDir(spark, dir)
-    val ph = spark.read.format("binaryFile")
+    // decode once: same two-consumer fan-out as [[phashOn]], but here
+    // each re-derivation was a full binaryFile re-read + ImageIO decode
+    val ph = Scratch.reuse(spark.read.format("binaryFile")
       .option("pathGlobFilter", "*.png").load(base)
       .select(
         regexp_extract($"path", "([0-9]+)\\.png$", 1).cast("long").as("_1"),
         $"content".as("_2"))
       .as[(Long, Array[Byte])]
       .mapPartitions(imageDecodeKernel _)
-      .toDF()
-      // decode once: same two-consumer fan-out as [[phashOn]], but here
-      // each re-derivation was a full binaryFile re-read + ImageIO decode
-      .localCheckpoint(eager = false)
+      .toDF())
     val buckets = ph.groupBy($"phash_hi", $"phash_lo")
       .agg(count(lit(1)).as("n_group"), min($"doc_id").as("keeper"))
     ph.join(buckets, Seq("phash_hi", "phash_lo"))

@@ -14,14 +14,13 @@ import org.apache.spark.internal.Logging
   * the leaf grain COLLAPSES the input hard enough — and, at bench-able
   * scale, when the work removed is large enough in ABSOLUTE terms to
   * outrun the rewrite's fixed costs (an extra aggregation stage and its
-  * exchange). Two thresholds, both conf-tunable per rule:
+  * exchange). Three thresholds; the two floors are conf-tunable per rule:
   *
-  *  - [[MaxRatioKey]]: |distinct leaf keys| / |rows| must be ≤ this.
-  *    Default 0.1 — the sf0.1 ledgers put the wall break-even between a
-  *    4:1 collapse (measured LOSS: the leaf hash-aggregate costs more
-  *    than the shuffled rows it saves) and a ~600:1 collapse (measured
-  *    win), so the default demands an order of magnitude. A cluster
-  *    whose exchanges hit real network can loosen it.
+  *  - [[CollapseGate.MaxRatio]]: |distinct leaf keys| / |rows| must be
+  *    ≤ 0.1 — the sf0.1 ledgers put the wall break-even between a 4:1
+  *    collapse (measured LOSS: the leaf hash-aggregate costs more than
+  *    the shuffled rows it saves) and a ~600:1 collapse (measured win), so
+  *    the gate demands an order of magnitude.
   *  - [[MinSavedRowsKey]]: `savedFactor × rows × (1 − ratio)` — the
   *    caller's estimate of rows removed from the pre-shuffle path (the
   *    join exchange for eager aggregation; the Expand replication,
@@ -46,28 +45,23 @@ import org.apache.spark.internal.Logging
   *  2. Else a probe: one `count + approx_count_distinct` pass over the key
   *     columns, executed through [[org.apache.spark.sql.graft.PlanDF]]
   *     with a re-entrancy latch held (rules must skip the probe's own
-  *     optimization), cached per canonicalized (plan, keys, conf). The
-  *     probe's own shape is picked by [[ProbeRowsKey]] / [[SampleModKey]]:
-  *       - `probeRows < 0` (default) + `sampleMod > 1` (default 16): a
-  *         KEY-HASH-SAMPLED probe — rows with `hash(keys) % mod ≠ 0` pass
-  *         only through `count`, and the distinct sketch sees 1/mod of the
-  *         KEYS, each kept or dropped with ALL its rows. Because sampling
-  *         is key-coherent, `d_s / n_s` is an (asymptotically) unbiased
-  *         estimate of ndv/rows at ~1/mod the aggregation cost — unlike a
-  *         LIMIT prefix, which over-observes distincts (see below). The
-  *         exact total row count rides the same single pass.
-  *       - `probeRows < 0` + `sampleMod ≤ 1`: the full exact probe (every
-  *         key into the sketch).
-  *       - `probeRows > 0`: a LIMIT-prefix probe — cheapest, but BIASED
-  *         TOWARD DECLINING when keys are spread uniformly through the
-  *         input (a random 100k-row prefix of a 4-rows-per-key fact covers
-  *         ~73% distinct keys where the full input collapses to 0.25 —
-  *         measured at sf0.1; sampling distinct counts is the classic
-  *         under-observable). Kept as an opt-in for truly enormous
-  *         un-ANALYZEd inputs where even one cheap pass is too much.
-  *       - `probeRows = 0`: gate disabled (the rewrite fires ungated).
+  *     optimization), cached per canonicalized (plan, keys). The probe is
+  *     KEY-HASH-SAMPLED ([[CollapseGate.SampleMod]] = 16): rows with
+  *     `hash(keys) % 16 ≠ 0` pass only through `count`, and the distinct
+  *     sketch sees 1/16 of the KEYS, each kept or dropped with ALL its
+  *     rows. Because sampling is key-coherent, `d_s / n_s` is an
+  *     (asymptotically) unbiased estimate of ndv/rows at ~1/16 the
+  *     aggregation cost — unlike a LIMIT prefix, which over-observes
+  *     distincts (a random 100k-row prefix of a 4-rows-per-key fact covers
+  *     ~73% distinct keys where the full input collapses to 0.25 —
+  *     measured at sf0.1). The exact total row count rides the same
+  *     single pass.
   *
-  * The probe's SCAN is itself bounded ([[ProbeFileFracKey]], default 0.1):
+  * [[ProbeRowsKey]] only switches the gate: unset or negative probes,
+  * `0` disables the gate (the rewrite fires ungated — the forced arms),
+  * and a positive value is rejected.
+  *
+  * The probe's SCAN is itself bounded ([[CollapseGate.ProbeFileFraction]]):
   * when the child reads exactly one file-based relation, the probe scans a
   * deterministic ≤10% subset of its FILES (evenly strided over the sorted
   * path list, so a date-partitioned layout contributes every era) and
@@ -82,40 +76,36 @@ import org.apache.spark.internal.Logging
   *    `d/ns` over a fraction `p` of files over-estimates the true ratio by
   *    at most 1/p — biased TOWARD DECLINING, the cheap failure mode (one
   *    forgone win, never a redundant exchange). A genuinely qualifying
-  *    collapse (the gate demands ≥10×) still reads ≤ p⁻¹·ratio ≪ maxRatio
-  *    at the scales where the rewrite matters.
+  *    collapse (the gate demands ≥10×) still reads ≤ p⁻¹·ratio ≪ the
+  *    maximum ratio at the scales where the rewrite matters.
   *
   * Single-file inputs (the sf0.1 test tables) keep the full scan — there
-  * is nothing to bound; set the fraction to 1 to disable bounding.
+  * is nothing to bound.
   *
-  * Inputs smaller than `minRows` skip the gate — the estimate is too noisy
-  * to act on and the decision too cheap to matter. Streaming children skip
-  * it too (no batch probe possible). A FAILED probe declines the rewrite
-  * without caching: the stock plan is the never-worse fallback, and a
-  * transient failure (cancelled job) must not pin a session-lifetime
-  * decision either way. Either failure mode costs one redundant shuffle or
-  * one forgone win, never a wrong answer.
+  * Inputs smaller than [[CollapseGate.MinRows]] skip the gate — the
+  * estimate is too noisy to act on and the decision too cheap to matter.
+  * Streaming children skip it too (no batch probe possible). A FAILED
+  * probe declines the rewrite without caching: the stock plan is the
+  * never-worse fallback, and a transient failure (cancelled job) must not
+  * pin a session-lifetime decision either way. Either failure mode costs
+  * one redundant shuffle or one forgone win, never a wrong answer.
   */
 final class CollapseGate(rule: String, confPrefix: String,
     defaultMinSavedRows: Long = 0L,
     defaultMinSavedBytes: Long = 0L)
     extends SQLConfHelper with Logging {
 
-  val MaxRatioKey = s"$confPrefix.maxCollapseRatio"
   val ProbeRowsKey = s"$confPrefix.probeRows"
-  val MinRowsKey = s"$confPrefix.minGateRows"
-  val SampleModKey = s"$confPrefix.probeSampleMod"
   val MinSavedRowsKey = s"$confPrefix.minSavedRows"
   val MinSavedBytesKey = s"$confPrefix.minSavedBytes"
-  val ProbeFileFracKey = s"$confPrefix.probeFileFraction"
 
   /** Re-entrancy latch shared by ALL gates on the thread: a probe's own
     * optimization must not probe (rules consult [[probing]] in apply).
     */
   def probing: Boolean = CollapseGate.probing.get
 
-  // (rows, ratio) per canonicalized (plan, keys, probe conf); boxed value
-  // so a missing key reads as null, never as a zero hit
+  // (rows, ratio) per canonicalized (plan, keys); boxed value so a missing
+  // key reads as null, never as a zero hit
   private val ratioCache =
     new java.util.concurrent.ConcurrentHashMap[String, (Long, Double)]()
 
@@ -131,11 +121,11 @@ final class CollapseGate(rule: String, confPrefix: String,
     */
   def ok(child: LogicalPlan, keys: Seq[Expression],
       savedFactor: Double = 1.0): Boolean = {
-    val maxRatio = conf.getConfString(MaxRatioKey, "0.1").toDouble
+    import CollapseGate.{MaxRatio, MinRows}
     val probeRows = conf.getConfString(ProbeRowsKey, "-1").toLong
-    val minRows = conf.getConfString(MinRowsKey, "1000").toLong
-    val sampleMod = conf.getConfString(SampleModKey, "16").toInt
-    val fileFrac = conf.getConfString(ProbeFileFracKey, "0.1").toDouble
+    if (probeRows > 0) throw new IllegalArgumentException(
+      s"$ProbeRowsKey=$probeRows: only a negative value (probe) or 0 " +
+        "(gate off) is supported")
     val minSaved =
       conf.getConfString(MinSavedRowsKey, defaultMinSavedRows.toString).toLong
     val minSavedBytes =
@@ -147,13 +137,13 @@ final class CollapseGate(rule: String, confPrefix: String,
     val rowWidth = child.output.map(_.dataType.defaultSize).sum.max(1)
 
     def decide(rows: Long, ratio: Double): Boolean = {
-      if (rows < minRows) return true // too small to gate: always rewrite
+      if (rows < MinRows) return true // too small to gate: always rewrite
       val saved = savedFactor * rows * (1.0 - ratio)
       val savedBytes = saved * rowWidth
-      val accept = ratio <= maxRatio && saved >= minSaved &&
+      val accept = ratio <= MaxRatio && saved >= minSaved &&
         savedBytes >= minSavedBytes
       if (!accept) logInfo(f"$rule declined: collapse ratio $ratio%.4f " +
-        f"(max $maxRatio), saved rows ≈ $saved%.0f (min $minSaved), " +
+        f"(max $MaxRatio), saved rows ≈ $saved%.0f (min $minSaved), " +
         f"saved bytes ≈ $savedBytes%.0f (min $minSavedBytes)")
       accept
     }
@@ -161,7 +151,7 @@ final class CollapseGate(rule: String, confPrefix: String,
     // --- stats path: rowCount + per-key distinctCount when ANALYZEd ----
     val stats = child.stats
     stats.rowCount match {
-      case Some(rc) if rc.toLong < minRows => return true
+      case Some(rc) if rc.toLong < MinRows => return true
       case Some(rc) =>
         val ndvs = keys.map {
           case a: Attribute =>
@@ -195,13 +185,12 @@ final class CollapseGate(rule: String, confPrefix: String,
     // schema rides along so an Int-hash collision needs a schema match too
     val cacheKey = child.semanticHash().toString + "|" +
       child.output.map(a => a.name + ":" + a.dataType.simpleString)
-        .mkString(";") + "|" + keyTag +
-      "|" + probeRows + "|" + sampleMod + "|" + fileFrac
+        .mkString(";") + "|" + keyTag
     val cached = ratioCache.get(cacheKey)
     val (rows, ratio): (Long, Double) = if (cached != null) cached else {
       CollapseGate.probing.set(true)
       try {
-        import org.apache.spark.sql.catalyst.plans.logical.{Limit, Project}
+        import org.apache.spark.sql.catalyst.plans.logical.Project
         val named = keys.zipWithIndex.map { case (k, i) =>
           Alias(k, s"_gate_k$i")(): NamedExpression
         }
@@ -209,22 +198,16 @@ final class CollapseGate(rule: String, confPrefix: String,
         // of the child's (single) relation, rows scaled back by the byte
         // fraction — see the class doc for the bias story
         val (boundedChild, byteFrac) =
-          if (probeRows < 0) CollapseGate.boundFiles(child, fileFrac)
-          else (child, 1.0)
-        // full probe: no Limit node at all — a huge LIMIT would plan as
-        // CollectLimit and funnel the scan through one partition
-        val probePlan: LogicalPlan =
-          if (probeRows < 0) Project(named, boundedChild)
-          else Limit(Literal(probeRows.min(Int.MaxValue.toLong).toInt),
-            Project(named, child))
-        val probe = org.apache.spark.sql.graft.PlanDF.ofRows(spark, probePlan)
+          CollapseGate.boundFiles(child, CollapseGate.ProbeFileFraction)
+        val probe = org.apache.spark.sql.graft.PlanDF.ofRows(spark,
+          Project(named, boundedChild))
         val keyCols = named.map(n => probe.col(n.name))
-        val mod = if (probeRows < 0) sampleMod else 1 // prefix probe: exact
-        val row = CollapseGate.probeAgg(probe, keyCols, mod).head()
+        val row = CollapseGate.probeAgg(probe, keyCols,
+          CollapseGate.SampleMod).head()
         val n = (row.getLong(0) / byteFrac).toLong
         val ns = row.getLong(1)
         val d = row.getLong(2)
-        // ns == 0 with n > 0: fewer than ~mod distinct keys exist at all —
+        // ns == 0 with n > 0: fewer than ~16 distinct keys exist at all —
         // the collapse is extreme, ratio ≈ 0
         val r = if (ns == 0) 0.0 else d.toDouble / ns.toDouble
         ratioCache.put(cacheKey, (n, r))
@@ -232,10 +215,8 @@ final class CollapseGate(rule: String, confPrefix: String,
       } catch { case e: Throwable =>
         // decline WITHOUT caching: stock is the never-worse plan, and a
         // transient failure must not pin a session-lifetime forced-on (the
-        // old MaxValue sentinel cleared every floor) or forced-off. An
-        // UNCONDITIONAL false — not decide(minRows, 1.0), which a user
-        // running maxCollapseRatio >= 1.0 with zero floors would have
-        // silently ACCEPT on a transient failure, contradicting this log
+        // old MaxValue sentinel cleared every floor) or forced-off: an
+        // UNCONDITIONAL false, whatever the floors
         logWarning(s"$rule probe failed, declining rewrite (not cached): $e")
         return false
       } finally CollapseGate.probing.set(false)
@@ -245,6 +226,18 @@ final class CollapseGate(rule: String, confPrefix: String,
 }
 
 object CollapseGate {
+  /** The largest |distinct leaf keys| / |rows| the gate accepts. */
+  val MaxRatio = 0.1
+
+  /** Inputs with fewer rows skip the gate. */
+  val MinRows = 1000L
+
+  /** The probe's key-hash sample modulus: 1/16 of the keys feed the sketch. */
+  val SampleMod = 16
+
+  /** The probe scans at most this fraction of a single relation's files. */
+  val ProbeFileFraction = 0.1
+
   private val probing = new ThreadLocal[java.lang.Boolean] {
     override def initialValue: java.lang.Boolean = false
   }

@@ -61,12 +61,10 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * extra shuffle for nothing), so it ships OFF behind [[EnabledKey]] —
   * and, enabled, it DECLINES when the measured collapse ratio is poor:
   * the shared [[CollapseGate]] estimates |leaf groups| / |fact rows| from
-  * catalog stats when present, else from a cached count+ndv probe
-  * ([[ProbeRowsKey]]/[[SampleModKey]] pick key-hash-sampled (default),
-  * exact, or bounded-prefix — the gate's doc has the prefix's decline-ward
-  * bias), and bails above [[MaxRatioKey]]; facts under [[MinRowsKey]] rows
-  * skip the gate. The `_eager_` alias prefix on leaf columns is the
-  * fixed-point guard.
+  * catalog stats when present, else from a cached key-hash-sampled
+  * count+ndv probe, and bails above [[CollapseGate.MaxRatio]]; facts
+  * under [[CollapseGate.MinRows]] rows skip the gate. The `_eager_` alias
+  * prefix on leaf columns is the fixed-point guard.
   */
 object EagerAggregation extends Rule[LogicalPlan] with PredicateHelper {
 
@@ -80,28 +78,14 @@ object EagerAggregation extends Rule[LogicalPlan] with PredicateHelper {
     new CollapseGate("eager aggregation", "spark.sql.graft.eagerAggregation",
       defaultMinSavedRows = 0L, defaultMinSavedBytes = 4L << 20)
 
-  /** Decline threshold: estimated |leaf groups| / |fact rows| above this
-    * means the leaf aggregate barely collapses anything and its exchange
-    * is pure cost. 0.5 = the leaf must at least halve the fact.
-    */
-  val MaxRatioKey: String = gate.MaxRatioKey
-
-  /** Probe size. NEGATIVE (the default): one pass over the key columns,
-    * KEY-HASH-SAMPLED by [[SampleModKey]] (default 1/16 of keys into the
-    * distinct sketch — an unbiased collapse-ratio estimate, unlike a
-    * prefix; set the mod to 1 for the exact full probe). POSITIVE: a
-    * bounded LIMIT-prefix probe — cheapest, but BIASED TOWARD DECLINING
-    * when keys are spread uniformly through the file (a random 100k-row
-    * prefix of a 4-rows-per-key fact covers ~73% distinct keys, reading
-    * as ratio 0.73 where the full fact collapses to 0.25 — measured at
-    * sf0.1). 0 disables the gate entirely (the forced-on ledger arm). At
-    * cluster scale prefer ANALYZE'd catalog stats (free); the sampled
-    * probe reads the key columns once per distinct fact plan per session.
+  /** Gate switch. Unset or NEGATIVE (the default): one key-hash-sampled
+    * pass over the key columns when the fact has no catalog stats. 0
+    * disables the gate entirely (the forced-on ledger arm); a positive
+    * value is rejected. At cluster scale prefer ANALYZE'd catalog stats
+    * (free); the sampled probe reads the key columns once per distinct
+    * fact plan per session.
     */
   val ProbeRowsKey: String = gate.ProbeRowsKey
-
-  /** Key-hash sample modulus for the default probe (see [[ProbeRowsKey]]). */
-  val SampleModKey: String = gate.SampleModKey
 
   /** Absolute floor on estimated rows removed from the join exchange
     * (default 0 = off — this rule's floor is [[MinSavedBytesKey]]). */
@@ -119,11 +103,6 @@ object EagerAggregation extends Rule[LogicalPlan] with PredicateHelper {
     * clears it by seven orders of magnitude.
     */
   val MinSavedBytesKey: String = gate.MinSavedBytesKey
-
-  /** Facts smaller than this skip the gate (estimate too noisy to act on,
-    * decision too cheap to matter).
-    */
-  val MinRowsKey: String = gate.MinRowsKey
 
   private val Tag = "_eager_"
 

@@ -16,11 +16,11 @@ import org.apache.spark.sql.functions._
   * per order. Measured at sf0.1: shuffle bytes HALVE (4.2 MB from 8.1 MB)
   * but wall REGRESSES — the leaf hash-aggregate over 600k rows into 150k
   * keys costs more than the in-memory shuffle it saves. That is exactly a
-  * 4:1 collapse, and why the gate's default [[EagerAggregation.MaxRatioKey]]
+  * 4:1 collapse, and why the gate's [[CollapseGate.MaxRatio]]
   * (0.1) DECLINES here: the `opt_eager_agg_gated` arm must plan identical
   * to `opt_eager_agg_base`. The byte term still turns into network + spill
-  * on a cluster — a cluster operator loosens the ratio; the ledger states
-  * the trade at the only scale it can run.
+  * on a cluster, where a looser ratio could pay; the ledger states the
+  * trade at the only scale it can run.
   *
   * HIGH-COLLAPSE fixture: the same lineitem joined to the SUPPLIER dim —
   * the leaf grain is `l_suppkey` (~600 line items per supplier at sf0.1, a

@@ -81,13 +81,12 @@ object IvmSetQueries {
     // ONE lineitem scan lands both slices: aggregating at (yr, mo, late)
     // grain partitions the rows exactly as the two filtered setsOf calls
     // did (late is a grouping key, so each set/count sees only its slice),
-    // and the lazy checkpoint lets the v0 write and the delta merge share
-    // the pass instead of re-scanning the fact per consumer.
-    val byLate = keyed(spark, dir)
+    // and reusing it lets the v0 write and the delta merge share the pass
+    // instead of re-scanning the fact per consumer.
+    val byLate = Scratch.reuse(keyed(spark, dir)
       .groupBy($"yr", $"mo", $"late")
       .agg(collect_set($"l_suppkey").as("supp_set"),
-        count(lit(1)).as("n_items"))
-      .localCheckpoint(eager = false)
+        count(lit(1)).as("n_items")))
     byLate.filter(!$"late").select($"yr", $"mo", $"supp_set", $"n_items")
       .write.mode("overwrite").parquet(s"$scratch/v0")
     val delta = byLate.filter($"late")
@@ -187,19 +186,16 @@ object IvmSetQueries {
     // different filter of the same join result, and deriving each straight
     // from Tables.lineitem re-scanned + re-joined the full-width base per
     // action — 6 scans where one suffices (the r12 judge's slowest-entry
-    // finding). A scratch intermediate, not durable state, so the eager
-    // localCheckpoint (serialized blocks, one job) replaces the r13 first
-    // sitting's parquet write+read-back — same flag-once-fan-out shape,
-    // one fewer write commit.
-    val rows = Tables.lineitem(spark, dir)
+    // finding). Eager: the two overlapped writes below read it from two
+    // threads, and two lazy readers would both compute the one RDD.
+    val rows = Scratch.reuse(Tables.lineitem(spark, dir)
       .join(broadcast(del), $"l_orderkey" === $"o_orderkey", "left")
       .select(
         year($"l_shipdate").cast("int").as("yr"),
         month($"l_shipdate").cast("int").as("mo"),
         $"l_suppkey",
         (pmod($"l_orderkey", lit(LateMod)) === 0).as("late"),
-        coalesce($"bad_", lit(false)).as("bad"))
-      .localCheckpoint()
+        coalesce($"bad_", lit(false)).as("bad")), eager = true)
     // the rewritten base table (setup, like the warehouse build): what the
     // forget cascade leaves behind; the consumer and the defining read THIS
     // as a bare relation — the rewrite gate's sameResult match is anchored
@@ -208,7 +204,7 @@ object IvmSetQueries {
     // table, not a filter view over `rows` (r13 tried the view: the gate
     // declined and the consumer fell back to the base scan).
     // The current rebuild and the v0 state build are INDEPENDENT reads of
-    // the checkpointed blocks — overlapped from a two-thread pool (guide
+    // the reused blocks — overlapped from a two-thread pool (guide
     // §2.6: actions are only sequential because the driver calls them
     // sequentially; the second job's tasks back-fill the first's tail).
     import scala.concurrent.{Await, Future}

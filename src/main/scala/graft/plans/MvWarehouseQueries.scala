@@ -167,13 +167,12 @@ object MvWarehouseQueries {
     // (nationkey, d_ord, d_cust) grain yields V0's term AND all three
     // delta terms — the stock form ran the same join four times (4 orders
     // + 4 customer scans → 1 + 1). The sliced frame is nation-count × 4
-    // rows, lazily checkpointed; each term below is a filter of it, and
-    // per slice the aggregate values are identical to the per-term joins
-    // (disjoint row classes, same count/sum).
-    val sliced = o.join(c, "custkey")
+    // rows, reused by its four terms; each term below is a filter of it,
+    // and per slice the aggregate values are identical to the per-term
+    // joins (disjoint row classes, same count/sum).
+    val sliced = Scratch.reuse(o.join(c, "custkey")
       .groupBy($"nationkey", $"d_ord", $"d_cust")
-      .agg(count(lit(1)).as("n_orders"), sum($"price").as("revenue"))
-      .localCheckpoint(eager = false)
+      .agg(count(lit(1)).as("n_orders"), sum($"price").as("revenue")))
     def term(ordDelta: Boolean, custDelta: Boolean) =
       sliced.filter($"d_ord" === ordDelta && $"d_cust" === custDelta)
         .select($"nationkey", $"n_orders", $"revenue")

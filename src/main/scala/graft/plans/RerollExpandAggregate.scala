@@ -98,16 +98,14 @@ object RerollExpandAggregate extends Rule[LogicalPlan] {
     * (default floor 2M saved rows: the sf0.1 ledger measured a G=3 rollup
     * over 150k rows wall-NEGATIVE and a G=16 cube over 600k rows
     * wall-positive; 100 TB inputs clear the floor by six orders of
-    * magnitude). Keys: `spark.sql.graft.rollupReroll.{maxCollapseRatio,
-    * probeRows,probeSampleMod,minGateRows,minSavedRows}`, same semantics
-    * as eager aggregation's.
+    * magnitude). Keys: `spark.sql.graft.rollupReroll.{probeRows,
+    * minSavedRows,minSavedBytes}`, same semantics as eager aggregation's.
     */
   private[plans] val gate =
     new CollapseGate("rollup re-roll", "spark.sql.graft.rollupReroll",
       defaultMinSavedRows = 2000000L)
 
   /** Gate conf keys (see [[EagerAggregation]]'s twins for semantics). */
-  val MaxRatioKey: String = gate.MaxRatioKey
   val ProbeRowsKey: String = gate.ProbeRowsKey
   val MinSavedRowsKey: String = gate.MinSavedRowsKey
 

@@ -1,6 +1,6 @@
 package graft.privacy
 
-import graft.Tables
+import graft.{Scratch, Tables}
 import graft.functions.GraftFunctions.round2
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -197,12 +197,11 @@ object Privacy {
     // (sum of c_gv over classes / over everything), so deriving them from
     // `cv` instead of from `rows` deletes two full re-runs of the
     // qi⋈orders⋈lineitem join (r13 profile: 3.24M scan rows → 1.4M). The
-    // checkpoint pins the class×brand table (QI-domain × brand-vocabulary
-    // bounded) so its three consumers don't re-aggregate.
-    val cv = rows
+    // class×brand table (QI-domain × brand-vocabulary bounded) is reused
+    // so its three consumers don't re-aggregate.
+    val cv = Scratch.reuse(rows
       .groupBy($"age_group", $"sex", $"location", $"p_brand")
-      .agg(count(lit(1)).as("c_gv"))
-      .localCheckpoint(eager = false)
+      .agg(count(lit(1)).as("c_gv")))
     val marginal = cv.groupBy($"p_brand").agg(sum($"c_gv").as("c_v"))
     val total = marginal.agg(sum($"c_v").as("n"))
     val classValue = cv

@@ -1,6 +1,6 @@
 package graft.similarity
 
-import graft.Tables
+import graft.{Scratch, Tables}
 import graft.functions.GraftFunctions.round2
 import graft.functions.TopK
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -50,7 +50,7 @@ object GraphSearch {
   val EntryNode = 0L
 
   def graphGreedySearch(spark: SparkSession, dir: String): DataFrame =
-    graft.Scratch.memo(spark, "graft-graph-search", dir, perRun = true)(
+    Scratch.memo(spark, "graft-graph-search", dir, perRun = true)(
       _ => searchImpl(spark, dir))
 
   private def searchImpl(spark: SparkSession, dir: String): DataFrame = {
@@ -111,11 +111,12 @@ object GraphSearch {
     var state = probes.select($"query_id", $"q_emb",
       lit(EntryNode).as("cur"), lit(-2.0).as("qcos"), lit(1).as("rk"))
     val hops = (1 to Rounds).map { r =>
-      // localCheckpoint breaks the lineage so the 4 hop columns + final
-      // row don't each re-run every earlier round (beam state is
-      // ≤ probes×Beam rows — checkpointing it is free; without it the
-      // plan recomputes the frontier expansion ~14×: 18.8 s → ~3 s)
-      state = hop(state).localCheckpoint()
+      // each hop is reused so the 4 hop columns + final row don't each
+      // re-run every earlier round (beam state is ≤ probes×Beam rows;
+      // without it the plan recomputes the frontier expansion ~14×:
+      // 18.8 s → ~3 s). Eager: each hop runs while the search is built, so
+      // the memoized search holds four finished beam states.
+      state = Scratch.reuse(hop(state), eager = true)
       r -> state.filter($"rk" === 1)
         .select($"query_id", $"cur".as(s"hop$r"))
     }

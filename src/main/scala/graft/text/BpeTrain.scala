@@ -1,6 +1,6 @@
 package graft.text
 
-import graft.Tables
+import graft.{Scratch, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -37,23 +37,22 @@ object BpeTrain {
   val Rounds = 5
 
   def bpeTrain(spark: SparkSession, dir: String): DataFrame =
-    graft.Scratch.memo(spark, "graft-bpe", dir, perRun = true) { _ =>
+    Scratch.memo(spark, "graft-bpe", dir, perRun = true) { _ =>
       import spark.implicits._
-      // localCheckpoint makes the "corpus collapses ONCE" scale shape
-      // REAL: the merge loop below runs 2 driver actions per round (argmax
-      // + token count), and without materialization each action re-derived
-      // the word table from the raw corpus — 2·Rounds corpus scans where
-      // the algorithm needs one (r13 fresh profile: 3.0 s → the loop's
-      // honest vocabulary-sized cost). Each round's substitution is also
-      // re-checkpointed so lineage stays one replace deep.
-      var words = Tables.documents(spark, dir)
+      // reusing the word table makes the "corpus collapses ONCE" scale
+      // shape REAL: the merge loop below runs 2 Spark actions per round
+      // (argmax + token count), and without it each action re-derived the
+      // word table from the raw corpus — 2·Rounds corpus scans where the
+      // algorithm needs one (r13 fresh profile: 3.0 s → the loop's honest
+      // vocabulary-sized cost). Each round's substitution is reused too,
+      // so lineage stays one replace deep.
+      var words = Scratch.reuse(Tables.documents(spark, dir)
         .select(explode(split(trim(lower($"text")), "\\s+")).as("w"))
         .filter($"w".rlike("^[a-z]{2,}$"))
         .groupBy($"w").agg(count(lit(1)).as("n"))
         // " l o w " — every symbol space-bounded on both sides
         .select(concat(lit(" "),
-          regexp_replace($"w", "(.)", "$1 ")).as("sym"), $"n")
-        .localCheckpoint(eager = false)
+          regexp_replace($"w", "(.)", "$1 ")).as("sym"), $"n"))
       val ledger = (1 to Rounds).map { r =>
         val toks = words.select($"n",
           split(trim($"sym"), " ").as("arr"))
@@ -69,9 +68,8 @@ object BpeTrain {
           best.getLong(2))
         // the same non-regex replace() both engines define identically;
         // symbols are [a-z]+ so the interpolated literal needs no quoting
-        words = words.select(
-          expr(s"replace(sym, ' $l $rt ', ' $l$rt ')").as("sym"), $"n")
-          .localCheckpoint(eager = false)
+        words = Scratch.reuse(words.select(
+          expr(s"replace(sym, ' $l $rt ', ' $l$rt ')").as("sym"), $"n"))
         val tokensAfter = words
           .select(($"n" * (size(split(trim($"sym"), " ")))).as("t"))
           .agg(sum($"t")).as[Long].collect()(0)

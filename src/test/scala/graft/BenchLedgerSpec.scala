@@ -54,6 +54,13 @@ class BenchLedgerSpec extends SparkSpec {
     assert(node.path("sf").asText == oddSf)
   }
 
+  test("a sample times the query's construction too") {
+    val (prof, hi) = Bench.sample { Thread.sleep(300); spark.range(1).toDF() }
+    assert(prof.outputRows == 1)
+    assert(prof.wallMs >= 300, prof)
+    assert(hi >= 0.3, hi)
+  }
+
   test("the stdout line is pure ASCII and reads back equal, em dash included") {
     val node = json.createObjectNode()
       .put("claim", "exec — window parity — see asof_skew")

@@ -128,7 +128,7 @@ class EagerAggSpec extends SparkSpec {
     s.conf.set(EagerAggregation.MinSavedRowsKey, "0")
     s.conf.set(EagerAggregation.MinSavedBytesKey, "0")
     import s.implicits._
-    // 5000 rows ≥ the gate's minGateRows floor; key = id → ratio ≈ 1.0
+    // 5000 rows ≥ the gate's MinRows floor; key = id → ratio ≈ 1.0
     val factU = s.range(5000).selectExpr("id AS k", "id % 7 AS v")
     val dimU = s.range(5000)
       .selectExpr("id AS dk", "CAST(id % 3 AS STRING) AS grp")
@@ -159,6 +159,20 @@ class EagerAggSpec extends SparkSpec {
     val qU2 = factU2.join(dimU2, factU2("k") === dimU2("dk"))
       .groupBy(dimU2("grp")).agg(sum(factU2("v")).as("sv"))
     assert(aggBelowJoin(qU2), "probeRows=0 must disable the gate")
+
+    // the LIMIT-prefix probe is gone: a positive size is rejected by name
+    val s3 = ruleSession
+    s3.conf.set(EagerAggregation.ProbeRowsKey, "100")
+    val factP = s3.range(5000).selectExpr("id AS k", "id % 7 AS v")
+    val dimP = s3.range(5000)
+      .selectExpr("id AS dk", "CAST(id % 3 AS STRING) AS grp")
+      .dropDuplicates("dk")
+    val err = intercept[Exception](factP.join(dimP, factP("k") === dimP("dk"))
+      .groupBy(dimP("grp")).agg(sum(factP("v")).as("sv"))
+      .queryExecution.optimizedPlan)
+    val iae = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .collectFirst { case e: IllegalArgumentException => e }
+    assert(iae.exists(_.getMessage.contains(EagerAggregation.ProbeRowsKey)), err)
   }
 
   test("probe result is cached across query constructions (one probe per plan)") {

@@ -141,7 +141,11 @@ class PropertySpec extends SparkSpec {
       // the top-k kernel's consumers: merge order of the partial buffers
       // must not change the selection
       "sim_bruteforce_topk", "sim_ann_lsh_topk", "sim_ivf_topk",
-      "sim_two_stage_topk", "sim_hubness")
+      "sim_two_stage_topk", "sim_hubness",
+      // the Scratch.reuse sites: a reused intermediate must read back the
+      // same rows whatever the partitioning it was computed under
+      "etl_cleanse", "etl_quarantine", "etl_dead_letter_replay",
+      "dedup_clusters", "graph_kcore", "mm_phash_dedup")
     val prev = spark.conf.get("spark.sql.shuffle.partitions")
     try {
       for (name <- names) {

@@ -7,8 +7,10 @@ import java.util.concurrent.atomic.AtomicInteger
 /** The [[Scratch]] memo contract: builds nest, a failed build is retried,
   * concurrent callers share one build, perRun entries follow
   * [[Memos.newGeneration]], and releasing one application leaves the others
-  * alone. Every test uses its own family so entries never collide across
-  * tests; the shared session never stops, so release is called directly.
+  * alone; keys never sanitize into hidden leaves; and [[Scratch.reuse]]
+  * keeps the local master's single-replica plan. Every test uses its own
+  * family so entries never collide across tests; the shared session never
+  * stops, so release is called directly.
   */
 class ScratchSpec extends SparkSpec {
 
@@ -96,5 +98,32 @@ class ScratchSpec extends SparkSpec {
 
     assert(liveEntry() == livePath && live.get == 1)
     assert(new File(livePath).isDirectory)
+  }
+
+  test("an absolute key's leaf is not hidden, and a parquet under it reads back") {
+    val f = family("hidden")
+    val leaf = new File(Scratch.path(spark, f, "/x/sf0.01")).getName
+    assert(!leaf.startsWith("_") && !leaf.startsWith("."), leaf)
+    val df = Scratch.parquet(spark, f, "/x/sf0.01")(spark.range(3).toDF("id"))
+    assert(df.inputFiles.nonEmpty)
+    assert(df.collect().map(_.getLong(0)).sorted.toSeq == Seq(0L, 1L, 2L))
+  }
+
+  test("reuse on a local master keeps one replica; the replicated level gives the same rows") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.LogicalRDD
+    import org.apache.spark.storage.StorageLevel
+    def rdd(df: DataFrame) = df.queryExecution.analyzed
+      .collectFirst { case r: LogicalRDD => r.rdd }.get
+    val base = spark.range(0, 1000, 1, 4).selectExpr("id", "id % 7 AS g")
+      .groupBy("g").count()
+    assert(spark.sparkContext.isLocal)
+    val reused = Scratch.reuse(base)
+    assert(rdd(reused).getStorageLevel.replication == 1)
+    val replicated = base.localCheckpoint(eager = false, StorageLevel.MEMORY_AND_DISK_2)
+    assert(rdd(replicated).getStorageLevel.replication == 2)
+    assert(reused.collect().map(_.toString).sorted.toSeq ==
+      replicated.collect().map(_.toString).sorted.toSeq)
+    assert(Scratch.reuse(base, eager = true).collect().length == 7)
   }
 }
