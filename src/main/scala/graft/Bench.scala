@@ -96,26 +96,23 @@ object Bench {
     * ran ~2× its twin, and without min-of-2 a contended sample still skewed
     * sub-second identical plans ~1.4×. The spread is published so a reader
     * (and the noise flags) can tell arm-level noise from a real gap without
-    * hand-re-running.
+    * hand-re-running. Each run is a [[QueryMetrics.profile]]; the result
+    * is the faster profile and the slower sample's seconds. A sample's
+    * clock starts before `mk` builds the query, so eager work done during
+    * construction counts in `wallMs`.
     */
-  def minOf2[A](run: () => A)(seconds: A => Double): (A, Double) = {
-    run()
-    val a = run(); val b = run()
-    if (seconds(a) <= seconds(b)) (a, seconds(b)) else (b, seconds(a))
-  }
-
-  /** [[minOf2]] over [[QueryMetrics.profile]]: the faster profile and the
-    * slower sample's seconds. A sample's clock starts before `mk` builds
-    * the query, so eager work done during construction counts in `wallMs`.
-    */
-  def sample(mk: => DataFrame): (QueryMetrics.Profile, Double) =
-    minOf2 { () =>
+  def sample(mk: => DataFrame): (QueryMetrics.Profile, Double) = {
+    def run() = {
       val t0 = System.nanoTime()
       val df = mk
       val builtMs = (System.nanoTime() - t0) / 1000000L
       val p = QueryMetrics.profile(df)._2
       p.copy(wallMs = builtMs + p.wallMs)
-    }(_.wallMs / 1e3)
+    }
+    run()
+    val a = run(); val b = run()
+    if (a.wallMs <= b.wallMs) (a, b.wallMs / 1e3) else (b, a.wallMs / 1e3)
+  }
 
   /** The bench's populate phase (untimed setup, like the reference's
     * warehouse build): every memoized build artifact is pre-warmed so

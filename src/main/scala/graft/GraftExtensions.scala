@@ -1,73 +1,74 @@
 package graft
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
 
-/** Library entry point for SQL users: the graft native functions, installed
-  * at session build time via the standard extensions mechanism —
+/** What graft adds to a Spark session, in one place: the native functions
+  * ([[GraftExtensions.functions]]), the optimizer rules
+  * ([[GraftExtensions.rules]]), the as-of join strategy and the `graft_gen`
+  * table function. Two routes bind the same objects:
   *
-  *   spark-submit --conf spark.sql.extensions=graft.GraftExtensions ...
+  *   - the extensions mechanism, for sessions built with
+  *     `spark-submit --conf spark.sql.extensions=graft.GraftExtensions` or
+  *     `SparkSession.builder().withExtensions(new GraftExtensions())`, after
+  *     which `SELECT graft_cosine(a, b)` works from plain SQL;
+  *   - [[GraftExtensions.install]], for a session built without it:
+  *     [[LocalSession]], every [[plans.ChildSession]] and, through the
+  *     registry's entry map, any session a caller hands to
+  *     [[SparkEntry.queries]].
   *
-  * or `SparkSession.builder().withExtensions(new GraftExtensions())`. After
-  * that, `SELECT graft_cosine(a, b)` / `graft_plane_dot(v, id)` /
-  * `graft_winnow(text)` work from plain SQL with no Scala imports — the
-  * route a mixed SQL/Scala team consumes a function library through.
-  *
-  * The operator modules also self-register these names lazily
-  * (`Similarity.register`, `TextAnalysis.winnowDf`) so the DataFrame API
-  * needs no session configuration; both paths bind the same Expression
-  * classes, so plans are identical either way.
+  * Policy: every rule is present in every session and stays off until the
+  * session sets its `EnabledKey` to true, so a query plans the same way
+  * whichever session runs it and whatever ran before it there. The one
+  * exception is [[plans.PushFilterThroughAsOf]], on by default: it matches
+  * only graft's own as-of node, owing the optimizer the pushdown Catalyst
+  * cannot infer through it.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     GraftExtensions.functions.foreach(ext.injectFunction)
-    // optimizer extension: redundant-enrichment-join elimination (a rewrite
-    // OSS Catalyst lacks; soundness conditions in the rule's doc)
-    ext.injectOptimizerRule(_ => graft.plans.EliminateRedundantLeftJoin)
-    // planner extension: the native as-of merge join (AsOfJoinPlan →
-    // AsOfJoinExec); DataFrame users get it lazily via AsOfJoin.register
-    ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
-    // ... and the node's own filter-pushdown rule (custom operators owe
-    // the optimizer the rewrites it cannot infer)
-    ext.injectOptimizerRule(_ => graft.plans.PushFilterThroughAsOf)
-    // multi-grain re-roll: aggregate once below the Expand (session opt-in
-    // via its EnabledKey — a cost-based choice the rule can't make alone)
-    ext.injectOptimizerRule(_ => graft.plans.RerollExpandAggregate)
-    // matview query rewriting: answer raw-table aggregates from registered
-    // pre-aggregates (session opt-in via its EnabledKey)
-    ext.injectOptimizerRule(_ => graft.plans.MvRewrite)
-    // eager aggregation: collapse the fact side of a unique-keyed star
-    // join before the join (session opt-in via its EnabledKey)
-    ext.injectOptimizerRule(_ => graft.plans.EagerAggregation)
-    // union-of-aggregates merge: one grouping-sets scan instead of one
-    // scan per hand-written grain (session opt-in via its EnabledKey)
-    ext.injectOptimizerRule(_ => graft.plans.MergeUnionAggregates)
-    // generated-column partition pruning: derive partition predicates from
-    // data-column filters via layout invariants (session opt-in)
-    ext.injectOptimizerRule(_ => graft.plans.DerivedPartitionFilter)
-    // file-level data skipping: prune the scan's file list from the
-    // layout's stats sidecar (session opt-in via its EnabledKey)
-    ext.injectOptimizerRule(_ => graft.plans.FileSkipIndex)
-    // table-valued function surface: SELECT ... FROM graft_gen(n)
-    ext.injectTableFunction(graft.sources.v2.GenTvf.Info)
+    GraftExtensions.rules.foreach(r => ext.injectOptimizerRule(_ => r))
+    ext.injectPlannerStrategy(_ => plans.AsOfJoinStrategy)
+    ext.injectTableFunction(sources.v2.GenTvf.Info)
   }
 }
 
 object GraftExtensions {
 
-  /** Lazy self-registration path for the DataFrame API (no session config
-    * needed): installs every native function as a temp function with the
-    * SAME arity-guarded builders the extension path uses. A name the
-    * session's registry already holds (an earlier call, or the extension
-    * path) is left as it is, so repeated calls cost one lookup per name.
+  /** Every graft optimizer rule, in the order the optimizer runs them. */
+  val rules: Seq[Rule[LogicalPlan]] = Seq(
+    plans.EliminateRedundantLeftJoin,
+    plans.PushFilterThroughAsOf,
+    plans.RerollExpandAggregate,
+    plans.MvRewrite,
+    plans.EagerAggregation,
+    plans.MergeUnionAggregates,
+    plans.DerivedPartitionFilter,
+    plans.FileSkipIndex)
+
+  /** Add graft to a session built without the extension: the functions
+    * and `graft_gen` as temp functions, the as-of strategy and every rule
+    * in [[rules]] order. Idempotent: what the session already holds (an
+    * earlier call, or the extension route for functions) stays as it is.
     */
-  def registerAll(spark: org.apache.spark.sql.SparkSession): Unit = {
+  def install(spark: SparkSession): Unit = synchronized {
     val registry = spark.sessionState.functionRegistry
     functions.foreach { case (id, _, builder) =>
       if (!registry.functionExists(id))
         registry.createOrReplaceTempFunction(id.funcName, builder, "built-in")
     }
+    val tvfs = spark.sessionState.tableFunctionRegistry
+    val (gen, _, genPlan) = sources.v2.GenTvf.Info
+    if (!tvfs.functionExists(gen))
+      tvfs.createOrReplaceTempFunction(gen.funcName, genPlan, "built-in")
+    val x = spark.experimental
+    if (!x.extraStrategies.contains(plans.AsOfJoinStrategy))
+      x.extraStrategies = x.extraStrategies :+ plans.AsOfJoinStrategy
+    val missing = rules.filterNot(x.extraOptimizations.contains)
+    if (missing.nonEmpty) x.extraOptimizations = x.extraOptimizations ++ missing
   }
 
   /** Arity gate: a named, actionable error at analysis time instead of a

@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 
 /** The session every main runs on: `local[$SPARK_GRAFT_CPUS]` (default 32)
   * with as many shuffle partitions, UTC session time zone, no UI and WARN
-  * logging.
+  * logging, with graft [[GraftExtensions.install]]ed.
   */
 object LocalSession {
   def apply(): SparkSession = {
@@ -16,6 +16,7 @@ object LocalSession {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    GraftExtensions.install(spark)
     spark
   }
 }

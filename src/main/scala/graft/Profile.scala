@@ -4,19 +4,18 @@ import org.apache.spark.sql.execution.ExplainMode
 
 /** Ad-hoc profiling main for the optimization rounds: same session shape
   * and populate phase as [[Bench]], then for each named query prints a
-  * metrics line ([[Bench.sample]]: the bench ledgers' warm min-of-2
+  * metrics line ([[Bench.sample]]: the bench ledgers' min-of-2
   * [[observability.QueryMetrics.profile]]) and optionally dumps the
-  * `explain("formatted")` plan to a file.
+  * `explain("formatted")` plan to a file. Each sample starts a new
+  * [[Memos.newGeneration]] before it builds the entry, so a memoized
+  * per-run build repeats inside the sample's clock.
   *
-  * Usage: `Profile <sfDir> <q1,q2,...> [explainDir] [tag] [fresh]`
+  * Usage: `Profile <sfDir> <q1,q2,...> [explainDir] [tag]`
   *   - metrics go to stdout as one line per query:
   *     `PROFILE name wall_s scanRows scanBytes shuffleBytes shuffleRecs
   *      spillBytes expandRows outputRows`
   *   - with `explainDir`, each query's formatted plan lands at
   *     `<explainDir>/<name>_<tag>.txt` (tag defaults to "before").
-  *   - `fresh` times bench-style instead (`PROFILE name wall_s fresh`):
-  *     [[Bench.noopSeconds]] runs with [[Memos.newGeneration]] before each,
-  *     so memoized builds are re-run inside the clock.
   *   - exits with status 1, after the other names, when a name is unknown
   *     or its run fails.
   *
@@ -30,10 +29,6 @@ object Profile {
     val explainDir = if (args.length > 2 && args(2).nonEmpty) Some(args(2))
       else None
     val tag = if (args.length > 3) args(3) else "before"
-    // "fresh" repeats memoized work per run (the bench second-sample
-    // discipline): entries whose timed work is a memoized build must
-    // re-run it, not hit the memo
-    val fresh = args.length > 4 && args(4) == "fresh"
     val spark = LocalSession()
     Bench.populate(spark, sfDir)
     val qs = SparkEntry.queries
@@ -44,22 +39,14 @@ object Profile {
       case Some(fn) =>
         spark.sparkContext.setJobDescription(s"profile:$name")
         try {
-          if (fresh) {
-            // Memos.newGeneration before each run so the memoized build
-            // repeats inside the noop timer's clock — the bench
-            // second-sample discipline
-            val (t, hi) = Bench.minOf2 { () =>
-              Memos.newGeneration()
-              Bench.noopSeconds(fn(spark, sfDir))
-            }(identity)
-            println(f"PROFILE $name $t%.3f fresh hi=$hi%.3f")
-          } else {
-            val (p, hi) = Bench.sample(fn(spark, sfDir))
-            println(f"PROFILE $name ${p.wallMs / 1e3}%.3f ${p.scanRows} " +
-              s"${p.scanBytes} ${p.shuffleWriteBytes} ${p.shuffleRecordsWritten} " +
-              s"${p.spillBytes} ${p.expandRows} ${p.outputRows} " +
-              f"hi=$hi%.3f")
+          val (p, hi) = Bench.sample {
+            Memos.newGeneration()
+            fn(spark, sfDir)
           }
+          println(f"PROFILE $name ${p.wallMs / 1e3}%.3f ${p.scanRows} " +
+            s"${p.scanBytes} ${p.shuffleWriteBytes} ${p.shuffleRecordsWritten} " +
+            s"${p.spillBytes} ${p.expandRows} ${p.outputRows} " +
+            f"hi=$hi%.3f")
           explainDir.foreach { d =>
             val f = new java.io.File(d, s"${name}_$tag.txt")
             f.getParentFile.mkdirs()

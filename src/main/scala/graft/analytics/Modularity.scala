@@ -33,12 +33,12 @@ object Modularity {
   def modularity(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     // both inputs are nation-graph-sized (≤ |nations|² edges, |nations|
-    // labels) but each re-derivation replays the corpus-scale trade-edge
-    // aggregate / the full unrolled LPA chain; reusing them lets the
-    // three consumers below (degree mass, intra mass, total) compute each
-    // exactly once
+    // labels) but a re-derivation of the edges replays the corpus-scale
+    // trade-edge aggregate; reusing them lets the three consumers below
+    // (degree mass, intra mass, total) compute the edges exactly once. The
+    // labels are already the last LPA round's reuse.
     val dense = Scratch.reuse(LpaCommunities.denseEdges(spark, dir))
-    val lbl = Scratch.reuse(LpaCommunities.labelsDf(spark, dir))
+    val lbl = LpaCommunities.labelsDf(spark, dir)
     val tot = dense.agg(sum($"w").as("two_w"))
     val degC = dense.groupBy($"v").agg(sum($"w").as("dv"))
       .join(lbl, "v")

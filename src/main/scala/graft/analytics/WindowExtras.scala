@@ -816,7 +816,6 @@ ORDER BY g_y, g_q, g_s, y, q, status""")
     */
   def kmvNative(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    graft.GraftExtensions.registerAll(spark)
     Tables.events(spark, dir)
       .select($"event_type", graft.functions.Md5Hash
         .h32(concat(lit("kmv:"), $"user_id".cast("string"))).as("h"))

@@ -55,7 +55,6 @@ object CdcChunks {
   private[graft] def cdcLedgerDf(docs: DataFrame): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    graft.GraftExtensions.registerAll(spark)
     val chunks = docs
       .select($"doc_id", explode(expr("graft_cdc_chunks(text)")).as("ch"))
       .select($"doc_id", $"ch.fp".as("fp"), $"ch.s".as("s"))

@@ -108,7 +108,6 @@ object FuzzyJoin {
     */
   def fuzzyPairsBanded(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    graft.GraftExtensions.registerAll(spark)
     cappedPairs(spark, dir, (pa, pb) =>
         call_function("graft_edit_within", pa, pb, lit(MaxDist)))
       .filter($"dist" <= MaxDist)

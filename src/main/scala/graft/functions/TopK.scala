@@ -228,7 +228,6 @@ object TopK {
     */
   def rank(df: DataFrame, group: Seq[String], score: String, id: String,
       k: Int): DataFrame = {
-    graft.GraftExtensions.registerAll(df.sparkSession)
     val keys = group.map(col)
     df.groupBy(keys: _*)
       .agg(expr(s"graft_topk_pairs(CAST(`$score` AS DOUBLE), " +

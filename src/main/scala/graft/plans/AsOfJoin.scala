@@ -9,7 +9,7 @@ import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
 import org.apache.spark.sql.execution.metric.SQLMetrics
 import org.apache.spark.sql.graft.PlanDF
 import org.apache.spark.sql.types.LongType
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Native AS-OF join — the whole Catalyst extension stack for one operator
   * Spark lacks: a custom [[LogicalPlan]] node, a planner [[SparkStrategy]],
@@ -61,8 +61,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Reference motivation: the attribution queries' "latest prior event"
   * pattern (`sql/analytics_queries.sql` latest-report-per-patient shapes);
-  * registered via [[graft.GraftExtensions]] (`injectPlannerStrategy`) and
-  * lazily through `spark.experimental.extraStrategies` for DataFrame users.
+  * planned by [[AsOfJoinStrategy]], which [[graft.GraftExtensions]] adds to
+  * every session.
   */
 case class AsOfJoinPlan(
     left: LogicalPlan,
@@ -247,19 +247,6 @@ case class AsOfJoinExec(
 
 object AsOfJoin {
 
-  /** Idempotent DataFrame-API registration (mirrors the lazy function
-    * registration pattern): SQL-config users get the strategy from
-    * [[graft.GraftExtensions]] instead.
-    */
-  def register(spark: SparkSession): Unit = {
-    val cur = spark.experimental.extraStrategies
-    if (!cur.contains(AsOfJoinStrategy))
-      spark.experimental.extraStrategies = cur :+ AsOfJoinStrategy
-    // the node's pushdown rule travels with the node: a filter above an
-    // as-of must reach the scans, not park on an opaque operator
-    PushFilterThroughAsOf.install(spark)
-  }
-
   /** Public API: left as-of join `left` to `right` on long key/time columns.
     * Right column names must not collide with left's (rename upstream) so
     * the flat output schema stays unambiguous.
@@ -308,7 +295,6 @@ object AsOfJoin {
         "a negative sentinel internally for 'unbounded' — a caller-supplied " +
         "negative window must reject loudly, not silently match everything)")
     val spark = left.sparkSession
-    register(spark)
     val collisions = left.columns.toSet.intersect(right.columns.toSet)
     require(collisions.isEmpty,
       s"as-of sides must not share column names, got: ${collisions.mkString(", ")}")

@@ -14,10 +14,17 @@ import org.apache.spark.sql.SparkSession
   * run at the BUILDER parallelism no matter what the caller set — which
   * made the invariance property vacuous for child-session queries until
   * r10.
+  *
+  * A `newSession()` child also starts without the parent's temp functions
+  * and experimental rules, so [[apply]] installs graft there
+  * ([[graft.GraftExtensions.install]]).
   */
 private[graft] object ChildSession {
-  def apply(spark0: SparkSession, confs: (String, String)*): SparkSession =
-    carry(spark0, spark0.newSession(), confs: _*)
+  def apply(spark0: SparkSession, confs: (String, String)*): SparkSession = {
+    val s = spark0.newSession()
+    graft.GraftExtensions.install(s)
+    carry(spark0, s, confs: _*)
+  }
 
   /** Carry `spark0`'s runtime confs into `s`, then set `confs` there. */
   def carry(spark0: SparkSession, s: SparkSession,

@@ -335,11 +335,4 @@ object DerivedPartitionFilter extends Rule[LogicalPlan] with PredicateHelper {
       }
     if (fresh.isEmpty) None else Some(fresh.reduce(And(_, _)))
   }
-
-  /** Idempotent post-hoc install (mirrors the other graft rules). */
-  def install(spark: SparkSession): Unit = synchronized {
-    if (!spark.experimental.extraOptimizations.contains(this))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ this
-  }
 }

@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeSet, Cast, Coalesce, EqualTo, Expression, Literal, NamedExpression, PredicateHelper}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, AggregateFunction, Average, Count, Max, Min, Sum}
 import org.apache.spark.sql.catalyst.plans.Inner
@@ -339,12 +338,5 @@ object EagerAggregation extends Rule[LogicalPlan] with PredicateHelper {
     if (rewritten.output.map(a => (a.exprId, a.dataType)) !=
         agg.output.map(a => (a.exprId, a.dataType))) return None
     Some(rewritten)
-  }
-
-  /** Idempotent no-configuration install (mirrors the other graft rules). */
-  def install(spark: SparkSession): Unit = synchronized {
-    if (!spark.experimental.extraOptimizations.contains(this))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ this
   }
 }

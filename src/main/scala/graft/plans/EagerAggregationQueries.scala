@@ -100,15 +100,12 @@ object EagerAggregationQueries {
     * cost gate (probeRows=0) — the deterministic plan-shape arm.
     */
   private def session(spark0: SparkSession, enabled: Boolean,
-      gated: Boolean = false): SparkSession = {
-    val spark = ChildSession(spark0,
+      gated: Boolean = false): SparkSession =
+    ChildSession(spark0,
       Seq("spark.sql.autoBroadcastJoinThreshold" -> "-1",
         EagerAggregation.EnabledKey -> enabled.toString) ++
         (if (enabled && !gated) Seq(EagerAggregation.ProbeRowsKey -> "0")
         else Nil): _*)
-    EagerAggregation.install(spark)
-    spark
-  }
 
   def eager(spark0: SparkSession, dir: String): DataFrame =
     pipeline(session(spark0, enabled = true), dir)

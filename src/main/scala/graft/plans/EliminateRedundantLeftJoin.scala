@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeSet, EqualTo, Expression, PredicateHelper}
 import org.apache.spark.sql.catalyst.plans.LeftOuter
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Deduplicate, Filter, Join, LogicalPlan, Project, SubqueryAlias}
@@ -28,7 +27,7 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * uniqueness structurally at the join itself, so the no-unused-joins
   * guarantee holds regardless of that setting — insurance, not duplication;
   * JoinEliminationSpec pins exactly this (rule fires with propagation
-  * disabled; kill-switch restores the joins). The measured value of
+  * disabled; its key unset restores the joins). The measured value of
   * elimination — by whichever rule — is ledgered per bench run
   * ([[graft.Bench]]'s `join_rule` block: wall, shuffle bytes, scan rows of
   * the enriched consumer with ALL elimination paths on vs off).
@@ -52,25 +51,22 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * left rows, which is precisely the unsoundness this rule must never
   * introduce (JoinEliminationSpec pins both directions).
   *
-  * Installed two ways, like the native functions: session-wide via
-  * [[graft.GraftExtensions]] (`injectOptimizerRule`, the spark.sql.extensions
-  * route), or lazily per-session via [[install]]
-  * (`spark.experimental.extraOptimizations`) so driver-owned sessions get it
-  * without configuration. Both paths bind this same object; running twice is
-  * harmless (the rewrite is idempotent — once the join is gone the pattern
-  * no longer matches).
+  * Present in every session through [[graft.GraftExtensions]] (the
+  * extensions route or its `install`); both bind this same object, and
+  * running twice is harmless (the rewrite is idempotent — once the join is
+  * gone the pattern no longer matches).
   */
 object EliminateRedundantLeftJoin extends Rule[LogicalPlan] with PredicateHelper {
 
-  /** Session kill-switch (default ON). `spark.sql.optimizer.excludedRules`
-    * cannot reach extension-injected rules, so the OFF control for A/B
-    * plan measurement (opt_join_baseline, the Bench on/off ledger) needs a
-    * flag the rule checks itself — the standard custom-rule pattern.
+  /** Session opt-in (default OFF, like every graft rule but the as-of
+    * pushdown). `spark.sql.optimizer.excludedRules` cannot reach
+    * extension-injected rules, so the rule checks a flag of its own — the
+    * standard custom-rule pattern.
     */
   val EnabledKey = "spark.sql.graft.joinElimination.enabled"
 
   override def apply(plan: LogicalPlan): LogicalPlan =
-    if (!conf.getConfString(EnabledKey, "true").toBoolean) plan
+    if (!conf.getConfString(EnabledKey, "false").toBoolean) plan
     else plan.transformUp {
     // only Project and Aggregate genuinely BOUND the column set flowing up
     // out of the join; any other parent may forward right-side columns to
@@ -154,14 +150,4 @@ object EliminateRedundantLeftJoin extends Rule[LogicalPlan] with PredicateHelper
           uniqueOn(p.child, AttributeSet(mapped.flatten))
       case _ => false // bare scans etc: no constraint metadata, never assume
     }
-
-  /** Idempotently add the rule to a session's user-provided optimizer batch
-    * (`spark.experimental.extraOptimizations`) — the no-configuration path
-    * for sessions the library didn't build (mirrors Similarity.register).
-    */
-  def install(spark: SparkSession): Unit = synchronized {
-    if (!spark.experimental.extraOptimizations.contains(this))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ this
-  }
 }

@@ -477,13 +477,6 @@ object FileSkipIndex extends Rule[LogicalPlan] with PredicateHelper {
       case _ => None
     }
   }
-
-  /** Idempotent post-hoc install (mirrors the other graft rules). */
-  def install(spark: SparkSession): Unit = synchronized {
-    if (!spark.experimental.extraOptimizations.contains(this))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ this
-  }
 }
 
 /** A [[FileIndex]] that delegates to `inner` but hides files the stats

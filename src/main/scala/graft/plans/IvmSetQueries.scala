@@ -110,7 +110,6 @@ object IvmSetQueries {
     */
   def served(spark0: SparkSession, dir: String): DataFrame = {
     val spark = ChildSession(spark0, MvRewrite.EnabledKey -> "true")
-    MvRewrite.install(spark)
     refresh(spark, dir)
     import spark.implicits._
     keyed(spark, dir).drop("late")
@@ -279,7 +278,6 @@ object IvmSetQueries {
     */
   def servedRetract(spark0: SparkSession, dir: String): DataFrame = {
     val spark = ChildSession(spark0, MvRewrite.EnabledKey -> "true")
-    MvRewrite.install(spark)
     val scratch = refreshRetract(spark, dir)
     import spark.implicits._
     currentRows(spark, scratch)

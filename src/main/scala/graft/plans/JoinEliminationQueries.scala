@@ -22,11 +22,10 @@ import org.apache.spark.sql.functions._
   *    `n_items` → that join must survive while the untouched customer-
   *    frequency join still disappears (partial elimination, also gated).
   *
-  * Each demo runs on a [[ChildSession]] of the caller's session and calls
-  * [[EliminateRedundantLeftJoin.install]] there, so the rule is active
-  * without session configuration (the extensions route needs it; `install`
-  * needs none — same dual path as the native functions) and the caller's
-  * session plans every later query exactly as before.
+  * Each demo runs on a [[ChildSession]] of the caller's session that sets
+  * the rule's [[EliminateRedundantLeftJoin.EnabledKey]], so the rule fires
+  * there and the caller's session plans every later query exactly as
+  * before.
   */
 object JoinEliminationQueries {
 
@@ -51,17 +50,9 @@ object JoinEliminationQueries {
       .join(custFreq, orders("o_custkey") === custFreq("cf_custkey"), "left")
   }
 
-  /** A child of `spark0` with the rule installed; the caller's kill
-    * switch ([[EliminateRedundantLeftJoin.EnabledKey]]), when set, is
-    * carried over, since [[ChildSession]] drops the graft rule keys.
-    */
-  private def withRule(spark0: SparkSession): SparkSession = {
-    val spark = ChildSession(spark0,
-      spark0.conf.getOption(EliminateRedundantLeftJoin.EnabledKey).toSeq
-        .map(EliminateRedundantLeftJoin.EnabledKey -> _): _*)
-    EliminateRedundantLeftJoin.install(spark)
-    spark
-  }
+  /** A child of `spark0` with the rule on. */
+  private def withRule(spark0: SparkSession): SparkSession =
+    ChildSession(spark0, EliminateRedundantLeftJoin.EnabledKey -> "true")
 
   /** Reads ONLY base order columns from the enriched view: both enrichment
     * joins are provably no-ops and the optimized plan is a single pass over
@@ -92,24 +83,22 @@ object JoinEliminationQueries {
       .orderBy($"o_orderpriority")
   }
 
-  /** CONTROL twin of [[reportBase]] with the rule deliberately ABSENT — a
-    * fresh child session whose `experimental.extraOptimizations` starts
-    * empty, so the plan pays both unread enrichment joins (full lineitem
-    * scan + aggregate + two shuffle joins). Registered so every bench run
-    * prices the rule: BENCH per-query seconds carry the on/off pair, and
-    * [[graft.Bench]] additionally ledgers the shuffle-bytes delta via
+  /** CONTROL twin of [[reportBase]] with the rule deliberately OFF — a
+    * child session that leaves its key unset, so the plan pays both
+    * unread enrichment joins (full lineitem scan + aggregate + two shuffle
+    * joins). Registered so every bench run prices the rule: BENCH
+    * per-query seconds carry the on/off pair, and [[graft.Bench]]
+    * additionally ledgers the shuffle-bytes delta via
     * [[graft.observability.QueryMetrics]]. Same oracle as the optimized
     * entry — identical results, different plan — which is the point.
     */
   def reportBaseNoRule(spark0: SparkSession, dir: String): DataFrame = {
     // The control must pay the enrichment joins, so BOTH elimination paths
-    // go dark: the graft rule via its kill-switch (extensions carry over to
-    // child sessions, so a fresh session alone doesn't shed it), and Spark
-    // 4's built-in equivalent (EliminateOuterJoin + distinct-key
-    // propagation, which independently removes unread unique-keyed left
-    // joins) via excludedRules + the propagation flag.
+    // go dark: the graft rule by its key staying unset, and Spark 4's
+    // built-in equivalent (EliminateOuterJoin + distinct-key propagation,
+    // which independently removes unread unique-keyed left joins) via
+    // excludedRules + the propagation flag.
     val spark = ChildSession(spark0,
-      EliminateRedundantLeftJoin.EnabledKey -> "false",
       "spark.sql.optimizer.excludedRules" ->
         "org.apache.spark.sql.catalyst.optimizer.EliminateOuterJoin",
       "spark.sql.optimizer.propagateDistinctKeys.enabled" -> "false")

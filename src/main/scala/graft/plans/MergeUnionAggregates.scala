@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeReference, AttributeSet, CaseWhen, EqualTo, Expression, If, KnownNotNull, Literal, NamedExpression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Expand, LogicalPlan, Project, Union}
@@ -81,8 +80,9 @@ import org.apache.spark.sql.types.IntegerType
   *  3. Grouping expressions and branch outputs are deterministic; aggregate
   *     functions are deterministic and NON-DISTINCT (a merged multi-
   *     distinct Aggregate could not be planned when this rule runs after
-  *     `RewriteDistinctAggregates` — the `install` path — so distinct
-  *     branches conservatively never merge; FILTER clauses are fine).
+  *     `RewriteDistinctAggregates` — the [[graft.GraftExtensions.install]]
+  *     path — so distinct branches conservatively never merge; FILTER
+  *     clauses are fine).
   *  4. Output positions agree on dataType across merged branches (Union
   *     guarantees this post-analysis) and the final Union/Project output
   *     preserves every exprId, dataType, and non-nullability — the
@@ -106,27 +106,23 @@ import org.apache.spark.sql.types.IntegerType
   * every axis even at sf0.1: wall 0.555s vs 0.574s, scan rows 150k vs
   * 450k, and the scan advantage grows linearly with K and corpus size.
   *
-  * So unlike the cost-gated rewrites this one is ON by default wherever
-  * the rule is present (injected via the session extension or
-  * [[install]]ed): the rewrite needs no cardinality probe because its
-  * saved term — (K−1) scans — is structural, and the regression regime
-  * (scans nearly free, Expand widening dominant) is bounded by the
-  * branch count while the win regime is unbounded in data size. Sessions
-  * that want the stock K-scan plan set [[EnabledKey]] to false; the
-  * shared verification session's other plan gates are undisturbed either
-  * way because the rule only exists in sessions that opted into the
-  * extension or called install (UnionMergeSpec pins both the default-on
-  * merge and the key-off opt-out).
+  * So unlike the cost-gated rewrites this one needs no cardinality probe:
+  * its saved term — (K−1) scans — is structural, and the regression regime
+  * (scans nearly free, Expand widening dominant) is bounded by the branch
+  * count while the win regime is unbounded in data size. It still ships
+  * OFF like every graft rule: the rule is present in every session, and a
+  * session turns it on with [[EnabledKey]] (UnionMergeSpec pins the
+  * key-unset stock plan and the key-on merge).
   */
 object MergeUnionAggregates extends Rule[LogicalPlan] {
 
-  /** Session opt-out (default ON where the rule is installed — see the
-    * cost note above for why this rewrite needs no gate).
+  /** Session opt-in (default OFF, like every graft rule but the as-of
+    * pushdown).
     */
   val EnabledKey = "spark.sql.graft.unionMergeAgg.enabled"
 
   override def apply(plan: LogicalPlan): LogicalPlan =
-    if (!conf.getConfString(EnabledKey, "true").toBoolean) plan
+    if (!conf.getConfString(EnabledKey, "false").toBoolean) plan
     else plan.transformUp {
       case u @ Union(children, false, false) if children.size >= 2 =>
         merge(u).getOrElse(u)
@@ -419,15 +415,5 @@ object MergeUnionAggregates extends Rule[LogicalPlan] {
     if (!candidate.output.zip(u.output).forall { case (n, o) =>
         o.nullable || !n.nullable }) return None
     Some(candidate)
-  }
-
-  /** Idempotently add the rule to a session's user-provided optimizer batch
-    * (same no-configuration path as [[MvRewrite.install]]; the rule still
-    * only fires once [[EnabledKey]] is set to true).
-    */
-  def install(spark: SparkSession): Unit = synchronized {
-    if (!spark.experimental.extraOptimizations.contains(this))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ this
   }
 }

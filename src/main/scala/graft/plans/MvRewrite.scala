@@ -372,16 +372,6 @@ object MvRewrite extends Rule[LogicalPlan] {
         rewrite(agg).getOrElse(agg)
     }
 
-  /** Idempotently add the rule to a session's user-provided optimizer
-    * batch — the no-configuration path for sessions the library didn't
-    * build (mirrors [[EliminateRedundantLeftJoin.install]]).
-    */
-  def install(spark: org.apache.spark.sql.SparkSession): Unit = synchronized {
-    if (!spark.experimental.extraOptimizations.contains(this))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ this
-  }
-
   /** Grain arity of an entry's defining: grouping-expression count of its
     * optimized top Aggregate (structured entries read it off the
     * pre-digested facts). Coarser-than-Aggregate shapes rank 0.
@@ -837,9 +827,10 @@ object MvRewrite extends Rule[LogicalPlan] {
       groupAttr(j)
     }
     // splice our own pruning Project: the rule also runs post-hoc
-    // (`install`), AFTER ColumnPruning is done, and physical planning only
-    // narrows a parquet read through a PhysicalOperation Project/Filter
-    // chain — without this, a 3-column rollup would read every view column
+    // (`GraftExtensions.install`), AFTER ColumnPruning is done, and
+    // physical planning only narrows a parquet read through a
+    // PhysicalOperation Project/Filter chain — without this, a 3-column
+    // rollup would read every view column
     // (the child-equivalence and exact-grain paths already end in a
     // Project and need nothing)
     val needed = org.apache.spark.sql.catalyst.expressions.AttributeSet(

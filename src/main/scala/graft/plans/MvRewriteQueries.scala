@@ -104,9 +104,7 @@ object MvRewriteQueries {
       }
     view("mv_order_summary", dir, defining(spark0, dir))
     view("mv_order_distinct", s"$dir:distinct", definingDistinct(spark0, dir))
-    val spark = ChildSession(spark0, MvRewrite.EnabledKey -> "true")
-    MvRewrite.install(spark)
-    spark
+    ChildSession(spark0, MvRewrite.EnabledKey -> "true")
   }
 
   /** Coarser grain than the view: yearly totals from "raw" orders. */

@@ -46,7 +46,8 @@ object MvWarehouseQueries {
     * MATERIALIZED star tables (parquet scans, the plans any consumer
     * session produces), scans over the materialized `mv_*` parquet.
     *
-    * NOT `newSession()+install`: a multi-distinct query must meet the rule
+    * NOT a [[ChildSession]], whose rules run in the late
+    * `extraOptimizations` batch: a multi-distinct query must meet the rule
     * BEFORE `RewriteDistinctAggregates` turns it into the Expand form
     * (whose gid numbering is hash-order-dependent — unmatchable), and only
     * the extensions path (`injectOptimizerRule` → the operator-optimization

@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{And, Attribute, AttributeSet, PredicateHelper}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -37,7 +36,9 @@ import org.apache.spark.sql.catalyst.rules.Rule
   */
 object PushFilterThroughAsOf extends Rule[LogicalPlan] with PredicateHelper {
 
-  /** Session kill-switch (default ON) for A/B plan measurement. */
+  /** Session kill-switch for A/B plan measurement. The one graft rule ON
+    * by default: it matches only graft's own as-of node.
+    */
   val EnabledKey = "spark.sql.graft.asofFilterPushdown.enabled"
 
   override def apply(plan: LogicalPlan): LogicalPlan =
@@ -78,12 +79,12 @@ object PushFilterThroughAsOf extends Rule[LogicalPlan] with PredicateHelper {
     }
 
   /** Drive the relocated filter all the way to the relations with
-    * Catalyst's own `PushDownPredicates`. Needed because the lazy install
-    * path (`spark.experimental.extraOptimizations`) runs AFTER the main
-    * operator-optimization batch — a filter this rule merely moved one
-    * level down would park above the child's Project/Aggregate with nobody
-    * left to continue the descent. Bounded fixed point; each application
-    * is Catalyst's own sound rewrite.
+    * Catalyst's own `PushDownPredicates`. Needed because the install
+    * path ([[graft.GraftExtensions.install]], `extraOptimizations`) runs
+    * AFTER the main operator-optimization batch — a filter this rule
+    * merely moved one level down would park above the child's
+    * Project/Aggregate with nobody left to continue the descent. Bounded
+    * fixed point; each application is Catalyst's own sound rewrite.
     */
   private def pushFully(plan: LogicalPlan): LogicalPlan = {
     var cur = plan
@@ -95,16 +96,5 @@ object PushFilterThroughAsOf extends Rule[LogicalPlan] with PredicateHelper {
       i += 1
     }
     cur
-  }
-
-  /** Lazy per-session install (`spark.experimental.extraOptimizations`),
-    * the no-configuration path [[AsOfJoin.register]] uses; the
-    * spark.sql.extensions route injects via [[graft.GraftExtensions]].
-    * Idempotent.
-    */
-  def install(spark: SparkSession): Unit = synchronized {
-    val cur = spark.experimental.extraOptimizations
-    if (!cur.contains(PushFilterThroughAsOf))
-      spark.experimental.extraOptimizations = cur :+ PushFilterThroughAsOf
   }
 }

@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeSet, Cast, Expression, Literal, NamedExpression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Count, Max, Min, Sum}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Expand, LogicalPlan}
@@ -321,15 +320,5 @@ object RerollExpandAggregate extends Rule[LogicalPlan] {
     if (rewritten.output.map(a => (a.exprId, a.dataType)) !=
         agg.output.map(a => (a.exprId, a.dataType))) return None
     Some(rewritten)
-  }
-
-  /** Idempotently add the rule to a session's user-provided optimizer batch
-    * (same no-configuration path as [[EliminateRedundantLeftJoin.install]];
-    * the rule still only fires once [[EnabledKey]] is set to true).
-    */
-  def install(spark: SparkSession): Unit = synchronized {
-    if (!spark.experimental.extraOptimizations.contains(this))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ this
   }
 }

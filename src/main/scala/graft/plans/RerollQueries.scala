@@ -6,11 +6,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** Driver-facing proof queries for [[RerollExpandAggregate]].
   *
   * Each runs one of the [[graft.analytics.GroupingSets]] multi-grain
-  * pipelines in a CHILD session with the re-roll rule installed and
-  * enabled, and verifies against the SAME DuckDB oracle text as the
-  * un-rewritten twin — identical results, different plan, which is the
-  * point: the oracle hash match is an end-to-end soundness proof of the
-  * rewrite over real data, while the registered pair (`agg_rollup_monthly`
+  * pipelines in a CHILD session with the re-roll rule enabled, and
+  * verifies against the SAME DuckDB oracle text as the un-rewritten twin
+  * — identical results, different plan, which is the point: the oracle
+  * hash match is an end-to-end soundness proof of the rewrite over real
+  * data, while the registered pair (`agg_rollup_monthly`
   * vs `opt_rollup_reroll`, etc.) prices it in every bench run.
   *
   *  - `opt_rollup_reroll`  — ROLLUP(yr, mo), G=3
@@ -31,13 +31,10 @@ object RerollQueries {
     * scale, and the bench's forced ledger arm prices the rewrite even
     * where the gate would decline it.
     */
-  private def withRule(spark0: SparkSession): SparkSession = {
-    val spark = ChildSession(spark0,
+  private def withRule(spark0: SparkSession): SparkSession =
+    ChildSession(spark0,
       RerollExpandAggregate.EnabledKey -> "true",
       RerollExpandAggregate.gate.ProbeRowsKey -> "0")
-    RerollExpandAggregate.install(spark)
-    spark
-  }
 
   /** Rule on, gate at DEFAULTS: the rule decides. The G=3 rollup over
     * orders saves only (G−1)×150k = 300k Expand rows at sf0.1 — under the
@@ -45,11 +42,8 @@ object RerollQueries {
     * STOCK (the sf0.1 ledger measured the forced rewrite wall-negative
     * there); the G=16 lineitem cube saves 9M and fires.
     */
-  private def withGatedRule(spark0: SparkSession): SparkSession = {
-    val spark = ChildSession(spark0, RerollExpandAggregate.EnabledKey -> "true")
-    RerollExpandAggregate.install(spark)
-    spark
-  }
+  private def withGatedRule(spark0: SparkSession): SparkSession =
+    ChildSession(spark0, RerollExpandAggregate.EnabledKey -> "true")
 
   /** RULE COMPOSITION: the same ROLLUP answered from the MATVIEW — no
     * corpus scan at all. Two independent rewrites chain inside one
@@ -70,7 +64,6 @@ object RerollQueries {
     */
   def rollupFromView(spark0: SparkSession, dir: String): DataFrame = {
     val spark = MvRewriteQueries.withView(spark0, dir)
-    RerollExpandAggregate.install(spark)
     spark.conf.set(RerollExpandAggregate.EnabledKey, "true")
     // gate off: the composition demo needs the re-roll to fire so MvRewrite
     // can recognize its leaf (the gate would decline this small fixture,

@@ -64,21 +64,14 @@ object UnionMergeQueries {
   /** The merged plan: same pipeline in a child session with the rule on. */
   def merged(spark0: SparkSession, dir: String): DataFrame = {
     val spark = ChildSession(spark0, MergeUnionAggregates.EnabledKey -> "true")
-    MergeUnionAggregates.install(spark)
     unionRollup(spark, dir)
   }
 
-  /** The stock three-scan plan — the bench ledger's other arm. The rule
-    * defaults ON wherever it is present, so this arm opts OUT explicitly:
-    * in a bare Bench session the key is belt-and-braces (the rule isn't
-    * installed), but under a GraftExtensions-built session (the test
-    * harness, an extension-configured deployment) the key is what keeps
-    * this the genuine K-scan control.
+  /** The stock three-scan plan — the bench ledger's other arm: a child
+    * session that leaves the rule's key unset.
     */
-  def stock(spark0: SparkSession, dir: String): DataFrame = {
-    val spark = ChildSession(spark0, MergeUnionAggregates.EnabledKey -> "false")
-    unionRollup(spark, dir)
-  }
+  def stock(spark0: SparkSession, dir: String): DataFrame =
+    unionRollup(ChildSession(spark0), dir)
 
   /** Grand total + per-status breakdown over ONE source: the global branch
     * rides the empty grouping set, the guard supplies its row on an empty
@@ -105,7 +98,6 @@ object UnionMergeQueries {
 
   def mergedTotal(spark0: SparkSession, dir: String): DataFrame = {
     val spark = ChildSession(spark0, MergeUnionAggregates.EnabledKey -> "true")
-    MergeUnionAggregates.install(spark)
     unionTotal(spark, dir)
   }
 

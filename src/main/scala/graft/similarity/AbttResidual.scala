@@ -43,7 +43,6 @@ object AbttResidual {
 
   def abttResidual(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    Similarity.register(spark)
     // r13 measured spread ALONE hurting here (1.08 → 1.81 s): the corpus
     // fed four subtrees (cen twice, both pair sides) so the exchange
     // multiplied instead of amortizing. r14 restructures to TWO subtrees,

@@ -27,7 +27,6 @@ object CentroidDrift {
 
   def drift(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    Similarity.register(spark)
     val e = Tables.embeddings(spark, dir)
       .withColumn("cohort", pmod($"vec_id", lit(2)).cast("int"))
     val cents = e

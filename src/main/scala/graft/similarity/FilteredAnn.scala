@@ -32,7 +32,6 @@ object FilteredAnn {
 
   def filteredAnn(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    Similarity.register(spark)
     val k = Similarity.TopK
     val idx = RandomHyperplaneLsh.index(spark, dir)
     val labels = Tables.embeddings(spark, dir)

@@ -55,7 +55,6 @@ object GraphSearch {
 
   private def searchImpl(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    Similarity.register(spark)
     val idx = RandomHyperplaneLsh.index(spark, dir)
     val probes = Tables.embeddings(spark, dir)
       .filter($"vec_id" >= 1 && $"vec_id" <= Similarity.NumProbes)

@@ -35,7 +35,6 @@ object HubnessAnn {
 
   def hubnessAnn(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    Similarity.register(spark)
     val k = Similarity.HubK
     val e = Tables.embeddings(spark, dir)
 

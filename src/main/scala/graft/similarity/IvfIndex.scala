@@ -121,7 +121,6 @@ object IvfIndex {
 
   /** (corpus with cell assignments, centroid table). */
   private def train(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    Similarity.register(spark)
     val e = Tables.embeddings(spark, dir).select("vec_id", "embedding")
     // deterministic seeds: the K corpus vectors with lowest md5 rank, cell id
     // = rank order. orderBy + limit plans as a distributed
@@ -145,7 +144,6 @@ object IvfIndex {
 
   def topK(spark: SparkSession, dir: String, k: Int = Similarity.TopK): DataFrame = {
     import spark.implicits._
-    Similarity.register(spark)
     val (assigned, centroids) = build(spark, dir)
     val probes = assigned.filter($"vec_id" < Similarity.NumProbes)
       .select($"vec_id".as("query_id"), $"embedding".as("q_emb"))
@@ -366,7 +364,6 @@ ORDER BY cell"""
     */
   def nprobeSweep(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    Similarity.register(spark)
     val k = Similarity.TopK
     val (assigned, centroids) = build(spark, dir)
     val probes = assigned.filter($"vec_id" < Similarity.NumProbes)

@@ -59,7 +59,6 @@ object IvfPq {
 
   def topK(spark: SparkSession, dir: String, k: Int = Similarity.TopK): DataFrame = {
     import spark.implicits._
-    Similarity.register(spark)
     val (_, centroids) = IvfIndex.build(spark, dir)
     val post = postings(spark, dir)
     val e = Tables.embeddings(spark, dir)

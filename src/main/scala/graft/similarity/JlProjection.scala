@@ -84,7 +84,6 @@ object JlProjection {
     */
   private def projected(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    Similarity.register(spark)
     // one kernel call per row, materialized as its own column so the 16
     // getItem consumers share it (CollapseProject keeps a non-cheap alias
     // referenced more than once in its own Project)
@@ -112,7 +111,6 @@ object JlProjection {
     */
   def jlDistortion(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    Similarity.register(spark)
     // self-norms hoisted OUT of the pair loop: dot(x,x) is per-vector, so
     // computing it before the join turns 3 kernel calls per pair into 1
     // (the cross term) — same value, same combine order, ~2.5× less

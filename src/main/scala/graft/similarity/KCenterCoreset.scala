@@ -47,7 +47,6 @@ object KCenterCoreset {
   def centersForDir(spark: SparkSession, dir: String): Seq[(Int, Long, Double)] =
     graft.Scratch.memo(spark, "graft-kcenter", dir) { _ =>
       import spark.implicits._
-      Similarity.register(spark)
       val e = Tables.embeddings(spark, dir)
       var chosen = Seq(SeedId)
       val picks = Seq.newBuilder[(Int, Long, Double)]
@@ -69,7 +68,6 @@ object KCenterCoreset {
 
   def kcenterCoreset(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    Similarity.register(spark)
     val e = Tables.embeddings(spark, dir)
     val centers = centersForDir(spark, dir)
       .toDF("round", "center_id", "radius")

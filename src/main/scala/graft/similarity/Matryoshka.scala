@@ -34,7 +34,6 @@ object Matryoshka {
 
   def prefixReport(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    Similarity.register(spark)
     val k = Similarity.TopK
     val e = Tables.embeddings(spark, dir)
     val probes = e.filter($"vec_id" < Similarity.NumProbes)

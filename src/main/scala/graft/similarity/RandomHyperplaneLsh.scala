@@ -81,7 +81,6 @@ object RandomHyperplaneLsh {
   // partitions instead of the full corpus (same layout as IvfIndex's cells)
   def index(spark: SparkSession, dir: String): DataFrame =
     graft.Scratch.memo(spark, "graft-rhlsh", dir) { base =>
-      Similarity.register(spark)
       val e = Tables.embeddings(spark, dir)
       // index-build metadata: one-row scan for the corpus dimensionality
       val dim = e.select(size(col("embedding"))).head.getInt(0)
@@ -93,7 +92,6 @@ object RandomHyperplaneLsh {
 
   def topK(spark: SparkSession, dir: String, k: Int = Similarity.TopK): DataFrame = {
     import spark.implicits._
-    Similarity.register(spark)
     val idx = index(spark, dir)
     val corpus = idx.select($"vec_id".as("neighbor_id"),
       $"embedding".as("n_emb"), $"bucket")
@@ -125,7 +123,6 @@ object RandomHyperplaneLsh {
   def embeddingNearDups(spark: SparkSession, dir: String,
       threshold: Double = EmbeddingTau): DataFrame = {
     import spark.implicits._
-    Similarity.register(spark)
     val sigs = index(spark, dir)
     sigs.as("a")
       .join(sigs.as("b"),

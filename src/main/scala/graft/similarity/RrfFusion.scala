@@ -45,7 +45,6 @@ object RrfFusion {
 
   def rrfFusion(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    Similarity.register(spark)
     val topK = graft.text.TextAnalysis.SearchTopK
     val lex = graft.text.TextAnalysis.keywordSearch(spark, dir)
       .withColumn("lex_rank",

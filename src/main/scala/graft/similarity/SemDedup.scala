@@ -45,7 +45,6 @@ object SemDedup {
     */
   def prune(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    Similarity.register(spark)
     val (assigned, _) = IvfIndex.build(spark, dir)
     val keep = assigned.select($"cell", $"vec_id".as("keep_id"),
       $"embedding".as("k_emb"))

@@ -32,17 +32,6 @@ import org.apache.spark.sql.functions._
   */
 object Similarity {
 
-  /** The graft native functions (graft_cosine, graft_dot, ...) registered
-    * once per session so `expr("graft_cosine(a,b)")` is usable anywhere;
-    * a later call finds them registered and changes nothing.
-    */
-  def register(spark: SparkSession): Unit =
-    // the SAME arity-guarded builders the session-extension path installs —
-    // a lone `args(1)` here would turn a wrong-arity SQL call into a raw
-    // IndexOutOfBounds with no function name (ExtensionsSpec pins the named
-    // error whichever registration path won)
-    graft.GraftExtensions.registerAll(spark)
-
   /** All embedding pairs with cosine ≥ threshold — the embedding-space
     * near-duplicate detector (dedup family member; τ=0.4 sits above this
     * corpus's random-pair ceiling ≈0.51 tail, so only genuinely close pairs
@@ -66,7 +55,6 @@ object Similarity {
     */
   def jaccardCosineBands(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    register(spark)
     val e = Tables.embeddings(spark, dir)
     graft.dedup.Dedup.pairsForDir(spark, dir)
       .join(e.select($"vec_id".as("doc_a"), $"embedding".as("emb_a")), "doc_a")
@@ -135,7 +123,6 @@ object Similarity {
     */
   def hubness(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    register(spark)
     val e = Tables.embeddings(spark, dir)
     requireExactEnvelope(e.count(), "sim_hubness", "sim_hubness_ann")
     // spread the streamed side: one row-group in, one task out otherwise
@@ -164,7 +151,6 @@ object Similarity {
   def cosinePairs(spark: SparkSession, dir: String,
       threshold: Double = 0.4): DataFrame = {
     import spark.implicits._
-    register(spark)
     val e = Tables.embeddings(spark, dir)
     requireExactEnvelope(e.count(), "sim_cosine_pairs", "dedup_embedding_ann")
     // spread the streamed side: one row-group in, one task out otherwise
@@ -194,7 +180,6 @@ object Similarity {
 
   def bruteForceTopK(spark: SparkSession, dir: String, k: Int = TopK): DataFrame = {
     import spark.implicits._
-    register(spark)
     val e = Tables.embeddings(spark, dir)
     val probes = e.filter($"vec_id" < NumProbes)
       .select($"vec_id".as("query_id"), $"embedding".as("q_emb"))
@@ -233,7 +218,6 @@ object Similarity {
     */
   def mipsTopK(spark: SparkSession, dir: String, k: Int = TopK): DataFrame = {
     import spark.implicits._
-    register(spark)
     val e = Tables.embeddings(spark, dir)
     val probes = e.filter($"vec_id" < NumProbes)
       .select($"vec_id".as("query_id"), $"embedding".as("q_emb"))
@@ -293,7 +277,6 @@ object Similarity {
     */
   def contrastivePairs(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    register(spark)
     val e = Tables.embeddings(spark, dir)
     val probes = e.filter($"vec_id" < NumProbes)
       .select($"vec_id".as("query_id"), $"embedding".as("q_emb"))
@@ -420,7 +403,6 @@ object Similarity {
     */
   def twoStageTopK(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    register(spark)
     val e = Tables.embeddings(spark, dir)
     val probes = e.filter($"vec_id" < NumProbes)
       .select($"vec_id".as("query_id"), $"embedding".as("q_emb"))
@@ -457,7 +439,6 @@ object Similarity {
     */
   def labelCentroidConfusion(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    register(spark)
     val e = Tables.embeddings(spark, dir)
     val cents = e
       .select($"label", posexplode($"embedding").as(Seq("pos", "v")))

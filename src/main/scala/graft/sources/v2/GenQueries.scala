@@ -162,7 +162,6 @@ object GenQueries {
     * whole-stage-codegen'd pass with Range's native splits.
     */
   def genTvfRollup(spark: SparkSession, dir: String): DataFrame = {
-    GenTvf.register(spark)
     spark.sql(s"""SELECT seg, count(*) AS n, sum(v) AS sum_v
 FROM graft_gen($Rows)
 WHERE id % 2 = 0

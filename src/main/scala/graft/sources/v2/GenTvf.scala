@@ -1,6 +1,5 @@
 package graft.sources.v2
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Alias, Cast, Concat, Expression, ExpressionInfo, Literal, Multiply, Remainder}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, Range}
@@ -8,9 +7,8 @@ import org.apache.spark.sql.types.StringType
 
 /** `graft_gen` as a SQL TABLE-VALUED FUNCTION — the `range()`-style surface
   * SQL users expect (`SELECT sum(v) FROM graft_gen(1000000)`), registered
-  * through the analyzer's table-function registry
-  * ([[graft.GraftExtensions]] `injectTableFunction`, or lazily via
-  * [[register]]).
+  * through the analyzer's table-function registry by
+  * [[graft.GraftExtensions]].
   *
   * Unlike the connector route, the TVF expands to a pure Catalyst plan —
   * `Project(k/v/seg expressions, Range(0, n))` — so the generator's row
@@ -49,11 +47,4 @@ object GenTvf {
         Cast(Remainder(id, Literal(SegMod)), StringType))), "seg")()),
       range)
   }
-
-  /** Lazy per-session registration (the no-configuration path, like
-    * [[graft.GraftExtensions.registerAll]] for scalar functions).
-    */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.tableFunctionRegistry
-      .createOrReplaceTempFunction("graft_gen", plan, "built-in")
 }

@@ -132,7 +132,6 @@ object StreamNearDedup {
     * unchanged.
     */
   private def banded(docs: DataFrame): DataFrame = {
-    graft.GraftExtensions.registerAll(docs.sparkSession)
     docs
       .withColumn("sig", expr("graft_minhash_sig(text)"))
       .filter(size(col("sig")) > 0) // <3-token docs: no shingles, drop

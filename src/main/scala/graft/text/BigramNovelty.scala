@@ -32,7 +32,6 @@ object BigramNovelty {
 
   def bigramNovelty(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    graft.GraftExtensions.registerAll(spark)
     // per-doc DISTINCT-bigram counts straight from the codegen'd kernel
     // ([[graft.functions.BigramCounts]]): all of a document's bigrams live
     // in its own row, so the declarative explode-every-character →
@@ -48,16 +47,10 @@ object BigramNovelty {
     // The corpus model is alphabet²-bounded — which is "a few thousand
     // rows at ANY corpus size" ONLY for small alphabets (ASCII/Latin text,
     // this corpus). A CJK/emoji-heavy corpus has an alphabet² in the tens
-    // of millions, where a FORCED broadcast is a driver OOM, not a win —
-    // so the hint ships behind a conf (default on, matching this corpus'
-    // known alphabet): a wide-alphabet deployment sets it false and lets
-    // autoBroadcastJoinThreshold/AQE pick the join, degrading to a
-    // shuffle instead of an OOM.
-    val hinted =
-      if (spark.conf.get("spark.sql.graft.bigramBroadcast", "true").toBoolean)
-        broadcast(corpus)
-      else corpus
-    val perDoc = perDocCounts.join(hinted, "bg")
+    // of millions, where this FORCED broadcast is a driver OOM, not a win:
+    // such a corpus drops the hint and lets autoBroadcastJoinThreshold/AQE
+    // pick the join, degrading to a shuffle instead of an OOM.
+    val perDoc = perDocCounts.join(broadcast(corpus), "bg")
       .groupBy($"doc_id")
       .agg(sum($"c").as("n_bigrams"),
         sum(when($"cf" < RareMax, $"c").otherwise(0L)).as("n_rare"))

@@ -165,11 +165,10 @@ object TextAnalysis {
 
   /** Injection point for the shared-substring spec: winnow any
     * (doc_id, text) frame. The kernel is the native codegen'd
-    * [[graft.functions.WinnowFingerprints]] (registered here, idempotent);
-    * short docs emit an empty array → explode drops them.
+    * [[graft.functions.WinnowFingerprints]]; short docs emit an empty
+    * array → explode drops them.
     */
   private[graft] def winnowDf(docs: DataFrame): DataFrame = {
-    graft.GraftExtensions.registerAll(docs.sparkSession)
     docs
       .select(col("doc_id"), lower(trim(col("text"))).as("t"))
       .select(col("doc_id"), explode(expr("graft_winnow(t)")).as("fp"))

@@ -73,7 +73,6 @@ object FileSkip {
   private def pruned(spark0: SparkSession, dir: String): DataFrame = {
     val path = layoutPath(spark0, dir)
     val spark = ChildSession(spark0, FileSkipIndex.EnabledKey -> "true")
-    FileSkipIndex.install(spark)
     spark.read.parquet(path)
   }
 
@@ -148,7 +147,6 @@ object FileSkip {
   def shipRange(spark0: SparkSession, dir: String): DataFrame = {
     val path = shipLayoutPath(spark0, dir)
     val spark = ChildSession(spark0, FileSkipIndex.EnabledKey -> "true")
-    FileSkipIndex.install(spark)
     rangeReport(spark.read.parquet(path)
       .filter(expr(s"l_shipdate >= TIMESTAMP '$ShipLo'") &&
         expr(s"l_shipdate < TIMESTAMP '$ShipHi'")))
@@ -219,8 +217,6 @@ object FileSkip {
     val spark = ChildSession(spark0,
       graft.plans.DerivedPartitionFilter.EnabledKey -> "true",
       FileSkipIndex.EnabledKey -> "true")
-    graft.plans.DerivedPartitionFilter.install(spark)
-    FileSkipIndex.install(spark)
     rangeReport(spark.read.parquet(path)
       .filter(col("date_key") >= LayerLo && col("date_key") <= LayerHi))
   }
@@ -230,7 +226,6 @@ object FileSkip {
     val path = yearLayoutPath(spark0, dir)
     val spark = ChildSession(spark0,
       graft.plans.DerivedPartitionFilter.EnabledKey -> "true")
-    graft.plans.DerivedPartitionFilter.install(spark)
     rangeReport(spark.read.parquet(path)
       .filter(col("date_key") >= LayerLo && col("date_key") <= LayerHi))
   }
@@ -267,7 +262,6 @@ object FileSkip {
   def custDrill(spark0: SparkSession, dir: String): DataFrame = {
     val path = layoutPath(spark0, dir)
     val spark = ChildSession(spark0, FileSkipIndex.EnabledKey -> "true")
-    FileSkipIndex.install(spark)
     import spark.implicits._
     val keys = Tables.orders(spark, dir)
       .filter(col("o_custkey") === DrillCustKey)

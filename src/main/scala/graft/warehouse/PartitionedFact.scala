@@ -23,7 +23,7 @@ object PartitionedFact {
   val MonthHi = 199606
 
   /** The month layout's path — consumers that must read it in a CHILD
-    * session (the derived-pruning query installs a rule there) re-open the
+    * session (the derived-pruning query enables a rule there) re-open the
     * path instead of borrowing [[factByMonth]]'s parent-bound DataFrame.
     */
   private[graft] def monthLayoutPath(spark: SparkSession, dir: String): String =
@@ -98,7 +98,6 @@ object PartitionedFact {
     val path = monthLayoutPath(spark0, dir)
     val spark = graft.plans.ChildSession(spark0,
       graft.plans.DerivedPartitionFilter.EnabledKey -> "true")
-    graft.plans.DerivedPartitionFilter.install(spark)
     spark.read.parquet(path)
       .filter(col("date_key") >= DateLo && col("date_key") <= DateHi)
       .groupBy(col("month_key"))
@@ -133,7 +132,6 @@ object PartitionedFact {
     val path = monthLayoutPath(spark0, dir)
     val spark = graft.plans.ChildSession(spark0,
       graft.plans.DerivedPartitionFilter.EnabledKey -> "true")
-    graft.plans.DerivedPartitionFilter.install(spark)
     spark.read.parquet(path)
       .filter(col("encounter_date") >= lit(java.sql.Date.valueOf(DateLitLo)) &&
         col("encounter_date") <= lit(java.sql.Date.valueOf(DateLitHi)))

@@ -12,7 +12,6 @@ class BigramKernelSpec extends SparkSpec {
   import spark.implicits._
 
   private def viaKernel(s: String): Map[String, Long] = {
-    graft.GraftExtensions.registerAll(spark)
     Seq(Option(s)).toDF("t")
       .select(explode(expr("graft_bigram_counts(t)")).as("s"))
       .select($"s.bg", $"s.c")

@@ -109,7 +109,7 @@ class DerivedPartitionSpec extends SparkSpec {
 
   private def ruleSession(): SparkSession = {
     val s = spark.newSession()
-    DerivedPartitionFilter.install(s)
+    GraftExtensions.install(s)
     s.conf.set(DerivedPartitionFilter.EnabledKey, "true")
     s
   }
@@ -151,7 +151,7 @@ class DerivedPartitionSpec extends SparkSpec {
     DerivedPartitionFilter.register(dir, "id", "pk", 100L)
     // disabled session (rule installed but not enabled): no derivation
     val off = spark.newSession()
-    DerivedPartitionFilter.install(off)
+    GraftExtensions.install(off)
     val q1 = off.read.parquet(dir).filter(col("id") === 250)
       .agg(count(lit(1)))
     assert(scanOf(q1).partitionFilters.isEmpty,

@@ -15,7 +15,7 @@ class EagerAggSpec extends SparkSpec {
 
   private def ruleSession: SparkSession = {
     val s = spark.newSession()
-    EagerAggregation.install(s)
+    GraftExtensions.install(s)
     s.conf.set(EagerAggregation.EnabledKey, "true")
     s
   }

@@ -53,7 +53,6 @@ class EditWithinSpec extends SparkSpec {
   }
 
   test("expression: SQL surface, codegen + interpreted paths, nulls") {
-    GraftExtensions.registerAll(spark)
     import spark.implicits._
     val df = corpus.toDF("a", "b")
       .withColumn("k", lit(5))

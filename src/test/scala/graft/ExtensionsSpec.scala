@@ -69,19 +69,41 @@ class ExtensionsSpec extends SparkSpec {
       unfoldablePlane.getMessage)
   }
 
-  test("registerAll registers each function once per session") {
+  test("install adds graft to a session once") {
     val s = plans.ChildSession(spark)
     val reg = s.sessionState.functionRegistry
     val ids = GraftExtensions.functions.map(_._1)
     // a name missing from the registry is (re)installed
     reg.dropFunction(ids.head)
-    GraftExtensions.registerAll(s)
+    GraftExtensions.install(s)
     val first = ids.map(reg.lookupFunction)
     assert(first.forall(_.isDefined), s"unregistered: ${ids.zip(first)}")
-    // a second call replaces nothing: the very same registry entries
-    GraftExtensions.registerAll(s)
+    // a second call replaces nothing: the very same registry entries, one
+    // copy of each rule in `rules` order, one as-of strategy
+    GraftExtensions.install(s)
     val second = ids.map(reg.lookupFunction)
     for ((id, (a, b)) <- ids.zip(first.zip(second)))
       assert(a.get eq b.get, s"$id was registered again")
+    assert(s.experimental.extraOptimizations == GraftExtensions.rules)
+    assert(s.experimental.extraStrategies == Seq(plans.AsOfJoinStrategy))
+  }
+
+  test("an entry runs on a session built without the extension") {
+    import org.apache.spark.sql.SparkSession
+    // create() makes the new session the default and active one
+    val (active, default) = (SparkSession.getActiveSession,
+      SparkSession.getDefaultSession)
+    val bare = SparkSession.builder().create()
+    try {
+      val bigrams = org.apache.spark.sql.catalyst.FunctionIdentifier(
+        "graft_bigram_counts")
+      assert(!bare.sessionState.functionRegistry.functionExists(bigrams),
+        "the bare session must start without graft")
+      val q = SparkEntry.queries("text_bigram_novelty")
+      assert(q(bare, sf).collect().toSeq == q(spark, sf).collect().toSeq)
+    } finally {
+      default.fold(SparkSession.clearDefaultSession())(SparkSession.setDefaultSession)
+      active.fold(SparkSession.clearActiveSession())(SparkSession.setActiveSession)
+    }
   }
 }

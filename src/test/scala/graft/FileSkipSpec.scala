@@ -55,7 +55,7 @@ class FileSkipSpec extends SparkSpec {
     val path = FileSkip.layoutPath(spark, sf)
     val on = {
       val s = graft.plans.ChildSession(spark)
-      FileSkipIndex.install(s)
+      GraftExtensions.install(s)
       s.conf.set(FileSkipIndex.EnabledKey, "true")
       s.read.parquet(path)
     }
@@ -127,7 +127,7 @@ class FileSkipSpec extends SparkSpec {
         .write.mode("append").parquet(base)
       def probe() = {
         val s = graft.plans.ChildSession(spark)
-        FileSkipIndex.install(s)
+        GraftExtensions.install(s)
         s.conf.set(FileSkipIndex.EnabledKey, "true")
         s.read.parquet(base).filter($"l_partkey" > 150)
           .agg(count(lit(1)).as("n"))
@@ -209,7 +209,7 @@ class FileSkipSpec extends SparkSpec {
     }
     val on = {
       val s = graft.plans.ChildSession(spark)
-      FileSkipIndex.install(s)
+      GraftExtensions.install(s)
       s.conf.set(FileSkipIndex.EnabledKey, "true")
       s.read.parquet(path)
     }
@@ -241,7 +241,7 @@ class FileSkipSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     val path = FileSkip.layoutPath(spark, sf)
     val s = graft.plans.ChildSession(spark)
-    FileSkipIndex.install(s)
+    GraftExtensions.install(s)
     s.conf.set(FileSkipIndex.EnabledKey, "true")
     // double-typed column: no integral envelope semantics
     val df = s.read.parquet(path).filter(col("l_quantity") > 25.0)

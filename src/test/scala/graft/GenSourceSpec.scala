@@ -251,7 +251,6 @@ class GenSourceSpec extends SparkSpec {
   }
 
   test("TVF surface: FROM graft_gen(n) equals the connector, codegen'd over Range") {
-    graft.sources.v2.GenTvf.register(spark)
     val viaTvf = spark.sql("SELECT * FROM graft_gen(500)")
     val viaConnector = gen(rows = 500L)
     assert(viaTvf.exceptAll(viaConnector).isEmpty &&

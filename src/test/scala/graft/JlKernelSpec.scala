@@ -11,7 +11,6 @@ class JlKernelSpec extends SparkSpec {
 
   test("kernel coordinates equal the declarative fold bit-for-bit") {
     import graft.similarity.{JlProjection, Similarity}
-    Similarity.register(spark)
     val emb = Tables.embeddings(spark, sf)
     val both = emb.select(
       Seq(col("vec_id"), expr("graft_jl_project(embedding)").as("jl")) ++
@@ -31,7 +30,6 @@ class JlKernelSpec extends SparkSpec {
 
   test("null and short arrays poison to null; interpreted path agrees") {
     import spark.implicits._
-    graft.similarity.Similarity.register(spark)
     val df = Seq(
       (1L, Some(Array.fill(64)(1.0f))),
       (2L, Some(Array.fill(63)(1.0f))), // short: null
@@ -56,7 +54,6 @@ class JlKernelSpec extends SparkSpec {
     import graft.similarity.JlProjection
     val s = spark.newSession()
     s.conf.set("spark.sql.ansi.enabled", "true")
-    graft.similarity.Similarity.register(s)
     // parity on well-formed input is ANSI-independent: same corpus, same
     // bit-identical coordinates
     val emb = Tables.embeddings(s, sf).limit(50)

@@ -16,12 +16,16 @@ class JoinEliminationSpec extends SparkSpec {
 
   import spark.implicits._
 
-  private lazy val orders = Tables.orders(spark, sf)
-  private lazy val itemStats = Tables.lineitem(spark, sf)
+  /** A child of the shared session with the rule turned on by its key. */
+  private def ruleOn(confs: (String, String)*) = plans.ChildSession(spark,
+    (EliminateRedundantLeftJoin.EnabledKey -> "true") +: confs: _*)
+
+  private lazy val on = ruleOn()
+  private lazy val orders = Tables.orders(on, sf)
+  private lazy val itemStats = Tables.lineitem(on, sf)
     .groupBy($"l_orderkey").agg(count(lit(1)).as("n_items"))
 
   test("redundant enrichment join is eliminated; values preserved") {
-    EliminateRedundantLeftJoin.install(spark)
     val enriched = orders
       .join(itemStats, orders("o_orderkey") === itemStats("l_orderkey"), "left")
     val report = enriched.groupBy($"o_orderstatus")
@@ -35,7 +39,6 @@ class JoinEliminationSpec extends SparkSpec {
   }
 
   test("join is kept when its columns are consumed") {
-    EliminateRedundantLeftJoin.install(spark)
     val enriched = orders
       .join(itemStats, orders("o_orderkey") === itemStats("l_orderkey"), "left")
     val report = enriched.groupBy($"o_orderstatus")
@@ -44,10 +47,9 @@ class JoinEliminationSpec extends SparkSpec {
   }
 
   test("join is kept when the right side is not provably unique") {
-    EliminateRedundantLeftJoin.install(spark)
     // raw lineitem keyed by l_orderkey is NOT unique (multi-line orders):
     // eliminating would collapse the fan-out and change counts — must stay
-    val raw = Tables.lineitem(spark, sf).select($"l_orderkey", $"l_linenumber")
+    val raw = Tables.lineitem(on, sf).select($"l_orderkey", $"l_linenumber")
     val joined = orders
       .join(raw, orders("o_orderkey") === raw("l_orderkey"), "left")
     val report = joined.groupBy($"o_orderstatus").agg(count(lit(1)).as("n"))
@@ -55,7 +57,6 @@ class JoinEliminationSpec extends SparkSpec {
   }
 
   test("inner joins are never eliminated") {
-    EliminateRedundantLeftJoin.install(spark)
     // inner join FILTERS left rows (orders with no lineitem drop out);
     // even with a unique right side the join is semantically load-bearing
     val joined = orders
@@ -71,33 +72,32 @@ class JoinEliminationSpec extends SparkSpec {
     assert(logicalJoins(JoinEliminationQueries.all("opt_join_retained")(spark, sf)) == 1)
   }
 
-  test("the registered demos leave the caller's session without the rule") {
+  test("the registered demos leave the caller's plans unchanged") {
     // a fresh session stands in for Bench's/Verify's shared one: whatever
-    // ran before, a later query there must not plan with the rule
+    // rule demo ran before, a later plain query there plans as it did
+    // before. One entry from each rule module runs on the caller.
     val caller = plans.ChildSession(spark)
-    JoinEliminationQueries.reportBase(caller, sf).collect()
-    JoinEliminationQueries.reportWithItems(caller, sf).collect()
-    assert(!caller.experimental.extraOptimizations
-      .contains(EliminateRedundantLeftJoin))
-  }
-
-  test("the registered demos honour the caller's kill switch") {
-    // the demos plan on a child session; the caller's switch must reach it.
-    // Spark's built-in elimination is blinded as in opt_join_baseline
-    val caller = plans.ChildSession(spark)
-    caller.conf.set("spark.sql.optimizer.excludedRules",
-      "org.apache.spark.sql.catalyst.optimizer.EliminateOuterJoin")
-    caller.conf.set("spark.sql.optimizer.propagateDistinctKeys.enabled", "false")
-    caller.conf.set(EliminateRedundantLeftJoin.EnabledKey, "false")
-    assert(logicalJoins(JoinEliminationQueries.reportBase(caller, sf)) == 2)
-    // control: with the switch unset the rule fires on the same caller
-    caller.conf.unset(EliminateRedundantLeftJoin.EnabledKey)
-    assert(logicalJoins(JoinEliminationQueries.reportBase(caller, sf)) == 0)
+    def plain = {
+      val o = Tables.orders(caller, sf)
+      val stats = Tables.lineitem(caller, sf)
+        .groupBy(col("l_orderkey")).agg(count(lit(1)).as("n_items"))
+      val byStatus = o.groupBy(col("o_orderstatus")).agg(count(lit(1)).as("n"))
+      o.join(stats, o("o_orderkey") === stats("l_orderkey"), "left")
+        .groupBy(col("o_orderstatus")).agg(count(lit(1)).as("n"))
+        .union(byStatus)
+        .queryExecution.optimizedPlan.canonicalized
+    }
+    val before = plain
+    for (name <- Seq("opt_join_elimination", "join_asof_filtered",
+        "opt_rollup_reroll", "opt_mv_rollup", "opt_eager_agg",
+        "opt_union_merge_rollup", "wh_derived_prune_scan", "wh_fileskip_point"))
+      SparkEntry.queries(name)(caller, sf).queryExecution.optimizedPlan
+    assert(plain == before, "a rule demo changed the caller's plans")
   }
 
   test("aliased grouping keys still prove uniqueness") {
     // Spark's own elimination blinded, so only the graft rule can peel it
-    val s = plans.ChildSession(spark,
+    val s = ruleOn(
       "spark.sql.optimizer.excludedRules" ->
         "org.apache.spark.sql.catalyst.optimizer.EliminateOuterJoin",
       "spark.sql.optimizer.propagateDistinctKeys.enabled" -> "false")
@@ -113,8 +113,7 @@ class JoinEliminationSpec extends SparkSpec {
     // only with propagateDistinctKeys on. With propagation disabled, the
     // built-in goes blind and ONLY the graft rule (structural uniqueness
     // proof at the join) still removes the unread enrichment.
-    val s = spark.newSession() // GraftExtensions carry over; built-in blinded:
-    s.conf.set("spark.sql.optimizer.propagateDistinctKeys.enabled", "false")
+    val s = ruleOn("spark.sql.optimizer.propagateDistinctKeys.enabled" -> "false")
     def report(sess: org.apache.spark.sql.SparkSession) = {
       val o = Tables.orders(sess, sf)
       val stats = Tables.lineitem(sess, sf)
@@ -124,12 +123,11 @@ class JoinEliminationSpec extends SparkSpec {
     }
     assert(logicalJoins(report(s)) == 0,
       "graft rule must fire independently of distinct-key propagation")
-    // negative control: kill-switch off in the same propagation-off session
+    // negative control: rule key unset in the same propagation-off session
     // → nobody eliminates, the join survives
-    s.conf.set(EliminateRedundantLeftJoin.EnabledKey, "false")
+    s.conf.unset(EliminateRedundantLeftJoin.EnabledKey)
     assert(logicalJoins(report(s)) == 1,
       "with both paths dark the enrichment join must survive")
-    s.conf.unset(EliminateRedundantLeftJoin.EnabledKey)
   }
 
   test("rule removes physical Exchanges, not just logical joins (on vs off)") {

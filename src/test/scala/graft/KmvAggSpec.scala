@@ -21,7 +21,6 @@ class KmvAggSpec extends SparkSpec {
   }
 
   test("buffer serialization survives partial merges at any parallelism") {
-    GraftExtensions.registerAll(spark)
     val hashes = spark.range(100000)
       .select((col("id") % 7).as("g"),
         functions.Md5Hash.h32(concat(lit("k:"), col("id").cast("string"))).as("h"))
@@ -39,7 +38,6 @@ class KmvAggSpec extends SparkSpec {
   }
 
   test("unsaturated sketch reports the exact distinct count; accuracy bound") {
-    GraftExtensions.registerAll(spark)
     // 10 distinct hashes < k=32: the sketch IS the set
     val small = spark.range(10)
       .select(functions.Md5Hash.h32(concat(lit("s:"), col("id").cast("string"))).as("h"))

@@ -72,7 +72,7 @@ class MvRewriteSpec extends SparkSpec {
     // avg through the exact path: bit-identical to the recomputed value
     // (Spark vs Spark — the stored column IS the original expression)
     val s = spark.newSession()
-    MvRewrite.install(s)
+    GraftExtensions.install(s)
     s.conf.set(MvRewrite.EnabledKey, "true")
     MvRewriteQueries.mvExactDistinct(spark, sf) // ensure registration
     val onAvg = {
@@ -116,7 +116,7 @@ class MvRewriteSpec extends SparkSpec {
       spark.read.parquet(mvPath)))
     try {
       val s = spark.newSession()
-      MvRewrite.install(s)
+      GraftExtensions.install(s)
       s.conf.set(MvRewrite.EnabledKey, "true")
       val q = {
         val o = Tables.orders(s, dir)
@@ -140,7 +140,7 @@ class MvRewriteSpec extends SparkSpec {
       scanRoots(served).forall(_.contains("graft-mv")),
       "a view-grouping predicate should be served from the view")
     val s = spark.newSession()
-    MvRewrite.install(s)
+    GraftExtensions.install(s)
     s.conf.set(MvRewrite.EnabledKey, "true")
     import s.implicits._
     // filter on o_orderstatus, a view-1 grouping: also derivable
@@ -349,7 +349,7 @@ class MvRewriteSpec extends SparkSpec {
     }
     def session(aqe: Boolean) = {
       val s = spark.newSession()
-      MvRewrite.install(s)
+      GraftExtensions.install(s)
       s.conf.set(MvRewrite.EnabledKey, "true")
       s.conf.set("spark.sql.adaptive.enabled", aqe.toString)
       if (aqe) s.conf.set("spark.sql.adaptive.forceApply", "true")
@@ -367,7 +367,7 @@ class MvRewriteSpec extends SparkSpec {
     import org.apache.spark.sql.execution.datasources.LogicalRelation
     MvRewriteQueries.mvRollup(spark, sf).queryExecution // ensure registered
     val s = spark.newSession()
-    MvRewrite.install(s)
+    GraftExtensions.install(s)
     s.conf.set(MvRewrite.EnabledKey, "true")
     // this test targets MvRewrite's per-site fresh-instance splicing, so
     // it needs the UNION to survive as two aggregates — opt out of the
@@ -426,7 +426,7 @@ class MvRewriteSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     MvRewriteQueries.mvRollup(spark, sf).queryExecution.executedPlan
     val s = spark.newSession()
-    MvRewrite.install(s)
+    GraftExtensions.install(s)
     s.conf.set(MvRewrite.EnabledKey, "true")
     import s.implicits._
     // o_orderpriority has no collect_set partial in either view — must
@@ -465,7 +465,7 @@ class MvRewriteSpec extends SparkSpec {
       spark.read.parquet(dir)))
     try {
       val s = spark.newSession()
-      MvRewrite.install(s)
+      GraftExtensions.install(s)
       s.conf.set(MvRewrite.EnabledKey, "true")
       val o = Tables.orders(s, sf)
       val q = o.select(year(o("o_orderdate")).cast("int").as("yr"),
@@ -507,7 +507,7 @@ class MvRewriteSpec extends SparkSpec {
     try {
       def arm(aqe: Boolean) = {
         val s = spark.newSession()
-        MvRewrite.install(s)
+        GraftExtensions.install(s)
         s.conf.set(MvRewrite.EnabledKey, "true")
         s.conf.set("spark.sql.adaptive.enabled", aqe.toString)
         if (aqe) s.conf.set("spark.sql.adaptive.forceApply", "true")

@@ -15,7 +15,7 @@ class RerollSpec extends SparkSpec {
 
   private def ruleSession: SparkSession = {
     val s = spark.newSession()
-    RerollExpandAggregate.install(s)
+    GraftExtensions.install(s)
     s.conf.set(RerollExpandAggregate.EnabledKey, "true")
     s
   }

@@ -12,7 +12,6 @@ class SimilaritySpec extends SparkSpec {
   import spark.implicits._
 
   test("graft_cosine matches a reference implementation (both eval paths)") {
-    Similarity.register(spark)
     val df = Seq(
       (Array(1.0f, 0.0f, 0.0f), Array(1.0f, 0.0f, 0.0f), Some(1.0)),
       (Array(1.0f, 0.0f, 0.0f), Array(0.0f, 1.0f, 0.0f), Some(0.0)),
@@ -40,7 +39,6 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("graft_dot matches a reference implementation (both eval paths)") {
-    Similarity.register(spark)
     val df = Seq(
       (Array(1.0f, 2.0f, 3.0f), Array(4.0f, 5.0f, 6.0f), Some(32.0)),
       (Array(1.0f, 0.0f), Array(0.0f, 1.0f), Some(0.0)),
@@ -281,7 +279,6 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("LSH signatures are deterministic") {
-    Similarity.register(spark)
     val dim = Tables.embeddings(spark, sf)
       .select(size($"embedding")).head.getInt(0)
     val s1 = Tables.embeddings(spark, sf)

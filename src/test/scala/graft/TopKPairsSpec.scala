@@ -15,10 +15,8 @@ import org.apache.spark.sql.functions._
   */
 class TopKPairsSpec extends SparkSpec {
 
-  private def registered() = GraftExtensions.registerAll(spark)
 
   test("aggregate selection == DISTINCT + ranked window, equal-score duplicates included") {
-    registered()
     import spark.implicits._
     val k = 4
     // each (g, id) appears 1..3 times with the SAME score (the consumers'
@@ -46,7 +44,6 @@ class TopKPairsSpec extends SparkSpec {
   }
 
   test("NaN scores rank FIRST and dedup by id, matching the SQL total order") {
-    registered()
     import spark.implicits._
     val df = Seq(
       (1L, 3.0, 10L), (1L, Double.NaN, 7L), (1L, Double.NaN, 7L),
@@ -62,7 +59,6 @@ class TopKPairsSpec extends SparkSpec {
   }
 
   test("an evicted id's duplicate cannot re-enter the buffer") {
-    registered()
     import spark.implicits._
     // k=2: id 7 (score 1.0) is admitted, then evicted by ids 1 and 2
     // (score 9.0, 8.0); a second copy of id 7 arrives after the eviction
@@ -77,7 +73,6 @@ class TopKPairsSpec extends SparkSpec {
   }
 
   test("null scores skipped; robustness: an id seen twice keeps its better score") {
-    registered()
     import spark.implicits._
     val df = Seq(
       (1L, Option(3.0), 10L), (1L, None, 1L), (1L, Option(5.0), 10L),
@@ -93,7 +88,6 @@ class TopKPairsSpec extends SparkSpec {
   }
 
   test("parallelism invariance: 1 partition == 16 partitions") {
-    registered()
     import spark.implicits._
     val rows = (0 until 600).map(i =>
       ((i % 7).toLong, ((i * 37) % 23).toDouble, (i % 50).toLong))

@@ -25,7 +25,7 @@ class UnionMergeSpec extends SparkSpec {
 
   private def onSession(): SparkSession = {
     val s = spark.newSession()
-    MergeUnionAggregates.install(s)
+    GraftExtensions.install(s)
     s.conf.set(MergeUnionAggregates.EnabledKey, "true")
     s
   }
@@ -160,9 +160,7 @@ class UnionMergeSpec extends SparkSpec {
       "distinct aggregates must not merge (post-hoc planning contract)")
   }
 
-  test("default ON where the rule is present; the opt-out key is the " +
-      "kill switch") {
-    import spark.implicits._
+  test("off where the rule is present until the key is set") {
     def stack(s: SparkSession) = {
       import s.implicits._
       def branch = Tables.orders(s, sf)
@@ -170,17 +168,14 @@ class UnionMergeSpec extends SparkSpec {
         .groupBy($"yr").agg(count(lit(1)).as("n"))
       branch.union(branch)
     }
-    // an extension-built session (the harness session and its children)
-    // merges WITHOUT setting any key — the rule's structural invariant
-    // (K−1 fewer scans) ships on by default wherever the rule exists
-    val defaultOn = spark.newSession()
-    assert(scans(stack(defaultOn)).size == 1,
-      "default-on session must merge the same-source stack")
-    // the opt-out key restores the stock K-scan plan
-    val optedOut = spark.newSession()
-    optedOut.conf.set(MergeUnionAggregates.EnabledKey, "false")
-    assert(scans(stack(optedOut)).size == 2,
-      "EnabledKey=false must keep the stock two-scan plan")
+    // a child of the extension-built harness session holds the rule twice
+    // (operator batch and installed batch); with its key unset it plans
+    // the stock K-scan union
+    val s = plans.ChildSession(spark)
+    assert(s.experimental.extraOptimizations.contains(MergeUnionAggregates))
+    assert(scans(stack(s)).size == 2, "the rule must stay off with its key unset")
+    s.conf.set(MergeUnionAggregates.EnabledKey, "true")
+    assert(scans(stack(s)).size == 1, "the key must turn the merge on")
   }
 
   test("composes with the re-roll rule: merged Expand feeds from a leaf aggregate") {
